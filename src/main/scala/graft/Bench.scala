@@ -1,5 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import java.nio.file.{Files, Paths}
 object Bench {
 
@@ -63,9 +65,21 @@ object Bench {
     // second measures steady-state engine throughput with the output
     // sort; the third measures the computation WITHOUT the final
     // presentation sort (per-operator cost readable). All recorded.
-    val cold = SparkEntry.queries.map { case (n, f) => n -> once(n, f, strip = false) }
-    val warm = SparkEntry.queries.map { case (n, f) => n -> once(n, f, strip = false) }
-    val nosort = SparkEntry.queries.map { case (n, f) => n -> once(n, f, strip = true) }
+    // Each pass also records the janino compiles it paid and their
+    // seconds, so the ledger shows whether the warm pass is really warm
+    // (a generated-class cache smaller than the working set recompiles
+    // on every pass).
+    def pass(name: String, strip: Boolean): (Map[String, Double], String) = {
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
+      val times = SparkEntry.queries.map { case (n, f) => n -> once(n, f, strip) }
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileS = (CodeGenerator.compileTime - compileNs0) / 1e9
+      (times, s""""$name":{"compiles":$compiles,"compile_s":$compileS}""")
+    }
+    val (cold, coldCodegen) = pass("cold", strip = false)
+    val (warm, warmCodegen) = pass("warm", strip = false)
+    val (nosort, nosortCodegen) = pass("nosort", strip = true)
     val total = if (warm.nonEmpty) warm.values.sum else 0.0
     val coldTotal = if (cold.nonEmpty) cold.values.sum else 0.0
     val nosortTotal = if (nosort.nonEmpty) nosort.values.sum else 0.0
@@ -85,7 +99,8 @@ object Bench {
       .mkString("[", ",", "]")
     val full = s"""{"sf_dir":"$sfDir","total":$total,"cold_total":$coldTotal,"nosort_total":$nosortTotal,""" +
       s""""queries":${m2j(warm)},"cold_queries":${m2j(cold)},"nosort_queries":${m2j(nosort)},""" +
-      s""""artifact_builds":$artifacts}"""
+      s""""artifact_builds":$artifacts,""" +
+      s""""codegen":{$coldCodegen,$warmCodegen,$nosortCodegen}}"""
     // Default detail dump goes to bench_last.json (scratch), NOT the
     // committed bench_full.json ledger: both r17 and r18 ended with an
     // un-gated round-close pass overwriting the quiet baseline. The

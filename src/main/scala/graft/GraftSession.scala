@@ -29,6 +29,28 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.maxResultSize", "2g")
+      // Generated-class cache (static, JVM-wide LRU; Spark's default is
+      // 100 entries). The render job's pass generates ~265 distinct
+      // classes and a corpus pass ~390-460; the ops run in a cycle, so
+      // at 100 every class was evicted before its next use and every
+      // warm pass recompiled ~260 classes (4-5 s of a ~10 s pass).
+      // 1024 is ~2x the largest measured per-pass working set; at
+      // ~25-30 KB of heap per class the worst case is ~30 MB. The size
+      // is fixed when the JVM first generates code, so it holds only if
+      // this builder created the JVM's first session.
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
+      // Stable class names: with the id on, a whole-stage class embeds
+      // its codegen stage id, which AQE assigns in re-optimization
+      // order (varies run to run), so identical stages miss the cache
+      // — the incremental faces recompiled 4-16 classes on some warm
+      // passes even with a large cache, and identical stages in
+      // different ops never shared a class.
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      // SQL status store bound (static). The UI is off and nothing in
+      // graft reads the store, yet each retained execution keeps the
+      // metric list of every AQE re-plan: at Spark's default of 1000
+      // executions one corpus pass left ~105k SQLPlanMetric objects live.
+      .config("spark.sql.ui.retainedExecutions", "1")
     // experiment knob: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overrides any
     // default above (A/B-ing config effects without a rebuild)
     val b2 = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
@@ -46,6 +68,12 @@ object GraftSession {
 
   /** Local session for tests/benchmarks. */
   def local(cpus: Int = defaultCpus): SparkSession = {
+    // A stopped session still set as this thread's active session would
+    // be inherited (InheritableThreadLocal) by every thread a new
+    // context starts, pinning the dead session and its context for the
+    // new context's lifetime. `getActiveSession` hides a stopped
+    // session, so clear whenever it reports none usable.
+    if (SparkSession.getActiveSession.isEmpty) SparkSession.clearActiveSession()
     val s = builder(Some(s"local[$cpus]"), shufflePartitions = cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // Every empty-partition window in this engine is over a BOUNDED

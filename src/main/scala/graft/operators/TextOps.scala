@@ -2469,14 +2469,17 @@ object TextOps {
     val cached = uniModels.get(memoKey)
     if (cached != null) return cached
     val wv = uniWordFreq(s, dir).cache()
+    // seed: alphabet + top-K multi-char substrings by weighted mass.
+    // Both caches are dropped in the finally: Spark's cache manager
+    // matches plans by path, so a cache left behind would serve the
+    // pre-rewrite pieces to the next training on a rewritten corpus.
+    val sub = wv.select(col("freq"), explode(expr(
+        s"""flatten(transform(sequence(1, length(w)), i ->
+           |  transform(sequence(1, least($UNI_MAXP, length(w) - i + 1)),
+           |    l -> substring(w, i, l))))""".stripMargin)).as("piece"))
+      .groupBy(col("piece")).agg(sum(col("freq")).as("mass"))
+      .cache()
     try {
-      // seed: alphabet + top-K multi-char substrings by weighted mass
-      val sub = wv.select(col("freq"), explode(expr(
-          s"""flatten(transform(sequence(1, length(w)), i ->
-             |  transform(sequence(1, least($UNI_MAXP, length(w) - i + 1)),
-             |    l -> substring(w, i, l))))""".stripMargin)).as("piece"))
-        .groupBy(col("piece")).agg(sum(col("freq")).as("mass"))
-        .cache()
       val alpha = sub.filter(length(col("piece")) === 1)
       val multi = sub.filter(length(col("piece")) >= 2)
         .orderBy(col("mass").desc, col("piece")).limit(UNI_K)
@@ -2498,7 +2501,7 @@ object TextOps {
       val model = mass2.map { case (p, sm, em) => (p, sm, em, lg2(m2) - lg2(em)) }
       val prev = uniModels.putIfAbsent(memoKey, model)
       if (prev != null) prev else model
-    } finally wv.unpersist()
+    } finally { sub.unpersist(); wv.unpersist() }
   }
 
   /** The trained unigram model — piece inventory with seed mass, EM

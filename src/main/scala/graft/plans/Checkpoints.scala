@@ -97,29 +97,9 @@ object SharedRel {
     out.toSeq
   }
 
-  // Keyed on the SESSION via weak identity (a `newSession()` clone
-  // carries its own SQLConf and a DataFrame plans under the session
-  // that created it — the Tables.relCache lesson): a clone must never
-  // be served a relation built under another session's conf, and a
-  // dead session's artifacts must be collectable. The inner map keys
-  // on the STABLE artifact id (name|dir, conf dials included) and
-  // stores (signature, relation): a rewritten corpus REPLACES the
-  // stale entry instead of accumulating dead checkpointed blocks
-  // under old signatures for the JVM's lifetime.
-  private val memo =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]]()
-
-  private def sessionMap(s: SparkSession)
-      : java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)] =
-    memo.synchronized {
-      var m = memo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
-        memo.put(s, m)
-      }
-      m
-    }
+  // (session, STABLE artifact id — name|dir, conf dials included) →
+  // (signature, relation); see SessionMemo.
+  private val memo = new SessionMemo
 
   /** Driver-side file signature of `dir/<table>.parquet` — FS metadata
     * only, no Spark job (the Similarity.corpusKey pattern).
@@ -137,23 +117,16 @@ object SharedRel {
     * validated against `sig`: a hit with a stale signature rebuilds and
     * REPLACES the entry (the dropped relation's checkpoint blocks are
     * freed by ContextCleaner once unreferenced). The build runs OUTSIDE
-    * the map (no lock held across Spark jobs — the Ingest-fixture
-    * lesson); a concurrent race costs one redundant build, last write
-    * wins.
+    * the map's lock (the Ingest-fixture lesson).
     */
   def apply(s: SparkSession, id: String, sig: String)
-      (build: => DataFrame): DataFrame = {
-    val m = sessionMap(s)
-    val cached = m.get(id)
-    if (cached != null && cached._1 == sig) cached._2
-    else {
+      (build: => DataFrame): DataFrame =
+    memo(s, id, sig) {
       val t0 = System.nanoTime()
       val built = Checkpoints.stable(build)
       buildLog.add(Build(id, (System.nanoTime() - t0) / 1e9,
         Option(s.sparkContext.getLocalProperty("spark.job.description"))
           .getOrElse("")))
-      m.put(id, (sig, built))
       built
     }
-  }
 }

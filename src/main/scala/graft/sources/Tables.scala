@@ -37,27 +37,8 @@ object Tables {
     * stale plan; the DataFrame itself holds only the logical plan —
     * each execution still scans parquet.
     */
-  // Keyed on the SESSION via weak identity (not identityHashCode, which
-  // is not unique — two live sessions could collide and one would be
-  // served a relation that plans under the other's conf) so dead
-  // sessions' entries are collectable; the inner map keys on the PATH
-  // and stores (file signature, relation), so a rewritten file REPLACES
-  // the stale relation instead of accumulating one entry per signature
-  // for the JVM's lifetime.
-  private val relCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]]()
-
-  private def sessionCache(spark: SparkSession)
-      : java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)] =
-    relCache.synchronized {
-      var m = relCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
-        relCache.put(spark, m)
-      }
-      m
-    }
+  // (session, path) → (file signature, relation); see SessionMemo.
+  private val relCache = new graft.plans.SessionMemo
 
   private def fileSig(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -70,16 +51,8 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    // Keyed on the SESSION, not the context: a DataFrame is bound to the
-    // session that created it, and `newSession()` clones (own SQLConf,
-    // shared context) must not be served a relation that will plan under
-    // another session's conf.
-    val cache = sessionCache(spark)
-    val sig = fileSig(spark, path)
-    val cached = cache.get(path)
-    if (cached != null && cached._1 == sig) return cached._2
-    val df = spark.read.parquet(path)
-    val out =
+    relCache(spark, path, fileSig(spark, path)) {
+      val df = spark.read.parquet(path)
       if (name == "events" && df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         // FLOOR division, not `div` (truncate-toward-zero): for pre-1970
         // (negative) nanos the two differ by 1µs and DuckDB's
@@ -87,10 +60,7 @@ object Tables {
         df.withColumn("ts", org.apache.spark.sql.functions.expr(
           "timestamp_micros(ts div 1000 - (CASE WHEN ts % 1000 < 0 THEN 1 ELSE 0 END))"))
       else df
-    // replace-on-new-signature: a concurrent race costs one redundant
-    // (driver-side-only) relation build, last write wins
-    cache.put(path, (sig, out))
-    out
+    }
   }
 
   /** Register every table as a temp view so `spark.sql` works too. */

@@ -3159,4 +3159,39 @@ class TextDedupSpec extends SparkSpec {
     assert(!out.exists(r => r._2 == "gam"))
     assert(out.forall(_._4 >= 5L))
   }
+
+  test("tokenize_fertility retrains on a documents part rewritten under a live session") {
+    // No refreshByPath after the rewrite: the engine's own caches must
+    // notice it. A cached relation left behind by training would be
+    // matched by path and serve the pre-rewrite pieces; a word with a
+    // character the old corpus lacks then has no segmentation.
+    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+    def partDir(root: String): Path = {
+      val d = Paths.get(root, "documents.parquet")
+      if (Files.exists(d)) Files.walk(d).sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.delete(p))
+      Files.createDirectories(d)
+    }
+    def fertility(dir: String): Seq[org.apache.spark.sql.Row] =
+      TextOps.tokenizeFertility(spark, dir).collect().toSeq
+    val live = "/tmp/graft-test-unirw"
+    val part = partDir(live).resolve("part-00000.parquet")
+    Files.copy(Paths.get(sf, "documents.parquet"), part)
+    fertility(live)
+    // the variant: every 'e' becomes 'é', a character sf0.001 lacks
+    val staged = "/tmp/graft-test-unirw-staged"
+    spark.read.parquet(s"$sf/documents.parquet")
+      .withColumn("text", translate(col("text"), "e", "\u00e9")).coalesce(1)
+      .write.mode("overwrite").parquet(staged)
+    val variant = Files.list(Paths.get(staged)).filter(_.toString.endsWith(".parquet"))
+      .findFirst().get()
+    Files.copy(variant, part, StandardCopyOption.REPLACE_EXISTING)
+    val after = fertility(live)
+    // reference: the same bytes in a directory no cache has seen
+    val fresh = "/tmp/graft-test-unirw-fresh"
+    Files.copy(variant, partDir(fresh).resolve("part-00000.parquet"))
+    assert(after == fertility(fresh), "the rewritten part was served stale training state")
+    assert(TextOps.tokenizeUnigram(spark, live).filter(col("piece").contains("\u00e9")).count() > 0,
+      "the unigram model did not retrain on the rewritten part")
+  }
 }
