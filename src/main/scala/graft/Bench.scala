@@ -94,10 +94,8 @@ object Bench {
     // the ledger itself (the build cost otherwise only shows up as the
     // cold/warm delta). Additive detail-file field; the compact stdout
     // line and the three-pass timing are unchanged.
-    val artifacts = graft.plans.SharedRel.drainBuilds()
-      .map(b => s"""{"artifact":"${b.id}","face":"${b.face}","sec":${b.sec}}""")
-      .mkString("[", ",", "]")
-    val full = s"""{"sf_dir":"$sfDir","total":$total,"cold_total":$coldTotal,"nosort_total":$nosortTotal,""" +
+    val artifacts = artifactBuildsJson(graft.plans.SharedRel.drainBuilds())
+    val full = s"""{"sf_dir":${json.writeValueAsString(sfDir)},"total":$total,"cold_total":$coldTotal,"nosort_total":$nosortTotal,""" +
       s""""queries":${m2j(warm)},"cold_queries":${m2j(cold)},"nosort_queries":${m2j(nosort)},""" +
       s""""artifact_builds":$artifacts,""" +
       s""""codegen":{$coldCodegen,$warmCodegen,$nosortCodegen}}"""
@@ -152,6 +150,22 @@ object Bench {
     // this is the final stdout line of the run.
     println(line)
   }
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The detail file's `artifact_builds` array. Artifact ids embed the
+    * corpus path, so every string goes through Jackson's escaping.
+    */
+  private[graft] def artifactBuildsJson(builds: Seq[graft.plans.SharedRel.Build]): String = {
+    import scala.jdk.CollectionConverters._
+    json.writeValueAsString(builds.map { b =>
+      val rec = new java.util.LinkedHashMap[String, AnyRef]()
+      rec.put("artifact", b.id)
+      rec.put("face", b.face)
+      rec.put("sec", Double.box(b.sec))
+      rec
+    }.asJava)
+  }
+
   private def m2j(m: Map[String, Double]): String =
     m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 

@@ -1034,72 +1034,35 @@ trait AnalyticsRelational extends AnalyticsBase {
       |ORDER BY width_cents, q_permille""".stripMargin
 
   // ------------------------------------------- bucketed fact-fact join
-  /** Corpora whose bucketed twin tables are already written. Keyed by
-    * SESSION identity + corpus FILE SIGNATURE: the saveAsTable
-    * artifacts live in a session-scoped catalog, so a second
-    * SparkSession in the same JVM (fresh in-memory catalog after a
-    * stop/start) must re-create them rather than ride a stale
-    * JVM-global memo into TABLE_NOT_FOUND. Rewriting the data at a
-    * path still invalidates via the signature half of the key.
-    */
-  private val bucketedReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def fileSig(s: SparkSession, dir: String, names: String*): String =
-    names.map { name =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      try fs.listStatus(p).map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
-        .sorted.mkString(",")
-      catch { case _: java.io.FileNotFoundException => s"$name:missing" }
-    }.mkString("|")
-
   /** Write orders/lineitem as co-bucketed tables (8 buckets on the join
-    * key, sorted within buckets) once per corpus per session. The table
-    * NAME carries a hash of the corpus signature, so two signatures for
-    * one dir can never race on the same warehouse path. A previous JVM
-    * may have left the warehouse location behind after its catalog
-    * entry died with it, so the location is cleared explicitly before
-    * the CTAS. A memo hit whose tables are gone from the catalog
-    * (external DROP, or a memo key that outlived its catalog) is
-    * self-healing: the key is dropped and the tables re-created.
+    * key, sorted within buckets) once per (session, corpus); see
+    * [[graft.plans.SessionMemo.tables]] for naming, replacement on a
+    * rewritten corpus and the self-healing catalog check.
     *
     * Columns cover every consumer: [[joinBucketed]] (totalprice,
     * priority), [[q3ShippingPriority]]'s fact-fact leg (custkey,
     * orderdate, shipdate), and the [[TpcH]] family (quantity,
     * returnflag, partkey for q9's part join, orderstatus for q21).
+    * The layout version (v2: + o_orderstatus for q21, l_partkey for
+    * q9) is part of the artifact id and thus the table name, so a
+    * warehouse left behind by an older layout can never satisfy a
+    * newer consumer's column set.
     */
   private[operators] def ensureBucketed(s: SparkSession, dir: String): (String, String) = {
-    // v2 layout: + o_orderstatus (TpcH q21) and l_partkey (TpcH q9).
-    // The version participates in the signature (and thus the table
-    // name), so a warehouse left behind by an older layout can never
-    // satisfy a newer consumer's column set.
-    val sig = "v2|" + fileSig(s, dir, "orders", "lineitem")
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + java.lang.Long.toHexString(sig.hashCode.toLong & 0xffffffffL)
-    val (oTbl, lTbl) = (s"graft_orders_$tag", s"graft_lineitem_$tag")
-    val key = s"${System.identityHashCode(s)}|$dir|$sig"
-    if (bucketedReady.containsKey(key) &&
-        !(s.catalog.tableExists(oTbl) && s.catalog.tableExists(lTbl)))
-      bucketedReady.remove(key)
-    bucketedReady.computeIfAbsent(key, _ => {
-      val hconf = s.sparkContext.hadoopConfiguration
-      Seq(oTbl, lTbl).foreach { tbl =>
-        s.sql(s"DROP TABLE IF EXISTS $tbl")
-        val loc = new org.apache.hadoop.fs.Path(
-          new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir")), tbl)
-        loc.getFileSystem(hconf).delete(loc, true)
-      }
-      Tables.writeBucketed(
-        t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate",
-          "o_totalprice", "o_orderpriority", "o_orderstatus"),
-        oTbl, 8, "o_orderkey", "o_orderkey")
-      Tables.writeBucketed(
-        t(s, dir, "lineitem").select("l_orderkey", "l_partkey", "l_suppkey",
-          "l_extendedprice", "l_discount", "l_shipdate", "l_quantity",
-          "l_returnflag"),
-        lTbl, 8, "l_orderkey", "l_orderkey")
-      tag
-    })
+    val Seq(oTbl, lTbl) = graft.plans.SessionMemo.tables(s, dir, "bucketed.v2",
+        graft.plans.SessionMemo.corpusSig(s, dir, "orders", "lineitem"),
+        "graft_orders_", "graft_lineitem_") {
+      case Seq(oTbl, lTbl) =>
+        Tables.writeBucketed(
+          t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate",
+            "o_totalprice", "o_orderpriority", "o_orderstatus"),
+          oTbl, 8, "o_orderkey", "o_orderkey")
+        Tables.writeBucketed(
+          t(s, dir, "lineitem").select("l_orderkey", "l_partkey", "l_suppkey",
+            "l_extendedprice", "l_discount", "l_shipdate", "l_quantity",
+            "l_returnflag"),
+          lTbl, 8, "l_orderkey", "l_orderkey")
+    }
     (oTbl, lTbl)
   }
 
@@ -1193,35 +1156,17 @@ trait AnalyticsRelational extends AnalyticsBase {
       |WHERE rn = 1 ORDER BY user_id""".stripMargin
 
   // ---------------------------------------------------- retention
-  /** Corpora whose date-partitioned events twin is already written
-    * (same stale-safety contract as the bucketed tables). This twin is
-    * plain FILES read back by path — no catalog entry — so unlike
-    * [[ensureBucketed]] it survives a session swap; the location is
-    * keyed by the corpus signature (two signatures for one dir write
-    * disjoint paths) and a memo hit whose files vanished self-heals.
+  /** The date-partitioned events twin, a catalog table partitioned by
+    * `event_date`, written once per (session, events files) like the
+    * bucketed twins ([[ensureBucketed]]).
     */
-  private val partitionedReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def ensurePartitionedEvents(s: SparkSession, dir: String): String = {
-    val hconf = s.sparkContext.hadoopConfiguration
-    val sig = fileSig(s, dir, "events")
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + java.lang.Long.toHexString(sig.hashCode.toLong & 0xffffffffL)
-    val loc = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir")),
-      s"graft_events_byday_$tag")
-    val key = s"$dir|$sig"
-    if (partitionedReady.containsKey(key) && !loc.getFileSystem(hconf).exists(loc))
-      partitionedReady.remove(key)
-    partitionedReady.computeIfAbsent(key, _ => {
-      loc.getFileSystem(hconf).delete(loc, true)
-      Tables.writePartitioned(
-        events(s, dir).withColumn("event_date", to_date(col("ts"))),
-        loc.toString, "event_date")
-      tag
-    })
-    loc.toString
-  }
+  private def ensurePartitionedEvents(s: SparkSession, dir: String): String =
+    graft.plans.SessionMemo.tables(s, dir, "eventsByDay",
+        graft.plans.SessionMemo.corpusSig(s, dir, "events"), "graft_events_byday_") { tbls =>
+      events(s, dir).withColumn("event_date", to_date(col("ts")))
+        .write.mode("overwrite").partitionBy("event_date").format("parquet")
+        .saveAsTable(tbls.head)
+    }.head
 
   /** Single-day aggregate over DATE-PARTITIONED events: the partition
     * predicate is resolved against directory metadata (PartitionFilters
@@ -1232,8 +1177,7 @@ trait AnalyticsRelational extends AnalyticsBase {
     * loop becomes partition pruning on one logical table.
     */
   def scanPartitioned(s: SparkSession, dir: String): DataFrame = {
-    val path = ensurePartitionedEvents(s, dir)
-    s.read.parquet(path)
+    s.table(ensurePartitionedEvents(s, dir))
       .filter(col("event_date") === lit("2024-01-15").cast("date"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -1264,8 +1208,7 @@ trait AnalyticsRelational extends AnalyticsBase {
     * PartitionFilters carries a dynamicpruningexpression.
     */
   def scanDpp(s: SparkSession, dir: String): DataFrame = {
-    val path = ensurePartitionedEvents(s, dir)
-    val fact = s.read.parquet(path)
+    val fact = s.table(ensurePartitionedEvents(s, dir))
     // The day_n > 0 filter is semantically vacuous (grouped counts are
     // >= 1) but REQUIRED structurally: PartitionPruning only injects
     // the dynamic filter when the dim side carries a selective Filter
@@ -1298,7 +1241,7 @@ trait AnalyticsRelational extends AnalyticsBase {
     * across `salt` partial groups, combine, then merge the partials;
     * the salt bounds any reducer's share to ~1/salt of the hot key.
     *
-    * Honest scope (r5, measured via graft.DebugSkew): for ALGEBRAIC
+    * Honest scope (r5, skew A/B in SURVEY.md §8c): for ALGEBRAIC
     * aggregates (sum/count/min/max/avg) Spark's map-side partial
     * aggregation already neutralizes key skew — a hot key reaches the
     * reducer as at most one partial row per map task — so there this
@@ -1306,8 +1249,9 @@ trait AnalyticsRelational extends AnalyticsBase {
     * HOLISTIC aggregation state (collect_list, exact-distinct or
     * percentile buffers) where the per-key state itself is the
     * bottleneck. Skewed JOINS are AQE skew-join's job — but note the
-    * DebugSkew finding: the skewed side must reach the join as
-    * Sort(ShuffleStage); an aggregate between them disables the rule.
+    * skew A/B finding (SURVEY.md §8c): the skewed side must reach the
+    * join as Sort(ShuffleStage); an aggregate between them disables
+    * the rule.
     */
   def saltedAgg(df: DataFrame, key: Column, value: Column, salt: Int = 16): DataFrame =
     df.select(key.as("k"), value.as("v"))
@@ -1346,7 +1290,7 @@ trait AnalyticsRelational extends AnalyticsBase {
     *
     * == Scale design ==
     * Salting is the no-AQE fallback for big-big skewed joins; the
-    * measured alternative (DebugSkew, SCALING.md) is AQE's
+    * measured alternative (SURVEY.md §8c, SCALING.md) is AQE's
     * OptimizeSkewedJoin splitting the hot partition for a 2.67×
     * speedup — but only when the join children are bare
     * Sort(ShuffleStage) shapes and the payload doesn't compress the
@@ -1388,13 +1332,14 @@ trait AnalyticsRelational extends AnalyticsBase {
   /** The no-salt twin of [[joinSkewSalted]]: the same power-law fact
     * (70 % of events collapse onto join key 0) joined to a bare
     * customer-keyed dim, shaped so AQE's OptimizeSkewedJoin — not a
-    * hand salt — owns the skew at scale. The two DebugSkew-measured
-    * preconditions are baked in: the merge hint pins a sort-merge join
-    * whose children reach the exchange as bare Sort(ShuffleStage)
-    * shapes (no aggregate between scan and join on EITHER side — a
-    * groupBy-built dim silently disables the rule), so when a hot
-    * partition exceeds the skew threshold the runtime splits it into
-    * per-split tasks (measured 2.67× on the 10× replica, SCALING.md).
+    * hand salt — owns the skew at scale. The two preconditions the
+    * skew A/B measured (SURVEY.md §8c) are baked in: the merge hint
+    * pins a sort-merge join whose children reach the exchange as bare
+    * Sort(ShuffleStage) shapes (no aggregate between scan and join on
+    * EITHER side — a groupBy-built dim silently disables the rule), so
+    * when a hot partition exceeds the skew threshold the runtime
+    * splits it into per-split tasks (measured 2.67× on the 10×
+    * replica, SCALING.md).
     * At oracle/bench SF the partitions sit below every threshold and
     * the plan is a plain SMJ — correctness is threshold-independent,
     * which is the point: the SAME declarative query self-heals at

@@ -2587,8 +2587,7 @@ object Curate {
     * writes once and every downstream composed build reads.
     */
   private[operators] def pretrainAdmittedShared(s: SparkSession, dir: String): DataFrame =
-    graft.plans.SharedRel(s, "pretrainAdmitted|" + dir,
-      graft.plans.SharedRel.corpusSig(s, dir, "documents")) {
+    graft.plans.SharedRel(s, "pretrainAdmitted|" + dir, TextOps.docsSig(s, dir)) {
       pretrainAdmittedRel(s, dir)
     }
 

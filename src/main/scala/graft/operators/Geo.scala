@@ -1354,20 +1354,6 @@ object Geo {
   }
 
   // ------------------------------------------------ hilbert writer
-  private val hilbertLayoutReady =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Cheap driver-side corpus signature over the events table (the
-    * Similarity corpusKey pattern): FS metadata only, no Spark job. */
-  private def eventsKey(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stats =
-      try fs.listStatus(path).map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
-      catch { case _: java.io.FileNotFoundException => Array(s"$dir:missing") }
-    dir + "|" + stats.sorted.mkString(",")
-  }
-
   /** Materialize the Hilbert-clustered layout as REAL parquet files:
     * the raster cells ranked by their Hilbert index (two-phase
     * range-partitioned rank — no single-task sort), dealt into
@@ -1376,31 +1362,12 @@ object Geo {
     * (hash repartition on file_id ⇒ each file's rows land in exactly
     * one task). The written files carry genuine row-group zone maps
     * on px/py — what [[layoutHilbert]] models, made disk truth.
+    * Written once per (session, events files); see
+    * [[graft.plans.SessionMemo.tables]].
     */
-  private[graft] def ensureHilbertLayout(s: SparkSession, dir: String): String = {
-    val ck = eventsKey(s, dir)
-    val dirTag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val tag = dirTag +
-      "_" + java.lang.Long.toHexString(ck.hashCode.toLong & 0xffffffffL)
-    val tbl = s"graft_hilbert_layout_$tag"
-    val key = s"${System.identityHashCode(s)}|$ck"
-    if (hilbertLayoutReady.containsKey(key) && !s.catalog.tableExists(tbl))
-      hilbertLayoutReady.remove(key)
-    hilbertLayoutReady.computeIfAbsent(key, _ => {
-      val hconf = s.sparkContext.hadoopConfiguration
-      val pat = s"graft_hilbert_layout_${dirTag}_"
-      s.catalog.listTables().collect().map(_.name)
-        .filter(n => n.startsWith(pat) && n != tbl)
-        .foreach { n =>
-          s.sql(s"DROP TABLE IF EXISTS $n")
-          val loc = new org.apache.hadoop.fs.Path(
-            new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir")), n)
-          loc.getFileSystem(hconf).delete(loc, true)
-        }
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir")), tbl)
-      loc.getFileSystem(hconf).delete(loc, true)
+  private[graft] def ensureHilbertLayout(s: SparkSession, dir: String): String =
+    graft.plans.SessionMemo.tables(s, dir, "hilbertLayout",
+        graft.plans.SessionMemo.corpusSig(s, dir, "events"), "graft_hilbert_layout_") { tbls =>
       val ranked = graft.operators.Analytics.globalRowPos(
         withHilbert(rasterDf(s, dir), "px", "py", "hd"),
         Seq.empty, Seq(col("hd")), "rn", "n")
@@ -1409,11 +1376,8 @@ object Geo {
         .select(col("px"), col("py"), col("cnt"), col("hd"), col("file_id"))
         .repartition(col("file_id"))
         .write.mode("overwrite").format("parquet")
-        .partitionBy("file_id").saveAsTable(tbl)
-      tag
-    })
-    tbl
-  }
+        .partitionBy("file_id").saveAsTable(tbls.head)
+    }.head
 
   /** Hilbert-layout skipping audit over WRITTEN files (r17 — the
     * writer face the modeled audits plan for: [[layoutHilbert]]

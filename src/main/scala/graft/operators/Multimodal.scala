@@ -925,8 +925,7 @@ object Multimodal {
   }
 
   private def mediaAdmittedShared(s: SparkSession, dir: String): DataFrame =
-    graft.plans.SharedRel(s, "mediaAdmitted|" + dir,
-      graft.plans.SharedRel.corpusSig(s, dir, "documents")) {
+    graft.plans.SharedRel(s, "mediaAdmitted|" + dir, TextOps.docsSig(s, dir)) {
       mediaAdmittedRel(s, dir)
     }
 

@@ -9,6 +9,7 @@ import graft.functions.{FloatVectorDot, GraftFunctions}
 // nothing). A member def would be a `this` call and scalac then passes
 // MODULE$ as a captured lambda arg — Task not serializable.
 import graft.functions.VecMath.{dot => dotd, nrm}
+import graft.plans.{SessionMemo, SharedRel}
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2):
@@ -61,23 +62,15 @@ object Similarity {
     c
   }
 
-  /** Per-corpus trained IVF codebooks (train-once model artifacts).
-    * Keyed by the corpus FILE SIGNATURE (paths + sizes + mtimes), not
-    * the directory alone, so rewriting the data at a path invalidates
-    * the cached model instead of silently serving stale centroids.
+  /** Per-corpus trained IVF codebooks (train-once model artifacts),
+    * one per cell count, retrained when the embeddings files change.
     */
-  private val ivfCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Array[Float], Double)]]()
+  private val ivfCodebooks = new SessionMemo[Array[(Long, Array[Float], Double)]]
 
-  /** Cheap driver-side corpus signature: no Spark job, just FS metadata. */
-  private def corpusKey(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stats =
-      try fs.listStatus(path).map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
-      catch { case _: java.io.FileNotFoundException => Array(s"$dir:missing") }
-    dir + "|" + stats.sorted.mkString(",")
-  }
+  /** The embeddings table's file signature — what every ANN artifact
+    * derives from. */
+  private def embSig(s: SparkSession, dir: String): String =
+    SessionMemo.corpusSig(s, dir, "embeddings")
 
   import org.apache.spark.sql.graftshim.GraftSqlShim
 
@@ -144,7 +137,7 @@ object Similarity {
     * REGISTERED `ann_bruteforce` face keeps computing fresh.
     */
   private def bruteforceTruth(s: SparkSession, dir: String): DataFrame =
-    graft.plans.SharedRel(s, "annTruth|" + dir, corpusKey(s, dir)) {
+    SharedRel(s, "annTruth|" + dir, embSig(s, dir)) {
       annBruteforce(s, dir).select(col("query_id"), col("neighbor_id"))
     }
 
@@ -154,21 +147,21 @@ object Similarity {
     * curve is measured on a sampled query set and this plan is
     * free"), so the planner faces read the memoized curve instead of
     * re-running the sweep. The registered curve faces compute fresh.
+    * The cell-count dial is part of the artifact id, so curves measured
+    * at two dial values coexist.
     */
   private def recallCurveShared(s: SparkSession, dir: String): DataFrame =
-    graft.plans.SharedRel(s, "annRecallCurve|" + dir,
-      corpusKey(s, dir) + "|cells=" + ivfCells(s)) {
+    SharedRel(s, s"annRecallCurve|$dir|cells=${ivfCells(s)}", embSig(s, dir)) {
       annRecallCurve(s, dir)
     }
 
   private def graphRecallCurveShared(s: SparkSession, dir: String): DataFrame =
-    graft.plans.SharedRel(s, "annGraphRecallCurve|" + dir,
-      corpusKey(s, dir) + "|cells=" + ivfCells(s)) {
+    SharedRel(s, s"annGraphRecallCurve|$dir|cells=${ivfCells(s)}", embSig(s, dir)) {
       annGraphRecallCurve(s, dir)
     }
 
   private def cellsCurveShared(s: SparkSession, dir: String): DataFrame =
-    graft.plans.SharedRel(s, "annCellsCurve|" + dir, corpusKey(s, dir)) {
+    SharedRel(s, "annCellsCurve|" + dir, embSig(s, dir)) {
       annCellsCurve(s, dir)
     }
 
@@ -202,8 +195,8 @@ object Similarity {
     * (redundant assignment — spill-style overlap); queries probe their
     * nprobe=3 nearest cells and rank candidates by exact cosine.
     *
-    * Tuning is measurement-driven (graft.DebugIvf sweeps recall vs
-    * scanned fraction): on this isotropic corpus a plain trained
+    * Tuning is measurement-driven (SURVEY.md §8b records the recall vs
+    * scanned fraction sweep): on this isotropic corpus a plain trained
     * 16-cell quantizer is recall-NEGATIVE at equal scan cost versus
     * the r1 seed codebook (tight trained boundaries lose boundary
     * neighbors: 0.80 vs 0.92 recall@5 at ~12.5% scanned). 32 trained
@@ -235,67 +228,59 @@ object Similarity {
     // are the curve faces sweeping fixed configs
     val CELLS = if (cells > 0) cells else ivfCells(s)
     val ITERS = IVF_ITERS
-    val e = Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
     // Train-once semantics: the codebook is a model artifact (in a real
     // deployment it would be persisted beside the index), so per-corpus
-    // training runs once per JVM and later invocations reuse it —
-    // unless the files at the path changed (signature key). Training
-    // runs OUTSIDE the map (computeIfAbsent would hold the bin lock
-    // across ITERS Spark jobs — the Ingest fixture lesson, r11); a
-    // lost putIfAbsent race just discards one redundant training run.
-    val memoKey = corpusKey(s, dir) + "|cells=" + CELLS
-    val cached = ivfCodebooks.get(memoKey)
-    if (cached != null) return cached
-    val trained = {
-    val seeds = e.filter(_._1 < CELLS).collect().sortBy(_._1)
-      .map { case (id, v) => (id, v, nrm(v)) }
-    require(seeds.nonEmpty,
-      s"ann_ivf needs codebook seed vectors (vec_id < $CELLS) in the embeddings table")
-    var centroids = seeds
-    for (_ <- 1 to ITERS) {
-      val bc = s.sparkContext.broadcast(centroids)
-      val cellAgg = e
-        .map { case (_, v) =>
-          val n = nrm(v)
-          var bestCell = -1L; var bestCos = Double.MinValue
-          bc.value.foreach { case (cid, cv, cn) =>
-            val cos = dotd(v, cv) / (n * cn)
-            if (cos > bestCos || (cos == bestCos && cid < bestCell)) {
-              bestCos = cos; bestCell = cid
+    // training runs once per session and later invocations reuse it —
+    // unless the files at the path changed (signature).
+    ivfCodebooks(s, s"ivfCodebook|$dir|cells=$CELLS", embSig(s, dir)) {
+      val e = Tables.load(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      val seeds = e.filter(_._1 < CELLS).collect().sortBy(_._1)
+        .map { case (id, v) => (id, v, nrm(v)) }
+      require(seeds.nonEmpty,
+        s"ann_ivf needs codebook seed vectors (vec_id < $CELLS) in the embeddings table")
+      var centroids = seeds
+      for (_ <- 1 to ITERS) {
+        val bc = s.sparkContext.broadcast(centroids)
+        val cellAgg = e
+          .map { case (_, v) =>
+            val n = nrm(v)
+            var bestCell = -1L; var bestCos = Double.MinValue
+            bc.value.foreach { case (cid, cv, cn) =>
+              val cos = dotd(v, cv) / (n * cn)
+              if (cos > bestCos || (cos == bestCos && cid < bestCell)) {
+                bestCos = cos; bestCell = cid
+              }
             }
+            // spherical k-means: accumulate UNIT vectors so the mean
+            // direction isn't dominated by long vectors (assignment is
+            // by cosine, so only direction matters)
+            (bestCell, v.map(x => math.round(x / n * 1e6)), 1L)
           }
-          // spherical k-means: accumulate UNIT vectors so the mean
-          // direction isn't dominated by long vectors (assignment is
-          // by cosine, so only direction matters)
-          (bestCell, v.map(x => math.round(x / n * 1e6)), 1L)
-        }
-        .groupByKey(_._1)
-        .reduceGroups { (a, b) =>
-          val sums = new Array[Long](math.max(a._2.length, b._2.length))
-          var i = 0
-          while (i < sums.length) {
-            sums(i) = (if (i < a._2.length) a._2(i) else 0L) +
-              (if (i < b._2.length) b._2(i) else 0L)
-            i += 1
+          .groupByKey(_._1)
+          .reduceGroups { (a, b) =>
+            val sums = new Array[Long](math.max(a._2.length, b._2.length))
+            var i = 0
+            while (i < sums.length) {
+              sums(i) = (if (i < a._2.length) a._2(i) else 0L) +
+                (if (i < b._2.length) b._2(i) else 0L)
+              i += 1
+            }
+            (a._1, sums, a._3 + b._3)
           }
-          (a._1, sums, a._3 + b._3)
-        }
-        .map(_._2).collect().map(r => r._1 -> (r._2, r._3)).toMap
-      bc.destroy() // per-iteration broadcast, dead after the collect
-      centroids = centroids.map { case (cid, oldV, oldN) =>
-        cellAgg.get(cid) match {
-          case Some((sums, cnt)) =>
-            val nv = sums.map(x => (x.toDouble / 1e6 / cnt).toFloat)
-            (cid, nv, nrm(nv))
-          case None => (cid, oldV, oldN)
-        }
-      }.sortBy(_._1)
+          .map(_._2).collect().map(r => r._1 -> (r._2, r._3)).toMap
+        bc.destroy() // per-iteration broadcast, dead after the collect
+        centroids = centroids.map { case (cid, oldV, oldN) =>
+          cellAgg.get(cid) match {
+            case Some((sums, cnt)) =>
+              val nv = sums.map(x => (x.toDouble / 1e6 / cnt).toFloat)
+              (cid, nv, nrm(nv))
+            case None => (cid, oldV, oldN)
+          }
+        }.sortBy(_._1)
+      }
+      centroids
     }
-    centroids
-    }
-    val prev = ivfCodebooks.putIfAbsent(memoKey, trained)
-    if (prev != null) prev else trained
   }
 
   def annIvf(s: SparkSession, dir: String): DataFrame = {
@@ -409,7 +394,7 @@ object Similarity {
     * [[dedupEmbeddingIvf]] (never all-pairs; candidates ≈
     * N²·ASSIGN²/CELLS with balanced trained cells), aggregated to ONE
     * row before the tiny 6-row union. Codebooks memoize per (corpus,
-    * cells), so the three trainings run once per JVM; only 8/16/32-row
+    * cells), so the three trainings run once per session; only 8/16/32-row
     * models ever reach the driver. The exact cosine here is computed
     * per CANDIDATE (not gated into the join condition as the
     * production face does) because the candidate count IS the metric.
@@ -491,88 +476,31 @@ object Similarity {
       .orderBy(col("cells"), col("assign_k"))
   }
 
-  /** Drop superseded persisted-index tables for the same dir tag. The
-    * table NAME carries the corpus-signature hash so two signatures
-    * for one dir never race on a warehouse path — but that means a
-    * corpus REWRITE under the same dir (reingest, refreshed fixtures)
-    * mints a new name and the prior table would otherwise leak its
-    * catalog entry and parquet payload for the life of the session.
-    * Called under the build memo's bin lock, right before the new
-    * table is written: any `<prefix><dirTag>_<otherHash>` sibling is
-    * dropped, catalog and files both.
-    */
-  private def dropSuperseded(s: SparkSession, prefix: String, dirTag: String,
-      keep: String): Unit = {
-    val pat = s"$prefix${dirTag}_"
-    val hconf = s.sparkContext.hadoopConfiguration
-    s.catalog.listTables().collect().map(_.name)
-      .filter(n => n.startsWith(pat) && n != keep)
-      .foreach { n =>
-        s.sql(s"DROP TABLE IF EXISTS $n")
-        val loc = new org.apache.hadoop.fs.Path(
-          new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir")), n)
-        loc.getFileSystem(hconf).delete(loc, true)
-      }
-  }
-
-  /** Corpora whose persisted IVF index tables exist. Keyed by SESSION
-    * identity + corpus signature (the codebook memo stays
-    * session-independent — it's pure driver data — but these are
-    * catalog tables, which die with their session's catalog): a second
-    * SparkSession in the same JVM re-creates instead of hitting
-    * TABLE_NOT_FOUND, and a memo hit whose tables were dropped
-    * externally self-heals. The table NAME carries the signature hash
-    * so two signatures for one dir never race on a warehouse path.
-    */
-  private val ivfIndexReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Materialize the IVF index as TABLES: the 32-row codebook and the
     * redundantly-assigned postings (vec_id, embedding, nrm, cell)
     * bucketed by cell — the storage artifact a deployed ANN service
-    * scans instead of re-deriving assignments per query.
+    * scans instead of re-deriving assignments per query. Persisted once
+    * per (session, corpus, cell count); see [[SessionMemo.tables]].
     */
   private def ensureIvfIndex(s: SparkSession, dir: String): (String, String) = {
     import s.implicits._
-    // cell count rides the signature: a conf change mints NEW index
-    // tables (dropSuperseded reclaims the old) instead of serving a
-    // codebook trained at a different cell count
-    val ck = corpusKey(s, dir) + "|cells=" + ivfCells(s)
-    val dirTag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val tag = dirTag +
-      "_" + java.lang.Long.toHexString(ck.hashCode.toLong & 0xffffffffL)
-    val (cbTbl, idxTbl) = (s"graft_ivf_codebook_$tag", s"graft_ivf_index_$tag")
-    val key = s"${System.identityHashCode(s)}|$ck"
-    if (ivfIndexReady.containsKey(key) &&
-        !(s.catalog.tableExists(cbTbl) && s.catalog.tableExists(idxTbl)))
-      ivfIndexReady.remove(key)
-    // computeIfAbsent kept DELIBERATELY here (unlike the model memos):
-    // the guarded work is catalog DDL on fixed table names, and the bin
-    // lock is what serializes two threads racing the same CTAS.
-    ivfIndexReady.computeIfAbsent(key, _ => {
-      val hconf = s.sparkContext.hadoopConfiguration
-      dropSuperseded(s, "graft_ivf_codebook_", dirTag, cbTbl)
-      dropSuperseded(s, "graft_ivf_index_", dirTag, idxTbl)
-      Seq(cbTbl, idxTbl).foreach { tbl =>
-        s.sql(s"DROP TABLE IF EXISTS $tbl")
-        val loc = new org.apache.hadoop.fs.Path(
-          new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir")), tbl)
-        loc.getFileSystem(hconf).delete(loc, true)
-      }
-      val cb = trainedCodebook(s, dir).toSeq.toDF("cid", "cv", "cn")
-      cb.write.mode("overwrite").format("parquet").saveAsTable(cbTbl)
-      // declarative assignment: every vector ranked against the 32
-      // centroids (broadcast), top-ASSIGN cells kept — all vector_dot
-      val e = emb(s, dir)
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("acos").desc, col("cid"))
-      val assigned = e.crossJoin(broadcast(cb))
-        .withColumn("acos", dot(col("embedding"), col("cv")) / (col("nrm") * col("cn")))
-        .withColumn("arn", row_number().over(w))
-        .filter(col("arn") <= IVF_ASSIGN)
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("cid").as("cell"))
-      Tables.writeBucketed(assigned, idxTbl, 8, "cell", "cell")
-      tag
-    })
+    val Seq(cbTbl, idxTbl) = SessionMemo.tables(s, dir, s"ivfIndex|cells=${ivfCells(s)}",
+        embSig(s, dir), "graft_ivf_codebook_", "graft_ivf_index_") {
+      case Seq(cbTbl, idxTbl) =>
+        val cb = trainedCodebook(s, dir).toSeq.toDF("cid", "cv", "cn")
+        cb.write.mode("overwrite").format("parquet").saveAsTable(cbTbl)
+        // declarative assignment: every vector ranked against the 32
+        // centroids (broadcast), top-ASSIGN cells kept — all vector_dot
+        val e = emb(s, dir)
+        val w = Window.partitionBy(col("vec_id"))
+          .orderBy(col("acos").desc, col("cid"))
+        val assigned = e.crossJoin(broadcast(cb))
+          .withColumn("acos", dot(col("embedding"), col("cv")) / (col("nrm") * col("cn")))
+          .withColumn("arn", row_number().over(w))
+          .filter(col("arn") <= IVF_ASSIGN)
+          .select(col("vec_id"), col("embedding"), col("nrm"), col("cid").as("cell"))
+        Tables.writeBucketed(assigned, idxTbl, 8, "cell", "cell")
+    }
     (cbTbl, idxTbl)
   }
 
@@ -676,8 +604,7 @@ object Similarity {
   private val IVFPQ_K = 16
 
   /** codebook rows (sub, cid, centroid) — train-once model artifact. */
-  private val pqCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Int, Long, Array[Float])]]()
+  private val pqCodebooks = new SessionMemo[Array[(Int, Long, Array[Float])]]
 
   /** Per-subspace L2 k-means codebooks, trained exactly like
     * [[trainedCodebook]] but on raw (un-normalized) HALF-dim
@@ -698,12 +625,7 @@ object Similarity {
     // drag the whole (non-serializable) enclosing object into the task
     def sub(v: Array[Float], i: Int): Array[Float] =
       java.util.Arrays.copyOfRange(v, i * half, (i + 1) * half)
-    // Train outside the map + putIfAbsent install — same bin-lock
-    // rationale as trainedCodebook; a lost race wastes one training.
-    val memoKey = corpusKey(s, dir) + s"|pq$k"
-    val cached = pqCodebooks.get(memoKey)
-    if (cached != null) return cached
-    val trained = {
+    pqCodebooks(s, s"pqCodebook|$dir|k=$k", embSig(s, dir)) {
       (0 until PQ_SUB).flatMap { sx =>
         val seeds = e.filter(_._1 < k).collect().sortBy(_._1)
           .map { case (id, v) => (id, sub(v, sx)) }
@@ -745,8 +667,6 @@ object Similarity {
         cents.map { case (cid, cv) => (sx, cid, cv) }
       }.toArray
     }
-    val prev = pqCodebooks.putIfAbsent(memoKey, trained)
-    if (prev != null) prev else trained
   }
 
   /** L2 distance as stable column math: ‖a‖² − 2⟨a,b⟩ + ‖b‖², every dot
@@ -1209,43 +1129,22 @@ object Similarity {
   private val GS_ROUNDS = 2      // fixed expansion rounds (unrolled in the oracle)
   private val GS_SEED_PROBE = 1  // seeds come from the single nearest cell
 
-  private val knnGraphReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Materialize the corpus kNN graph as a TABLE — the index artifact
-    * [[annGraphSearch]] walks. Built once per corpus signature (the
-    * [[ensureIvfIndex]] pattern, same self-healing catalog check): a
-    * production graph-ANN store rebuilds the graph on reindex, not per
-    * query, so the search face's cost is the walk, not the build —
-    * this is what restores the search's corpus-size-independent
-    * per-query bound ([[annKnnGraph]]'s fixed-cell build wall is the
-    * REGISTERED build face's documented cost, paid once here).
+    * [[annGraphSearch]] walks. Built once per (session, corpus, cell
+    * count), like [[ensureIvfIndex]]: a production graph-ANN store
+    * rebuilds the graph on reindex, not per query, so the search face's
+    * cost is the walk, not the build — this is what restores the
+    * search's corpus-size-independent per-query bound
+    * ([[annKnnGraph]]'s fixed-cell build wall is the REGISTERED build
+    * face's documented cost, paid once here).
     */
-  private def ensureKnnGraph(s: SparkSession, dir: String): String = {
-    // cell count rides the signature: a conf change mints NEW index
-    // tables (dropSuperseded reclaims the old) instead of serving a
-    // codebook trained at a different cell count
-    val ck = corpusKey(s, dir) + "|cells=" + ivfCells(s)
-    val dirTag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val tag = dirTag +
-      "_" + java.lang.Long.toHexString(ck.hashCode.toLong & 0xffffffffL)
-    val tbl = s"graft_knn_graph_$tag"
-    val key = s"${System.identityHashCode(s)}|$ck"
-    if (knnGraphReady.containsKey(key) && !s.catalog.tableExists(tbl))
-      knnGraphReady.remove(key)
-    knnGraphReady.computeIfAbsent(key, _ => {
-      val hconf = s.sparkContext.hadoopConfiguration
-      dropSuperseded(s, "graft_knn_graph_", dirTag, tbl)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir")), tbl)
-      loc.getFileSystem(hconf).delete(loc, true)
+  private def ensureKnnGraph(s: SparkSession, dir: String): String =
+    SessionMemo.tables(s, dir, s"knnGraph|cells=${ivfCells(s)}", embSig(s, dir),
+        "graft_knn_graph_") { tbls =>
       annKnnGraph(s, dir)
         .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-        .write.mode("overwrite").format("parquet").saveAsTable(tbl)
-      tag
-    })
-    tbl
-  }
+        .write.mode("overwrite").format("parquet").saveAsTable(tbls.head)
+    }.head
 
   /** Graph-walk ANN search (r15) — the HNSW-flavored beam search that
     * gives [[annKnnGraph]]'s edge list its in-engine consumer: seed
@@ -1379,8 +1278,6 @@ object Similarity {
   }
 
   // --------------------------------------------- graph upsert (delta)
-  private val knnBaseReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Persist YESTERDAY'S graph artifact: the kNN edge list (with its
     * exact cosines and ranks) plus the per-node probe-cell relation,
     * both restricted to the BASE corpus (vec_id % 5 ≠ 4 — the
@@ -1392,49 +1289,30 @@ object Similarity {
     */
   private def ensureKnnGraphBase(s: SparkSession, dir: String): (String, String) = {
     import s.implicits._
-    // cell count rides the signature: a conf change mints NEW index
-    // tables (dropSuperseded reclaims the old) instead of serving a
-    // codebook trained at a different cell count
-    val ck = corpusKey(s, dir) + "|cells=" + ivfCells(s)
-    val dirTag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val tag = dirTag +
-      "_" + java.lang.Long.toHexString(ck.hashCode.toLong & 0xffffffffL)
-    val (edgeTbl, probeTbl) = (s"graft_knn_base_$tag", s"graft_knn_probes_$tag")
-    val key = s"${System.identityHashCode(s)}|$ck"
-    if (knnBaseReady.containsKey(key) &&
-        !(s.catalog.tableExists(edgeTbl) && s.catalog.tableExists(probeTbl)))
-      knnBaseReady.remove(key)
-    knnBaseReady.computeIfAbsent(key, _ => {
-      val hconf = s.sparkContext.hadoopConfiguration
-      dropSuperseded(s, "graft_knn_base_", dirTag, edgeTbl)
-      dropSuperseded(s, "graft_knn_probes_", dirTag, probeTbl)
-      Seq(edgeTbl, probeTbl).foreach { tbl =>
-        s.sql(s"DROP TABLE IF EXISTS $tbl")
-        val loc = new org.apache.hadoop.fs.Path(
-          new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir")), tbl)
-        loc.getFileSystem(hconf).delete(loc, true)
-      }
-      val e = Tables.load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .filter(_._1 % 5 != 4)
-      val index = assignCells(s, dir, e, IVF_ASSIGN)
-      val probes = assignCells(s, dir, e, IVF_NPROBE)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("nrm").as("q_nrm"), col("cell"))
-      val w = Window.partitionBy(col("src"))
-        .orderBy(col("cosine").desc, col("dst"))
-      probes.join(index,
-          probes("cell") === index("cell") && col("q_id") =!= col("vec_id"))
-        .select(col("q_id").as("src"), col("vec_id").as("dst"),
-          (dot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm"))).as("cosine"))
-        .distinct()
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= K)
-        .write.mode("overwrite").format("parquet").saveAsTable(edgeTbl)
-      probes.select(col("q_id").as("vec_id"), col("cell"))
-        .write.mode("overwrite").format("parquet").saveAsTable(probeTbl)
-      tag
-    })
+    val Seq(edgeTbl, probeTbl) = SessionMemo.tables(s, dir,
+        s"knnGraphBase|cells=${ivfCells(s)}", embSig(s, dir),
+        "graft_knn_base_", "graft_knn_probes_") {
+      case Seq(edgeTbl, probeTbl) =>
+        val e = Tables.load(s, dir, "embeddings")
+          .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+          .filter(_._1 % 5 != 4)
+        val index = assignCells(s, dir, e, IVF_ASSIGN)
+        val probes = assignCells(s, dir, e, IVF_NPROBE)
+          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+            col("nrm").as("q_nrm"), col("cell"))
+        val w = Window.partitionBy(col("src"))
+          .orderBy(col("cosine").desc, col("dst"))
+        probes.join(index,
+            probes("cell") === index("cell") && col("q_id") =!= col("vec_id"))
+          .select(col("q_id").as("src"), col("vec_id").as("dst"),
+            (dot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm"))).as("cosine"))
+          .distinct()
+          .withColumn("rank", row_number().over(w).cast("long"))
+          .filter(col("rank") <= K)
+          .write.mode("overwrite").format("parquet").saveAsTable(edgeTbl)
+        probes.select(col("q_id").as("vec_id"), col("cell"))
+          .write.mode("overwrite").format("parquet").saveAsTable(probeTbl)
+    }
     (edgeTbl, probeTbl)
   }
 

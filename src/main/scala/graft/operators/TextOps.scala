@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.{SessionMemo, SharedRel}
 import graft.sources.Tables
 
 /** Text-analysis operators over the `documents` corpus (SURVEY.md §2).
@@ -85,8 +86,7 @@ object TextOps {
     * its bench cell still measures the computation.
     */
   private[operators] def textQualityShared(s: SparkSession, dir: String): DataFrame =
-    graft.plans.SharedRel(s, "textQuality|" + dir,
-      graft.plans.SharedRel.corpusSig(s, dir, "documents")) {
+    SharedRel(s, "textQuality|" + dir, docsSig(s, dir)) {
       textQuality(s, dir)
     }
 
@@ -899,8 +899,7 @@ object TextOps {
   }
 
   private def classifierScoredShared(s: SparkSession, dir: String): DataFrame =
-    graft.plans.SharedRel(s, "classifierScored|" + dir,
-      graft.plans.SharedRel.corpusSig(s, dir, "documents")) {
+    SharedRel(s, "classifierScored|" + dir, docsSig(s, dir)) {
       classifierScoredRel(s, dir)
     }
 
@@ -1581,20 +1580,16 @@ object TextOps {
     * merge is a narrow column rewrite on top of it.
     */
   /** Trained-merge memo (train-once model artifact, like the ANN
-    * codebooks): keyed by the documents table's file signature so a
-    * regenerated corpus retrains instead of serving stale merges.
+    * codebooks): validated against the documents table's file
+    * signature, so a regenerated corpus retrains (and releases the
+    * stale merges) instead of serving them.
     */
-  private val bpeMerges = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, String, String, String, Long)]]()
+  private val bpeMerges = new SessionMemo[Seq[(Long, String, String, String, Long)]]
 
-  private def bpeCorpusKey(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stats =
-      try fs.listStatus(path).map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
-      catch { case _: java.io.FileNotFoundException => Array(s"$dir:missing") }
-    dir + "|" + stats.sorted.mkString(",")
-  }
+  /** The documents table's file signature — what every tokenizer and
+    * quality artifact derives from. */
+  private[operators] def docsSig(s: SparkSession, dir: String): String =
+    SessionMemo.corpusSig(s, dir, "documents")
 
   /** The word vocab as (w, freq, seq) with seq in the delimited-string
     * symbol representation (see [[tokenizeBpe]]). */
@@ -1614,38 +1609,35 @@ object TextOps {
     */
   private def trainedBpeMerges(s: SparkSession, dir: String): Seq[(Long, String, String, String, Long)] = {
     import s.implicits._
-    val memoKey = bpeCorpusKey(s, dir)
-    val cached = bpeMerges.get(memoKey)
-    if (cached != null) return cached
-    val vocab = bpeVocab(s, dir).cache()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
-    try {
-      var cur = vocab.select(col("seq"), col("freq"))
-      var k = 1
-      var exhausted = false
-      while (k <= BPE_MERGES && !exhausted) {
-        val best = cur
-          .select(split(trim(col("seq")), "  ").as("s"), col("freq"))
-          .filter(size(col("s")) >= 2)
-          .select(col("freq"), explode(expr(
-            "transform(sequence(0, size(s)-2), i -> struct(s[i] as l, s[i+1] as r))")).as("p"))
-          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-          .agg(sum(col("freq")).as("cnt"))
-          .orderBy(col("cnt").desc, col("l"), col("r"))
-          .limit(1).as[(String, String, Long)].collect()
-        best.headOption match {
-          case Some((l, r, cnt)) =>
-            merges += ((k.toLong, l, r, l + r, cnt))
-            cur = cur.withColumn("seq", call_function("replace", col("seq"),
-              lit(s" $l  $r "), lit(s" $l$r ")))
-            k += 1
-          case None => exhausted = true // vocab fully merged before the budget
+    bpeMerges(s, "bpeMerges|" + dir, docsSig(s, dir)) {
+      val vocab = bpeVocab(s, dir).cache()
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
+      try {
+        var cur = vocab.select(col("seq"), col("freq"))
+        var k = 1
+        var exhausted = false
+        while (k <= BPE_MERGES && !exhausted) {
+          val best = cur
+            .select(split(trim(col("seq")), "  ").as("s"), col("freq"))
+            .filter(size(col("s")) >= 2)
+            .select(col("freq"), explode(expr(
+              "transform(sequence(0, size(s)-2), i -> struct(s[i] as l, s[i+1] as r))")).as("p"))
+            .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+            .agg(sum(col("freq")).as("cnt"))
+            .orderBy(col("cnt").desc, col("l"), col("r"))
+            .limit(1).as[(String, String, Long)].collect()
+          best.headOption match {
+            case Some((l, r, cnt)) =>
+              merges += ((k.toLong, l, r, l + r, cnt))
+              cur = cur.withColumn("seq", call_function("replace", col("seq"),
+                lit(s" $l  $r "), lit(s" $l$r ")))
+              k += 1
+            case None => exhausted = true // vocab fully merged before the budget
+          }
         }
-      }
-    } finally vocab.unpersist()
-    val trained = merges.toSeq
-    val prev = bpeMerges.putIfAbsent(memoKey, trained)
-    if (prev != null) prev else trained
+      } finally vocab.unpersist()
+      merges.toSeq
+    }
   }
 
   def tokenizeBpe(s: SparkSession, dir: String): DataFrame = {
@@ -1679,7 +1671,7 @@ object TextOps {
     * computing it fresh.
     */
   private[operators] def bpeSegmentsShared(s: SparkSession, dir: String): DataFrame =
-    graft.plans.SharedRel(s, "bpeSegments|" + dir, bpeCorpusKey(s, dir)) {
+    SharedRel(s, "bpeSegments|" + dir, docsSig(s, dir)) {
       tokenizeBpeSegments(s, dir)
     }
 
@@ -2001,57 +1993,54 @@ object TextOps {
     */
   private val WORDPIECE_MERGES = 12
 
-  private val wordpieceMerges = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, String, String, String, Long, Long, Long, Long)]]()
+  private val wordpieceMerges =
+    new SessionMemo[Seq[(Long, String, String, String, Long, Long, Long, Long)]]
 
   private def trainedWordpieceMerges(s: SparkSession, dir: String)
       : Seq[(Long, String, String, String, Long, Long, Long, Long)] = {
     import s.implicits._
-    val memoKey = bpeCorpusKey(s, dir)
-    val cached = wordpieceMerges.get(memoKey)
-    if (cached != null) return cached
-    val vocab = bpeVocab(s, dir).cache()
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, String, String, Long, Long, Long, Long)]
-    try {
-      var cur = vocab.select(col("seq"), col("freq"))
-      var k = 1
-      var exhausted = false
-      while (k <= WORDPIECE_MERGES && !exhausted) {
-        val split0 = cur
-          .select(split(trim(col("seq")), "  ").as("s"), col("freq"))
-        val syms = split0
-          .select(explode(col("s")).as("sym"), col("freq"))
-          .groupBy(col("sym")).agg(sum(col("freq")).as("scnt"))
-        val best = split0
-          .filter(size(col("s")) >= 2)
-          .select(col("freq"), explode(expr(
-            "transform(sequence(0, size(s)-2), i -> struct(s[i] as l, s[i+1] as r))")).as("p"))
-          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-          .agg(sum(col("freq")).as("cnt"))
-          .join(broadcast(syms.select(col("sym").as("l"), col("scnt").as("lcnt"))), "l")
-          .join(broadcast(syms.select(col("sym").as("r"), col("scnt").as("rcnt"))), "r")
-          .withColumn("score_e18", expr(
-            """CAST((CAST(cnt AS DECIMAL(38,0)) * 1000000000000000000)
-              | div (CAST(lcnt AS DECIMAL(38,0)) * rcnt) AS BIGINT)""".stripMargin))
-          .orderBy(col("score_e18").desc, col("l"), col("r"))
-          .limit(1)
-          .select(col("l"), col("r"), col("cnt"), col("lcnt"), col("rcnt"),
-            col("score_e18"))
-          .as[(String, String, Long, Long, Long, Long)].collect()
-        best.headOption match {
-          case Some((l, r, cnt, lc, rc, sc)) =>
-            merges += ((k.toLong, l, r, l + r, cnt, lc, rc, sc))
-            cur = cur.withColumn("seq", call_function("replace", col("seq"),
-              lit(s" $l  $r "), lit(s" $l$r ")))
-            k += 1
-          case None => exhausted = true
+    wordpieceMerges(s, "wordpieceMerges|" + dir, docsSig(s, dir)) {
+      val vocab = bpeVocab(s, dir).cache()
+      val merges = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, String, String, String, Long, Long, Long, Long)]
+      try {
+        var cur = vocab.select(col("seq"), col("freq"))
+        var k = 1
+        var exhausted = false
+        while (k <= WORDPIECE_MERGES && !exhausted) {
+          val split0 = cur
+            .select(split(trim(col("seq")), "  ").as("s"), col("freq"))
+          val syms = split0
+            .select(explode(col("s")).as("sym"), col("freq"))
+            .groupBy(col("sym")).agg(sum(col("freq")).as("scnt"))
+          val best = split0
+            .filter(size(col("s")) >= 2)
+            .select(col("freq"), explode(expr(
+              "transform(sequence(0, size(s)-2), i -> struct(s[i] as l, s[i+1] as r))")).as("p"))
+            .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+            .agg(sum(col("freq")).as("cnt"))
+            .join(broadcast(syms.select(col("sym").as("l"), col("scnt").as("lcnt"))), "l")
+            .join(broadcast(syms.select(col("sym").as("r"), col("scnt").as("rcnt"))), "r")
+            .withColumn("score_e18", expr(
+              """CAST((CAST(cnt AS DECIMAL(38,0)) * 1000000000000000000)
+                | div (CAST(lcnt AS DECIMAL(38,0)) * rcnt) AS BIGINT)""".stripMargin))
+            .orderBy(col("score_e18").desc, col("l"), col("r"))
+            .limit(1)
+            .select(col("l"), col("r"), col("cnt"), col("lcnt"), col("rcnt"),
+              col("score_e18"))
+            .as[(String, String, Long, Long, Long, Long)].collect()
+          best.headOption match {
+            case Some((l, r, cnt, lc, rc, sc)) =>
+              merges += ((k.toLong, l, r, l + r, cnt, lc, rc, sc))
+              cur = cur.withColumn("seq", call_function("replace", col("seq"),
+                lit(s" $l  $r "), lit(s" $l$r ")))
+              k += 1
+            case None => exhausted = true
+          }
         }
-      }
-    } finally vocab.unpersist()
-    val trained = merges.toSeq
-    val prev = wordpieceMerges.putIfAbsent(memoKey, trained)
-    if (prev != null) prev else trained
+      } finally vocab.unpersist()
+      merges.toSeq
+    }
   }
 
   def tokenizeWordpieceTrain(s: SparkSession, dir: String): DataFrame = {
@@ -2456,8 +2445,7 @@ object TextOps {
   private def lg2(x: Long): Long = 63L - java.lang.Long.numberOfLeadingZeros(x)
 
   /** Trained unigram model memo: (piece, seed_mass, em_mass, cost). */
-  private val uniModels = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, Long, Long, Long)]]()
+  private val uniModels = new SessionMemo[Seq[(String, Long, Long, Long)]]
 
   private def uniWordFreq(s: SparkSession, dir: String): DataFrame =
     docs(s, dir).select(explode(words).as("w")).filter(col("w") =!= "")
@@ -2465,43 +2453,40 @@ object TextOps {
 
   private def trainedUnigram(s: SparkSession, dir: String): Seq[(String, Long, Long, Long)] = {
     import s.implicits._
-    val memoKey = bpeCorpusKey(s, dir)
-    val cached = uniModels.get(memoKey)
-    if (cached != null) return cached
-    val wv = uniWordFreq(s, dir).cache()
-    // seed: alphabet + top-K multi-char substrings by weighted mass.
-    // Both caches are dropped in the finally: Spark's cache manager
-    // matches plans by path, so a cache left behind would serve the
-    // pre-rewrite pieces to the next training on a rewritten corpus.
-    val sub = wv.select(col("freq"), explode(expr(
-        s"""flatten(transform(sequence(1, length(w)), i ->
-           |  transform(sequence(1, least($UNI_MAXP, length(w) - i + 1)),
-           |    l -> substring(w, i, l))))""".stripMargin)).as("piece"))
-      .groupBy(col("piece")).agg(sum(col("freq")).as("mass"))
-      .cache()
-    try {
-      val alpha = sub.filter(length(col("piece")) === 1)
-      val multi = sub.filter(length(col("piece")) >= 2)
-        .orderBy(col("mass").desc, col("piece")).limit(UNI_K)
-      // MODEL-STATE collect: O(alphabet + UNI_K) rows
-      val seed = alpha.union(multi).as[(String, Long)].collect().toSeq
-      val m1 = seed.map(_._2).sum
-      val cost1 = seed.map { case (p, m) => p -> (lg2(m1) - lg2(m)) }.toMap
-      // hard-EM round: usage mass from round-1 Viterbi segmentations
-      val seg1 = wv.as[(String, Long)].mapPartitions { it =>
-        it.map { case (w, f) =>
-          val (_, _, acc) = uniViterbi(w, cost1); (f, acc)
-        }
-      }.toDF("freq", "acc")
-      val used = seg1.select(col("freq"), explode(split(col("acc"), " ")).as("piece"))
-        .groupBy(col("piece")).agg(sum(col("freq")).as("used"))
-        .as[(String, Long)].collect().toMap // O(pieces)
-      val mass2 = seed.map { case (p, sm) => (p, sm, used.getOrElse(p, 0L) + 1L) }
-      val m2 = mass2.map(_._3).sum
-      val model = mass2.map { case (p, sm, em) => (p, sm, em, lg2(m2) - lg2(em)) }
-      val prev = uniModels.putIfAbsent(memoKey, model)
-      if (prev != null) prev else model
-    } finally { sub.unpersist(); wv.unpersist() }
+    uniModels(s, "unigramModel|" + dir, docsSig(s, dir)) {
+      val wv = uniWordFreq(s, dir).cache()
+      // seed: alphabet + top-K multi-char substrings by weighted mass.
+      // Both caches are dropped in the finally: Spark's cache manager
+      // matches plans by path, so a cache left behind would serve the
+      // pre-rewrite pieces to the next training on a rewritten corpus.
+      val sub = wv.select(col("freq"), explode(expr(
+          s"""flatten(transform(sequence(1, length(w)), i ->
+             |  transform(sequence(1, least($UNI_MAXP, length(w) - i + 1)),
+             |    l -> substring(w, i, l))))""".stripMargin)).as("piece"))
+        .groupBy(col("piece")).agg(sum(col("freq")).as("mass"))
+        .cache()
+      try {
+        val alpha = sub.filter(length(col("piece")) === 1)
+        val multi = sub.filter(length(col("piece")) >= 2)
+          .orderBy(col("mass").desc, col("piece")).limit(UNI_K)
+        // MODEL-STATE collect: O(alphabet + UNI_K) rows
+        val seed = alpha.union(multi).as[(String, Long)].collect().toSeq
+        val m1 = seed.map(_._2).sum
+        val cost1 = seed.map { case (p, m) => p -> (lg2(m1) - lg2(m)) }.toMap
+        // hard-EM round: usage mass from round-1 Viterbi segmentations
+        val seg1 = wv.as[(String, Long)].mapPartitions { it =>
+          it.map { case (w, f) =>
+            val (_, _, acc) = uniViterbi(w, cost1); (f, acc)
+          }
+        }.toDF("freq", "acc")
+        val used = seg1.select(col("freq"), explode(split(col("acc"), " ")).as("piece"))
+          .groupBy(col("piece")).agg(sum(col("freq")).as("used"))
+          .as[(String, Long)].collect().toMap // O(pieces)
+        val mass2 = seed.map { case (p, sm) => (p, sm, used.getOrElse(p, 0L) + 1L) }
+        val m2 = mass2.map(_._3).sum
+        mass2.map { case (p, sm, em) => (p, sm, em, lg2(m2) - lg2(em)) }
+      } finally { sub.unpersist(); wv.unpersist() }
+    }
   }
 
   /** The trained unigram model — piece inventory with seed mass, EM

@@ -99,25 +99,13 @@ object SharedRel {
 
   // (session, STABLE artifact id — name|dir, conf dials included) →
   // (signature, relation); see SessionMemo.
-  private val memo = new SessionMemo
-
-  /** Driver-side file signature of `dir/<table>.parquet` — FS metadata
-    * only, no Spark job (the Similarity.corpusKey pattern).
-    */
-  def corpusSig(s: SparkSession, dir: String, table: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stats =
-      try fs.listStatus(path).map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
-      catch { case _: java.io.FileNotFoundException => Array(s"$dir:missing") }
-    dir + "|" + stats.sorted.mkString(",")
-  }
+  private val memo = new SessionMemo[DataFrame]
 
   /** Memoized stable checkpoint of `build`, keyed on (session, id) and
     * validated against `sig`: a hit with a stale signature rebuilds and
     * REPLACES the entry (the dropped relation's checkpoint blocks are
-    * freed by ContextCleaner once unreferenced). The build runs OUTSIDE
-    * the map's lock (the Ingest-fixture lesson).
+    * freed by ContextCleaner once unreferenced). `sig` is
+    * [[SessionMemo.corpusSig]] of the files the artifact derives from.
     */
   def apply(s: SparkSession, id: String, sig: String)
       (build: => DataFrame): DataFrame =

@@ -38,20 +38,11 @@ object Tables {
     * each execution still scans parquet.
     */
   // (session, path) → (file signature, relation); see SessionMemo.
-  private val relCache = new graft.plans.SessionMemo
-
-  private def fileSig(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString(",")
-    catch { case _: java.io.FileNotFoundException => "missing" }
-  }
+  private val relCache = new graft.plans.SessionMemo[DataFrame]
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    relCache(spark, path, fileSig(spark, path)) {
+    relCache(spark, path, graft.plans.SessionMemo.corpusSig(spark, sfDir, name)) {
       val df = spark.read.parquet(path)
       if (name == "events" && df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         // FLOOR division, not `div` (truncate-toward-zero): for pre-1970

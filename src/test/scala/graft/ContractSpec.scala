@@ -82,4 +82,36 @@ class ContractSpec extends AnyFunSuite {
     assert(kept + omitted == SparkEntry.queries.size,
       s"kept($kept) + omitted($omitted) must cover the inventory (${SparkEntry.queries.size})")
   }
+
+  test("artifact_builds escapes ids and faces that embed quotes and backslashes") {
+    val dir = "C:\\corpora\\\"q\" sf"
+    val builds = Seq(
+      graft.plans.SharedRel.Build(s"annTruth|$dir", 1.5, "face \"a\"\\b"),
+      graft.plans.SharedRel.Build("plain", 0.25, ""))
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Bench.artifactBuildsJson(builds))
+    assert(parsed.size == 2)
+    assert(parsed.get(0).get("artifact").asText == s"annTruth|$dir")
+    assert(parsed.get(0).get("face").asText == "face \"a\"\\b")
+    assert(parsed.get(0).get("sec").asDouble == 1.5)
+    assert(parsed.get(1).get("artifact").asText == "plain")
+  }
+
+  // One memo for corpus artifacts: the file-listing signature and the
+  // session-identity key live in plans/SessionMemo.scala only, so a new
+  // operator reuses the registry instead of growing its own copy.
+  test("no corpus signature or session-identity key outside SessionMemo") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val registry = files.filter(_.getFileName.toString == "SessionMemo.scala")
+    assert(registry.size == 1 && files.size > 1, s"expected the registry among ${files.size} files")
+    assert(java.nio.file.Files.readString(registry.head).contains("listStatus("))
+    val copies = for {
+      f <- files if f != registry.head
+      (line, n) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("listStatus(") || line.contains("System.identityHashCode(")
+    } yield s"$f:${n + 1}: ${line.trim}"
+    assert(copies.isEmpty, copies.mkString("use graft.plans.SessionMemo instead:\n", "\n", ""))
+  }
 }

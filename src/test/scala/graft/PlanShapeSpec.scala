@@ -273,7 +273,7 @@ class PlanShapeSpec extends SparkSpec {
       s"skew demo must stay a sort-merge join:\n$plan")
     assert(!plan.contains("BroadcastHashJoin"),
       s"a broadcast would bypass the skew-split path:\n$plan")
-    // the DebugSkew-measured precondition: no aggregate between either
+    // the skew A/B precondition (SURVEY.md §8c): no aggregate between either
     // side's exchange and the join (a grouped dim disables the rule).
     // The plan prints top-down, so the SMJ's whole subtree follows its
     // line — both children must be bare scan→exchange→sort pipelines.
@@ -1040,34 +1040,69 @@ class PlanShapeSpec extends SparkSpec {
       s"pipeline_feature_build: encoding join must broadcast:\n$plan")
   }
 
-  test("SharedRel keys per session and evicts on a new corpus signature") {
-    import org.apache.spark.sql.functions.lit
-    val base = spark.range(3).toDF("id")
-    val a1 = graft.plans.SharedRel(spark, "psSpec|artifact", "sig1")(base)
-    val a2 = graft.plans.SharedRel(spark, "psSpec|artifact", "sig1") {
-      fail("memo hit must not rebuild")
-    }
-    assert(a1 eq a2, "same (session, id, sig) must serve the memoized relation")
-    // a newSession() clone (own SQLConf, shared context) must get its
-    // OWN artifact — a relation plans under the session that built it,
-    // so serving the original session's would leak its conf
+  test("SessionMemo keys every artifact kind per session and keeps one entry per id") {
+    import graft.plans.{SessionMemo, SharedRel}
+    import org.apache.spark.sql.SparkSession
+    // the three kinds the registry serves: driver-side values (trained
+    // models, counts), checkpointed relations (SharedRel) and persisted
+    // catalog tables; each call reports whether it built
+    var built = 0
+    val values = new SessionMemo[Array[Byte]]
+    def value(s: SparkSession, sig: String): AnyRef =
+      values(s, "psSpec|value", sig) { built += 1; new Array[Byte](1 << 20) }
+    def relation(s: SparkSession, sig: String): AnyRef =
+      SharedRel(s, "psSpec|relation", sig) { built += 1; s.range(3).toDF("id") }
+    def tables(s: SparkSession, id: String, sig: String): Seq[String] =
+      SessionMemo.tables(s, "psSpec", id, sig, "graft_psspec_a_", "graft_psspec_b_") { names =>
+        built += 1
+        names.foreach(n => s.range(3).write.format("parquet").saveAsTable(n))
+      }
+    def builds(call: => Any): Int = { val b0 = built; call; built - b0 }
+    // a newSession() clone (own SQLConf, shared context) gets its OWN
+    // entries — a relation plans under the session that built it, so
+    // serving the original session's would leak its conf
     val iso = spark.newSession()
-    val b1 = graft.plans.SharedRel(iso, "psSpec|artifact", "sig1") {
-      iso.range(3).toDF("id")
+    Seq[(String, (SparkSession, String) => Any)](
+      "value" -> value, "relation" -> relation, "tables" -> (tables(_, "registry", _))
+    ).foreach { case (kind, get) =>
+      assert(builds(get(spark, "sig1")) == 1, s"$kind: first touch must build")
+      var hit: Any = null
+      assert(builds { hit = get(spark, "sig1") } == 0, s"$kind: a hit must not rebuild")
+      assert(hit == get(spark, "sig1"), s"$kind: a hit must serve the memoized entry")
+      assert(builds(get(iso, "sig1")) == 1,
+        s"$kind: a session clone must not be served another session's entry")
+      assert(builds(get(spark, "sig2")) == 1, s"$kind: a new signature must rebuild")
+      assert(builds(get(spark, "sig1")) == 1,
+        s"$kind: the new signature must replace the stale entry, not sit beside it")
     }
-    assert(!(b1 eq a1), "a session clone must not be served another session's artifact")
-    assert(b1.sparkSession eq iso, "the clone's artifact must plan under the clone")
-    // a new signature REPLACES the stale entry (rewritten corpus) ...
-    val c1 = graft.plans.SharedRel(spark, "psSpec|artifact", "sig2") {
-      base.withColumn("v", lit(1L))
-    }
-    assert(c1.columns.contains("v"), "new signature must rebuild")
-    // ... and the old signature is gone, not accumulated
-    var rebuilt = false
-    graft.plans.SharedRel(spark, "psSpec|artifact", "sig1") {
-      rebuilt = true; base
-    }
-    assert(rebuilt, "replace-on-new-signature must evict the stale entry")
+    assert(relation(iso, "sig1").asInstanceOf[org.apache.spark.sql.DataFrame].sparkSession eq iso,
+      "the clone's relation must plan under the clone")
+    // one entry per id: the superseded value is released, not retained
+    val superseded = new java.lang.ref.WeakReference(value(spark, "sig3"))
+    value(spark, "sig4")
+    var gcs = 0
+    while (superseded.get != null && gcs < 20) { System.gc(); Thread.sleep(50); gcs += 1 }
+    assert(superseded.get == null, "the memo still holds a value under a superseded signature")
+    // tables: the replaced entry's tables leave the catalog AND the
+    // warehouse; another id (another dial value) keeps its tables
+    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val other = tables(spark, "registry|cells=16", "sig1")
+    val old = tables(spark, "registry", "sig1")
+    val cur = tables(spark, "registry", "sig2")
+    try {
+      assert((old ++ other).toSet.size == 4 && old.toSet.intersect(cur.toSet).isEmpty,
+        s"ids and signatures must name disjoint tables: $old $other $cur")
+      old.foreach { t =>
+        assert(!spark.catalog.tableExists(t), s"superseded table $t still in the catalog")
+        assert(!fs.exists(new org.apache.hadoop.fs.Path(wh, t)), s"superseded table $t still in the warehouse")
+      }
+      (cur ++ other).foreach(t => assert(spark.catalog.tableExists(t), s"live table $t dropped"))
+      // self-heal: a hit whose tables were dropped externally rebuilds
+      spark.sql(s"DROP TABLE ${cur.head}")
+      assert(builds(tables(spark, "registry", "sig2")) == 1, "a dead hit must rebuild")
+      assert(cur.forall(spark.catalog.tableExists))
+    } finally (cur ++ other).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("Tables.load memo isolates sessions and replaces on rewrite") {

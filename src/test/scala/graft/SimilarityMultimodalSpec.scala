@@ -58,7 +58,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
     val recall = hits.toDouble / bf.size
     info(s"IVF recall@5 vs brute force: $recall")
     // trained 32-cell codebook, assign-2, probe-3 measures 0.94 here
-    // (graft.DebugIvf); 0.85 leaves slack for testdata regeneration
+    // (SURVEY.md §8b); 0.85 leaves slack for testdata regeneration
     assert(recall >= 0.85, s"IVF recall@5 regressed below trained baseline: $recall")
   }
 
@@ -1144,6 +1144,35 @@ class SimilarityMultimodalSpec extends SparkSpec {
       assert(Similarity.annIvf(spark, sf)
         .as[(Long, Long, Double, Long)].collect().toSeq == ivfDefault,
         "unsetting the dial must restore the committed default face")
+    } finally spark.conf.unset(Similarity.AnnCellsKey)
+  }
+
+  test("spark.graft.ann.cells toggled 32 -> 16 -> 32: both dials' artifacts coexist, no rebuild") {
+    // the dial is part of the artifact id, not the corpus signature: a
+    // second dial value adds entries beside the first instead of
+    // replacing them, so toggling back rebuilds nothing
+    assert(spark.conf.getOption(Similarity.AnnCellsKey).isEmpty)
+    def run(): Unit = {
+      Similarity.annProbePlan(spark, sf).collect()
+      Similarity.annIvfIndexed(spark, sf).collect()
+    }
+    def ivfTables: Set[String] = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_ivf_")).toSet
+    try {
+      run()
+      val at32 = ivfTables
+      spark.conf.set(Similarity.AnnCellsKey, "16")
+      run()
+      val at16 = ivfTables -- at32
+      assert(at16.size == 2, s"cells=16 must add its own codebook + index tables: $at16")
+      spark.conf.unset(Similarity.AnnCellsKey)
+      graft.plans.SharedRel.drainBuilds()
+      run()
+      val rebuilt = graft.plans.SharedRel.drainBuilds()
+      assert(rebuilt.isEmpty, s"returning to cells=32 rebuilt ${rebuilt.map(_.id)}")
+      val now = ivfTables
+      assert(at32.subsetOf(now) && at16.subsetOf(now),
+        s"both dials' IVF tables must stay in the catalog: $now")
     } finally spark.conf.unset(Similarity.AnnCellsKey)
   }
 
