@@ -19,6 +19,21 @@ import graft.sources.Tables
   * cloud is derived from `events` with pure integer Weyl-sequence
   * arithmetic — exactly reproducible in the DuckDB oracle.
   *
+  * == Stages ==
+  * The chain is written ONCE per stage, once on the DataFrame side and
+  * once on the SQL side (the DuckDB twins share CTE builders only with
+  * each other), and every face composes the stages:
+  *
+  *   - fold: [[projected]] → [[inBbox]] → [[binX]]/[[binY]] (cell
+  *     [[pxPy]], day key [[dayKey]]); SQL [[foldSql]];
+  *   - render: [[fanOut]] (3×3 spread) → eq-hist → [[ramp]]; the
+  *     per-frame chain is [[frameRender]] / [[renderSql]];
+  *   - assemble: [[frameSeq]], [[cumSum]], [[manifest]], [[frameDay]];
+  *     audits: [[zoneProbe]]; tiles: [[tilePyramid]].
+  *
+  * A stage returns a lazy plan (nothing new is cached), so each face's
+  * optimized plan is the one its hand-written chain would give.
+  *
   * == Scale notes ==
   * Rasterization groups on a bounded key space (1.4M pixels): map-side
   * partial aggregation absorbs virtually all input rows, shuffle volume
@@ -83,29 +98,135 @@ object Geo {
        |    floor((ln(tan((lat + 90.0) * ${math.Pi / 360.0})) * $R) * 100.0 + 0.5) / 100.0 AS y
        |  FROM points)""".stripMargin
 
+  // ------------------------------------------------------------ fold
+  /** Projection stage: the corpus points as (`carry`…, x, y). */
+  private def projected(s: SparkSession, dir: String, carry: Column*): DataFrame =
+    points(s, dir).select(carry :+ mercX :+ mercY: _*)
+
+  /** The reference bbox predicate over projected x/y. On a real dataset
+    * with materialized x/y this is a pushed-down parquet range filter;
+    * here it applies right above the scan (only event_id is read). */
+  private def inBbox: Column =
+    col("x") >= X0 && col("x") <= X1 && col("y") >= Y0 && col("y") <= Y1
+  private val inBboxSql = s"x >= $X0 AND x <= $X1 AND y >= $Y0 AND y <= $Y1"
+
+  /** Projection + bbox cut. */
+  private def bboxed(s: SparkSession, dir: String, carry: Column*): DataFrame =
+    projected(s, dir, carry: _*).filter(inBbox)
+
+  /** Pixel binning of an in-bbox point onto an n-cell axis
+    * (datashader's rule: the far edge folds into the last cell). The
+    * canvas is n = W by H; the tile pyramid's base is n = 32. */
+  private def binX(n: Int): Column = least(floor((col("x") - X0) / (X1 - X0) * n), lit(n - 1))
+  private def binY(n: Int): Column = least(floor((col("y") - Y0) / (Y1 - Y0) * n), lit(n - 1))
+  /** The canvas cell (px, py) of an in-bbox point. */
+  private def pxPy: Seq[Column] =
+    Seq(binX(W).cast("long").as("px"), binY(H).cast("long").as("py"))
+
+  /** SQL twins of [[binX]] / [[binY]] on an n×m grid. */
+  private def binSql(n: Int, m: Int): (String, String) = (
+    s"CAST(least(floor((x - ($X0)) / (${X1 - X0}) * $n), ${n - 1}) AS BIGINT)",
+    s"CAST(least(floor((y - ($Y0)) / (${Y1 - Y0}) * $m), ${m - 1}) AS BIGINT)")
+
+  /** Epoch-day key of a point's timestamp (the frame a point renders in). */
+  private def dayKey: Column = expr("unix_micros(ts) div 86400000000").as("dkey")
+  private val dayKeySql = "epoch_us(ts) // 86400000000"
+
+  /** The frame day an epoch-day key stands for, formatted. */
+  private def frameDay: Column =
+    expr("date_format(date_add(DATE'1970-01-01', CAST(dkey AS INT)), 'yyyy-MM-dd')")
+      .as("frame_day")
+  private def frameDaySql(dkey: String): String =
+    s"strftime(DATE '1970-01-01' + CAST($dkey AS INT), '%Y-%m-%d') AS frame_day"
+
+  /** The fold's SQL twin: in-bbox merc rows binned onto the n×m grid
+    * and grouped per ([dkey,] px, py) with `aggs`. */
+  private def foldSql(name: String, aggs: String, perDay: Boolean = true,
+                      n: Int = W, m: Int = H): String = {
+    val (px, py) = binSql(n, m)
+    val (day, keys) = if (perDay) (s"$dayKeySql AS dkey, ", "1, 2, 3") else ("", "1, 2")
+    s"""$name AS (
+       |  SELECT $day$px AS px, $py AS py, $aggs
+       |  FROM merc WHERE $inBboxSql
+       |  GROUP BY $keys)""".stripMargin
+  }
+
+  // ---------------------------------------------------------- render
+  /** The 3×3 ones-kernel fan-out (datashader's `tf.spread`): each
+    * cell's count shifted onto its nine neighbours (qx, qy), clipped at
+    * the canvas edges; `keys` ride along. */
+  private def fanOut(raster: DataFrame, keys: Column*): DataFrame = {
+    val offs = (for (dx <- -1 to 1; dy <- -1 to 1)
+      yield struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))).toSeq
+    raster.select(keys ++ Seq(col("px"), col("py"), col("cnt"),
+        explode(array(offs: _*)).as("o")): _*)
+      .select(keys ++ Seq((col("px") + col("o.dx")).as("qx"),
+        (col("py") + col("o.dy")).as("qy"), col("cnt")): _*)
+      .filter(col("qx") >= 0 && col("qx") <= (W - 1) &&
+        col("qy") >= 0 && col("qy") <= (H - 1))
+  }
+
+  /** SQL twin of [[fanOut]] over the cells of `src`. */
+  private def fanOutSql(src: String, keys: String): String =
+    s"""SELECT ${keys}px + dx AS qx, py + dy AS qy, cnt
+       |  FROM $src CROSS JOIN (SELECT o1.d AS dx, o2.d AS dy
+       |    FROM (SELECT unnest(range(-1, 2)) AS d) o1
+       |    CROSS JOIN (SELECT unnest(range(-1, 2)) AS d) o2) off
+       |  WHERE px + dx BETWEEN 0 AND ${W - 1} AND py + dy BETWEEN 0 AND ${H - 1}""".stripMargin
+
+  /** Fire-like color ramp (black → red → yellow → white), the shape of
+    * the reference's colorcet `fire` map (main.py's tf.shade cmap):
+    * piecewise-linear (red, green, blue) over the 0..255 shade with
+    * integer arithmetic — identical on both engines. */
+  private def ramp(shade: Column): (Column, Column, Column) = (
+    least(lit(255L), shade * 3L),
+    greatest(lit(0L), least(lit(255L), (shade - 85L) * 3L)),
+    greatest(lit(0L), least(lit(255L), (shade - 170L) * 3L)))
+  private def rampSql(shade: String): (String, String, String) = (
+    s"least(255, $shade * 3)",
+    s"greatest(0, least(255, ($shade - 85) * 3))",
+    s"greatest(0, least(255, ($shade - 170) * 3))")
+
+  // -------------------------------------------------------- assemble
+  /** Manifest windows over an O(days) frame ledger — the documented
+    * bounded-relation single-partition windows: the 1-based frame
+    * sequence, a running sum, and the encoder manifest's cumulative
+    * point offsets, total frame count and 2-fps presentation time. */
+  private def frameSeq(order: Column): Column =
+    row_number().over(Window.orderBy(order)).cast("long")
+  private def cumSum(c: Column, order: Column): Column =
+    sum(c).over(Window.orderBy(order).rowsBetween(Window.unboundedPreceding, Window.currentRow))
+  private def manifest: Seq[Column] = Seq(
+    cumSum(col("n_points"), col("frame_seq")).as("cum_points"),
+    count(lit(1)).over(Window.partitionBy()).as("total_frames"),
+    ((col("frame_seq") - 1) / 2.0).as("pts_sec"))
+
+  private def seqSql(order: String): String =
+    s"CAST(row_number() OVER (ORDER BY $order) AS BIGINT)"
+  private def cumSumSql(c: String, order: String): String =
+    s"CAST(sum($c) OVER (ORDER BY $order ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)"
+  private val manifestSql: String =
+    s"""${cumSumSql("n_points", "frame_seq")} AS cum_points,
+       |  count(*) OVER () AS total_frames,
+       |  (frame_seq - 1) / 2.0 AS pts_sec""".stripMargin
+
+  // ----------------------------------------------------------- faces
   def geoMercator(s: SparkSession, dir: String): DataFrame =
-    points(s, dir).select(col("event_id"), mercX, mercY)
-      .orderBy(col("event_id"))
+    projected(s, dir, col("event_id")).orderBy(col("event_id"))
 
   val geoMercatorSql: String =
     s"""WITH $pointsCte, $mercCte
        |SELECT event_id, x, y
        |FROM merc ORDER BY event_id""".stripMargin
 
-  /** Bounding-box range predicate. On a real dataset with materialized
-    * x/y this is a pushed-down parquet range filter; here it applies
-    * right above the scan (only event_id is read).
-    */
   def geoBboxFilter(s: SparkSession, dir: String): DataFrame =
-    points(s, dir).select(col("event_id"), mercX, mercY)
-      .filter(col("x") >= X0 && col("x") <= X1 && col("y") >= Y0 && col("y") <= Y1)
-      .orderBy(col("event_id"))
+    bboxed(s, dir, col("event_id")).orderBy(col("event_id"))
 
   val geoBboxFilterSql: String =
     s"""WITH $pointsCte, $mercCte
        |SELECT event_id, x, y
        |FROM merc
-       |WHERE x >= $X0 AND x <= $X1 AND y >= $Y0 AND y <= $Y1
+       |WHERE $inBboxSql
        |ORDER BY event_id""".stripMargin
 
   /** Rasterize: bin points into the 1400×1000 grid and count per pixel
@@ -113,21 +234,10 @@ object Geo {
     * agg absorbs the input map-side.
     */
   def rasterDf(s: SparkSession, dir: String): DataFrame =
-    points(s, dir).select(col("event_id"), mercX, mercY)
-      .filter(col("x") >= X0 && col("x") <= X1 && col("y") >= Y0 && col("y") <= Y1)
-      .select(
-        least(floor((col("x") - X0) / (X1 - X0) * W), lit(W - 1)).cast("long").as("px"),
-        least(floor((col("y") - Y0) / (Y1 - Y0) * H), lit(H - 1)).cast("long").as("py"))
+    bboxed(s, dir, col("event_id")).select(pxPy: _*)
       .groupBy("px", "py").agg(count(lit(1)).as("cnt"))
 
-  private val rasterCte: String =
-    s"""raster AS (
-       |  SELECT CAST(least(floor((x - ($X0)) / (${X1 - X0}) * $W), ${W - 1}) AS BIGINT) AS px,
-       |    CAST(least(floor((y - ($Y0)) / (${Y1 - Y0}) * $H), ${H - 1}) AS BIGINT) AS py,
-       |    count(*) AS cnt
-       |  FROM merc
-       |  WHERE x >= $X0 AND x <= $X1 AND y >= $Y0 AND y <= $Y1
-       |  GROUP BY 1, 2)""".stripMargin
+  private val rasterCte: String = foldSql("raster", "count(*) AS cnt", perDay = false)
 
   def geoRasterize(s: SparkSession, dir: String): DataFrame =
     rasterDf(s, dir).orderBy(col("px"), col("py"))
@@ -146,7 +256,9 @@ object Geo {
     * floor((below/(n_bins−1))·255), ties shade equally — but no single
     * task ever sorts O(pixels); the only O(pixels) shuffle is the
     * histogram partial-agg, and the final join is broadcast
-    * (shuffle-free).
+    * (shuffle-free). Kept apart from [[frameRender]]'s per-frame
+    * window lookup on purpose: this face has no partition key, so a
+    * window here would be the un-partitioned rank it avoids.
     */
   private def eqhistShade(raster: DataFrame): DataFrame = {
     val hist = raster.groupBy(col("cnt")).agg(count(lit(1)).as("m"))
@@ -177,18 +289,8 @@ object Geo {
        |  CAST(floor(percent_rank() OVER (ORDER BY cnt) * 255) AS INT) AS shade
        |FROM raster ORDER BY px, py""".stripMargin
 
-  /** Fire-like color ramp (black → red → yellow → white), the shape of
-    * the reference's colorcet `fire` map (main.py's tf.shade cmap).
-    * Piecewise-linear over the 0..255 shade with integer arithmetic —
-    * identical on both engines.
-    */
+  /** The eq-hist shade through the [[ramp]]: per pixel shade and RGB. */
   def geoShadeRgb(s: SparkSession, dir: String): DataFrame = {
-    def ramp(shade: org.apache.spark.sql.Column) = {
-      val r = least(lit(255L), shade * 3L)
-      val g = greatest(lit(0L), least(lit(255L), (shade - 85L) * 3L))
-      val b = greatest(lit(0L), least(lit(255L), (shade - 170L) * 3L))
-      (r, g, b)
-    }
     val shaded = eqhistShade(rasterDf(s, dir))
       .select(col("px"), col("py"), col("cnt"), col("shade").cast("long").as("shade"))
     val (r, g, b) = ramp(col("shade"))
@@ -197,30 +299,29 @@ object Geo {
       .orderBy(col("px"), col("py"))
   }
 
-  val geoShadeRgbSql: String =
+  val geoShadeRgbSql: String = {
+    val (r, g, b) = rampSql("shade")
     s"""WITH $pointsCte, $mercCte, $rasterCte,
        |shaded AS (
        |  SELECT px, py, cnt,
        |    CAST(floor(percent_rank() OVER (ORDER BY cnt) * 255) AS BIGINT) AS shade
        |  FROM raster)
-       |SELECT px, py, shade,
-       |  least(255, shade * 3) AS red,
-       |  greatest(0, least(255, (shade - 85) * 3)) AS green,
-       |  greatest(0, least(255, (shade - 170) * 3)) AS blue
+       |SELECT px, py, shade, $r AS red, $g AS green, $b AS blue
        |FROM shaded ORDER BY px, py""".stripMargin
+  }
 
   /** Spread pass over the shaded raster (r14 wave 25 — datashader's
     * `tf.spread` step, the one visual-pipeline stage between shade and
     * export the inventory lacked: single-pixel points are invisible at
     * display resolution, so each occupied cell's count is spread over
-    * its 3×3 neighborhood before export). Implemented as a 9-offset
-    * fan-out of the OCCUPIED raster cells (a convolution with the ones
-    * kernel) clipped at the canvas edges, then a grouped re-sum per
-    * target cell — `cnt_spread` = Σ neighbor counts, `n_src` = how
-    * many occupied neighbors contributed, and the original `cnt`
-    * rides along (0 where spread lit a previously-empty cell).
-    * Interior mass conservation — every count lands in exactly 9
-    * cells unless clipped — is what the spec pins.
+    * its 3×3 neighborhood before export). Implemented as the
+    * [[fanOut]] of the OCCUPIED raster cells (a convolution with the
+    * ones kernel), then a grouped re-sum per target cell —
+    * `cnt_spread` = Σ neighbor counts, `n_src` = how many occupied
+    * neighbors contributed, and the original `cnt` rides along (0
+    * where spread lit a previously-empty cell). Interior mass
+    * conservation — every count lands in exactly 9 cells unless
+    * clipped — is what the spec pins.
     *
     * == Scale design ==
     * The fan-out rides the RASTER relation (canvas-bounded, ≤1.4M
@@ -232,14 +333,7 @@ object Geo {
   def geoSpread(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.Checkpoints.StableSyntax
     val raster = rasterDf(s, dir).stableCheckpoint()
-    val offs = (for (dx <- -1 to 1; dy <- -1 to 1)
-      yield struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))).toSeq
-    val sp = raster.select(col("px"), col("py"), col("cnt"),
-        explode(array(offs: _*)).as("o"))
-      .select((col("px") + col("o.dx")).as("qx"),
-        (col("py") + col("o.dy")).as("qy"), col("cnt"))
-      .filter(col("qx") >= 0 && col("qx") <= (W - 1) &&
-        col("qy") >= 0 && col("qy") <= (H - 1))
+    val sp = fanOut(raster)
       .groupBy(col("qx"), col("qy"))
       .agg(count(lit(1)).as("n_src"), sum(col("cnt")).as("cnt_spread"))
     sp.join(raster.select(col("px"), col("py"), col("cnt")),
@@ -252,13 +346,7 @@ object Geo {
 
   val geoSpreadSql: String =
     s"""WITH $pointsCte, $mercCte, $rasterCte,
-       |off AS (SELECT o1.d AS dx, o2.d AS dy
-       |  FROM (SELECT unnest(range(-1, 2)) AS d) o1
-       |  CROSS JOIN (SELECT unnest(range(-1, 2)) AS d) o2),
-       |sp AS (SELECT px + dx AS qx, py + dy AS qy, cnt
-       |  FROM raster CROSS JOIN off
-       |  WHERE px + dx BETWEEN 0 AND ${W - 1}
-       |    AND py + dy BETWEEN 0 AND ${H - 1}),
+       |sp AS (${fanOutSql("raster", "")}),
        |agg AS (SELECT qx, qy, count(*) AS n_src,
        |    CAST(sum(cnt) AS BIGINT) AS cnt_spread
        |  FROM sp GROUP BY 1, 2)
@@ -273,48 +361,30 @@ object Geo {
     * (Implementation.cs:41-57): partitions become group keys, the array
     * index becomes row_number over the partition order.
     */
-  def mapFanout(s: SparkSession, dir: String): DataFrame = {
-    val frames = points(s, dir).select(col("event_id"), col("ts"), mercX, mercY)
-      .filter(col("x") >= X0 && col("x") <= X1 && col("y") >= Y0 && col("y") <= Y1)
+  def mapFanout(s: SparkSession, dir: String): DataFrame =
+    bboxed(s, dir, col("event_id"), col("ts"))
       .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("frame_day"))
       .agg(count(lit(1)).as("n_points"),
         sum(col("event_id") % 997L).as("checksum"))
-    frames
-      .withColumn("frame_seq", row_number().over(Window.orderBy(col("frame_day"))).cast("long"))
+      .withColumn("frame_seq", frameSeq(col("frame_day")))
       .select(col("frame_seq"), col("frame_day"), col("n_points"), col("checksum"))
       .orderBy(col("frame_seq"))
-  }
 
-  val mapFanoutSql: String =
-    s"""WITH $pointsCte, $mercCte,
-       |frames AS (
+  /** The fan-out's per-day frames, shared by its twin and the reduce's. */
+  private val framesCte: String =
+    s"""frames AS (
        |  SELECT strftime(ts, '%Y-%m-%d') AS frame_day, count(*) AS n_points,
        |    CAST(sum(event_id % 997) AS BIGINT) AS checksum
        |  FROM merc
-       |  WHERE x >= $X0 AND x <= $X1 AND y >= $Y0 AND y <= $Y1
-       |  GROUP BY 1)
-       |SELECT CAST(row_number() OVER (ORDER BY frame_day) AS BIGINT) AS frame_seq,
+       |  WHERE $inBboxSql
+       |  GROUP BY 1)""".stripMargin
+
+  val mapFanoutSql: String =
+    s"""WITH $pointsCte, $mercCte, $framesCte
+       |SELECT ${seqSql("frame_day")} AS frame_seq,
        |  frame_day, n_points, checksum
        |FROM frames ORDER BY frame_seq""".stripMargin
 
-  /** Frame-over-frame raster churn (r16) — the temporal-diff face of
-    * the animation pipeline ([[mapFanout]] plans the frames,
-    * [[reduceAssemble]] sequences them; this measures what actually
-    * CHANGES between consecutive frames, the signal an animation
-    * pipeline reads to pick frame rate and to skip near-identical
-    * frames): per frame day, against the PREVIOUS calendar day's
-    * raster — lit cells now/before, newly-lit cells, extinguished
-    * cells, signed point-mass delta, and cell churn in exact ppm over
-    * the two frames' cell union. The corpus's first frame is
-    * all-new by contract (n_prev = 0, churn 10⁶).
-    *
-    * == Scale design ==
-    * ONE corpus scan folds map-side onto the bounded (day, px, py)
-    * lit-cell relation (≤ days × 1.4M, checkpointed — consumed twice
-    * as current and day-shifted previous); the frame pair is a
-    * full-outer join ON that bounded relation, never the points; the
-    * ledger is O(days).
-    */
   /** Per-day lit-cell relation (dkey, px, py, cnt) — ONE corpus scan
     * folded map-side onto the bounded grid, checkpointed. Shared by
     * [[geoFrameChurn]], the `stream_frame_churn` batch face and its
@@ -322,13 +392,8 @@ object Geo {
     */
   private[graft] def dayRaster(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.Checkpoints.StableSyntax
-    points(s, dir)
-      .select(expr("unix_micros(ts) div 86400000000").as("dkey"),
-        col("ts"), mercX, mercY)
-      .filter(col("x") >= X0 && col("x") <= X1 && col("y") >= Y0 && col("y") <= Y1)
-      .select(col("dkey"),
-        least(floor((col("x") - X0) / (X1 - X0) * W), lit(W - 1)).cast("long").as("px"),
-        least(floor((col("y") - Y0) / (Y1 - Y0) * H), lit(H - 1)).cast("long").as("py"))
+    bboxed(s, dir, dayKey)
+      .select(col("dkey") +: pxPy: _*)
       .groupBy(col("dkey"), col("px"), col("py")).agg(count(lit(1)).as("cnt"))
       .stableCheckpoint()
   }
@@ -358,17 +423,31 @@ object Geo {
         expr("1000000 * (n_new + n_dead) div (n_prev + n_new)"))
   }
 
+  /** Frame-over-frame raster churn (r16) — the temporal-diff face of
+    * the animation pipeline ([[mapFanout]] plans the frames,
+    * [[reduceAssemble]] sequences them; this measures what actually
+    * CHANGES between consecutive frames, the signal an animation
+    * pipeline reads to pick frame rate and to skip near-identical
+    * frames): per frame day, against the PREVIOUS calendar day's
+    * raster — lit cells now/before, newly-lit cells, extinguished
+    * cells, signed point-mass delta, and cell churn in exact ppm over
+    * the two frames' cell union. The corpus's first frame is
+    * all-new by contract (n_prev = 0, churn 10⁶).
+    *
+    * == Scale design ==
+    * ONE corpus scan folds map-side onto the bounded (day, px, py)
+    * lit-cell relation (≤ days × 1.4M, checkpointed — consumed twice
+    * as current and day-shifted previous); the frame pair is a
+    * full-outer join ON that bounded relation, never the points; the
+    * ledger is O(days).
+    */
   def geoFrameChurn(s: SparkSession, dir: String): DataFrame =
     frameChurnLedger(s, dir)
-      .select(col("dkey").as("day"),
-        expr("date_format(date_add(DATE'1970-01-01', CAST(dkey AS INT)), 'yyyy-MM-dd')")
-          .as("frame_day"),
+      .select(col("dkey").as("day"), frameDay,
         col("n_cur"), col("n_prev"), col("n_new"), col("n_dead"), col("mass_delta"),
         col("churn_ppm"))
       .orderBy(col("day"))
 
-  /** Shared churn-ledger CTE chain (points → merc → per-day raster →
-    * day-shifted full-outer pair → O(days) ledger). */
   /** points → merc → per-(day, px, py) raster-cell CTE prefix (no WITH
     * keyword) — the [[dayRaster]] relation's oracle replay, shared by
     * the churn faces and [[Maintain.shuffleBudget]] so the raster
@@ -376,15 +455,10 @@ object Geo {
     */
   private[graft] val rasterCellsCtes: String =
     s"""$pointsCte, $mercCte,
-       |dr AS (
-       |  SELECT epoch_us(ts) // 86400000000 AS dkey,
-       |    CAST(least(floor((x - ($X0)) / (${X1 - X0}) * $W), ${W - 1}) AS BIGINT) AS px,
-       |    CAST(least(floor((y - ($Y0)) / (${Y1 - Y0}) * $H), ${H - 1}) AS BIGINT) AS py,
-       |    count(*) AS cnt
-       |  FROM merc
-       |  WHERE x >= $X0 AND x <= $X1 AND y >= $Y0 AND y <= $Y1
-       |  GROUP BY 1, 2, 3)""".stripMargin
+       |${foldSql("dr", "count(*) AS cnt")}""".stripMargin
 
+  /** Shared churn-ledger CTE chain (points → merc → per-day raster →
+    * day-shifted full-outer pair → O(days) ledger). */
   private val frameChurnCtes: String =
     s"""WITH $rasterCellsCtes,
        |j AS (
@@ -404,8 +478,7 @@ object Geo {
     * day-shifted full-outer pair, the same O(days) ledger. */
   val geoFrameChurnSql: String =
     s"""$frameChurnCtes
-       |SELECT CAST(dkey AS BIGINT) AS day,
-       |  strftime(DATE '1970-01-01' + CAST(dkey AS INT), '%Y-%m-%d') AS frame_day,
+       |SELECT CAST(dkey AS BIGINT) AS day, ${frameDaySql("dkey")},
        |  n_cur, n_prev, n_new, n_dead, mass_delta,
        |  1000000 * (n_new + n_dead) // (n_prev + n_new) AS churn_ppm
        |FROM led ORDER BY day""".stripMargin
@@ -424,36 +497,94 @@ object Geo {
     * out-of-scope I/O): cumulative point offsets, total frame count,
     * and the 2-fps presentation timestamp.
     */
-  def reduceAssemble(s: SparkSession, dir: String): DataFrame = {
-    val frames = mapFanout(s, dir)
-    val wRun = Window.orderBy(col("frame_seq"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    frames
-      .select(col("frame_seq"), col("frame_day"), col("n_points"),
-        sum(col("n_points")).over(wRun).as("cum_points"),
-        count(lit(1)).over(Window.partitionBy()).as("total_frames"),
-        ((col("frame_seq") - 1) / 2.0).as("pts_sec"))
+  def reduceAssemble(s: SparkSession, dir: String): DataFrame =
+    mapFanout(s, dir)
+      .select(Seq(col("frame_seq"), col("frame_day"), col("n_points")) ++ manifest: _*)
       .orderBy(col("frame_seq"))
-  }
 
   val reduceAssembleSql: String =
-    s"""WITH $pointsCte, $mercCte,
-       |frames AS (
-       |  SELECT strftime(ts, '%Y-%m-%d') AS frame_day, count(*) AS n_points,
-       |    CAST(sum(event_id % 997) AS BIGINT) AS checksum
-       |  FROM merc
-       |  WHERE x >= $X0 AND x <= $X1 AND y >= $Y0 AND y <= $Y1
-       |  GROUP BY 1),
+    s"""WITH $pointsCte, $mercCte, $framesCte,
        |seq AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY frame_day) AS BIGINT) AS frame_seq,
+       |  SELECT ${seqSql("frame_day")} AS frame_seq,
        |    frame_day, n_points FROM frames)
        |SELECT frame_seq, frame_day, n_points,
-       |  CAST(sum(n_points) OVER (ORDER BY frame_seq ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_points,
-       |  count(*) OVER () AS total_frames,
-       |  (frame_seq - 1) / 2.0 AS pts_sec
+       |  $manifestSql
        |FROM seq ORDER BY frame_seq""".stripMargin
 
   // ------------------------------------------- composed frame build
+  /** Shared per-frame render: stages [4-5] of [[pipelineFrameBuild]] —
+    * [[fanOut]] spread + per-frame eq-hist + [[ramp]] RGB, reduced to
+    * the frame ledger (n_spread, spread_mass, shade_mass, rgb_digest).
+    * Every frame-building face pushes its legs through this ONE
+    * arithmetic. The eq-hist is [[eqhistShade]]'s two-pass histogram
+    * with the frame day joined into every key: percent_rank =
+    * cells-strictly-below / (cells − 1) per frame, DuckDB's
+    * `percent_rank() OVER (PARTITION BY dkey ORDER BY cs)` exactly.
+    * Input is a canvas-bounded day raster (dkey, px, py, cnt); every
+    * relation here is canvas-bounded.
+    */
+  private[operators] def frameRender(raster: DataFrame): DataFrame = {
+    // sp feeds the histogram chain AND the final shade join.
+    // DELIBERATELY NOT cached: a .cache() here is a pushdown barrier —
+    // incremental consumers filter frameRender's output to the
+    // churned-day slice, and with the cache in place the
+    // InMemoryRelation materializes EVERY day's spread fold before the
+    // dkey predicate applies (measured: pipeline_job_incremental
+    // 3.6→4.7 s warm, nosort leg 3.1→4.8 s with a cache in).
+    // Re-running the canvas-bounded fold per consumer subtree is
+    // cheaper than losing the pushdown.
+    val sp = fanOut(raster, col("dkey"))
+      .groupBy(col("dkey"), col("qx"), col("qy"))
+      .agg(sum(col("cnt")).as("cs"))
+    val hist = sp.groupBy(col("dkey"), col("cs")).agg(count(lit(1)).as("m"))
+    // below / n_cells as WINDOWS over the one hist relation: hist rows
+    // are UNIQUE per (dkey, cs), so a ROWS-framed cumulative sum
+    // ordered by cs is exactly "Σ m over cs' < cs", and both windows
+    // share one dkey-partitioned sort. Same integer sums, same doubles
+    // as the two-pass histogram — bit-identical shades (oracle-pinned).
+    val wBelow = Window.partitionBy(col("dkey")).orderBy(col("cs"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val prk = when(col("n_cells") === 1, lit(0.0))
+      .otherwise(col("below").cast("double") / (col("n_cells") - 1).cast("double"))
+    val lookup = hist
+      .withColumn("below", coalesce(sum(col("m")).over(wBelow), lit(0L)))
+      .withColumn("n_cells", sum(col("m")).over(Window.partitionBy(col("dkey"))))
+      .select(col("dkey").as("dk_l"), col("cs").as("cs_l"),
+        floor(prk * 255).as("shade"))
+    val shaded = sp.join(broadcast(lookup),
+        col("dk_l") === col("dkey") && col("cs_l") === col("cs"))
+      .select(col("dkey"), col("qx"), col("qy"), col("cs"), col("shade"))
+    val (red, green, blue) = ramp(col("shade"))
+    shaded
+      .select(col("dkey"), col("cs"), col("shade"),
+        (((col("qx") * 1009L + col("qy")) *
+          (red * 65536L + green * 256L + blue + 1L)) % 1000000007L).as("mix"))
+      .groupBy(col("dkey"))
+      .agg(count(lit(1)).as("n_spread"), sum(col("cs")).as("spread_mass"),
+        sum(col("shade")).as("shade_mass"), sum(col("mix")).as("rgb_digest"))
+  }
+
+  /** SQL twin of [[frameRender]]: spread → per-frame percent_rank
+    * eq-hist → fire-ramp ledger over a raster CTE `src`(dkey,px,py,cnt),
+    * CTE names suffixed so a face can render two legs in one
+    * statement; the ledger CTE is `dig<sfx>`. */
+  private def renderSql(src: String, sfx: String): String = {
+    val (r, g, b) = rampSql("shade")
+    s"""sp$sfx AS (SELECT dkey, qx, qy, CAST(sum(cnt) AS BIGINT) AS cs
+       |  FROM (${fanOutSql(src, "dkey, ")}) f
+       |  GROUP BY 1, 2, 3),
+       |sh$sfx AS (SELECT dkey, qx, qy, cs,
+       |    CAST(floor(percent_rank() OVER (PARTITION BY dkey ORDER BY cs) * 255)
+       |      AS BIGINT) AS shade
+       |  FROM sp$sfx),
+       |dig$sfx AS (SELECT dkey, count(*) AS n_spread,
+       |    CAST(sum(cs) AS BIGINT) AS spread_mass,
+       |    CAST(sum(shade) AS BIGINT) AS shade_mass,
+       |    CAST(sum(((qx * 1009 + qy) * ($r * 65536 + $g * 256 + $b + 1)) % 1000000007)
+       |      AS BIGINT) AS rgb_digest
+       |  FROM sh$sfx GROUP BY 1)""".stripMargin
+  }
+
   /** The composed per-frame render (r17) — the reference's actual unit
     * of work (/root/reference/src/awsbatch-map/main.py:21-96: one
     * month → read → normalize → project → filter → rasterize → shade →
@@ -481,90 +612,22 @@ object Geo {
     * ONE corpus scan folds map-side onto the bounded (day, px, py)
     * relation — out-of-bbox rows fold to the (−1,−1) overflow cell so
     * the stage-1/2 marginals read off the SAME bounded relation
-    * (checkpointed; ≤ days × (1.4M + 1) rows). The spread fan-out,
-    * per-frame histogram (days × |distinct counts|), shade lookup and
-    * ledger are all canvas-bounded; no stage past the scan touches
-    * point volume, and the per-day partitioning is embarrassingly
-    * parallel across frames — the reference's 24-way array job as
-    * group keys.
+    * (checkpointed; ≤ days × (1.4M + 1) rows). This overflow-cell fold
+    * is the one fold that keeps out-of-bbox points, so it composes
+    * [[inBbox]] and the binning itself rather than [[bboxed]]. The
+    * spread fan-out, per-frame histogram (days × |distinct counts|),
+    * shade lookup and ledger are all canvas-bounded; no stage past the
+    * scan touches point volume, and the per-day partitioning is
+    * embarrassingly parallel across frames — the reference's 24-way
+    * array job as group keys.
     */
-  /** Shared per-frame render: stages [4-5] of [[pipelineFrameBuild]] —
-    * 3×3 spread + per-frame eq-hist + fire-ramp RGB, reduced to the
-    * frame ledger (n_spread, spread_mass, shade_mass, rgb_digest).
-    * Factored out so [[pipelineFrameIncremental]] can push its before/
-    * after legs through the IDENTICAL arithmetic. The eq-hist is
-    * [[eqhistShade]]'s two-pass histogram with the frame day joined
-    * into every key: percent_rank = cells-strictly-below / (cells − 1)
-    * per frame, DuckDB's `percent_rank() OVER (PARTITION BY dkey ORDER
-    * BY cs)` exactly. Input is a canvas-bounded day raster
-    * (dkey, px, py, cnt); every relation here is canvas-bounded.
-    */
-  private[operators] def frameRender(raster: DataFrame): DataFrame = {
-    val offs = (for (dx <- -1 to 1; dy <- -1 to 1)
-      yield struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))).toSeq
-    // sp feeds the histogram chain AND the final shade join; hist
-    // feeds three aggregates (histO/below/tot). DELIBERATELY NOT
-    // cached: a .cache() here is a pushdown barrier — incremental
-    // consumers filter frameRender's output to the churned-day slice,
-    // and with the cache in place the InMemoryRelation materializes
-    // EVERY day's spread fold before the dkey predicate applies
-    // (measured: pipeline_job_incremental 3.6→4.7 s warm, nosort leg
-    // 3.1→4.8 s with the caches in). Re-running the canvas-bounded
-    // fold per consumer subtree is cheaper than losing the pushdown.
-    val sp = raster.select(col("dkey"), col("px"), col("py"), col("cnt"),
-        explode(array(offs: _*)).as("o"))
-      .select(col("dkey"), (col("px") + col("o.dx")).as("qx"),
-        (col("py") + col("o.dy")).as("qy"), col("cnt"))
-      .filter(col("qx") >= 0 && col("qx") <= (W - 1) &&
-        col("qy") >= 0 && col("qy") <= (H - 1))
-      .groupBy(col("dkey"), col("qx"), col("qy"))
-      .agg(sum(col("cnt")).as("cs"))
-    val hist = sp.groupBy(col("dkey"), col("cs")).agg(count(lit(1)).as("m"))
-    // below / n_cells as WINDOWS over the one hist relation (r22):
-    // the previous shape computed below via an inequality broadcast
-    // self-join (O(k²) probe per frame, k = distinct counts) and
-    // n_cells via a third aggregate — with sp deliberately uncached
-    // (pushdown, above), each consumer subtree re-ran the spread fold,
-    // so one frameRender paid it ~4×. hist rows are UNIQUE per
-    // (dkey, cs), so a ROWS-framed cumulative sum ordered by cs is
-    // exactly "Σ m over cs' < cs", and both windows share one
-    // dkey-partitioned sort. Same integer sums, same doubles —
-    // bit-identical shades (oracle-pinned).
-    val wBelow = Window.partitionBy(col("dkey")).orderBy(col("cs"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prk = when(col("n_cells") === 1, lit(0.0))
-      .otherwise(col("below").cast("double") / (col("n_cells") - 1).cast("double"))
-    val lookup = hist
-      .withColumn("below", coalesce(sum(col("m")).over(wBelow), lit(0L)))
-      .withColumn("n_cells", sum(col("m")).over(Window.partitionBy(col("dkey"))))
-      .select(col("dkey").as("dk_l"), col("cs").as("cs_l"),
-        floor(prk * 255).as("shade"))
-    val shaded = sp.join(broadcast(lookup),
-        col("dk_l") === col("dkey") && col("cs_l") === col("cs"))
-      .select(col("dkey"), col("qx"), col("qy"), col("cs"), col("shade"))
-    val red = least(lit(255L), col("shade") * 3L)
-    val green = greatest(lit(0L), least(lit(255L), (col("shade") - 85L) * 3L))
-    val blue = greatest(lit(0L), least(lit(255L), (col("shade") - 170L) * 3L))
-    shaded
-      .select(col("dkey"), col("cs"), col("shade"),
-        (((col("qx") * 1009L + col("qy")) *
-          (red * 65536L + green * 256L + blue + 1L)) % 1000000007L).as("mix"))
-      .groupBy(col("dkey"))
-      .agg(count(lit(1)).as("n_spread"), sum(col("cs")).as("spread_mass"),
-        sum(col("shade")).as("shade_mass"), sum(col("mix")).as("rgb_digest"))
-  }
-
   def pipelineFrameBuild(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.Checkpoints.StableSyntax
-    val inb = col("x") >= X0 && col("x") <= X1 && col("y") >= Y0 && col("y") <= Y1
     // [1-3] one scan: project, bin (overflow cell for out-of-bbox)
-    val r = points(s, dir)
-      .select(expr("unix_micros(ts) div 86400000000").as("dkey"), mercX, mercY)
+    val r = projected(s, dir, dayKey)
       .select(col("dkey"),
-        when(inb, least(floor((col("x") - X0) / (X1 - X0) * W), lit(W - 1)))
-          .otherwise(lit(-1L)).cast("long").as("px"),
-        when(inb, least(floor((col("y") - Y0) / (Y1 - Y0) * H), lit(H - 1)))
-          .otherwise(lit(-1L)).cast("long").as("py"))
+        when(inBbox, binX(W)).otherwise(lit(-1L)).cast("long").as("px"),
+        when(inBbox, binY(H)).otherwise(lit(-1L)).cast("long").as("py"))
       .groupBy(col("dkey"), col("px"), col("py")).agg(count(lit(1)).as("cnt"))
       .stableCheckpoint()
     val raster = r.filter(col("px") >= 0)
@@ -574,9 +637,7 @@ object Geo {
       sum(when(col("px") >= 0, 1L).otherwise(0L)).as("n_lit"))
     val frame = frameRender(raster)
     stages.join(frame, Seq("dkey"), "left_outer")
-      .select(col("dkey").as("day"),
-        expr("date_format(date_add(DATE'1970-01-01', CAST(dkey AS INT)), 'yyyy-MM-dd')")
-          .as("frame_day"),
+      .select(col("dkey").as("day"), frameDay,
         col("n_points"), col("n_bbox"), col("n_lit"),
         coalesce(col("n_spread"), lit(0L)).as("n_spread"),
         coalesce(col("spread_mass"), lit(0L)).as("spread_mass"),
@@ -586,149 +647,117 @@ object Geo {
   }
 
   /** DuckDB twin: the shared point/merc CTEs, the overflow-cell day
-    * binning, the 3×3 spread, per-frame percent_rank eq-hist (the
-    * two-pass histogram's closed form), fire ramp, same digest. */
-  val pipelineFrameBuildSql: String =
+    * binning, then [[renderSql]] over the in-bbox cells. */
+  val pipelineFrameBuildSql: String = {
+    val (px, py) = binSql(W, H)
     s"""WITH $pointsCte, $mercCte,
        |pr AS (
-       |  SELECT epoch_us(ts) // 86400000000 AS dkey,
-       |    CASE WHEN x >= $X0 AND x <= $X1 AND y >= $Y0 AND y <= $Y1
-       |      THEN CAST(least(floor((x - ($X0)) / (${X1 - X0}) * $W), ${W - 1}) AS BIGINT)
-       |      ELSE -1 END AS px,
-       |    CASE WHEN x >= $X0 AND x <= $X1 AND y >= $Y0 AND y <= $Y1
-       |      THEN CAST(least(floor((y - ($Y0)) / (${Y1 - Y0}) * $H), ${H - 1}) AS BIGINT)
-       |      ELSE -1 END AS py,
+       |  SELECT $dayKeySql AS dkey,
+       |    CASE WHEN $inBboxSql THEN $px ELSE -1 END AS px,
+       |    CASE WHEN $inBboxSql THEN $py ELSE -1 END AS py,
        |    count(*) AS cnt
        |  FROM merc GROUP BY 1, 2, 3),
        |stg AS (SELECT dkey, CAST(sum(cnt) AS BIGINT) AS n_points,
        |    CAST(sum(CASE WHEN px >= 0 THEN cnt ELSE 0 END) AS BIGINT) AS n_bbox,
        |    CAST(sum(CASE WHEN px >= 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_lit
        |  FROM pr GROUP BY 1),
-       |off AS (SELECT o1.d AS dx, o2.d AS dy
-       |  FROM (SELECT unnest(range(-1, 2)) AS d) o1
-       |  CROSS JOIN (SELECT unnest(range(-1, 2)) AS d) o2),
-       |sp AS (SELECT dkey, px + dx AS qx, py + dy AS qy,
-       |    CAST(sum(cnt) AS BIGINT) AS cs
-       |  FROM pr CROSS JOIN off
-       |  WHERE px >= 0 AND px + dx BETWEEN 0 AND ${W - 1}
-       |    AND py + dy BETWEEN 0 AND ${H - 1}
-       |  GROUP BY 1, 2, 3),
-       |sh AS (SELECT dkey, qx, qy, cs,
-       |    CAST(floor(percent_rank() OVER (PARTITION BY dkey ORDER BY cs) * 255)
-       |      AS BIGINT) AS shade
-       |  FROM sp),
-       |rgb AS (SELECT dkey, cs, shade,
-       |    ((qx * 1009 + qy) *
-       |     (least(255, shade * 3) * 65536 +
-       |      greatest(0, least(255, (shade - 85) * 3)) * 256 +
-       |      greatest(0, least(255, (shade - 170) * 3)) + 1)) % 1000000007 AS mix
-       |  FROM sh),
-       |fr AS (SELECT dkey, count(*) AS n_spread,
-       |    CAST(sum(cs) AS BIGINT) AS spread_mass,
-       |    CAST(sum(shade) AS BIGINT) AS shade_mass,
-       |    CAST(sum(mix) AS BIGINT) AS rgb_digest
-       |  FROM rgb GROUP BY 1)
-       |SELECT CAST(stg.dkey AS BIGINT) AS day,
-       |  strftime(DATE '1970-01-01' + CAST(stg.dkey AS INT), '%Y-%m-%d') AS frame_day,
+       |cells AS (SELECT dkey, px, py, cnt FROM pr WHERE px >= 0),
+       |${renderSql("cells", "f")}
+       |SELECT CAST(stg.dkey AS BIGINT) AS day, ${frameDaySql("stg.dkey")},
        |  n_points, n_bbox, n_lit,
        |  COALESCE(n_spread, 0) AS n_spread,
        |  COALESCE(spread_mass, 0) AS spread_mass,
        |  COALESCE(shade_mass, 0) AS shade_mass,
        |  COALESCE(rgb_digest, 0) AS rgb_digest
-       |FROM stg LEFT JOIN fr ON fr.dkey = stg.dkey
+       |FROM stg LEFT JOIN digf fr ON fr.dkey = stg.dkey
        |ORDER BY day""".stripMargin
+  }
 
   // ------------------------------------------ incremental frame build
-  /** SQL twin of [[frameRender]]: spread → per-frame percent_rank
-    * eq-hist → fire-ramp digest over a raster CTE `src`(dkey,px,py,cnt),
-    * CTE names suffixed so the incremental face can render two legs in
-    * one statement. Requires the shared `off` offsets CTE in scope. */
-  private def renderSql(src: String, sfx: String): String =
-    s"""sp$sfx AS (SELECT dkey, px + dx AS qx, py + dy AS qy,
-       |    CAST(sum(cnt) AS BIGINT) AS cs
-       |  FROM $src CROSS JOIN off
-       |  WHERE px + dx BETWEEN 0 AND ${W - 1}
-       |    AND py + dy BETWEEN 0 AND ${H - 1}
-       |  GROUP BY 1, 2, 3),
-       |sh$sfx AS (SELECT dkey, qx, qy, cs,
-       |    CAST(floor(percent_rank() OVER (PARTITION BY dkey ORDER BY cs) * 255)
-       |      AS BIGINT) AS shade
-       |  FROM sp$sfx),
-       |dig$sfx AS (SELECT dkey,
-       |    CAST(sum(((qx * 1009 + qy) *
-       |      (least(255, shade * 3) * 65536 +
-       |       greatest(0, least(255, (shade - 85) * 3)) * 256 +
-       |       greatest(0, least(255, (shade - 170) * 3)) + 1)) % 1000000007)
-       |      AS BIGINT) AS rgb_digest
-       |  FROM sh$sfx GROUP BY 1)""".stripMargin
-
-  /** Incremental frame rebuild (r17) — [[pipelineFrameBuild]]'s
-    * delta-ingest twin, completing the Geo family's build symmetry the
-    * way [[graft.operators.Multimodal.pipelineMediaIncremental]]
-    * completes the media side's: a late-arriving point batch (event_id
-    * ≡ 0 mod 10, [[graft.operators.Maintain.aggIncremental]]'s delta
-    * convention) lands on a standing frame set, and ONLY the frames the
-    * delta actually touches are re-rendered — per affected frame day,
-    * the ledger row carries the arriving in-bbox point count, the
-    * before/after bbox-survivor and lit-cell counts, the before/after
-    * [[frameRender]] RGB digests, a `render_changed` flag (a delta CAN
-    * leave the digest intact when eq-hist re-ranks to the same shades),
-    * and the constant frames_total / frames_touched pair — the
-    * skip-work accounting that justifies the incremental path.
-    *
-    * == Scale design ==
-    * One corpus scan folds map-side onto the bounded (day, px, py)
-    * relation carrying BOTH leg counts (standing `cb`, total `ca`,
-    * delta `cd`) — on the test corpus this scan plays the role of the
-    * persisted base raster + the arriving batch; a deployment keeps
-    * the (day, px, py, cnt) relation as a table (it is exactly what
-    * [[layoutHilbertWrite]] persists) and scans only the delta, so the
-    * nightly cost is O(delta) + O(affected-day rasters), never the
-    * corpus. Affected days collapse to a broadcast set; both render
-    * legs and the ledger are canvas-bounded × affected-days; untouched
-    * frames are never re-shaded (the frames_touched / frames_total
-    * margin). Out-of-bbox delta points are dropped at the fold — they
-    * cannot change a frame.
+  /** The two-leg fold both incremental faces share: ONE in-bbox corpus
+    * scan folds map-side onto the bounded (day, px, py) relation
+    * carrying both leg counts — standing `cb`, total `ca`, late batch
+    * `cd` (event_id ≡ 0 mod 10, [[graft.operators.Maintain.aggIncremental]]'s
+    * delta convention) — checkpointed. Out-of-bbox delta points are
+    * dropped at the fold: they cannot change a frame. Returns that
+    * relation, the broadcast set of affected days, the relation
+    * restricted to them, and the before/after [[frameRender]] digests
+    * of the affected days, named `digB` / `digA`.
     */
-  def pipelineFrameIncremental(s: SparkSession, dir: String): DataFrame = {
+  private def twoLegFold(s: SparkSession, dir: String, digB: String, digA: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     import graft.plans.Checkpoints.StableSyntax
-    val inb = col("x") >= X0 && col("x") <= X1 && col("y") >= Y0 && col("y") <= Y1
-    val r = points(s, dir)
-      .select(expr("unix_micros(ts) div 86400000000").as("dkey"),
-        (pmod(col("event_id"), lit(10)) === 0).cast("long").as("d"), mercX, mercY)
-      .filter(inb)
-      .select(col("dkey"), col("d"),
-        least(floor((col("x") - X0) / (X1 - X0) * W), lit(W - 1))
-          .cast("long").as("px"),
-        least(floor((col("y") - Y0) / (Y1 - Y0) * H), lit(H - 1))
-          .cast("long").as("py"))
+    val r = bboxed(s, dir, dayKey,
+        (pmod(col("event_id"), lit(10)) === 0).cast("long").as("d"))
+      .select(Seq(col("dkey"), col("d")) ++ pxPy: _*)
       .groupBy(col("dkey"), col("px"), col("py"))
       .agg(sum(lit(1L) - col("d")).as("cb"), count(lit(1)).as("ca"),
         sum(col("d")).as("cd"))
       .stableCheckpoint()
     val aff = r.filter(col("cd") > 0).select(col("dkey")).distinct()
     val rAff = r.join(broadcast(aff), Seq("dkey"))
+    val before = frameRender(rAff.filter(col("cb") > 0)
+        .select(col("dkey"), col("px"), col("py"), col("cb").as("cnt")))
+      .select(col("dkey"), col("rgb_digest").as(digB))
+    val after = frameRender(rAff
+        .select(col("dkey"), col("px"), col("py"), col("ca").as("cnt")))
+      .select(col("dkey"), col("rgb_digest").as(digA))
+    (r, aff, rAff, before, after)
+  }
+
+  /** SQL twin of [[twoLegFold]]: `pr` (cb, ca, cd), `aff`, and the
+    * before/after ledgers `digb` / `diga`. */
+  private val twoLegCtes: String =
+    s"""${foldSql("pr",
+         "CAST(sum(CASE WHEN event_id % 10 = 0 THEN 0 ELSE 1 END) AS BIGINT) AS cb, " +
+         "count(*) AS ca, CAST(sum(CASE WHEN event_id % 10 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS cd")},
+       |aff AS (SELECT DISTINCT dkey FROM pr WHERE cd > 0),
+       |rb AS (SELECT dkey, px, py, cb AS cnt FROM pr JOIN aff USING (dkey)
+       |  WHERE cb > 0),
+       |ra AS (SELECT dkey, px, py, ca AS cnt FROM pr JOIN aff USING (dkey)),
+       |${renderSql("rb", "b")},
+       |${renderSql("ra", "a")}""".stripMargin
+
+  /** Incremental frame rebuild (r17) — [[pipelineFrameBuild]]'s
+    * delta-ingest twin, completing the Geo family's build symmetry the
+    * way [[graft.operators.Multimodal.pipelineMediaIncremental]]
+    * completes the media side's: a late-arriving point batch lands on
+    * a standing frame set, and ONLY the frames the delta actually
+    * touches are re-rendered — per affected frame day, the ledger row
+    * carries the arriving in-bbox point count, the before/after
+    * bbox-survivor and lit-cell counts, the before/after
+    * [[frameRender]] RGB digests, a `render_changed` flag (a delta CAN
+    * leave the digest intact when eq-hist re-ranks to the same shades),
+    * and the constant frames_total / frames_touched pair — the
+    * skip-work accounting that justifies the incremental path.
+    *
+    * == Scale design ==
+    * [[twoLegFold]]'s one scan — on the test corpus this scan plays the
+    * role of the persisted base raster + the arriving batch; a
+    * deployment keeps the (day, px, py, cnt) relation as a table (it is
+    * exactly what [[layoutHilbertWrite]] persists) and scans only the
+    * delta, so the nightly cost is O(delta) + O(affected-day rasters),
+    * never the corpus. Affected days collapse to a broadcast set; both
+    * render legs and the ledger are canvas-bounded × affected-days;
+    * untouched frames are never re-shaded (the frames_touched /
+    * frames_total margin).
+    */
+  def pipelineFrameIncremental(s: SparkSession, dir: String): DataFrame = {
+    val (r, aff, rAff, digB, digA) =
+      twoLegFold(s, dir, "rgb_digest_before", "rgb_digest_after")
     val stats = rAff.groupBy(col("dkey")).agg(
       sum(col("cd")).as("n_delta"),
       sum(col("cb")).as("n_points_before"),
       sum(col("ca")).as("n_points_after"),
       sum(when(col("cb") > 0, 1L).otherwise(0L)).as("n_lit_before"),
       count(lit(1)).as("n_lit_after"))
-    val digB = frameRender(rAff.filter(col("cb") > 0)
-        .select(col("dkey"), col("px"), col("py"), col("cb").as("cnt")))
-      .select(col("dkey"), col("rgb_digest").as("rgb_digest_before"))
-    val digA = frameRender(rAff
-        .select(col("dkey"), col("px"), col("py"), col("ca").as("cnt")))
-      .select(col("dkey"), col("rgb_digest").as("rgb_digest_after"))
     val totals = r.agg(countDistinct(col("dkey")).as("frames_total"))
     val touched = aff.agg(count(lit(1)).as("frames_touched"))
     stats
       .join(digB, Seq("dkey"), "left_outer")
       .join(digA, Seq("dkey"))
       .crossJoin(broadcast(totals)).crossJoin(broadcast(touched))
-      .select(col("dkey").as("day"),
-        expr("date_format(date_add(DATE'1970-01-01', CAST(dkey AS INT)), 'yyyy-MM-dd')")
-          .as("frame_day"),
+      .select(col("dkey").as("day"), frameDay,
         col("n_delta"), col("n_points_before"), col("n_points_after"),
         col("n_lit_before"), col("n_lit_after"),
         coalesce(col("rgb_digest_before"), lit(0L)).as("rgb_digest_before"),
@@ -739,29 +768,10 @@ object Geo {
       .orderBy(col("day"))
   }
 
-  /** DuckDB twin: one in-bbox fold carrying both leg counts, affected
-    * days, [[renderSql]] twice (before/after), the same ledger. */
+  /** DuckDB twin: [[twoLegCtes]], the same ledger. */
   val pipelineFrameIncrementalSql: String =
     s"""WITH $pointsCte, $mercCte,
-       |pr AS (
-       |  SELECT epoch_us(ts) // 86400000000 AS dkey,
-       |    CAST(least(floor((x - ($X0)) / (${X1 - X0}) * $W), ${W - 1}) AS BIGINT) AS px,
-       |    CAST(least(floor((y - ($Y0)) / (${Y1 - Y0}) * $H), ${H - 1}) AS BIGINT) AS py,
-       |    CAST(sum(CASE WHEN event_id % 10 = 0 THEN 0 ELSE 1 END) AS BIGINT) AS cb,
-       |    count(*) AS ca,
-       |    CAST(sum(CASE WHEN event_id % 10 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS cd
-       |  FROM merc
-       |  WHERE x >= $X0 AND x <= $X1 AND y >= $Y0 AND y <= $Y1
-       |  GROUP BY 1, 2, 3),
-       |aff AS (SELECT DISTINCT dkey FROM pr WHERE cd > 0),
-       |rb AS (SELECT dkey, px, py, cb AS cnt FROM pr JOIN aff USING (dkey)
-       |  WHERE cb > 0),
-       |ra AS (SELECT dkey, px, py, ca AS cnt FROM pr JOIN aff USING (dkey)),
-       |off AS (SELECT o1.d AS dx, o2.d AS dy
-       |  FROM (SELECT unnest(range(-1, 2)) AS d) o1
-       |  CROSS JOIN (SELECT unnest(range(-1, 2)) AS d) o2),
-       |${renderSql("rb", "b")},
-       |${renderSql("ra", "a")},
+       |$twoLegCtes,
        |stats AS (SELECT dkey,
        |    CAST(sum(cd) AS BIGINT) AS n_delta,
        |    CAST(sum(cb) AS BIGINT) AS n_points_before,
@@ -771,8 +781,7 @@ object Geo {
        |  FROM pr JOIN aff USING (dkey) GROUP BY 1),
        |tot AS (SELECT count(DISTINCT dkey) AS frames_total FROM pr),
        |tch AS (SELECT count(*) AS frames_touched FROM aff)
-       |SELECT CAST(stats.dkey AS BIGINT) AS day,
-       |  strftime(DATE '1970-01-01' + CAST(stats.dkey AS INT), '%Y-%m-%d') AS frame_day,
+       |SELECT CAST(stats.dkey AS BIGINT) AS day, ${frameDaySql("stats.dkey")},
        |  n_delta, n_points_before, n_points_after, n_lit_before, n_lit_after,
        |  COALESCE(db.rgb_digest, 0) AS rgb_digest_before,
        |  da.rgb_digest AS rgb_digest_after,
@@ -808,23 +817,16 @@ object Geo {
     * relation with the fan-out checksum folded per cell (sum of
     * event_id mod 997 rides the same combine as the count), then
     * checkpointed — the render legs and the day ledger both read the
-    * materialized relation, never the points. The manifest windows
-    * (row_number / running sum / count) sort the O(days) ledger — the
-    * documented bounded-relation single-partition window — and the
-    * per-day render is embarrassingly parallel across frames, exactly
-    * the reference's array job re-expressed as group keys.
+    * materialized relation, never the points. The [[manifest]] windows
+    * sort the O(days) ledger, and the per-day render is embarrassingly
+    * parallel across frames, exactly the reference's array job
+    * re-expressed as group keys.
     */
   def pipelineJobBuild(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.Checkpoints.StableSyntax
     // [fan-out] one scan: in-bbox day binning, checksum folded per cell
-    val r = points(s, dir)
-      .select(col("event_id"), expr("unix_micros(ts) div 86400000000").as("dkey"),
-        mercX, mercY)
-      .filter(col("x") >= X0 && col("x") <= X1 && col("y") >= Y0 && col("y") <= Y1)
-      .select(col("dkey"),
-        least(floor((col("x") - X0) / (X1 - X0) * W), lit(W - 1)).cast("long").as("px"),
-        least(floor((col("y") - Y0) / (Y1 - Y0) * H), lit(H - 1)).cast("long").as("py"),
-        (col("event_id") % 997L).as("ck"))
+    val r = bboxed(s, dir, col("event_id"), dayKey)
+      .select(col("dkey") +: pxPy :+ (col("event_id") % 997L).as("ck"): _*)
       .groupBy(col("dkey"), col("px"), col("py"))
       .agg(count(lit(1)).as("cnt"), sum(col("ck")).as("chk"))
       .stableCheckpoint()
@@ -834,49 +836,28 @@ object Geo {
     // [assemble] ordered manifest over the O(days) ledger
     val days = r.groupBy(col("dkey"))
       .agg(sum(col("cnt")).as("n_points"), sum(col("chk")).as("checksum"))
-    val wRun = Window.orderBy(col("frame_seq"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     days.join(frame, Seq("dkey"))
-      .withColumn("frame_seq", row_number().over(Window.orderBy(col("dkey"))).cast("long"))
-      .select(col("frame_seq"),
-        expr("date_format(date_add(DATE'1970-01-01', CAST(dkey AS INT)), 'yyyy-MM-dd')")
-          .as("frame_day"),
-        col("n_points"), col("checksum"),
-        sum(col("n_points")).over(wRun).as("cum_points"),
-        count(lit(1)).over(Window.partitionBy()).as("total_frames"),
-        ((col("frame_seq") - 1) / 2.0).as("pts_sec"),
-        col("rgb_digest"))
+      .withColumn("frame_seq", frameSeq(col("dkey")))
+      .select(Seq(col("frame_seq"), frameDay, col("n_points"), col("checksum")) ++
+        manifest :+ col("rgb_digest"): _*)
       .orderBy(col("frame_seq"))
   }
 
-  /** DuckDB twin: the shared point/merc CTEs, the in-bbox cell fold
-    * with the checksum riding the combine, [[renderSql]] for the digest
-    * leg, the same ordered-manifest windows. */
+  /** DuckDB twin: the in-bbox cell fold with the checksum riding the
+    * combine, [[renderSql]] for the digest leg, the same ordered-
+    * manifest windows. */
   val pipelineJobBuildSql: String =
     s"""WITH $pointsCte, $mercCte,
-       |pr AS (
-       |  SELECT epoch_us(ts) // 86400000000 AS dkey,
-       |    CAST(least(floor((x - ($X0)) / (${X1 - X0}) * $W), ${W - 1}) AS BIGINT) AS px,
-       |    CAST(least(floor((y - ($Y0)) / (${Y1 - Y0}) * $H), ${H - 1}) AS BIGINT) AS py,
-       |    count(*) AS cnt, CAST(sum(event_id % 997) AS BIGINT) AS chk
-       |  FROM merc
-       |  WHERE x >= $X0 AND x <= $X1 AND y >= $Y0 AND y <= $Y1
-       |  GROUP BY 1, 2, 3),
-       |off AS (SELECT o1.d AS dx, o2.d AS dy
-       |  FROM (SELECT unnest(range(-1, 2)) AS d) o1
-       |  CROSS JOIN (SELECT unnest(range(-1, 2)) AS d) o2),
+       |${foldSql("pr", "count(*) AS cnt, CAST(sum(event_id % 997) AS BIGINT) AS chk")},
        |${renderSql("pr", "j")},
        |d AS (SELECT dkey, CAST(sum(cnt) AS BIGINT) AS n_points,
        |    CAST(sum(chk) AS BIGINT) AS checksum
        |  FROM pr GROUP BY 1),
-       |seq AS (SELECT CAST(row_number() OVER (ORDER BY dkey) AS BIGINT) AS frame_seq,
+       |seq AS (SELECT ${seqSql("dkey")} AS frame_seq,
        |    dkey, n_points, checksum FROM d)
-       |SELECT frame_seq,
-       |  strftime(DATE '1970-01-01' + CAST(seq.dkey AS INT), '%Y-%m-%d') AS frame_day,
+       |SELECT frame_seq, ${frameDaySql("seq.dkey")},
        |  n_points, checksum,
-       |  CAST(sum(n_points) OVER (ORDER BY frame_seq ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_points,
-       |  count(*) OVER () AS total_frames,
-       |  (frame_seq - 1) / 2.0 AS pts_sec,
+       |  $manifestSql,
        |  dig.rgb_digest
        |FROM seq JOIN digj dig ON dig.dkey = seq.dkey
        |ORDER BY frame_seq""".stripMargin
@@ -903,50 +884,23 @@ object Geo {
     * offsets per chunk instead of globally.
     *
     * == Scale design ==
-    * ONE corpus scan folds map-side onto the bounded (day, px, py)
-    * relation carrying both leg counts (at 100 TB the standing leg is
-    * the persisted raster table and only the delta is scanned);
-    * affected days broadcast, ONLY touched frames render (both legs,
+    * [[twoLegFold]]'s one scan (at 100 TB the standing leg is the
+    * persisted raster table and only the delta is scanned); affected
+    * days broadcast, ONLY touched frames render (both legs,
     * canvas-bounded × affected days — untouched frames keep their
     * digest by construction and are never re-shaded); the two manifest
     * legs are O(days) windows on the day ledger.
     */
   def pipelineJobIncremental(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
-    val inb = col("x") >= X0 && col("x") <= X1 && col("y") >= Y0 && col("y") <= Y1
-    val r = points(s, dir)
-      .select(expr("unix_micros(ts) div 86400000000").as("dkey"),
-        (pmod(col("event_id"), lit(10)) === 0).cast("long").as("d"), mercX, mercY)
-      .filter(inb)
-      .select(col("dkey"), col("d"),
-        least(floor((col("x") - X0) / (X1 - X0) * W), lit(W - 1))
-          .cast("long").as("px"),
-        least(floor((col("y") - Y0) / (Y1 - Y0) * H), lit(H - 1))
-          .cast("long").as("py"))
-      .groupBy(col("dkey"), col("px"), col("py"))
-      .agg(sum(lit(1L) - col("d")).as("cb"), count(lit(1)).as("ca"),
-        sum(col("d")).as("cd"))
-      .stableCheckpoint()
-    val aff = r.filter(col("cd") > 0).select(col("dkey")).distinct()
-    val rAff = r.join(broadcast(aff), Seq("dkey"))
-    val digB = frameRender(rAff.filter(col("cb") > 0)
-        .select(col("dkey"), col("px"), col("py"), col("cb").as("cnt")))
-      .select(col("dkey"), col("rgb_digest").as("dig_b"))
-    val digA = frameRender(rAff
-        .select(col("dkey"), col("px"), col("py"), col("ca").as("cnt")))
-      .select(col("dkey"), col("rgb_digest").as("dig_a"))
+    val (r, _, _, digB, digA) = twoLegFold(s, dir, "dig_b", "dig_a")
     val days = r.groupBy(col("dkey")).agg(
       sum(col("cb")).as("nb"), sum(col("ca")).as("na"), sum(col("cd")).as("nd"))
-    val wRun = Window.orderBy(col("dkey"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val before = days.filter(col("nb") > 0)
       .select(col("dkey"),
-        row_number().over(Window.orderBy(col("dkey"))).cast("long").as("seq_b"),
-        sum(col("nb")).over(wRun).as("cum_b"))
+        frameSeq(col("dkey")).as("seq_b"), cumSum(col("nb"), col("dkey")).as("cum_b"))
     val after = days
       .select(col("dkey"), col("nb"), col("na"), col("nd"),
-        row_number().over(Window.orderBy(col("dkey"))).cast("long").as("seq_a"),
-        sum(col("na")).over(wRun).as("cum_a"))
+        frameSeq(col("dkey")).as("seq_a"), cumSum(col("na"), col("dkey")).as("cum_a"))
     val led = after
       .join(before, Seq("dkey"), "left_outer")
       .join(digB, Seq("dkey"), "left_outer")
@@ -964,9 +918,7 @@ object Geo {
       sum(col("touched")).as("frames_touched"),
       sum(col("rewrite")).as("frames_rewritten"))
     led.crossJoin(broadcast(tot))
-      .select(col("seq_a").as("frame_seq"),
-        expr("date_format(date_add(DATE'1970-01-01', CAST(dkey AS INT)), 'yyyy-MM-dd')")
-          .as("frame_day"),
+      .select(col("seq_a").as("frame_seq"), frameDay,
         col("nb").as("n_points_before"), col("na").as("n_points_after"),
         col("nd").as("delta_points"), col("touched"), col("digest_changed"),
         col("offsets_shifted"), col("rewrite"),
@@ -974,40 +926,21 @@ object Geo {
       .orderBy(col("frame_seq"))
   }
 
-  /** DuckDB twin: the two-leg cell fold, affected days, [[renderSql]]
-    * per leg on touched frames only, both manifest windows, the same
+  /** DuckDB twin: [[twoLegCtes]], both manifest windows, the same
     * rewrite ledger. */
   val pipelineJobIncrementalSql: String =
     s"""WITH $pointsCte, $mercCte,
-       |pr AS (
-       |  SELECT epoch_us(ts) // 86400000000 AS dkey,
-       |    CAST(least(floor((x - ($X0)) / (${X1 - X0}) * $W), ${W - 1}) AS BIGINT) AS px,
-       |    CAST(least(floor((y - ($Y0)) / (${Y1 - Y0}) * $H), ${H - 1}) AS BIGINT) AS py,
-       |    CAST(sum(CASE WHEN event_id % 10 = 0 THEN 0 ELSE 1 END) AS BIGINT) AS cb,
-       |    count(*) AS ca,
-       |    CAST(sum(CASE WHEN event_id % 10 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS cd
-       |  FROM merc
-       |  WHERE x >= $X0 AND x <= $X1 AND y >= $Y0 AND y <= $Y1
-       |  GROUP BY 1, 2, 3),
-       |aff AS (SELECT DISTINCT dkey FROM pr WHERE cd > 0),
-       |rb AS (SELECT dkey, px, py, cb AS cnt FROM pr JOIN aff USING (dkey)
-       |  WHERE cb > 0),
-       |ra AS (SELECT dkey, px, py, ca AS cnt FROM pr JOIN aff USING (dkey)),
-       |off AS (SELECT o1.d AS dx, o2.d AS dy
-       |  FROM (SELECT unnest(range(-1, 2)) AS d) o1
-       |  CROSS JOIN (SELECT unnest(range(-1, 2)) AS d) o2),
-       |${renderSql("rb", "b")},
-       |${renderSql("ra", "a")},
+       |$twoLegCtes,
        |d AS (SELECT dkey, CAST(sum(cb) AS BIGINT) AS nb,
        |    CAST(sum(ca) AS BIGINT) AS na, CAST(sum(cd) AS BIGINT) AS nd
        |  FROM pr GROUP BY 1),
        |bm AS (SELECT dkey,
-       |    CAST(row_number() OVER (ORDER BY dkey) AS BIGINT) AS seq_b,
-       |    CAST(sum(nb) OVER (ORDER BY dkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_b
+       |    ${seqSql("dkey")} AS seq_b,
+       |    ${cumSumSql("nb", "dkey")} AS cum_b
        |  FROM d WHERE nb > 0),
        |am AS (SELECT dkey, nb, na, nd,
-       |    CAST(row_number() OVER (ORDER BY dkey) AS BIGINT) AS seq_a,
-       |    CAST(sum(na) OVER (ORDER BY dkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_a
+       |    ${seqSql("dkey")} AS seq_a,
+       |    ${cumSumSql("na", "dkey")} AS cum_a
        |  FROM d),
        |led AS (SELECT am.*, bm.seq_b, bm.cum_b, db.rgb_digest AS dig_b,
        |    da.rgb_digest AS dig_a
@@ -1028,8 +961,7 @@ object Geo {
        |    CAST(sum(touched) AS BIGINT) AS frames_touched,
        |    CAST(sum(rewrite) AS BIGINT) AS frames_rewritten
        |  FROM l3)
-       |SELECT seq_a AS frame_seq,
-       |  strftime(DATE '1970-01-01' + CAST(dkey AS INT), '%Y-%m-%d') AS frame_day,
+       |SELECT seq_a AS frame_seq, ${frameDaySql("dkey")},
        |  nb AS n_points_before, na AS n_points_after, nd AS delta_points,
        |  CAST(touched AS BIGINT) AS touched,
        |  CAST(digest_changed AS BIGINT) AS digest_changed,
@@ -1056,6 +988,10 @@ object Geo {
         s"((($x) | (($x) << $sh)) & $m)"
       }
 
+  /** Morton key of (px, py), both sides. */
+  private def zkey: Column = spread16(col("px")).bitwiseOR(shiftleft(spread16(col("py")), 1))
+  private val zkeySql = s"(${spreadSql("px")} | (${spreadSql("py")} << 1))"
+
   /** Z-order (Morton) data-layout key over the raster grid: interleave
     * the bits of (px, py) and roll the raster up by 256×256-cell
     * Z-tiles (zkey >> 16). The per-tile px/py extents in the output ARE
@@ -1074,8 +1010,7 @@ object Geo {
     */
   def layoutZorder(s: SparkSession, dir: String): DataFrame =
     rasterDf(s, dir)
-      .withColumn("zkey", spread16(col("px"))
-        .bitwiseOR(shiftleft(spread16(col("py")), 1)))
+      .withColumn("zkey", zkey)
       .withColumn("tile", expr("zkey div 65536"))
       .groupBy(col("tile"))
       .agg(count(lit(1)).as("n_cells"), sum(col("cnt")).as("n_points"),
@@ -1083,17 +1018,15 @@ object Geo {
         min(col("py")).as("py_min"), max(col("py")).as("py_max"))
       .orderBy(col("tile"))
 
-  val layoutZorderSql: String = {
-    val z = s"(${spreadSql("px")} | (${spreadSql("py")} << 1))"
+  val layoutZorderSql: String =
     s"""WITH $pointsCte, $mercCte, $rasterCte,
-       |z AS (SELECT px, py, cnt, $z // 65536 AS tile FROM raster)
+       |z AS (SELECT px, py, cnt, $zkeySql // 65536 AS tile FROM raster)
        |SELECT tile, count(*) AS n_cells, CAST(sum(cnt) AS BIGINT) AS n_points,
        |  min(px) AS px_min, max(px) AS px_max,
        |  min(py) AS py_min, max(py) AS py_max
        |FROM z GROUP BY tile ORDER BY tile""".stripMargin
-  }
 
-  /** The four fixed pixel-space query boxes the skipping audit probes
+  /** The four fixed pixel-space query boxes the skipping audits probe
     * (box_id, x0, y0, x1, y1) — a quarter, a wide band, the center,
     * and a small corner. */
   private val skipBoxes =
@@ -1101,75 +1034,64 @@ object Geo {
       "2L,350L,250L,1049L,749L, 3L,1200L,800L,1399L,999L) " +
       "AS (box_id, bx0, by0, bx1, by1)"
 
-  /** Data-skipping effectiveness audit — the measurement that justifies
-    * a layout rewrite before anyone pays for it: the raster cells are
-    * laid out into 256-cell files two ways (row-major `linear` vs
-    * Morton `zorder`), each file keeps min/max zone-map stats on both
-    * axes (exactly what parquet row-group stats give a 2-D predicate),
-    * and four fixed query boxes are planned against each layout. Per
-    * (layout, box): files touched vs total, cells scanned vs actually
-    * matching, and the read amplification in exact ppm. Z-order files
-    * are compact rectangles so boxes prune on BOTH axes; linear files
-    * span full rows and only prune on y — the ppm gap between the two
-    * rows is the business case for [[layoutZorder]].
-    *
-    * == Scale design ==
-    * The ranking relation is the CANVAS-BOUNDED cell grid (≤1.4M
-    * cells), not the point corpus — the events scan folds map-side
-    * into it once ([[rasterDf]], checkpointed here since two consumers
-    * read it). The per-layout row_number is over that bounded
-    * relation; file summaries (≤342 files/layout) and the 4-box probe
-    * are broadcast-sized. At 100 TB of points this stays grid-sized
-    * after the one rasterize pass.
-    */
-  def layoutSkippingEval(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
-    val F = 256L
-    val raster = rasterDf(s, dir).stableCheckpoint()
-    val zkey = spread16(col("px")).bitwiseOR(shiftleft(spread16(col("py")), 1))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("layout")).orderBy(col("okey"))
-    val files = raster
-      .select(col("px"), col("py"), col("cnt"),
-        explode(array(lit("linear"), lit("zorder"))).as("layout"))
-      .withColumn("okey", when(col("layout") === "linear",
-        col("py") * 2048L + col("px")).otherwise(zkey))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .withColumn("file_id", expr(s"(rn - 1) div $F"))
-      .groupBy(col("layout"), col("file_id"))
-      .agg(count(lit(1)).as("n_cells"), sum(col("cnt")).as("n_points"),
+  /** Min/max zone maps per file: `cells` (px, py) grouped by `keys`. */
+  private def zoneMaps(cells: DataFrame, keys: Column*): DataFrame =
+    cells.groupBy(keys: _*)
+      .agg(count(lit(1)).as("n_cells"),
         min(col("px")).as("fx0"), max(col("px")).as("fx1"),
         min(col("py")).as("fy0"), max(col("py")).as("fy1"))
+
+  /** The zone-map probe: file [[zoneMaps]] `files` (keys…, file_id)
+    * against the four [[skipBoxes]], the exact matches counted on
+    * `cells` (px, py). Per (keys…, box): files total / touched, cells
+    * scanned / matching and the read amplification in exact ppm,
+    * under the output column `layout`. */
+  private def zoneProbe(s: SparkSession, files: DataFrame, cells: DataFrame,
+                        layout: Column, keys: Column*): DataFrame = {
     val boxes = s.range(1).select(expr(skipBoxes))
-    val matching = raster.crossJoin(broadcast(boxes))
+    val matching = cells.crossJoin(broadcast(boxes))
       .filter(col("px") >= col("bx0") && col("px") <= col("bx1") &&
         col("py") >= col("by0") && col("py") <= col("by1"))
       .groupBy(col("box_id"))
-      .agg(count(lit(1)).as("cells_matching"), sum(col("cnt")).as("points_matching"))
+      .agg(count(lit(1)).as("cells_matching"))
     files.crossJoin(broadcast(boxes))
       .withColumn("files_total", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("layout"), col("box_id"))))
+        Window.partitionBy(keys :+ col("box_id"): _*)))
       .filter(col("fx1") >= col("bx0") && col("fx0") <= col("bx1") &&
         col("fy1") >= col("by0") && col("fy0") <= col("by1"))
-      .groupBy(col("layout"), col("box_id"), col("files_total"))
+      .groupBy(keys ++ Seq(col("box_id"), col("files_total")): _*)
       .agg(count(lit(1)).as("files_touched"),
         sum(col("n_cells")).as("cells_scanned"))
       .join(broadcast(matching), Seq("box_id"))
-      .select(col("layout"), col("box_id"), col("files_total"),
+      .select(layout, col("box_id"), col("files_total"),
         col("files_touched"), col("cells_scanned"), col("cells_matching"),
         expr("(1000000 * cells_scanned) div greatest(cells_matching, 1)")
           .as("read_amp_ppm"))
+  }
+
+  /** A MODELED layout audit: the checkpointed raster cells laid out
+    * once per layout in `layouts`, ranked by that layout's `okey`,
+    * dealt into 256-cell files, then [[zoneProbe]]d. */
+  private def modeledAudit(s: SparkSession, raster: DataFrame, layouts: Seq[String],
+                           okey: Column): DataFrame = {
+    val w = Window.partitionBy(col("layout")).orderBy(col("okey"))
+    val files = raster
+      .select(col("*"), explode(array(layouts.map(lit): _*)).as("layout"))
+      .withColumn("okey", okey)
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .withColumn("file_id", expr("(rn - 1) div 256"))
+    zoneProbe(s, zoneMaps(files, col("layout"), col("file_id")), raster,
+        col("layout"), col("layout"))
       .orderBy(col("layout"), col("box_id"))
   }
 
-  /** DuckDB twin: same bounded ranking, same zone-map intersection. */
-  val layoutSkippingEvalSql: String = {
-    val z = s"(${spreadSql("px")} | (${spreadSql("py")} << 1))"
-    s"""WITH $pointsCte, $mercCte, $rasterCte,
-       |l AS (
-       |  SELECT px, py, cnt, 'linear' AS layout, py * 2048 + px AS okey FROM raster
+  /** SQL twin of [[modeledAudit]]: the cells of `src` laid out as
+    * `layout` by `okey`, against the Morton layout of `raster`. */
+  private def modeledAuditSql(layout: String, okey: String, src: String): String =
+    s"""l AS (
+       |  SELECT px, py, cnt, '$layout' AS layout, $okey AS okey FROM $src
        |  UNION ALL
-       |  SELECT px, py, cnt, 'zorder', $z FROM raster),
+       |  SELECT px, py, cnt, 'zorder', $zkeySql FROM raster),
        |r AS (SELECT layout, cnt, px, py,
        |    (row_number() OVER (PARTITION BY layout ORDER BY okey) - 1) // 256 AS file_id
        |  FROM l),
@@ -1196,7 +1118,38 @@ object Geo {
        |  (1000000 * cells_scanned) // greatest(cells_matching, 1) AS read_amp_ppm
        |FROM hit JOIN ft USING (layout) JOIN m USING (box_id)
        |ORDER BY layout, box_id""".stripMargin
+
+  /** Data-skipping effectiveness audit — the measurement that justifies
+    * a layout rewrite before anyone pays for it: the raster cells are
+    * laid out into 256-cell files two ways (row-major `linear` vs
+    * Morton `zorder`), each file keeps min/max zone-map stats on both
+    * axes (exactly what parquet row-group stats give a 2-D predicate),
+    * and four fixed query boxes are planned against each layout. Per
+    * (layout, box): files touched vs total, cells scanned vs actually
+    * matching, and the read amplification in exact ppm. Z-order files
+    * are compact rectangles so boxes prune on BOTH axes; linear files
+    * span full rows and only prune on y — the ppm gap between the two
+    * rows is the business case for [[layoutZorder]].
+    *
+    * == Scale design ==
+    * The ranking relation is the CANVAS-BOUNDED cell grid (≤1.4M
+    * cells), not the point corpus — the events scan folds map-side
+    * into it once ([[rasterDf]], checkpointed here since two consumers
+    * read it). The per-layout row_number is over that bounded
+    * relation; file summaries (≤342 files/layout) and the 4-box probe
+    * are broadcast-sized. At 100 TB of points this stays grid-sized
+    * after the one rasterize pass.
+    */
+  def layoutSkippingEval(s: SparkSession, dir: String): DataFrame = {
+    import graft.plans.Checkpoints.StableSyntax
+    modeledAudit(s, rasterDf(s, dir).stableCheckpoint(), Seq("linear", "zorder"),
+      when(col("layout") === "linear", col("py") * 2048L + col("px")).otherwise(zkey))
   }
+
+  /** DuckDB twin: same bounded ranking, same zone-map intersection. */
+  val layoutSkippingEvalSql: String =
+    s"""WITH $pointsCte, $mercCte, $rasterCte,
+       |${modeledAuditSql("linear", "py * 2048 + px", "raster")}""".stripMargin
 
   // --------------------------------------------------- Hilbert layout
   /** Hilbert xy→d index over the 2048-square (the canvas's covering
@@ -1257,43 +1210,9 @@ object Geo {
     */
   def layoutHilbert(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.Checkpoints.StableSyntax
-    val F = 256L
-    val raster = withHilbert(rasterDf(s, dir), "px", "py", "hd")
-      .stableCheckpoint()
-    val zkey = spread16(col("px")).bitwiseOR(shiftleft(spread16(col("py")), 1))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("layout")).orderBy(col("okey"))
-    val files = raster
-      .select(col("px"), col("py"), col("cnt"), col("hd"),
-        explode(array(lit("hilbert"), lit("zorder"))).as("layout"))
-      .withColumn("okey",
-        when(col("layout") === "zorder", zkey).otherwise(col("hd")))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .withColumn("file_id", expr(s"(rn - 1) div $F"))
-      .groupBy(col("layout"), col("file_id"))
-      .agg(count(lit(1)).as("n_cells"), sum(col("cnt")).as("n_points"),
-        min(col("px")).as("fx0"), max(col("px")).as("fx1"),
-        min(col("py")).as("fy0"), max(col("py")).as("fy1"))
-    val boxes = s.range(1).select(expr(skipBoxes))
-    val matching = raster.crossJoin(broadcast(boxes))
-      .filter(col("px") >= col("bx0") && col("px") <= col("bx1") &&
-        col("py") >= col("by0") && col("py") <= col("by1"))
-      .groupBy(col("box_id"))
-      .agg(count(lit(1)).as("cells_matching"))
-    files.crossJoin(broadcast(boxes))
-      .withColumn("files_total", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("layout"), col("box_id"))))
-      .filter(col("fx1") >= col("bx0") && col("fx0") <= col("bx1") &&
-        col("fy1") >= col("by0") && col("fy0") <= col("by1"))
-      .groupBy(col("layout"), col("box_id"), col("files_total"))
-      .agg(count(lit(1)).as("files_touched"),
-        sum(col("n_cells")).as("cells_scanned"))
-      .join(broadcast(matching), Seq("box_id"))
-      .select(col("layout"), col("box_id"), col("files_total"),
-        col("files_touched"), col("cells_scanned"), col("cells_matching"),
-        expr("(1000000 * cells_scanned) div greatest(cells_matching, 1)")
-          .as("read_amp_ppm"))
-      .orderBy(col("layout"), col("box_id"))
+    val raster = withHilbert(rasterDf(s, dir), "px", "py", "hd").stableCheckpoint()
+    modeledAudit(s, raster, Seq("hilbert", "zorder"),
+      when(col("layout") === "zorder", zkey).otherwise(col("hd")))
   }
 
   /** The Hilbert rounds as chained MATERIALIZED CTEs (same per-round
@@ -1317,41 +1236,10 @@ object Geo {
 
   /** DuckDB twin: same Hilbert rounds, same file ranking, same
     * zone-map probe. */
-  val layoutHilbertSql: String = {
-    val z = s"(${spreadSql("px")} | (${spreadSql("py")} << 1))"
+  val layoutHilbertSql: String =
     s"""WITH $pointsCte, $mercCte, $rasterCte,
        |$hilbertCtes,
-       |l AS (
-       |  SELECT px, py, cnt, 'hilbert' AS layout, hd AS okey FROM hh11
-       |  UNION ALL
-       |  SELECT px, py, cnt, 'zorder', $z FROM raster),
-       |r AS (SELECT layout, cnt, px, py,
-       |    (row_number() OVER (PARTITION BY layout ORDER BY okey) - 1) // 256 AS file_id
-       |  FROM l),
-       |files AS (SELECT layout, file_id, count(*) AS n_cells,
-       |    min(px) AS fx0, max(px) AS fx1, min(py) AS fy0, max(py) AS fy1
-       |  FROM r GROUP BY 1, 2),
-       |boxes AS (SELECT * FROM (VALUES (0, 0, 0, 349, 249), (1, 700, 0, 1399, 499),
-       |    (2, 350, 250, 1049, 749), (3, 1200, 800, 1399, 999))
-       |  AS t(box_id, bx0, by0, bx1, by1)),
-       |m AS (SELECT box_id, count(*) AS cells_matching
-       |  FROM raster CROSS JOIN boxes
-       |  WHERE px >= bx0 AND px <= bx1 AND py >= by0 AND py <= by1
-       |  GROUP BY box_id),
-       |ft AS (SELECT layout, count(*) AS files_total FROM files GROUP BY layout),
-       |hit AS (SELECT layout, box_id, count(*) AS files_touched,
-       |    CAST(sum(n_cells) AS BIGINT) AS cells_scanned
-       |  FROM files CROSS JOIN boxes
-       |  WHERE fx1 >= bx0 AND fx0 <= bx1 AND fy1 >= by0 AND fy0 <= by1
-       |  GROUP BY 1, 2)
-       |SELECT hit.layout, CAST(hit.box_id AS BIGINT) AS box_id,
-       |  CAST(ft.files_total AS BIGINT) AS files_total,
-       |  CAST(files_touched AS BIGINT) AS files_touched, cells_scanned,
-       |  CAST(cells_matching AS BIGINT) AS cells_matching,
-       |  (1000000 * cells_scanned) // greatest(cells_matching, 1) AS read_amp_ppm
-       |FROM hit JOIN ft USING (layout) JOIN m USING (box_id)
-       |ORDER BY layout, box_id""".stripMargin
-  }
+       |${modeledAuditSql("hilbert", "hd", "hh11")}""".stripMargin
 
   // ------------------------------------------------ hilbert writer
   /** Materialize the Hilbert-clustered layout as REAL parquet files:
@@ -1401,29 +1289,7 @@ object Geo {
     */
   def layoutHilbertWrite(s: SparkSession, dir: String): DataFrame = {
     val t = s.table(ensureHilbertLayout(s, dir))
-    val files = t.groupBy(col("file_id"))
-      .agg(count(lit(1)).as("n_cells"),
-        min(col("px")).as("fx0"), max(col("px")).as("fx1"),
-        min(col("py")).as("fy0"), max(col("py")).as("fy1"))
-    val boxes = s.range(1).select(expr(skipBoxes))
-    val matching = t.crossJoin(broadcast(boxes))
-      .filter(col("px") >= col("bx0") && col("px") <= col("bx1") &&
-        col("py") >= col("by0") && col("py") <= col("by1"))
-      .groupBy(col("box_id"))
-      .agg(count(lit(1)).as("cells_matching"))
-    files.crossJoin(broadcast(boxes))
-      .withColumn("files_total", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("box_id"))))
-      .filter(col("fx1") >= col("bx0") && col("fx0") <= col("bx1") &&
-        col("fy1") >= col("by0") && col("fy0") <= col("by1"))
-      .groupBy(col("box_id"), col("files_total"))
-      .agg(count(lit(1)).as("files_touched"),
-        sum(col("n_cells")).as("cells_scanned"))
-      .join(broadcast(matching), Seq("box_id"))
-      .select(lit("hilbert").as("layout"), col("box_id"), col("files_total"),
-        col("files_touched"), col("cells_scanned"), col("cells_matching"),
-        expr("(1000000 * cells_scanned) div greatest(cells_matching, 1)")
-          .as("read_amp_ppm"))
+    zoneProbe(s, zoneMaps(t, col("file_id")), t, lit("hilbert").as("layout"))
       .orderBy(col("box_id"))
   }
 
@@ -1454,37 +1320,39 @@ object Geo {
     * At 100 TB the base binning is the only corpus-sized reduce; a
     * deeper pyramid just raises the bounded key count (4^z).
     */
-  def geoTilePyramid(s: SparkSession, dir: String): DataFrame = {
-    val N = 32 // 2^5
-    val base = points(s, dir).select(col("event_id"), mercX, mercY)
-      .filter(col("x") >= X0 && col("x") <= X1 && col("y") >= Y0 && col("y") <= Y1)
-      .select(
-        least(floor((col("x") - X0) / (X1 - X0) * N), lit(N - 1)).cast("long").as("bx"),
-        least(floor((col("y") - Y0) / (Y1 - Y0) * N), lit(N - 1)).cast("long").as("by"))
-      .groupBy("bx", "by").agg(count(lit(1)).as("cnt"))
+  def geoTilePyramid(s: SparkSession, dir: String): DataFrame =
+    tilePyramid(s, dir).orderBy(col("zoom"), col("tx"), col("ty"))
+
+  /** The zoom ladder: zoom z reads base cells in blocks of d = 2^(5−z). */
+  private def zooms(s: SparkSession): DataFrame = {
     import s.implicits._
-    val zooms = Seq((0L, 32L), (1L, 16L), (2L, 8L), (3L, 4L), (4L, 2L), (5L, 1L))
-      .toDF("zoom", "d")
-    base.crossJoin(broadcast(zooms))
+    Seq((0L, 32L), (1L, 16L), (2L, 8L), (3L, 4L), (4L, 2L), (5L, 1L)).toDF("zoom", "d")
+  }
+
+  /** The pyramid both tile faces read, unsorted: the base fold at
+    * zoom 5 (a 32×32 grid) rolled up the [[zooms]] ladder. */
+  private def tilePyramid(s: SparkSession, dir: String): DataFrame = {
+    val N = 32 // 2^5
+    val base = bboxed(s, dir, col("event_id"))
+      .select(binX(N).cast("long").as("bx"), binY(N).cast("long").as("by"))
+      .groupBy("bx", "by").agg(count(lit(1)).as("cnt"))
+    base.crossJoin(broadcast(zooms(s)))
       .select(col("zoom"), expr("bx div d").as("tx"), expr("by div d").as("ty"),
         col("cnt"))
       .groupBy("zoom", "tx", "ty").agg(sum(col("cnt")).as("cnt"))
-      .orderBy(col("zoom"), col("tx"), col("ty"))
   }
 
+  /** SQL twin of [[tilePyramid]]: `zooms` and the unsorted `pyr`. */
+  private val pyramidCtes: String =
+    s"""${foldSql("base", "count(*) AS cnt", perDay = false, n = 32, m = 32)},
+       |zooms(zoom, d) AS (VALUES (0, 32), (1, 16), (2, 8), (3, 4), (4, 2), (5, 1)),
+       |pyr AS (SELECT CAST(zoom AS BIGINT) AS zoom, px // d AS tx, py // d AS ty,
+       |    CAST(sum(cnt) AS BIGINT) AS cnt
+       |  FROM base, zooms GROUP BY 1, 2, 3)""".stripMargin
+
   val geoTilePyramidSql: String =
-    s"""WITH $pointsCte, $mercCte,
-       |base AS (
-       |  SELECT CAST(least(floor((x - ($X0)) / (${X1 - X0}) * 32), 31) AS BIGINT) AS bx,
-       |    CAST(least(floor((y - ($Y0)) / (${Y1 - Y0}) * 32), 31) AS BIGINT) AS by,
-       |    count(*) AS cnt
-       |  FROM merc
-       |  WHERE x >= $X0 AND x <= $X1 AND y >= $Y0 AND y <= $Y1
-       |  GROUP BY 1, 2),
-       |zooms(zoom, d) AS (VALUES (0, 32), (1, 16), (2, 8), (3, 4), (4, 2), (5, 1))
-       |SELECT CAST(zoom AS BIGINT) AS zoom, bx // d AS tx, by // d AS ty,
-       |  CAST(sum(cnt) AS BIGINT) AS cnt
-       |FROM base, zooms GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
+    s"""WITH $pointsCte, $mercCte, $pyramidCtes
+       |SELECT zoom, tx, ty, cnt FROM pyr ORDER BY 1, 2, 3""".stripMargin
 
   // ------------------------------------------------------ tile serve
   /** Tile-serving planner (r17) — [[geoTilePyramid]]'s READ path, the
@@ -1514,17 +1382,17 @@ object Geo {
   def geoTileServe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.plans.Checkpoints.StableSyntax
-    val pyr = geoTilePyramid(s, dir).stableCheckpoint()
+    // the unsorted pyramid: nothing here reads the face's tile order,
+    // so the eager checkpoint runs no range-partitioned sort
+    val pyr = tilePyramid(s, dir).stableCheckpoint()
     val vps = Seq(
       ("center", 12L, 19L, 12L, 19L),
       ("corner", 0L, 7L, 0L, 7L),
       ("strip", 0L, 31L, 14L, 17L),
       ("wide", 4L, 27L, 4L, 27L))
       .toDF("viewport", "bx0", "bx1", "by0", "by1")
-    val zooms = Seq((0L, 32L), (1L, 16L), (2L, 8L), (3L, 4L), (4L, 2L), (5L, 1L))
-      .toDF("zoom", "d")
     // deepest zoom whose covering span fits the 4x4 tile budget
-    val plan = vps.crossJoin(broadcast(zooms))
+    val plan = vps.crossJoin(broadcast(zooms(s)))
       .filter(expr("bx1 div d - bx0 div d + 1 <= 4 AND by1 div d - by0 div d + 1 <= 4"))
       .groupBy(col("viewport"), col("bx0"), col("bx1"), col("by0"), col("by1"))
       .agg(max(struct(col("zoom"), col("d"))).as("z"))
@@ -1556,18 +1424,7 @@ object Geo {
   /** DuckDB twin: the pyramid CTE, viewport VALUES, the same deepest-
     * fitting-zoom argmax, covering-tile range joins, exact ppm. */
   val geoTileServeSql: String =
-    s"""WITH $pointsCte, $mercCte,
-       |base AS (
-       |  SELECT CAST(least(floor((x - ($X0)) / (${X1 - X0}) * 32), 31) AS BIGINT) AS bx,
-       |    CAST(least(floor((y - ($Y0)) / (${Y1 - Y0}) * 32), 31) AS BIGINT) AS by,
-       |    count(*) AS cnt
-       |  FROM merc
-       |  WHERE x >= $X0 AND x <= $X1 AND y >= $Y0 AND y <= $Y1
-       |  GROUP BY 1, 2),
-       |zooms(zoom, d) AS (VALUES (0, 32), (1, 16), (2, 8), (3, 4), (4, 2), (5, 1)),
-       |pyr AS (SELECT CAST(zoom AS BIGINT) AS zoom, bx // d AS tx, by // d AS ty,
-       |    CAST(sum(cnt) AS BIGINT) AS cnt
-       |  FROM base, zooms GROUP BY 1, 2, 3),
+    s"""WITH $pointsCte, $mercCte, $pyramidCtes,
        |vps(viewport, bx0, bx1, by0, by1) AS (VALUES
        |  ('center', 12, 19, 12, 19), ('corner', 0, 7, 0, 7),
        |  ('strip', 0, 31, 14, 17), ('wide', 4, 27, 4, 27)),

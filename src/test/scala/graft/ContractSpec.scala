@@ -114,4 +114,27 @@ class ContractSpec extends AnyFunSuite {
     } yield s"$f:${n + 1}: ${line.trim}"
     assert(copies.isEmpty, copies.mkString("use graft.plans.SessionMemo instead:\n", "\n", ""))
   }
+
+  test("Geo writes each fold decision once on the DataFrame side and once in SQL") {
+    // the DataFrame side writes a decision as a Scala expression, the
+    // DuckDB twins as interpolated SQL text (`${X1 - X0}`, `x >= $X0`);
+    // a new Geo face composes the fold stages instead of adding a copy
+    import scala.jdk.CollectionConverters._
+    val code = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get("src/main/scala/graft/operators/Geo.scala"))
+      .asScala.map(_.trim)
+      .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+      .mkString("\n")
+    def copies(needle: String): Int =
+      java.util.regex.Pattern.quote(needle).r.findAllIn(code).length
+    val expected = Seq(
+      // binning denominators: one DataFrame copy plus one SQL copy
+      "X1 - X0" -> 2, "${X1 - X0}" -> 1, "Y1 - Y0" -> 2, "${Y1 - Y0}" -> 1,
+      // bbox predicate, day key, frame_day: DataFrame then SQL
+      "col(\"x\") >= X0" -> 1, "x >= $X0" -> 1,
+      "unix_micros(ts) div 86400000000" -> 1, "epoch_us(ts) // 86400000000" -> 1,
+      "date_add(DATE'1970-01-01'" -> 1, "DATE '1970-01-01' +" -> 1)
+    val off = expected.collect { case (n, k) if copies(n) != k => s"$n: ${copies(n)} (want $k)" }
+    assert(off.isEmpty, off.mkString("Geo.scala repeats a stage decision:\n", "\n", ""))
+  }
 }

@@ -331,28 +331,34 @@ class GeoSpec extends SparkSpec {
     assert(got.exists(_._3 == 0L), "no halo cells — spread vacuous")
   }
 
-  test("pipeline_frame_build: full per-frame replay + stage marginals vs the standalone faces") {
-    import spark.implicits._
-    // per-day points through the shared projection/binning rules
-    val cells = Geo.points(spark, sf)
+  /** The scalar reference fold the replays below compare against,
+    * written apart from Geo's stages on purpose: every corpus point as
+    * (day, event_id, canvas cell) through the cm-rounded EPSG:3857
+    * projection, the reference bbox and the 1400×1000 binning — the
+    * cell is None outside the bbox. */
+  private def referenceCells(): Array[(Long, Long, Option[(Long, Long)])] =
+    Geo.points(spark, sf)
       .select(expr("unix_micros(ts) div 86400000000").as("dkey"),
-        col("lon"), col("lat"))
-      .as[(Long, Double, Double)].collect()
-      .map { case (d, lon, lat) =>
+        col("event_id"), col("lon"), col("lat"))
+      .as[(Long, Long, Double, Double)].collect()
+      .map { case (d, eid, lon, lat) =>
         val x = math.floor(lon * 20037508.342789244 / 180.0 * 100.0 + 0.5) / 100.0
         val y = math.floor(math.log(math.tan((lat + 90.0) * (math.Pi / 360.0))) *
           6378137.0 * 100.0 + 0.5) / 100.0
-        (d, x, y)
+        val inb = x >= -8254332.0 && x <= -8209813.5 && y >= 4965255.5 && y <= 4988769.5
+        (d, eid, Option.when(inb)(
+          (math.min(math.floor((x - -8254332.0) / (-8209813.5 - -8254332.0) * 1400), 1399).toLong,
+            math.min(math.floor((y - 4965255.5) / (4988769.5 - 4965255.5) * 1000), 999).toLong)))
       }
-    val perDay = cells.groupBy(_._1)
+
+  test("pipeline_frame_build: full per-frame replay + stage marginals vs the standalone faces") {
+    import spark.implicits._
+    // per-day points through the reference projection/bbox/binning
+    val perDay = referenceCells().groupBy(_._1)
     val expected = perDay.keys.toSeq.sorted.map { d =>
       val pts = perDay(d)
-      val inb = pts.filter { case (_, x, y) =>
-        x >= -8254332.0 && x <= -8209813.5 && y >= 4965255.5 && y <= 4988769.5 }
-      val raster = inb.map { case (_, x, y) =>
-        (math.min(math.floor((x - -8254332.0) / (-8209813.5 - -8254332.0) * 1400), 1399).toLong,
-          math.min(math.floor((y - 4965255.5) / (4988769.5 - 4965255.5) * 1000), 999).toLong)
-      }.groupBy(identity).view.mapValues(_.length.toLong).toMap
+      val inb = pts.flatMap(_._3)
+      val raster = inb.groupBy(identity).view.mapValues(_.length.toLong).toMap
       // 3x3 clipped spread
       val sp = collection.mutable.Map[(Long, Long), Long]()
       raster.foreach { case ((px, py), c) =>
@@ -459,23 +465,7 @@ class GeoSpec extends SparkSpec {
     assert(inc.map(_._10).distinct == Seq(full.size.toLong), "frames_total")
     assert(inc.map(_._11).distinct == Seq(inc.size.toLong), "frames_touched")
     // in-memory replay of the standing (before) leg: event_id % 10 != 0
-    val pts = Geo.points(spark, sf)
-      .select(expr("unix_micros(ts) div 86400000000").as("dkey"),
-        col("event_id"), col("lon"), col("lat"))
-      .as[(Long, Long, Double, Double)].collect()
-      .map { case (d, eid, lon, lat) =>
-        val x = math.floor(lon * 20037508.342789244 / 180.0 * 100.0 + 0.5) / 100.0
-        val y = math.floor(math.log(math.tan((lat + 90.0) * (math.Pi / 360.0))) *
-          6378137.0 * 100.0 + 0.5) / 100.0
-        (d, eid, x, y)
-      }
-      .filter { case (_, _, x, y) =>
-        x >= -8254332.0 && x <= -8209813.5 && y >= 4965255.5 && y <= 4988769.5 }
-      .map { case (d, eid, x, y) =>
-        val px = math.min(math.floor((x - -8254332.0) / (-8209813.5 - -8254332.0) * 1400), 1399).toLong
-        val py = math.min(math.floor((y - 4965255.5) / (4988769.5 - 4965255.5) * 1000), 999).toLong
-        (d, eid, px, py)
-      }
+    val pts = referenceCells().collect { case (d, eid, Some((px, py))) => (d, eid, px, py) }
     def render(cells: Map[(Long, Long), Long]): (Long, Long) = {
       // returns (n_lit, rgb_digest) through the shared per-cell
       // percent_rank eq-hist arithmetic
@@ -524,23 +514,7 @@ class GeoSpec extends SparkSpec {
   test("frame churn replays the day-pair cell diff with exact union accounting") {
     import spark.implicits._
     // the same per-day raster the operator folds, replayed in memory
-    val cells = Geo.points(spark, sf)
-      .select(expr("unix_micros(ts) div 86400000000").as("dkey"),
-        col("event_id"), col("lon"), col("lat"))
-      .as[(Long, Long, Double, Double)].collect()
-      .map { case (d, _, lon, lat) =>
-        val x = math.floor(lon * 20037508.342789244 / 180.0 * 100.0 + 0.5) / 100.0
-        val y = math.floor(math.log(math.tan((lat + 90.0) * (math.Pi / 360.0))) *
-          6378137.0 * 100.0 + 0.5) / 100.0
-        (d, x, y)
-      }
-      .filter { case (_, x, y) =>
-        x >= -8254332.0 && x <= -8209813.5 && y >= 4965255.5 && y <= 4988769.5 }
-      .map { case (d, x, y) =>
-        val px = math.min(math.floor((x - -8254332.0) / (-8209813.5 - -8254332.0) * 1400), 1399).toLong
-        val py = math.min(math.floor((y - 4965255.5) / (4988769.5 - 4965255.5) * 1000), 999).toLong
-        (d, px, py)
-      }
+    val cells = referenceCells().collect { case (d, _, Some((px, py))) => (d, px, py) }
     val byDay = cells.groupBy(_._1).view
       .mapValues(_.groupBy(c => (c._2, c._3)).view.mapValues(_.size.toLong).toMap)
       .toMap

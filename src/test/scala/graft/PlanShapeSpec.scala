@@ -956,6 +956,34 @@ class PlanShapeSpec extends SparkSpec {
       s"tile rollup must broadcast the zoom relation:\n$tilePlan")
   }
 
+  test("geo_tile_serve checkpoints the unsorted pyramid: no range-partitioned sort") {
+    // the server reads tiles through range joins, never in order, so
+    // its eager checkpoint must not pay geo_tile_pyramid's orderBy (a
+    // range-partition shuffle plus its sampling job)
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(f -> qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      operators.Geo.geoTileServe(spark, sf)
+      def checkpoints = seen.asScala.toSeq.filter(_._1.toLowerCase.contains("checkpoint"))
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (checkpoints.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(checkpoints.size == 1,
+        s"expected the pyramid's one eager checkpoint, saw ${seen.asScala.map(_._1)}")
+      val plan = checkpoints.head._2
+      assert(plan.contains("HashAggregate"), s"pyramid fold missing:\n$plan")
+      assert(!plan.toLowerCase.contains("rangepartitioning"),
+        s"the checkpoint range-sorts the pyramid:\n$plan")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("r14 wave 20-21 scan claims: ledger faces stay on their bounded relations") {
     // ml_learning_curve: everything past the checkpointed fold histogram
     // reads the materialized relation — no parquet in the final plan
