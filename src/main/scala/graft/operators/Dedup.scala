@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import graft.plans.Checkpoints
 import graft.plans.Checkpoints.StableSyntax
 
 /** Deduplication operators over `documents` / `embeddings`
@@ -1456,57 +1457,57 @@ object Dedup {
       componentsOver(verifiedPairs(s, dir))
     }
 
+  /** The pair list (doc_a, doc_b) plus every pair reversed: the
+    * symmetric edge list every graph face walks. */
+  private def symmetric(pairs: DataFrame): DataFrame =
+    pairs.union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+
+  /** SQL twin of [[symmetric]] over relation `p`, as (src, dst). */
+  private def symmetricSql(p: String): String =
+    s"""SELECT doc_a AS src, doc_b AS dst FROM $p
+       |  UNION ALL SELECT doc_b, doc_a FROM $p""".stripMargin
+
   /** Min-label connected components over an undirected pair list —
     * the pointer-doubling loop shared by [[dedupComponents]] and
     * [[graphComponentsIncremental]]. Returns (id, label) for every
     * node that appears in a pair; label = min reachable id.
     */
   private def componentsOver(pairs: DataFrame): DataFrame = {
-    // bidirectional edge list, cached: reused every iteration
-    val edges = pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst").cache()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-    var changed = 1L
-    var rounds = 0
-    // run to FIXPOINT (the oracle is exact); localCheckpoint each round
-    // truncates the growing join lineage and replaces per-round caches.
+    // bidirectional edge list, cached: reused every iteration, released
+    // in `finally` so a loop that does not converge leaves no entry
+    val edges = symmetric(pairs).toDF("src", "dst").cache()
+    // run to FIXPOINT (the oracle is exact); each round is checkpointed,
+    // which truncates the growing join lineage.
     // Each round does (a) one neighbor-min hop and (b) one POINTER-
     // DOUBLING hop (follow the label's own label): labels then reach
     // 2^rounds-distant minima, so chains converge in O(log diameter)
     // rounds instead of O(diameter) — at 100 TB the round count, not
     // the per-round shuffle, is the wall-clock lever (each round is a
     // driver-synchronized job).
-    while (changed > 0 && rounds < 64) {
-      val neighborMin = edges
-        .join(labels, edges("src") === labels("id"))
-        .groupBy(col("dst").as("id2")).agg(min(col("label")).as("nmin"))
-      val stepped = labels.join(neighborMin, labels("id") === col("id2"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("l1"),
-          col("label"))
-      val parents = stepped.select(col("id").as("pid"), col("l1").as("plabel"))
-      val updated = stepped.join(parents, col("l1") === col("pid"), "left")
-        .select(col("id"),
-          least(col("l1"), coalesce(col("plabel"), col("l1"))).as("newlabel"),
-          col("label"))
-        .stableCheckpoint()
-      // NOTE (r7, measured): fusing a SECOND doubling hop into this
-      // job to halve the round count made it SLOWER (3.0 s → 5.3 s
-      // warm at sf0.1) — the un-checkpointed hop subtree is referenced
-      // twice by the next self-join, so Spark evaluates it twice and
-      // the duplicated work exceeds the saved driver syncs. One hop
-      // per checkpointed round is the right trade.
-      changed = updated.filter(col("newlabel") < col("label")).count()
-      labels = updated.select(col("id"), col("newlabel").as("label"))
-      rounds += 1
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"componentsOver did not converge in $rounds rounds")
-    edges.unpersist(false)
-    labels
+    // NOTE (r7, measured): fusing a SECOND doubling hop into a round
+    // to halve the round count made it SLOWER (3.0 s → 5.3 s warm at
+    // sf0.1) — the un-checkpointed hop subtree is referenced twice by
+    // the next self-join, so Spark evaluates it twice and the
+    // duplicated work exceeds the saved driver syncs. One hop per
+    // checkpointed round is the right trade.
+    try {
+      val init = edges.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("label"))
+      Checkpoints.fixpoint("componentsOver", init, "label", "newlabel") { labels =>
+        val neighborMin = edges
+          .join(labels, edges("src") === labels("id"))
+          .groupBy(col("dst").as("id2")).agg(min(col("label")).as("nmin"))
+        val stepped = labels.join(neighborMin, labels("id") === col("id2"), "left")
+          .select(col("id"),
+            least(col("label"), coalesce(col("nmin"), col("label"))).as("l1"),
+            col("label"))
+        val parents = stepped.select(col("id").as("pid"), col("l1").as("plabel"))
+        stepped.join(parents, col("l1") === col("pid"), "left")
+          .select(col("id"),
+            least(col("l1"), coalesce(col("plabel"), col("l1"))).as("newlabel"),
+            col("label"))
+      }
+    } finally edges.unpersist(false)
   }
 
   // --------------------------------------- incremental components
@@ -1585,8 +1586,7 @@ object Dedup {
     */
   private[operators] val componentCtes: String =
     s"""$pairCtes,
-       |e AS (SELECT doc_a AS src, doc_b AS dst FROM p
-       |  UNION ALL SELECT doc_b, doc_a FROM p),
+       |e AS (${symmetricSql("p")}),
        |reach(id, r) AS (
        |  SELECT DISTINCT src, src FROM e
        |  UNION
@@ -1726,26 +1726,22 @@ object Dedup {
     */
   def graphKcore(s: SparkSession, dir: String): DataFrame = {
     val pairs = verifiedPairs(s, dir)
-    var edges = pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst")
     val ledger = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-    for (r <- 0 to 8) {
-      val nNodes = edges.select(col("src")).distinct().count()
-      val nEdges = edges.count() / 2
-      ledger += ((r.toLong, nNodes, nEdges))
-      if (r < 8) {
-        val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= 2)
-        val kSrc = keep.select(col("src").as("ks"))
-        val kDst = keep.select(col("src").as("kd"))
-        edges = edges
-          .join(kSrc, col("src") === col("ks"))
-          .join(kDst, col("dst") === col("kd"))
-          .select(col("src"), col("dst"))
-          .stableCheckpoint()
-      }
+    // one ledger row per round's edge state, counted before it is peeled
+    def record(edges: DataFrame): Unit = ledger +=
+      ((ledger.size.toLong, edges.select(col("src")).distinct().count(), edges.count() / 2))
+    val core = Checkpoints.rounds(8, symmetric(pairs).toDF("src", "dst")) { edges =>
+      record(edges)
+      val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= 2)
+      val kSrc = keep.select(col("src").as("ks"))
+      val kDst = keep.select(col("src").as("kd"))
+      edges
+        .join(kSrc, col("src") === col("ks"))
+        .join(kDst, col("dst") === col("kd"))
+        .select(col("src"), col("dst"))
     }
+    record(core)
     s.createDataFrame(ledger.toSeq).toDF("round", "n_nodes", "n_edges")
       .orderBy(col("round"))
   }
@@ -1765,8 +1761,7 @@ object Dedup {
          |  (SELECT count(*) FROM e$r) // 2 AS n_edges""".stripMargin
     }.mkString("\nUNION ALL\n")
     s"""WITH $pairCtes,
-       |e0 AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM p
-       |  UNION ALL SELECT doc_b, doc_a FROM p),
+       |e0 AS MATERIALIZED (${symmetricSql("p")}),
        |$rounds
        |$led
        |ORDER BY round""".stripMargin
@@ -1862,14 +1857,20 @@ object Dedup {
     * finite: its component's exemplar is reachable by construction.
     * Oracle: the shared recursive component CTE + a recursive BFS from
     * the exemplar set with min-per-node collapse.
+    *
+    * Contract at the round cap: a cluster whose exemplar eccentricity
+    * exceeds [[Checkpoints.MaxRounds]] (a near-dup chain longer than
+    * 64 hops) makes this face THROW — its loop does not converge —
+    * while the DuckDB twin's `WHERE bfs.d < 64` only stops the
+    * recursion there: it still returns rows, nodes at depth 64 among
+    * them, and silently drops the deeper ones.
     */
   def graphBfs(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
     // checkpointed: the shingle candidate join feeds BOTH the
     // components loop (via its edge cache) and this loop's edge list —
     // without it the corpus-sized join runs twice
     val pairs = verifiedPairs(s, dir)
-    val INF = 1000000L // > any hop count (rounds are capped at 64)
+    val INF = 1000000L // > any hop count (rounds are capped)
     // components FIRST, edge cache AFTER (r22): componentsOver caches
     // the identical bidirectional edge plan internally and unpersists
     // it when its loop converges — registering ours before that call
@@ -1877,37 +1878,28 @@ object Dedup {
     // unpersist inside componentsOver killed it, so this loop's joins
     // ran uncached. Ordering the calls gives each loop its own cache
     // lifetime.
-    var dist = componentsOver(pairs)
+    val dist0 = componentsOver(pairs)
       .select(col("id"), col("label"),
         when(col("id") === col("label"), lit(0L)).otherwise(lit(INF)).as("hops"))
-    val edges = pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst").cache()
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 64) {
-      val nmin = edges
-        .join(dist.filter(col("hops") < INF), edges("src") === col("id"))
-        .groupBy(col("dst").as("id2")).agg(min(col("hops") + 1).as("nh"))
-      val stepped = dist.join(nmin, dist("id") === col("id2"), "left")
-        .select(col("id"), col("label"),
-          least(col("hops"), coalesce(col("nh"), col("hops"))).as("newhops"),
-          col("hops"))
-        .stableCheckpoint()
-      changed = stepped.filter(col("newhops") < col("hops")).count()
-      dist = stepped.select(col("id"), col("label"), col("newhops").as("hops"))
-      rounds += 1
-    }
-    if (changed > 0)
-      throw new IllegalStateException(s"graphBfs did not converge in $rounds rounds")
-    edges.unpersist(false)
+    val edges = symmetric(pairs).toDF("src", "dst").cache()
+    val dist = try {
+      Checkpoints.fixpoint("graphBfs", dist0, "hops", "newhops") { dist =>
+        val nmin = edges
+          .join(dist.filter(col("hops") < INF), edges("src") === col("id"))
+          .groupBy(col("dst").as("id2")).agg(min(col("hops") + 1).as("nh"))
+        dist.join(nmin, dist("id") === col("id2"), "left")
+          .select(col("id"), col("label"),
+            least(col("hops"), coalesce(col("nh"), col("hops"))).as("newhops"),
+            col("hops"))
+      }
+    } finally edges.unpersist(false)
     dist.select(col("id").as("doc_id"), col("label").as("component"), col("hops"))
       .orderBy(col("doc_id"))
   }
 
   /** Oracle: components CTE + recursive multi-source BFS from the
     * exemplar set. BFS can only travel within a component, so seeding
-    * every exemplar at once is safe; the d < 64 bound mirrors the
+    * every exemplar at once is safe; the depth bound mirrors the
     * Spark loop cap and the min() collapse picks the true level.
     */
   val graphBfsSql: String =
@@ -1917,7 +1909,7 @@ object Dedup {
        |  SELECT id, 0 FROM reps
        |  UNION
        |  SELECT e.dst, bfs.d + 1 FROM bfs JOIN e ON e.src = bfs.id
-       |  WHERE bfs.d < 64),
+       |  WHERE bfs.d < ${Checkpoints.MaxRounds}),
        |h AS (SELECT id, min(d) AS hops FROM bfs GROUP BY id)
        |SELECT comp.doc_id, comp.component, CAST(h.hops AS BIGINT) AS hops
        |FROM comp JOIN h ON h.id = comp.doc_id
@@ -1962,18 +1954,16 @@ object Dedup {
     // join materializes once, every iteration scans the blocks, and
     // ContextCleaner frees them when the loop's DataFrames are GC'd
     // (a CacheManager entry would never be evicted — r9 ADVICE)
-    val edges = pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst").stableCheckpoint()
+    val edges = symmetric(pairs).toDF("src", "dst").stableCheckpoint()
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val nn = deg.agg(count(lit(1)).as("n_nodes"))
     // the loop-invariant edge⋈degree join, hoisted and materialized
     // once for all PR_ITERS rounds
     val edeg = edges.join(deg, "src").stableCheckpoint()
-    var rank = deg.crossJoin(broadcast(nn))
+    val rank0 = deg.crossJoin(broadcast(nn))
       .select(col("src").as("id"), expr(s"${PR_SCALE}L div n_nodes").as("r"))
-    for (_ <- 1 to PR_ITERS) {
-      rank = edeg
+    val rank = Checkpoints.rounds(PR_ITERS, rank0) { rank =>
+      edeg
         .join(rank, col("src") === col("id"))
         .groupBy(col("dst"))
         .agg(sum(expr("r div deg")).as("inflow"))
@@ -1981,7 +1971,6 @@ object Dedup {
         .select(col("dst").as("id"),
           (expr(s"(15 * ${PR_SCALE}L) div (100 * n_nodes)")
             + expr("(85 * inflow) div 100")).as("r"))
-        .stableCheckpoint()
     }
     rank.select(col("id").as("doc_id"), col("r").as("rank_pico"))
       .orderBy(col("rank_pico").desc, col("doc_id"))
@@ -2003,8 +1992,7 @@ object Dedup {
         s" JOIN deg ON deg.src = e.src CROSS JOIN nn GROUP BY e.dst, nn.n)"
     }.mkString(",\n")
     s"""WITH $pairCtes,
-       |e AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM p
-       |  UNION ALL SELECT doc_b, doc_a FROM p),
+       |e AS MATERIALIZED (${symmetricSql("p")}),
        |deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM e GROUP BY src),
        |nn AS (SELECT count(*) AS n FROM deg),
        |r0 AS (SELECT src AS id, $PR_SCALE // nn.n AS r FROM deg CROSS JOIN nn),
@@ -2053,8 +2041,7 @@ object Dedup {
   def graphDegreeHist(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val pairs = verifiedPairs(s, dir)
-    val deg = pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+    val deg = symmetric(pairs)
       .groupBy(col("doc_a").as("doc_id"))
       .agg(count(lit(1)).as("degree"))
     val hist = deg
@@ -2071,9 +2058,8 @@ object Dedup {
   /** DuckDB twin over the shared pair graph. */
   val graphDegreeHistSql: String =
     s"""WITH $pairCtes,
-       |e AS (SELECT doc_a, doc_b FROM p
-       |  UNION ALL SELECT doc_b, doc_a FROM p),
-       |deg AS (SELECT doc_a AS doc_id, count(*) AS degree FROM e GROUP BY 1),
+       |e AS (${symmetricSql("p")}),
+       |deg AS (SELECT src AS doc_id, count(*) AS degree FROM e GROUP BY 1),
        |h AS (SELECT CAST(length(bin(degree)) AS BIGINT) AS bucket,
        |    count(*) AS n_nodes, CAST(sum(degree) AS BIGINT) AS sum_deg,
        |    CAST(max(degree) AS BIGINT) AS max_deg
@@ -2141,29 +2127,24 @@ object Dedup {
     * run a different propagation than the face it scores (the
     * componentsOver precedent). Returns (id, lbl). */
   private def lpaOver(edges: DataFrame): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("lbl"))
     val byVote = org.apache.spark.sql.expressions.Window
       .partitionBy(col("id")).orderBy(col("cnt").desc, col("lbl"))
-    for (_ <- 1 to LP_ITERS) {
-      labels = edges
+    val init = edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("lbl"))
+    Checkpoints.rounds(LP_ITERS, init) { labels =>
+      edges
         .join(labels, edges("src") === labels("id"))
         .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("cnt"))
         .select(col("dst").as("id"), col("lbl"), col("cnt"))
         .withColumn("rn", row_number().over(byVote))
         .filter(col("rn") === 1)
         .select(col("id"), col("lbl"))
-        .stableCheckpoint()
     }
-    labels
   }
 
   def graphLabelProp(s: SparkSession, dir: String): DataFrame = {
     val pairs = verifiedPairs(s, dir)
-    val edges = pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst").stableCheckpoint()
+    val edges = symmetric(pairs).toDF("src", "dst").stableCheckpoint()
     val labels = lpaOver(edges)
     val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("community_size"))
     labels.join(broadcast(sizes), Seq("lbl"))
@@ -2182,9 +2163,7 @@ object Dedup {
          |  QUALIFY row_number() OVER (PARTITION BY id ORDER BY cnt DESC, lbl) = 1)""".stripMargin
     }.mkString(",\n")
     s"""WITH $pairCtes,
-       |e AS MATERIALIZED (
-       |  SELECT doc_a AS src, doc_b AS dst FROM p
-       |  UNION ALL SELECT doc_b, doc_a FROM p),
+       |e AS MATERIALIZED (${symmetricSql("p")}),
        |l0 AS (SELECT id, id AS lbl FROM (SELECT DISTINCT src AS id FROM e)),
        |$rounds,
        |lsz AS (SELECT lbl, CAST(count(*) AS BIGINT) AS community_size
@@ -2223,9 +2202,7 @@ object Dedup {
     // (lpaOver is the registered face's own loop, so the labels are
     // identical by construction — spec-pinned against graph_label_prop)
     val edges = verifiedPairs(s, dir)
-    val sym = edges
-      .union(edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst").stableCheckpoint()
+    val sym = symmetric(edges).toDF("src", "dst").stableCheckpoint()
     val labels = lpaOver(sym)
       .select(col("id").as("doc_id"), col("lbl").as("label"))
       .stableCheckpoint()
@@ -2268,9 +2245,7 @@ object Dedup {
          |  QUALIFY row_number() OVER (PARTITION BY id ORDER BY cnt DESC, lbl) = 1)""".stripMargin
     }.mkString(",\n")
     s"""WITH $pairCtes,
-       |e AS MATERIALIZED (
-       |  SELECT doc_a AS src, doc_b AS dst FROM p
-       |  UNION ALL SELECT doc_b, doc_a FROM p),
+       |e AS MATERIALIZED (${symmetricSql("p")}),
        |l0 AS (SELECT id, id AS lbl FROM (SELECT DISTINCT src AS id FROM e)),
        |$rounds,
        |tag AS (SELECT la.lbl AS lbl_a, lb.lbl AS lbl_b FROM p
@@ -2340,9 +2315,7 @@ object Dedup {
       .filter(col("i") * 100 >= (col("na") + col("nb") - col("i")) * 2)
       .select(col("doc_a"), col("doc_b"))
       .stableCheckpoint()
-    val e = pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst").stableCheckpoint()
+    val e = symmetric(pairs).toDF("src", "dst").stableCheckpoint()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val cn = e.as("x").join(e.as("y"),
         col("x.dst") === col("y.src") && col("x.src") < col("y.dst"))
@@ -2369,8 +2342,7 @@ object Dedup {
        |  JOIN sz s1 ON s1.doc_id = inter.doc_a
        |  JOIN sz s2 ON s2.doc_id = inter.doc_b
        |  WHERE 100 * i >= 2 * (s1.n + s2.n - i)),
-       |e AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM p2
-       |  UNION ALL SELECT doc_b, doc_a FROM p2),
+       |e AS MATERIALIZED (${symmetricSql("p2")}),
        |deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM e GROUP BY src),
        |cn AS MATERIALIZED (SELECT x.src AS a, y.dst AS c, count(*) AS cn
        |  FROM e x JOIN e y ON x.dst = y.src AND x.src < y.dst

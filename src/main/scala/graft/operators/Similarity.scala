@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{FloatVectorDot, GraftFunctions}
@@ -236,51 +236,72 @@ object Similarity {
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
       val seeds = e.filter(_._1 < CELLS).collect().sortBy(_._1)
-        .map { case (id, v) => (id, v, nrm(v)) }
       require(seeds.nonEmpty,
         s"ann_ivf needs codebook seed vectors (vec_id < $CELLS) in the embeddings table")
-      var centroids = seeds
-      for (_ <- 1 to ITERS) {
-        val bc = s.sparkContext.broadcast(centroids)
-        val cellAgg = e
-          .map { case (_, v) =>
-            val n = nrm(v)
-            var bestCell = -1L; var bestCos = Double.MinValue
-            bc.value.foreach { case (cid, cv, cn) =>
-              val cos = dotd(v, cv) / (n * cn)
-              if (cos > bestCos || (cos == bestCos && cid < bestCell)) {
-                bestCos = cos; bestCell = cid
-              }
-            }
-            // spherical k-means: accumulate UNIT vectors so the mean
-            // direction isn't dominated by long vectors (assignment is
-            // by cosine, so only direction matters)
-            (bestCell, v.map(x => math.round(x / n * 1e6)), 1L)
+      lloyd(s, e, seeds, ITERS) { (v, cents) =>
+        val n = nrm(v)
+        var bestCell = -1L; var bestCos = Double.MinValue
+        cents.foreach { case (cid, cv, cn) =>
+          val cos = dotd(v, cv) / (n * cn)
+          if (cos > bestCos || (cos == bestCos && cid < bestCell)) {
+            bestCos = cos; bestCell = cid
           }
-          .groupByKey(_._1)
-          .reduceGroups { (a, b) =>
-            val sums = new Array[Long](math.max(a._2.length, b._2.length))
-            var i = 0
-            while (i < sums.length) {
-              sums(i) = (if (i < a._2.length) a._2(i) else 0L) +
-                (if (i < b._2.length) b._2(i) else 0L)
-              i += 1
-            }
-            (a._1, sums, a._3 + b._3)
-          }
-          .map(_._2).collect().map(r => r._1 -> (r._2, r._3)).toMap
-        bc.destroy() // per-iteration broadcast, dead after the collect
-        centroids = centroids.map { case (cid, oldV, oldN) =>
-          cellAgg.get(cid) match {
-            case Some((sums, cnt)) =>
-              val nv = sums.map(x => (x.toDouble / 1e6 / cnt).toFloat)
-              (cid, nv, nrm(nv))
-            case None => (cid, oldV, oldN)
-          }
-        }.sortBy(_._1)
+        }
+        // spherical k-means: accumulate UNIT vectors so the mean
+        // direction isn't dominated by long vectors (assignment is
+        // by cosine, so only direction matters)
+        (bestCell, v.map(x => math.round(x / n * 1e6)))
       }
-      centroids
     }
+  }
+
+  /** Lloyd k-means rounds over the corpus `e` from the `seeds` (cid,
+    * vector), shared by the IVF and PQ codebook trainers; a centroid is
+    * (cid, vector, norm). Each round broadcasts the centroids, maps
+    * every vector through `assign` to
+    * (cell, vector in fixed-point 10⁻⁶ longs), sums each cell's longs
+    * through a map-side-combined reduceGroups — long addition is exact
+    * in any partition order, so the centroids are bit-stable — collects
+    * the per-cell sums, and moves each centroid to its cell's mean; an
+    * emptied cell keeps its previous centroid. Only the centroids ever
+    * reach the driver.
+    */
+  private def lloyd(s: SparkSession, e: Dataset[(Long, Array[Float])],
+      seeds: Array[(Long, Array[Float])], iters: Int)
+      (assign: (Array[Float], Array[(Long, Array[Float], Double)]) => (Long, Array[Long]))
+      : Array[(Long, Array[Float], Double)] = {
+    import s.implicits._
+    var centroids = seeds.map { case (cid, v) => (cid, v, nrm(v)) }
+    for (_ <- 1 to iters) {
+      val bc = s.sparkContext.broadcast(centroids)
+      val cellAgg = e
+        .map { case (_, v) =>
+          val (cell, fixed) = assign(v, bc.value)
+          (cell, fixed, 1L)
+        }
+        .groupByKey(_._1)
+        .reduceGroups { (a, b) =>
+          val sums = new Array[Long](math.max(a._2.length, b._2.length))
+          var i = 0
+          while (i < sums.length) {
+            sums(i) = (if (i < a._2.length) a._2(i) else 0L) +
+              (if (i < b._2.length) b._2(i) else 0L)
+            i += 1
+          }
+          (a._1, sums, a._3 + b._3)
+        }
+        .map(_._2).collect().map(r => r._1 -> (r._2, r._3)).toMap
+      bc.destroy() // per-iteration broadcast, dead after the collect
+      centroids = centroids.map { case (cid, oldV, oldN) =>
+        cellAgg.get(cid) match {
+          case Some((sums, cnt)) =>
+            val nv = sums.map(x => (x.toDouble / 1e6 / cnt).toFloat)
+            (cid, nv, nrm(nv))
+          case None => (cid, oldV, oldN)
+        }
+      }.sortBy(_._1)
+    }
+    centroids
   }
 
   def annIvf(s: SparkSession, dir: String): DataFrame = {
@@ -631,40 +652,15 @@ object Similarity {
           .map { case (id, v) => (id, sub(v, sx)) }
         require(seeds.nonEmpty,
           s"ann_pq needs codebook seed vectors (vec_id < $k) in the embeddings table")
-        var cents = seeds
-        for (_ <- 1 to PQ_ITERS) {
-          val bc = s.sparkContext.broadcast(cents)
-          val agg = e.map { case (_, v) =>
-            val sv = sub(v, sx)
-            var best = -1L; var bd = Double.MaxValue
-            bc.value.foreach { case (cid, cv) => // ascending cid ⇒ low cid wins ties
-              val d = l2(sv, cv)
-              if (d < bd) { bd = d; best = cid }
-            }
-            (best, sv.map(x => math.round(x * 1e6)), 1L)
+        lloyd(s, e, seeds, PQ_ITERS) { (v, cents) =>
+          val sv = sub(v, sx)
+          var best = -1L; var bd = Double.MaxValue
+          cents.foreach { case (cid, cv, _) => // ascending cid ⇒ low cid wins ties
+            val d = l2(sv, cv)
+            if (d < bd) { bd = d; best = cid }
           }
-            .groupByKey(_._1)
-            .reduceGroups { (a, b) =>
-              val sums = new Array[Long](math.max(a._2.length, b._2.length))
-              var i = 0
-              while (i < sums.length) {
-                sums(i) = (if (i < a._2.length) a._2(i) else 0L) +
-                  (if (i < b._2.length) b._2(i) else 0L)
-                i += 1
-              }
-              (a._1, sums, a._3 + b._3)
-            }
-            .map(_._2).collect().map(r => r._1 -> (r._2, r._3)).toMap
-          bc.destroy()
-          cents = cents.map { case (cid, oldV) =>
-            agg.get(cid) match {
-              case Some((sums, cnt)) =>
-                (cid, sums.map(x => (x.toDouble / 1e6 / cnt).toFloat))
-              case None => (cid, oldV)
-            }
-          }.sortBy(_._1)
-        }
-        cents.map { case (cid, cv) => (sx, cid, cv) }
+          (best, sv.map(x => math.round(x * 1e6)))
+        }.map { case (cid, cv, _) => (sx, cid, cv) }
       }.toArray
     }
   }

@@ -1603,6 +1603,49 @@ object TextOps {
       .select(col("w"), col("freq"), seq0.as("seq"))
   }
 
+  /** One merge applied to a delimited symbol string (see
+    * [[tokenizeBpe]]): the literal replace of ` l  r ` by ` lr `. */
+  private def merged(seq: Column, l: String, r: String): Column =
+    call_function("replace", seq, lit(s" $l  $r "), lit(s" $l$r "))
+
+  /** `seq` after every trained BPE merge, replayed in rank order. */
+  private def replayed(seq: Column, merges: Seq[(Long, String, String, String, Long)]): Column =
+    merges.foldLeft(seq) { case (c, (_, l, r, _, _)) => merged(c, l, r) }
+
+  /** The merge-training loop shared by the BPE and WordPiece trainers:
+    * up to `budget` rounds over the cached [[bpeVocab]] relation. Each
+    * round `winner` reads the vocab's symbols as (s, freq) and collects
+    * the round's winning pair (l, r) plus its scores `T` — none once
+    * every word is one symbol — and the merge rewrites every `seq`.
+    * Returns (rank, l, r, lr, scores) per round.
+    */
+  private def trainedMerges[T](s: SparkSession, dir: String, budget: Int)
+      (winner: DataFrame => Option[(String, String, T)]): Seq[(Long, String, String, String, T)] = {
+    val vocab = bpeVocab(s, dir).cache()
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, T)]
+    try {
+      var cur = vocab.select(col("seq"), col("freq"))
+      var exhausted = false
+      while (merges.size < budget && !exhausted)
+        winner(cur.select(split(trim(col("seq")), "  ").as("s"), col("freq"))) match {
+          case Some((l, r, t)) =>
+            merges += ((merges.size + 1L, l, r, l + r, t))
+            cur = cur.withColumn("seq", merged(col("seq"), l, r))
+          case None => exhausted = true // vocab fully merged before the budget
+        }
+    } finally vocab.unpersist()
+    merges.toSeq
+  }
+
+  /** (l, r, cnt): the frequency of each adjacent symbol pair of the
+    * (s, freq) vocab symbols. */
+  private def pairCounts(syms: DataFrame): DataFrame =
+    syms.filter(size(col("s")) >= 2)
+      .select(col("freq"), explode(expr(
+        "transform(sequence(0, size(s)-2), i -> struct(s[i] as l, s[i+1] as r))")).as("p"))
+      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+      .agg(sum(col("freq")).as("cnt"))
+
   /** Run (or reuse) the merge training loop; returns the ranked merge
     * list. Training is [[BPE_MERGES]] rounds of pair-count + 1-row
     * winner collect over the cached vocab relation.
@@ -1610,33 +1653,11 @@ object TextOps {
   private def trainedBpeMerges(s: SparkSession, dir: String): Seq[(Long, String, String, String, Long)] = {
     import s.implicits._
     bpeMerges(s, "bpeMerges|" + dir, docsSig(s, dir)) {
-      val vocab = bpeVocab(s, dir).cache()
-      val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
-      try {
-        var cur = vocab.select(col("seq"), col("freq"))
-        var k = 1
-        var exhausted = false
-        while (k <= BPE_MERGES && !exhausted) {
-          val best = cur
-            .select(split(trim(col("seq")), "  ").as("s"), col("freq"))
-            .filter(size(col("s")) >= 2)
-            .select(col("freq"), explode(expr(
-              "transform(sequence(0, size(s)-2), i -> struct(s[i] as l, s[i+1] as r))")).as("p"))
-            .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-            .agg(sum(col("freq")).as("cnt"))
-            .orderBy(col("cnt").desc, col("l"), col("r"))
-            .limit(1).as[(String, String, Long)].collect()
-          best.headOption match {
-            case Some((l, r, cnt)) =>
-              merges += ((k.toLong, l, r, l + r, cnt))
-              cur = cur.withColumn("seq", call_function("replace", col("seq"),
-                lit(s" $l  $r "), lit(s" $l$r ")))
-              k += 1
-            case None => exhausted = true // vocab fully merged before the budget
-          }
-        }
-      } finally vocab.unpersist()
-      merges.toSeq
+      trainedMerges(s, dir, BPE_MERGES) { syms =>
+        pairCounts(syms)
+          .orderBy(col("cnt").desc, col("l"), col("r"))
+          .limit(1).as[(String, String, Long)].collect().headOption
+      }
     }
   }
 
@@ -1676,10 +1697,7 @@ object TextOps {
     }
 
   def tokenizeBpeSegments(s: SparkSession, dir: String): DataFrame = {
-    val merges = trainedBpeMerges(s, dir)
-    val seqFinal = merges.foldLeft(col("seq")) { case (c, (_, l, r, _, _)) =>
-      call_function("replace", c, lit(s" $l  $r "), lit(s" $l$r "))
-    }
+    val seqFinal = replayed(col("seq"), trainedBpeMerges(s, dir))
     bpeVocab(s, dir)
       .select(col("w").as("word"), col("freq"),
         split(trim(seqFinal), "  ").as("syms"))
@@ -1696,27 +1714,39 @@ object TextOps {
     */
   /** The unrolled training chain (word column rides along so the final
     * state doubles as the segment table). */
-  private val bpeTrainCtes: Seq[String] = {
-    val ctes = scala.collection.mutable.ArrayBuffer(
-      """w0 AS MATERIALIZED (
-        |  SELECT w AS word, CAST(count(*) AS BIGINT) AS freq,
-        |         ' ' || array_to_string(list_append(string_split(w, ''), '</w>'), '  ') || ' ' AS seq
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-        |  WHERE w <> '' GROUP BY w)""".stripMargin)
-    for (k <- 1 to BPE_MERGES) {
-      val p = k - 1
-      ctes += s"""p$k AS MATERIALIZED (
-        |  SELECT s[i] AS l, s[i+1] AS r, CAST(sum(freq) AS BIGINT) AS cnt
-        |  FROM (SELECT string_split(trim(seq), '  ') AS s, freq FROM w$p),
-        |       unnest(range(1, len(s))) t(i)
-        |  GROUP BY 1, 2)""".stripMargin
-      ctes += s"b$k AS (SELECT l, r, cnt FROM p$k ORDER BY cnt DESC, l, r LIMIT 1)"
-      ctes += s"""w$k AS MATERIALIZED (
-        |  SELECT word, freq, replace(seq, ' ' || l || '  ' || r || ' ', ' ' || l || r || ' ') AS seq
-        |  FROM w$p CROSS JOIN b$k)""".stripMargin
+  private val bpeTrainCtes: Seq[String] =
+    trainCtes("w", "p", "b", BPE_MERGES) { k =>
+      Seq(s"b$k AS (SELECT l, r, cnt FROM p$k ORDER BY cnt DESC, l, r LIMIT 1)")
     }
-    ctes.toSeq
-  }
+
+  /** SQL twin of [[merged]]: `seq` with the merge of the `l`, `r`
+    * columns applied. */
+  private def mergedSql(seq: String): String =
+    s"replace($seq, ' ' || l || '  ' || r || ' ', ' ' || l || r || ' ')"
+
+  /** SQL twin of [[trainedMerges]], unrolled: state `<v>0` is the
+    * [[bpeVocab]] (word, freq, seq), and round k adds the pair counts
+    * `<p>k` (l, r, cnt) of state `<v>k-1`, the round's `winner(k)` CTEs
+    * — the last of them is the one-row winner `<b>k` — and state `<v>k`,
+    * the previous state with the winning merge applied.
+    */
+  private def trainCtes(v: String, p: String, b: String, budget: Int)
+      (winner: Int => Seq[String]): Seq[String] =
+    s"""${v}0 AS MATERIALIZED (
+       |  SELECT w AS word, CAST(count(*) AS BIGINT) AS freq,
+       |         ' ' || array_to_string(list_append(string_split(w, ''), '</w>'), '  ') || ' ' AS seq
+       |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+       |  WHERE w <> '' GROUP BY w)""".stripMargin +:
+      (1 to budget).flatMap { k =>
+        s"""$p$k AS MATERIALIZED (
+           |  SELECT s[i] AS l, s[i+1] AS r, CAST(sum(freq) AS BIGINT) AS cnt
+           |  FROM (SELECT string_split(trim(seq), '  ') AS s, freq FROM $v${k - 1}),
+           |       unnest(range(1, len(s))) t(i)
+           |  GROUP BY 1, 2)""".stripMargin +: winner(k) :+
+          s"""$v$k AS MATERIALIZED (
+             |  SELECT word, freq, ${mergedSql("seq")} AS seq
+             |  FROM $v${k - 1} CROSS JOIN $b$k)""".stripMargin
+      }
 
   val tokenizeBpeSql: String = {
     val sel = (1 to BPE_MERGES).map(k =>
@@ -2000,46 +2030,23 @@ object TextOps {
       : Seq[(Long, String, String, String, Long, Long, Long, Long)] = {
     import s.implicits._
     wordpieceMerges(s, "wordpieceMerges|" + dir, docsSig(s, dir)) {
-      val vocab = bpeVocab(s, dir).cache()
-      val merges = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, String, String, String, Long, Long, Long, Long)]
-      try {
-        var cur = vocab.select(col("seq"), col("freq"))
-        var k = 1
-        var exhausted = false
-        while (k <= WORDPIECE_MERGES && !exhausted) {
-          val split0 = cur
-            .select(split(trim(col("seq")), "  ").as("s"), col("freq"))
-          val syms = split0
-            .select(explode(col("s")).as("sym"), col("freq"))
-            .groupBy(col("sym")).agg(sum(col("freq")).as("scnt"))
-          val best = split0
-            .filter(size(col("s")) >= 2)
-            .select(col("freq"), explode(expr(
-              "transform(sequence(0, size(s)-2), i -> struct(s[i] as l, s[i+1] as r))")).as("p"))
-            .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-            .agg(sum(col("freq")).as("cnt"))
-            .join(broadcast(syms.select(col("sym").as("l"), col("scnt").as("lcnt"))), "l")
-            .join(broadcast(syms.select(col("sym").as("r"), col("scnt").as("rcnt"))), "r")
-            .withColumn("score_e18", expr(
-              """CAST((CAST(cnt AS DECIMAL(38,0)) * 1000000000000000000)
-                | div (CAST(lcnt AS DECIMAL(38,0)) * rcnt) AS BIGINT)""".stripMargin))
-            .orderBy(col("score_e18").desc, col("l"), col("r"))
-            .limit(1)
-            .select(col("l"), col("r"), col("cnt"), col("lcnt"), col("rcnt"),
-              col("score_e18"))
-            .as[(String, String, Long, Long, Long, Long)].collect()
-          best.headOption match {
-            case Some((l, r, cnt, lc, rc, sc)) =>
-              merges += ((k.toLong, l, r, l + r, cnt, lc, rc, sc))
-              cur = cur.withColumn("seq", call_function("replace", col("seq"),
-                lit(s" $l  $r "), lit(s" $l$r ")))
-              k += 1
-            case None => exhausted = true
-          }
-        }
-      } finally vocab.unpersist()
-      merges.toSeq
+      trainedMerges(s, dir, WORDPIECE_MERGES) { split0 =>
+        val syms = split0
+          .select(explode(col("s")).as("sym"), col("freq"))
+          .groupBy(col("sym")).agg(sum(col("freq")).as("scnt"))
+        pairCounts(split0)
+          .join(broadcast(syms.select(col("sym").as("l"), col("scnt").as("lcnt"))), "l")
+          .join(broadcast(syms.select(col("sym").as("r"), col("scnt").as("rcnt"))), "r")
+          .withColumn("score_e18", expr(
+            """CAST((CAST(cnt AS DECIMAL(38,0)) * 1000000000000000000)
+              | div (CAST(lcnt AS DECIMAL(38,0)) * rcnt) AS BIGINT)""".stripMargin))
+          .orderBy(col("score_e18").desc, col("l"), col("r"))
+          .limit(1)
+          .select(col("l"), col("r"), col("cnt"), col("lcnt"), col("rcnt"),
+            col("score_e18"))
+          .as[(String, String, Long, Long, Long, Long)].collect().headOption
+          .map { case (l, r, cnt, lc, rc, sc) => (l, r, (cnt, lc, rc, sc)) }
+      }.map { case (k, l, r, lr, (cnt, lc, rc, sc)) => (k, l, r, lr, cnt, lc, rc, sc) }
     }
   }
 
@@ -2055,35 +2062,18 @@ object TextOps {
     * CTE, a pair-count CTE, the likelihood-scored LIMIT-1 winner, and
     * the delimited-string rewrite; MATERIALIZED for the same
     * exponential-inlining reason as the BPE chain. */
-  private val wordpieceTrainCtes: Seq[String] = {
-    val ctes = scala.collection.mutable.ArrayBuffer(
-      """v0 AS MATERIALIZED (
-        |  SELECT w AS word, CAST(count(*) AS BIGINT) AS freq,
-        |         ' ' || array_to_string(list_append(string_split(w, ''), '</w>'), '  ') || ' ' AS seq
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-        |  WHERE w <> '' GROUP BY w)""".stripMargin)
-    for (k <- 1 to WORDPIECE_MERGES) {
-      val p = k - 1
-      ctes += s"""ws$k AS MATERIALIZED (
+  private val wordpieceTrainCtes: Seq[String] =
+    trainCtes("v", "wp", "wb", WORDPIECE_MERGES) { k =>
+      Seq(s"""ws$k AS MATERIALIZED (
         |  SELECT sym, CAST(sum(freq) AS BIGINT) AS scnt
-        |  FROM (SELECT unnest(string_split(trim(seq), '  ')) AS sym, freq FROM v$p)
-        |  GROUP BY 1)""".stripMargin
-      ctes += s"""wp$k AS MATERIALIZED (
-        |  SELECT s[i] AS l, s[i+1] AS r, CAST(sum(freq) AS BIGINT) AS cnt
-        |  FROM (SELECT string_split(trim(seq), '  ') AS s, freq FROM v$p),
-        |       unnest(range(1, len(s))) t(i)
-        |  GROUP BY 1, 2)""".stripMargin
-      ctes += s"""wb$k AS (SELECT p.l, p.r, p.cnt, sl.scnt AS lcnt, sr.scnt AS rcnt,
+        |  FROM (SELECT unnest(string_split(trim(seq), '  ')) AS sym, freq FROM v${k - 1})
+        |  GROUP BY 1)""".stripMargin,
+        s"""wb$k AS (SELECT p.l, p.r, p.cnt, sl.scnt AS lcnt, sr.scnt AS rcnt,
         |  CAST(CAST(p.cnt AS HUGEINT) * 1000000000000000000
         |       // (CAST(sl.scnt AS HUGEINT) * sr.scnt) AS BIGINT) AS score_e18
         |  FROM wp$k p JOIN ws$k sl ON sl.sym = p.l JOIN ws$k sr ON sr.sym = p.r
-        |  ORDER BY score_e18 DESC, p.l, p.r LIMIT 1)""".stripMargin
-      ctes += s"""v$k AS MATERIALIZED (
-        |  SELECT word, freq, replace(seq, ' ' || l || '  ' || r || ' ', ' ' || l || r || ' ') AS seq
-        |  FROM v$p CROSS JOIN wb$k)""".stripMargin
+        |  ORDER BY score_e18 DESC, p.l, p.r LIMIT 1)""".stripMargin)
     }
-    ctes.toSeq
-  }
 
   val tokenizeWordpieceTrainSql: String = {
     val sel = (1 to WORDPIECE_MERGES).map(k =>
@@ -2116,9 +2106,7 @@ object TextOps {
     def ph(c: Column): Column = GraftSqlShim.column(graft.functions.StringPolyHash(
       GraftSqlShim.expression(c), GraftSqlShim.expression(lit(1000000007L))))
     val merges = trainedBpeMerges(s, dir)
-    val seqBase = merges.foldLeft(col("seq")) { case (c, (_, l, r, _, _)) =>
-      call_function("replace", c, lit(s" $l  $r "), lit(s" $l$r "))
-    }
+    val seqBase = replayed(col("seq"), merges)
     // the dropout arm MUST advance through a materialized column per
     // round: its CASE references the previous state twice (keep vs
     // rewrite), so an expression fold would duplicate the subtree
@@ -2131,8 +2119,7 @@ object TextOps {
       case (df, (k, l, r, _, _)) =>
         df.withColumn("dseq",
           when(ph(concat(lit("bd|"), col("w"), lit(s"|$k"))) % 10 === 0, col("dseq"))
-            .otherwise(call_function("replace", col("dseq"),
-              lit(s" $l  $r "), lit(s" $l$r "))))
+            .otherwise(merged(col("dseq"), l, r)))
     }
     dropped
       .select(col("w").as("word"), col("freq"),
@@ -2154,7 +2141,7 @@ object TextOps {
       s"""d$k AS MATERIALIZED (
          |  SELECT word, freq,
          |    CASE WHEN ${phSql(s"'bd|' || word || '|$k'")} % 10 = 0 THEN dseq
-         |      ELSE replace(dseq, ' ' || l || '  ' || r || ' ', ' ' || l || r || ' ') END AS dseq
+         |      ELSE ${mergedSql("dseq")} END AS dseq
          |  FROM d$p CROSS JOIN b$k)""".stripMargin
     }.mkString(",\n")
     "WITH " + bpeTrainCtes.mkString(",\n") + s""",

@@ -60,6 +60,43 @@ object Checkpoints {
   implicit class StableSyntax(private val df: DataFrame) extends AnyVal {
     def stableCheckpoint(): DataFrame = stable(df)
   }
+
+  /** `n` fixed rounds of `step` from `init`, each round's state
+    * materialized through [[stable]]: the loop re-reads checkpointed
+    * blocks instead of stacking `n` self-referencing join trees, and a
+    * round is one driver-synchronized job. */
+  def rounds(n: Int, init: DataFrame)(step: DataFrame => DataFrame): DataFrame =
+    (1 to n).foldLeft(init)((state, _) => stable(step(state)))
+
+  /** The cap on [[fixpoint]] rounds. */
+  val MaxRounds = 64
+
+  /** Rounds of `step` to FIXPOINT. Each round's output is materialized
+    * through [[stable]] and carries the state's columns plus `next`,
+    * the round's new value of column `value` (which may only fall); the
+    * next state is that output with `next` in place of `value`. The
+    * loop stops after the first round where no row's value fell (the
+    * `changed` count, one job per round) and throws an
+    * `IllegalStateException` naming `loop` if that takes more than
+    * [[MaxRounds]] rounds.
+    */
+  def fixpoint(loop: String, init: DataFrame, value: String, next: String)
+      (step: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    var state = init
+    var changed = 1L
+    var n = 0
+    while (changed > 0 && n < MaxRounds) {
+      val out = stable(step(state))
+      changed = out.filter(col(next) < col(value)).count()
+      state = out.select(state.columns.toSeq.map(c =>
+        if (c == value) col(next).as(c) else col(c)): _*)
+      n += 1
+    }
+    if (changed > 0)
+      throw new IllegalStateException(s"$loop did not converge in $n rounds")
+    state
+  }
 }
 
 /** Per-(session, corpus-signature) shared-relation memo — the

@@ -137,4 +137,36 @@ class ContractSpec extends AnyFunSuite {
     val off = expected.collect { case (n, k) if copies(n) != k => s"$n: ${copies(n)} (want $k)" }
     assert(off.isEmpty, off.mkString("Geo.scala repeats a stage decision:\n", "\n", ""))
   }
+
+  test("each iterative-loop decision is written once per side") {
+    // the graph faces share one symmetric edge list per side, the merge
+    // trainers one rewrite per side, and every fixpoint loop routes
+    // through Checkpoints.fixpoint, which alone owns the cap and error
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    def code(path: java.nio.file.Path): String =
+      java.nio.file.Files.readAllLines(path).asScala.map(_.trim)
+        .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+        .mkString("\n")
+    def copies(src: String, needle: String): Int =
+      java.util.regex.Pattern.quote(needle).r.findAllIn(src).length
+    val dedup = code(root.resolve("operators/Dedup.scala"))
+    val text = code(root.resolve("operators/TextOps.scala"))
+    val checkpoints = root.resolve("plans/Checkpoints.scala")
+    val others = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != checkpoints)
+      .map(code).mkString("\n")
+    val expected = Seq(
+      ("Dedup", dedup, """col("doc_b").as("doc_a"), col("doc_a").as("doc_b")""", 1),
+      ("Dedup", dedup, "SELECT doc_b, doc_a FROM", 1),
+      ("TextOps", text, """lit(s" $l  $r ")""", 1),
+      ("TextOps", text, "' ' || l || '  ' || r || ' '", 1),
+      ("Checkpoints", code(checkpoints), "did not converge", 1),
+      ("Checkpoints", code(checkpoints), "MaxRounds = 64", 1),
+      ("src/main outside Checkpoints", others, "did not converge", 0),
+      ("src/main outside Checkpoints", others, "< 64", 0))
+    val off = expected.collect { case (where, src, n, k) if copies(src, n) != k =>
+      s"$where: $n: ${copies(src, n)} (want $k)" }
+    assert(off.isEmpty, off.mkString("a loop decision is written more than once:\n", "\n", ""))
+  }
 }

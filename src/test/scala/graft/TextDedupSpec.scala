@@ -2983,6 +2983,27 @@ class TextDedupSpec extends SparkSpec {
     assert(out == Set((1L, 1L, 0L), (2L, 1L, 1L), (3L, 1L, 2L)))
   }
 
+  test("bfs past the round cap throws and releases its edge cache") {
+    // doc i shares 12 of its 18 words with doc i+1 (trigram Jaccard
+    // 10/22) and 6 with doc i+2 (4/28, below the 0.3 cut): the far end
+    // of a 66-doc chain is 65 hops from the exemplar, past the cap
+    val words = (0 until 6 * 65 + 18).map(i => s"t$i")
+    val df = docsDf((0 until 66).map(i =>
+      ((i + 1).toLong, words.slice(6 * i, 6 * i + 18).mkString(" "), "en")))
+    df.write.mode("overwrite").parquet("/tmp/graft-test-bfs-chain/documents.parquet")
+    // the CacheManager's entry count is Spark-internal API (public in
+    // the bytecode, so reflection reaches it)
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def cached(): Int =
+      cache.getClass.getMethod("numCachedEntries").invoke(cache).asInstanceOf[Int]
+    val before = cached()
+    val err = intercept[IllegalStateException](
+      Dedup.graphBfs(spark, "/tmp/graft-test-bfs-chain"))
+    assert(err.getMessage.contains("graphBfs did not converge"))
+    assert(cached() <= before, s"the loop's edge cache outlived the throw: ${cached()} > $before")
+  }
+
   test("bfs agrees with components and satisfies the parent property on the real corpus") {
     import spark.implicits._
     val bfs = Dedup.graphBfs(spark, sfMid)

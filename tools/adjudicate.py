@@ -6,7 +6,7 @@ can read as 1.5-2x "regressions" even on a quiet machine (r19: two
 back-to-back quiet passes produced completely DISJOINT flag sets, and
 min-of-two cleared the gate with zero flags). This tool automates the
 documented adjudication: re-time every flagged key in isolation
-(DebugTime, one JVM, 5 reps — codegen-heavy keys keep warming down
+(`graft.Tool time`, one JVM, 5 reps — codegen-heavy keys keep warming down
 through rep 4, measured on ml_forecast_damped: 1.44/1.23/1.06/0.94/0.90)
 and accept the pass if each flagged key's best warm rep (reps 2+) lands
 within `factor` (default 1.35x) of its committed cell — i.e. the flag
@@ -50,18 +50,18 @@ def main(committed, new_path, factor=1.35, sf_dir="/root/testdata/sf0.1"):
         return 1
     print(f"adjudicating {len(flags)} flagged keys: {', '.join(flags)}")
     cmd = ["sbt", "-batch",
-           f"runMain graft.DebugTime {sf_dir} {','.join(flags)} 5"]
+           f"runMain graft.Tool time {sf_dir} {','.join(flags)} 5"]
     outp = subprocess.run(cmd, capture_output=True, text=True).stdout
     bad = []
     for q in flags:
         reps = [float(m) for m in
                 re.findall(rf"\[debugtime\] {re.escape(q)} rep\d ([0-9.]+) s", outp)]
         if len(reps) < 2:
-            print(f"  {q}: DebugTime produced no reps — treating as REAL")
+            print(f"  {q}: `graft.Tool time` produced no reps — treating as REAL")
             bad.append(q)
             continue
         best = min(reps[1:])
-        # Absolute floor (r20): DebugTime's single-query JVM never
+        # Absolute floor (r20): `graft.Tool time`'s single-query JVM never
         # reaches the fully-warmed state of a 368-query bench pass —
         # its measured isolated floor is ~0.32 s (split_train_val:
         # committed 0.21 s from a full pass, isolated reps descend

@@ -9,7 +9,7 @@ when the machine is not quiet.
 
 Usage: python3 tools/bench_canary.py [committed_bench_full.json] [factor] [sf_dir]
 
-Runs `graft.DebugTime <sf_dir> q1_pricing_summary 3`, takes the best
+Runs `graft.Tool time <sf_dir> q1_pricing_summary 3`, takes the best
 warm rep (reps 2-3 — rep 1 pays codegen), and compares against the
 committed bench_full.json q1 cell. Exit 0 = quiet (canary <= factor x
 committed, default 2x); exit 1 = loaded, do NOT overwrite the ledger.
@@ -24,12 +24,12 @@ def main(committed="bench_full.json", factor=2.0,
          sf_dir="/root/testdata/sf0.1"):
     cell = json.load(open(committed))["queries"]["q1_pricing_summary"]
     cmd = ["sbt", "-batch",
-           f"runMain graft.DebugTime {sf_dir} q1_pricing_summary 3"]
+           f"runMain graft.Tool time {sf_dir} q1_pricing_summary 3"]
     out = subprocess.run(cmd, capture_output=True, text=True).stdout
     reps = [float(m) for m in
             re.findall(r"\[debugtime\] q1_pricing_summary rep\d ([0-9.]+) s", out)]
     if len(reps) < 2:
-        print(f"CANARY ERROR: could not parse DebugTime output:\n{out[-2000:]}")
+        print(f"CANARY ERROR: could not parse `graft.Tool time` output:\n{out[-2000:]}")
         return 1
     warm = min(reps[1:])
     limit = cell * factor
