@@ -1,9 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{ExplainUtils, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One entry for the ad-hoc runs on named queries:
@@ -19,7 +19,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    Tokens that change from run to run (expression ids, `plan_id=`,
   *    RDD ids, the warehouse path, lambda and object identities, and
   *    the codegen ids of executed subquery plans) are stripped, so two
-  *    dumps compare with plain `diff`.
+  *    dumps compare with plain `diff`. Each key ends with one
+  *    `===SUMMARY=== <key> actions=<a> shuffles=<s> broadcasts=<b>` line:
+  *    its action count and the shuffle and broadcast exchanges planned
+  *    over all of them (subqueries included).
   *  - `dump <sfDir> <outDir> <key>...` writes the keys' rows and their
   *    oracle SQL like [[Verify]], so `tools/check.py` can gate a subset.
   *  - `time <sfDir> <key>[,<key>...] [reps] [nosort]` times each key
@@ -66,17 +69,24 @@ object Tool {
       SparkEntry.queries(key)(spark, sfDir).write.format("noop").mode("overwrite").save()
       val marker = spark.range(1)
       marker.collect()
-      Iterator.continually(seen.take())
+      val plans = Iterator.continually(seen.take())
         .takeWhile { case (_, qe) => !(qe eq marker.queryExecution) }
-        .zipWithIndex.foreach { case ((action, qe), n) =>
+        .zipWithIndex.map { case ((action, qe), n) =>
           println(s"===ACTION=== $key ${n + 1} $action")
-          val plan = new StringBuilder
-          ExplainUtils.processPlan[SparkPlan](qe.executedPlan match {
+          val planned = qe.executedPlan match {
             case a: AdaptiveSparkPlanExec => a.initialPlan
             case p => p.transformUp { case a: AdaptiveSparkPlanExec => a.initialPlan }
-          }, plan.append(_))
+          }
+          val plan = new StringBuilder
+          ExplainUtils.processPlan[SparkPlan](planned, plan.append(_))
           println(normalized(plan.toString, warehouse))
-        }
+          planned
+        }.toList
+      def exchanges(pf: PartialFunction[SparkPlan, Unit]): Int =
+        plans.map(_.collectWithSubqueries(pf).size).sum
+      println(s"===SUMMARY=== $key actions=${plans.size} " +
+        s"shuffles=${exchanges { case _: ShuffleExchangeExec => }} " +
+        s"broadcasts=${exchanges { case _: BroadcastExchangeExec => }}")
     }
     spark.stop()
   }

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
-import graft.plans.Checkpoints.StableSyntax
 
 /** Experimentation / causal operators: A/B lift, CUPED, sequential
   * tests, power, SRM, difference-in-differences and the metric tree.

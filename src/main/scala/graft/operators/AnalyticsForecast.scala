@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
 import graft.plans.Checkpoints.StableSyntax
 
 /** Time-series / ML-adjacent operators: gap-fill, EWMA, anomaly

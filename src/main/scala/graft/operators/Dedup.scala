@@ -2039,7 +2039,6 @@ object Dedup {
     * O(log N) buckets; shares ride a window over that bounded ledger.
     */
   def graphDegreeHist(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val pairs = verifiedPairs(s, dir)
     val deg = symmetric(pairs)
       .groupBy(col("doc_a").as("doc_id"))

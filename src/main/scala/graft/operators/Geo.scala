@@ -26,13 +26,15 @@ import graft.sources.Tables
   *
   *   - fold: [[projected]] → [[inBbox]] → [[binX]]/[[binY]] (cell
   *     [[pxPy]], day key [[dayKey]]); SQL [[foldSql]];
-  *   - render: [[fanOut]] (3×3 spread) → eq-hist → [[ramp]]; the
-  *     per-frame chain is [[frameRender]] / [[renderSql]];
+  *   - render: [[framed]] (the frame shuffle) → [[fanOut]] (3×3
+  *     spread) → eq-hist → [[ramp]]; the per-frame chain is
+  *     [[frameRender]] / [[renderSql]];
   *   - assemble: [[frameSeq]], [[cumSum]], [[manifest]], [[frameDay]];
   *     audits: [[zoneProbe]]; tiles: [[tilePyramid]].
   *
-  * A stage returns a lazy plan (nothing new is cached), so each face's
-  * optimized plan is the one its hand-written chain would give.
+  * A stage returns a lazy plan (only [[framed]] materializes, and only
+  * a fold the face would checkpoint anyway), so each face's optimized
+  * plan is the one its hand-written chain would give.
   *
   * == Scale notes ==
   * Rasterization groups on a bounded key space (1.4M pixels): map-side
@@ -40,7 +42,10 @@ import graft.sources.Tables
   * is O(pixels) regardless of input size. Eq-hist ranks the raster
   * (O(pixels)), never the input. The per-day fan-out is a grouped agg +
   * tiny window — the reference's 24-way array job becomes partition
-  * pruning + shuffle-free combine.
+  * pruning + shuffle-free combine. The per-frame render shuffles each
+  * fold's cells once, on the frame day: each frame is then one task
+  * with canvas-bounded work — at most 1.4M spread cells sorted per
+  * frame for its rank — and no exchange or broadcast past the fold.
   */
 object Geo {
 
@@ -256,9 +261,10 @@ object Geo {
     * floor((below/(n_bins−1))·255), ties shade equally — but no single
     * task ever sorts O(pixels); the only O(pixels) shuffle is the
     * histogram partial-agg, and the final join is broadcast
-    * (shuffle-free). Kept apart from [[frameRender]]'s per-frame
-    * window lookup on purpose: this face has no partition key, so a
-    * window here would be the un-partitioned rank it avoids.
+    * (shuffle-free). [[frameRender]] ranks with a window instead: it
+    * has a partition key, the frame day, so its rank sorts one frame
+    * per task; this face has none, and a window here would be the
+    * un-partitioned rank it avoids.
     */
   private def eqhistShade(raster: DataFrame): DataFrame = {
     val hist = raster.groupBy(col("cnt")).agg(count(lit(1)).as("m"))
@@ -512,54 +518,52 @@ object Geo {
        |FROM seq ORDER BY frame_seq""".stripMargin
 
   // ------------------------------------------- composed frame build
+  /** The frame shuffle: a fold's cells hash-partitioned on the frame
+    * key `dkey` into `spark.sql.shuffle.partitions` parts (an explicit
+    * count, which AQE leaves alone, so the frames render as parallel
+    * tasks), then checkpointed and declared so (under AQE Spark keeps
+    * no partitioning on a checkpoint). Every later `dkey`-keyed
+    * aggregate, window and join of the face — [[frameRender]], the day
+    * ledgers, the hash join between them — then runs inside the frame's
+    * partition with no further exchange.
+    */
+  private def framed(fold: DataFrame): DataFrame = {
+    import graft.plans.Checkpoints.StableSyntax
+    val n = fold.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    org.apache.spark.sql.graftshim.GraftSqlShim.hashPartitioned(
+      fold.repartition(n, col("dkey")).stableCheckpoint(), Seq("dkey"), n)
+  }
+
   /** Shared per-frame render: stages [4-5] of [[pipelineFrameBuild]] —
     * [[fanOut]] spread + per-frame eq-hist + [[ramp]] RGB, reduced to
-    * the frame ledger (n_spread, spread_mass, shade_mass, rgb_digest).
-    * Every frame-building face pushes its legs through this ONE
-    * arithmetic. The eq-hist is [[eqhistShade]]'s two-pass histogram
-    * with the frame day joined into every key: percent_rank =
-    * cells-strictly-below / (cells − 1) per frame, DuckDB's
-    * `percent_rank() OVER (PARTITION BY dkey ORDER BY cs)` exactly.
-    * Input is a canvas-bounded day raster (dkey, px, py, cnt); every
-    * relation here is canvas-bounded.
+    * the frame ledger (n_spread, spread_mass, shade_mass, rgb_digest)
+    * per `leg` key (if any) and frame day. Every frame-building face
+    * pushes its legs through this ONE arithmetic. The eq-hist is
+    * `floor(percent_rank() OVER (PARTITION BY frame ORDER BY cs) * 255)`
+    * on the spread cells, its SQL twin's own formula: Spark's
+    * percent_rank is (rank−1)/(n−1) in doubles, the same integers and
+    * divisions as [[eqhistShade]]'s histogram path, so the shades are
+    * bit-identical (oracle-pinned).
+    *
+    * Input is canvas-bounded cells (leg…, dkey, px, py, cnt). Given
+    * [[framed]] cells, the spread aggregate, the rank window and the
+    * ledger aggregate all read the frame's own partition: the whole
+    * render is one task per partition, no exchange, no broadcast. Any
+    * other input still renders correctly; Spark then adds the exchanges.
     */
-  private[operators] def frameRender(raster: DataFrame): DataFrame = {
-    // sp feeds the histogram chain AND the final shade join.
-    // DELIBERATELY NOT cached: a .cache() here is a pushdown barrier —
-    // incremental consumers filter frameRender's output to the
-    // churned-day slice, and with the cache in place the
-    // InMemoryRelation materializes EVERY day's spread fold before the
-    // dkey predicate applies (measured: pipeline_job_incremental
-    // 3.6→4.7 s warm, nosort leg 3.1→4.8 s with a cache in).
-    // Re-running the canvas-bounded fold per consumer subtree is
-    // cheaper than losing the pushdown.
-    val sp = fanOut(raster, col("dkey"))
-      .groupBy(col("dkey"), col("qx"), col("qy"))
-      .agg(sum(col("cnt")).as("cs"))
-    val hist = sp.groupBy(col("dkey"), col("cs")).agg(count(lit(1)).as("m"))
-    // below / n_cells as WINDOWS over the one hist relation: hist rows
-    // are UNIQUE per (dkey, cs), so a ROWS-framed cumulative sum
-    // ordered by cs is exactly "Σ m over cs' < cs", and both windows
-    // share one dkey-partitioned sort. Same integer sums, same doubles
-    // as the two-pass histogram — bit-identical shades (oracle-pinned).
-    val wBelow = Window.partitionBy(col("dkey")).orderBy(col("cs"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prk = when(col("n_cells") === 1, lit(0.0))
-      .otherwise(col("below").cast("double") / (col("n_cells") - 1).cast("double"))
-    val lookup = hist
-      .withColumn("below", coalesce(sum(col("m")).over(wBelow), lit(0L)))
-      .withColumn("n_cells", sum(col("m")).over(Window.partitionBy(col("dkey"))))
-      .select(col("dkey").as("dk_l"), col("cs").as("cs_l"),
-        floor(prk * 255).as("shade"))
-    val shaded = sp.join(broadcast(lookup),
-        col("dk_l") === col("dkey") && col("cs_l") === col("cs"))
-      .select(col("dkey"), col("qx"), col("qy"), col("cs"), col("shade"))
+  private[operators] def frameRender(cells: DataFrame, leg: Column*): DataFrame = {
+    val frame = leg :+ col("dkey")
+    val shade = floor(percent_rank()
+      .over(Window.partitionBy(frame: _*).orderBy(col("cs"))) * 255)
     val (red, green, blue) = ramp(col("shade"))
-    shaded
-      .select(col("dkey"), col("cs"), col("shade"),
+    fanOut(cells, frame: _*)
+      .groupBy(frame :+ col("qx") :+ col("qy"): _*)
+      .agg(sum(col("cnt")).as("cs"))
+      .select(frame ++ Seq(col("qx"), col("qy"), col("cs"), shade.as("shade")): _*)
+      .select(frame ++ Seq(col("cs"), col("shade"),
         (((col("qx") * 1009L + col("qy")) *
-          (red * 65536L + green * 256L + blue + 1L)) % 1000000007L).as("mix"))
-      .groupBy(col("dkey"))
+          (red * 65536L + green * 256L + blue + 1L)) % 1000000007L).as("mix")): _*)
+      .groupBy(frame: _*)
       .agg(count(lit(1)).as("n_spread"), sum(col("cs")).as("spread_mass"),
         sum(col("shade")).as("shade_mass"), sum(col("mix")).as("rgb_digest"))
   }
@@ -600,8 +604,8 @@ object Geo {
     *      cells; Σ cell counts = `n_bbox` by construction).
     *   4. spread — [[geoSpread]]'s 3×3 ones-kernel convolution on the
     *      day's raster (`n_spread` cells, `spread_mass`).
-    *   5. shade + RGB — [[geoShadeEqhist]]'s two-pass histogram
-    *      eq-hist over the day's SPREAD counts (per-frame
+    *   5. shade + RGB — [[geoShadeEqhist]]'s eq-hist as a per-frame
+    *      percent_rank over the day's SPREAD counts (per-frame
     *      normalization, exactly datashader's per-image eq_hist) and
     *      [[geoShadeRgb]]'s fire ramp, reduced to `shade_mass` and an
     *      order-independent exact `rgb_digest` (Σ of a per-pixel
@@ -612,30 +616,28 @@ object Geo {
     * ONE corpus scan folds map-side onto the bounded (day, px, py)
     * relation — out-of-bbox rows fold to the (−1,−1) overflow cell so
     * the stage-1/2 marginals read off the SAME bounded relation
-    * (checkpointed; ≤ days × (1.4M + 1) rows). This overflow-cell fold
+    * ([[framed]]; ≤ days × (1.4M + 1) rows). This overflow-cell fold
     * is the one fold that keeps out-of-bbox points, so it composes
     * [[inBbox]] and the binning itself rather than [[bboxed]]. The
-    * spread fan-out, per-frame histogram (days × |distinct counts|),
-    * shade lookup and ledger are all canvas-bounded; no stage past the
-    * scan touches point volume, and the per-day partitioning is
-    * embarrassingly parallel across frames — the reference's 24-way
-    * array job as group keys.
+    * stage ledger, the spread fan-out, the per-frame rank and the frame
+    * ledger are all canvas-bounded and run inside the frame's
+    * partition; no stage past the scan touches point volume, and the
+    * frames render as parallel tasks — the reference's 24-way array
+    * job as frame-keyed partitions.
     */
   def pipelineFrameBuild(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
     // [1-3] one scan: project, bin (overflow cell for out-of-bbox)
-    val r = projected(s, dir, dayKey)
+    val r = framed(projected(s, dir, dayKey)
       .select(col("dkey"),
         when(inBbox, binX(W)).otherwise(lit(-1L)).cast("long").as("px"),
         when(inBbox, binY(H)).otherwise(lit(-1L)).cast("long").as("py"))
-      .groupBy(col("dkey"), col("px"), col("py")).agg(count(lit(1)).as("cnt"))
-      .stableCheckpoint()
-    val raster = r.filter(col("px") >= 0)
+      .groupBy(col("dkey"), col("px"), col("py")).agg(count(lit(1)).as("cnt")))
     val stages = r.groupBy(col("dkey")).agg(
       sum(col("cnt")).as("n_points"),
       sum(when(col("px") >= 0, col("cnt")).otherwise(0L)).as("n_bbox"),
       sum(when(col("px") >= 0, 1L).otherwise(0L)).as("n_lit"))
-    val frame = frameRender(raster)
+    // [4-5] both sides keep the frame partitioning: a hash join in place
+    val frame = frameRender(r.filter(col("px") >= 0)).hint("shuffle_hash")
     stages.join(frame, Seq("dkey"), "left_outer")
       .select(col("dkey").as("day"), frameDay,
         col("n_points"), col("n_bbox"), col("n_lit"),
@@ -678,31 +680,34 @@ object Geo {
     * scan folds map-side onto the bounded (day, px, py) relation
     * carrying both leg counts — standing `cb`, total `ca`, late batch
     * `cd` (event_id ≡ 0 mod 10, [[graft.operators.Maintain.aggIncremental]]'s
-    * delta convention) — checkpointed. Out-of-bbox delta points are
+    * delta convention) — [[framed]]. Out-of-bbox delta points are
     * dropped at the fold: they cannot change a frame. Returns that
-    * relation, the broadcast set of affected days, the relation
-    * restricted to them, and the before/after [[frameRender]] digests
-    * of the affected days, named `digB` / `digA`.
+    * relation and, per affected day (one the batch lands on), the
+    * before/after [[frameRender]] digests named `digB` / `digA`. Both
+    * legs render as ONE relation keyed (after, dkey) — the standing leg
+    * keeps only its lit cells — so a face pays for one render chain.
     */
   private def twoLegFold(s: SparkSession, dir: String, digB: String, digA: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import graft.plans.Checkpoints.StableSyntax
-    val r = bboxed(s, dir, dayKey,
+      : (DataFrame, DataFrame) = {
+    val r = framed(bboxed(s, dir, dayKey,
         (pmod(col("event_id"), lit(10)) === 0).cast("long").as("d"))
       .select(Seq(col("dkey"), col("d")) ++ pxPy: _*)
       .groupBy(col("dkey"), col("px"), col("py"))
       .agg(sum(lit(1L) - col("d")).as("cb"), count(lit(1)).as("ca"),
-        sum(col("d")).as("cd"))
-      .stableCheckpoint()
+        sum(col("d")).as("cd")))
     val aff = r.filter(col("cd") > 0).select(col("dkey")).distinct()
-    val rAff = r.join(broadcast(aff), Seq("dkey"))
-    val before = frameRender(rAff.filter(col("cb") > 0)
-        .select(col("dkey"), col("px"), col("py"), col("cb").as("cnt")))
-      .select(col("dkey"), col("rgb_digest").as(digB))
-    val after = frameRender(rAff
-        .select(col("dkey"), col("px"), col("py"), col("ca").as("cnt")))
-      .select(col("dkey"), col("rgb_digest").as(digA))
-    (r, aff, rAff, before, after)
+    val legs = r.join(aff.hint("shuffle_hash"), Seq("dkey"), "left_semi")
+      .select(col("dkey"), col("px"), col("py"), explode(array(
+        struct(lit(false).as("after"), col("cb").as("cnt")),
+        struct(lit(true).as("after"), col("ca").as("cnt")))).as("leg"))
+      .select(col("leg.after").as("after"), col("dkey"), col("px"), col("py"),
+        col("leg.cnt").as("cnt"))
+      .filter(col("cnt") > 0)
+    val dig = frameRender(legs, col("after"))
+      .groupBy(col("dkey"))
+      .agg(max(when(!col("after"), col("rgb_digest"))).as(digB),
+        max(when(col("after"), col("rgb_digest"))).as(digA))
+    (r, dig.hint("shuffle_hash"))
   }
 
   /** SQL twin of [[twoLegFold]]: `pr` (cb, ca, cd), `aff`, and the
@@ -737,26 +742,26 @@ object Geo {
     * deployment keeps the (day, px, py, cnt) relation as a table (it is
     * exactly what [[layoutHilbertWrite]] persists) and scans only the
     * delta, so the nightly cost is O(delta) + O(affected-day rasters),
-    * never the corpus. Affected days collapse to a broadcast set; both
-    * render legs and the ledger are canvas-bounded × affected-days;
-    * untouched frames are never re-shaded (the frames_touched /
-    * frames_total margin).
+    * never the corpus. Both render legs are one canvas-bounded ×
+    * affected-days relation rendered inside each frame's partition, the
+    * day ledger reads the same partitions, and only the O(days)
+    * constants meet in one single-partition window; untouched frames
+    * are never re-shaded (the frames_touched / frames_total margin).
     */
   def pipelineFrameIncremental(s: SparkSession, dir: String): DataFrame = {
-    val (r, aff, rAff, digB, digA) =
-      twoLegFold(s, dir, "rgb_digest_before", "rgb_digest_after")
-    val stats = rAff.groupBy(col("dkey")).agg(
-      sum(col("cd")).as("n_delta"),
-      sum(col("cb")).as("n_points_before"),
-      sum(col("ca")).as("n_points_after"),
-      sum(when(col("cb") > 0, 1L).otherwise(0L)).as("n_lit_before"),
-      count(lit(1)).as("n_lit_after"))
-    val totals = r.agg(countDistinct(col("dkey")).as("frames_total"))
-    val touched = aff.agg(count(lit(1)).as("frames_touched"))
-    stats
-      .join(digB, Seq("dkey"), "left_outer")
-      .join(digA, Seq("dkey"))
-      .crossJoin(broadcast(totals)).crossJoin(broadcast(touched))
+    val (r, dig) = twoLegFold(s, dir, "rgb_digest_before", "rgb_digest_after")
+    val all = Window.partitionBy()
+    r.groupBy(col("dkey")).agg(
+        sum(col("cd")).as("n_delta"),
+        sum(col("cb")).as("n_points_before"),
+        sum(col("ca")).as("n_points_after"),
+        sum(when(col("cb") > 0, 1L).otherwise(0L)).as("n_lit_before"),
+        count(lit(1)).as("n_lit_after"))
+      .join(dig, Seq("dkey"), "left_outer")
+      // the constants count every frame, so they come before the cut
+      .withColumn("frames_total", count(lit(1)).over(all))
+      .withColumn("frames_touched", count(when(col("n_delta") > 0, 1L)).over(all))
+      .filter(col("n_delta") > 0)
       .select(col("dkey").as("day"), frameDay,
         col("n_delta"), col("n_points_before"), col("n_points_after"),
         col("n_lit_before"), col("n_lit_after"),
@@ -816,23 +821,21 @@ object Geo {
     * ONE corpus scan folds map-side onto the bounded (day, px, py)
     * relation with the fan-out checksum folded per cell (sum of
     * event_id mod 997 rides the same combine as the count), then
-    * checkpointed — the render legs and the day ledger both read the
-    * materialized relation, never the points. The [[manifest]] windows
-    * sort the O(days) ledger, and the per-day render is embarrassingly
-    * parallel across frames, exactly the reference's array job
-    * re-expressed as group keys.
+    * [[framed]] — the render and the day ledger both read the
+    * materialized relation inside each frame's partition, never the
+    * points, and join there. The [[manifest]] windows sort the O(days)
+    * ledger; the per-day render runs frames as parallel tasks, exactly
+    * the reference's array job re-expressed as frame-keyed partitions.
     */
   def pipelineJobBuild(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
     // [fan-out] one scan: in-bbox day binning, checksum folded per cell
-    val r = bboxed(s, dir, col("event_id"), dayKey)
+    val r = framed(bboxed(s, dir, col("event_id"), dayKey)
       .select(col("dkey") +: pxPy :+ (col("event_id") % 997L).as("ck"): _*)
       .groupBy(col("dkey"), col("px"), col("py"))
-      .agg(count(lit(1)).as("cnt"), sum(col("ck")).as("chk"))
-      .stableCheckpoint()
+      .agg(count(lit(1)).as("cnt"), sum(col("ck")).as("chk")))
     // [render] per-frame digest over the same bounded relation
     val frame = frameRender(r.select(col("dkey"), col("px"), col("py"), col("cnt")))
-      .select(col("dkey"), col("rgb_digest"))
+      .select(col("dkey"), col("rgb_digest")).hint("shuffle_hash")
     // [assemble] ordered manifest over the O(days) ledger
     val days = r.groupBy(col("dkey"))
       .agg(sum(col("cnt")).as("n_points"), sum(col("chk")).as("checksum"))
@@ -885,26 +888,24 @@ object Geo {
     *
     * == Scale design ==
     * [[twoLegFold]]'s one scan (at 100 TB the standing leg is the
-    * persisted raster table and only the delta is scanned); affected
-    * days broadcast, ONLY touched frames render (both legs,
-    * canvas-bounded × affected days — untouched frames keep their
-    * digest by construction and are never re-shaded); the two manifest
-    * legs are O(days) windows on the day ledger.
+    * persisted raster table and only the delta is scanned); ONLY
+    * touched frames render (both legs as one relation, canvas-bounded ×
+    * affected days — untouched frames keep their digest by construction
+    * and are never re-shaded); both manifest legs are one pass of
+    * O(days) windows on the day ledger.
     */
   def pipelineJobIncremental(s: SparkSession, dir: String): DataFrame = {
-    val (r, _, _, digB, digA) = twoLegFold(s, dir, "dig_b", "dig_a")
-    val days = r.groupBy(col("dkey")).agg(
-      sum(col("cb")).as("nb"), sum(col("ca")).as("na"), sum(col("cd")).as("nd"))
-    val before = days.filter(col("nb") > 0)
-      .select(col("dkey"),
-        frameSeq(col("dkey")).as("seq_b"), cumSum(col("nb"), col("dkey")).as("cum_b"))
-    val after = days
-      .select(col("dkey"), col("nb"), col("na"), col("nd"),
+    val (r, dig) = twoLegFold(s, dir, "dig_b", "dig_a")
+    // the before manifest sequences only the frames with standing points
+    val standing = col("nb") > 0
+    val all = Window.partitionBy()
+    r.groupBy(col("dkey")).agg(
+        sum(col("cb")).as("nb"), sum(col("ca")).as("na"), sum(col("cd")).as("nd"))
+      .join(dig, Seq("dkey"), "left_outer")
+      .select(col("dkey"), col("nb"), col("na"), col("nd"), col("dig_b"), col("dig_a"),
+        when(standing, cumSum(standing.cast("long"), col("dkey"))).as("seq_b"),
+        when(standing, cumSum(col("nb"), col("dkey"))).as("cum_b"),
         frameSeq(col("dkey")).as("seq_a"), cumSum(col("na"), col("dkey")).as("cum_a"))
-    val led = after
-      .join(before, Seq("dkey"), "left_outer")
-      .join(digB, Seq("dkey"), "left_outer")
-      .join(digA, Seq("dkey"), "left_outer")
       .withColumn("touched", (col("nd") > 0).cast("long"))
       .withColumn("digest_changed",
         when(col("nd") > 0, coalesce(col("dig_b"), lit(-1L)) =!= col("dig_a"))
@@ -914,15 +915,13 @@ object Geo {
           col("cum_b") =!= col("cum_a")).cast("long"))
       .withColumn("rewrite",
         greatest(col("touched"), col("digest_changed"), col("offsets_shifted")))
-    val tot = led.agg(count(lit(1)).as("frames_total"),
-      sum(col("touched")).as("frames_touched"),
-      sum(col("rewrite")).as("frames_rewritten"))
-    led.crossJoin(broadcast(tot))
       .select(col("seq_a").as("frame_seq"), frameDay,
         col("nb").as("n_points_before"), col("na").as("n_points_after"),
         col("nd").as("delta_points"), col("touched"), col("digest_changed"),
         col("offsets_shifted"), col("rewrite"),
-        col("frames_total"), col("frames_touched"), col("frames_rewritten"))
+        count(lit(1)).over(all).as("frames_total"),
+        sum(col("touched")).over(all).as("frames_touched"),
+        sum(col("rewrite")).over(all).as("frames_rewritten"))
       .orderBy(col("frame_seq"))
   }
 

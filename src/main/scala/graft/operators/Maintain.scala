@@ -638,8 +638,7 @@ object Maintain {
     // unmaterialized, each side re-runs the O(N) stack+fold over the
     // ranked rows (r22: measured two full passes in the plan). Both
     // consumers read the WHOLE relation — no slicing, so no pushdown
-    // lost (the frameRender counter-case does not apply) — and the
-    // checkpoint is O(files) tiny.
+    // lost — and the checkpoint is O(files) tiny.
     import graft.plans.Checkpoints.StableSyntax
     val z = st.groupBy(col("probe"), col("fid"))
       .agg(min(col("v")).as("vmin"), max(col("v")).as("vmax"))
@@ -979,7 +978,6 @@ object Maintain {
     */
   def dqRules(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(s, dir, "events")
-    val ppm = (c: Column) => expr("1000000") * c / col("n_rows")
     val agg = e.agg(
       count(lit(1)).as("n_rows"),
       count(col("value")).as("c_value"),

@@ -636,7 +636,7 @@ object Similarity {
     * [[PQ_ITERS]] rounds, (d, cid) tie order).
     */
   private def trainedPqCodebook(s: SparkSession, dir: String,
-      k: Int = PQ_K): Array[(Int, Long, Array[Float])] = {
+      k: Int): Array[(Int, Long, Array[Float])] = {
     import s.implicits._
     val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]

@@ -11,7 +11,6 @@ import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Whole-operator multimodal batch decode as a COLUMNAR physical
   * operator (SURVEY §9 r3): the honest engine form of the batched

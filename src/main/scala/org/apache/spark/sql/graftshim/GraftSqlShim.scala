@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into `private[sql]` Spark internals the engine needs:
-  * building a Column from a Catalyst Expression and registering native
-  * expressions in the session's FunctionRegistry. Lives under
+  * building a Column from a Catalyst Expression, registering native
+  * expressions in the session's FunctionRegistry, and Datasets from
+  * plans (a checkpoint's declared partitioning among them). Lives under
   * `org.apache.spark.sql` for package-private access — the standard
   * pattern for Spark-native extension libraries.
   */
@@ -57,6 +58,26 @@ object GraftSqlShim {
     val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
     if (!registry.functionExists(id))
       registry.createOrReplaceTempFunction(name, builder, "built-in")
+  }
+
+  /** `ckpt`, a checkpoint written by a `repartition(n, keys)` (its plan
+    * one LogicalRDD of `n` partitions), declared hash-partitioned on
+    * `keys` into those `n` parts, so a consumer keyed on them needs no
+    * exchange. Spark keeps a checkpoint's partitioning only without AQE
+    * (an adaptive plan reports none), though AQE never coalesces or
+    * splits a repartition by number. Any other `ckpt` comes back as is.
+    */
+  def hashPartitioned(ckpt: org.apache.spark.sql.DataFrame, keys: Seq[String], n: Int)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.LogicalRDD
+    ckpt.queryExecution.analyzed match {
+      case l: LogicalRDD if l.rdd.getNumPartitions == n =>
+        val by = keys.map(k => l.output.find(_.name == k).get)
+        dataFrame(ckpt.sparkSession, l.makeCopy(Array(l.output, l.rdd,
+          HashPartitioning(by, n), l.outputOrdering, Boolean.box(l.isStreaming), l.stream)))
+      case _ => ckpt
+    }
   }
 
   /** DataFrame from a (possibly custom) LogicalPlan — runs the full

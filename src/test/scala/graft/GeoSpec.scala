@@ -539,23 +539,56 @@ class GeoSpec extends SparkSpec {
     assert(got.exists(r => r._4 > 0 && r._5 > 0), "churn vacuous — no real frame diff")
   }
 
-  test("a warm pass of the render job recompiles no generated class") {
-    // The paper's job as the benchmark's geo_job runs it: seven ops per
-    // pass, ~170 distinct generated classes. With Spark's 100-entry
-    // class cache every class was evicted before its next use and the
-    // second pass recompiled ~260 of them.
-    import org.apache.spark.metrics.source.CodegenMetrics
-    val ops = Seq("map_fanout", "pipeline_frame_build", "pipeline_job_build",
+  /** The paper's job as the benchmark's geo_job runs it, one pass. */
+  private def renderJobPass(): Unit =
+    Seq("map_fanout", "pipeline_frame_build", "pipeline_job_build",
       "reduce_assemble", "pipeline_frame_incremental", "pipeline_job_incremental",
-      "geo_frame_churn")
+      "geo_frame_churn").foreach(k =>
+      SparkEntry.queries(k)(spark, sf).write.format("noop").mode("overwrite").save())
+
+  test("a warm pass of the render job recompiles no generated class") {
+    // Seven ops per pass, ~170 distinct generated classes. With Spark's
+    // 100-entry class cache every class was evicted before its next use
+    // and the second pass recompiled ~260 of them.
+    import org.apache.spark.metrics.source.CodegenMetrics
     def passCompiles(): Long = {
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      ops.foreach(k =>
-        SparkEntry.queries(k)(spark, sf).write.format("noop").mode("overwrite").save())
+      renderJobPass()
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
     }
     passCompiles()
     val warm = passCompiles()
     assert(warm == 0, s"the warm pass compiled $warm generated classes")
+  }
+
+  test("a warm pass of the render job stays within its Spark job budget") {
+    // Every job is a scheduler round-trip; at these sizes each has one or a
+    // few tasks, so the count, not the data, sets the pass time. The
+    // per-frame render runs inside one frame-keyed partition: one
+    // shuffle per fold, no broadcast.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val budget = 37
+    val sc = spark.sparkContext
+    val tag = "graft.jobBudget"
+    def tagged(value: String)(body: => Unit): Unit = {
+      sc.setLocalProperty(tag, value)
+      try body finally sc.setLocalProperty(tag, null)
+    }
+    val starts = new java.util.concurrent.LinkedBlockingQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.put(e)
+    }
+    renderJobPass()
+    sc.addSparkListener(listener)
+    val jobs = try {
+      // jobs inherit the submitting thread's properties, AQE stages too;
+      // events arrive in order, so the pass's are all in before the marker's
+      tagged("pass")(renderJobPass())
+      tagged("end")(sc.parallelize(Seq(1), 1).count())
+      Iterator.continually(starts.take())
+        .map(e => Option(e.properties).map(_.getProperty(tag)).orNull)
+        .takeWhile(_ != "end").count(_ == "pass")
+    } finally sc.removeSparkListener(listener)
+    assert(jobs <= budget, s"the warm pass ran $jobs Spark jobs (budget $budget)")
   }
 }

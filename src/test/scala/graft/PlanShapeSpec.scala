@@ -732,6 +732,47 @@ class PlanShapeSpec extends SparkSpec {
       s"canvas-bounded lookups must broadcast:\n$plan")
   }
 
+  test("pipeline_frame_build: the render runs inside one frame shuffle, no broadcast") {
+    // every action the face runs (the eager checkpoint of its fold, then
+    // the write), as executed; the frame shuffle is the one exchange
+    // hash-partitioned on dkey alone, and the render past it (spread
+    // aggregate, rank window, ledger, stage join) adds no exchange
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit = seen.put(qe)
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = seen.put(qe)
+    }
+    spark.listenerManager.register(listener)
+    val plans = try {
+      operators.Geo.pipelineFrameBuild(spark, sf)
+        .write.format("noop").mode("overwrite").save()
+      val marker = spark.range(1)
+      marker.collect()
+      Iterator.continually(seen.take())
+        .takeWhile(qe => !(qe eq marker.queryExecution)).map(_.executedPlan).toList
+    } finally spark.listenerManager.unregister(listener)
+    object H extends AdaptiveSparkPlanHelper
+    def hashKeys(p: SparkPlan): Seq[Seq[String]] =
+      H.collectWithSubqueries(p) { case e: ShuffleExchangeLike => e.outputPartitioning }
+        .collect { case h: HashPartitioning =>
+          h.expressions.map { case a: Attribute => a.name; case e => e.sql } }
+    assert(plans.size == 2, s"expected the fold checkpoint and the write:\n${plans.mkString("\n")}")
+    val keys = plans.flatMap(hashKeys)
+    assert(keys.count(_ == Seq("dkey")) == 1,
+      s"expected exactly one frame shuffle on dkey, got $keys:\n${plans.mkString("\n")}")
+    assert(hashKeys(plans.last).isEmpty,
+      s"the render must run inside the frame shuffle's partitions:\n${plans.last}")
+    val broadcasts = plans.flatMap(p =>
+      H.collectWithSubqueries(p) { case b: BroadcastExchangeLike => b })
+    assert(broadcasts.isEmpty, s"no broadcast in the render chain:\n${plans.mkString("\n")}")
+  }
+
   test("pipeline_frame_incremental: rides the checkpointed fold, broadcast-only composition") {
     val plan = planOf(operators.Geo.pipelineFrameIncremental(spark, sf))
     // one corpus scan lives inside the checkpointed two-leg fold; the

@@ -281,7 +281,7 @@ class StreamingSpec extends SparkSpec {
 
   test("merge-delete batch face equals the streamed change-log with tombstones") {
     implicit val sqlCtx = spark.sqlContext
-    import EventStreams.{Change, ChangeOut}
+    import EventStreams.Change
     val batchFace = EventStreams.streamMergeDelete(spark, sf)
       .as[(Long, Long, Long, String)].collect().toSeq
     val raw = graft.sources.Tables.load(spark, sf, "events")

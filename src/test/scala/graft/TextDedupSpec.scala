@@ -3029,7 +3029,6 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("calibration ledger conserves docs and ties passes to the quality gate") {
-    import spark.implicits._
     val out = TextOps.mlCalibration(spark, sfMid).collect()
     val total = spark.read.parquet(s"$sfMid/documents.parquet").count()
     assert(out.map(_.getAs[Long]("n_docs")).sum == total, "docs not conserved")
@@ -3073,7 +3072,6 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("auc saturates when classifier and gate agree on the length axis") {
-    import spark.implicits._
     // length is the axis BOTH faces score the same way (stopwords they
     // genuinely disagree on — the classifier rewards them as a
     // natural-language signal, the gate penalizes them; the brute-force
