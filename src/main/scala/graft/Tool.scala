@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{ExplainUtils, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
@@ -55,22 +56,35 @@ object Tool {
       .replaceAll("\\[codegen id : \\d+\\]", "[codegen id]")
       .replaceAll("WholeStageCodegen \\(\\d+\\)", "WholeStageCodegen ()")
 
+  /** Every action `body` runs in `spark`, in order: the action's name
+    * and its query execution. */
+  private[graft] def actionsOf(spark: SparkSession)(body: => Unit): List[(String, QueryExecution)] = {
+    // listener events arrive on the bus thread, in order: a marker
+    // action closes the body, which is done once the marker arrives
+    val seen = new java.util.concurrent.LinkedBlockingQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit = seen.put(action -> qe)
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = seen.put(action -> qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val marker = spark.range(1)
+      marker.collect()
+      Iterator.continually(seen.take())
+        .takeWhile { case (_, qe) => !(qe eq marker.queryExecution) }.toList
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Runs `key` to the noop sink, the way [[explain]] counts its actions. */
+  private[graft] def runToNoop(spark: SparkSession, sfDir: String, key: String): Unit =
+    SparkEntry.queries(key)(spark, sfDir).write.format("noop").mode("overwrite").save()
+
   private def explain(sfDir: String, keys: Seq[String]): Unit = {
     val spark = GraftSession.local(cpus = 4)
     val warehouse = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    // listener events arrive on the bus thread, in order: each key ends
-    // with a marker action, and the key is done once the marker arrives
-    val seen = new java.util.concurrent.LinkedBlockingQueue[(String, QueryExecution)]()
-    spark.listenerManager.register(new QueryExecutionListener {
-      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit = seen.put(action -> qe)
-      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = seen.put(action -> qe)
-    })
     keys.foreach { key =>
-      SparkEntry.queries(key)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val marker = spark.range(1)
-      marker.collect()
-      val plans = Iterator.continually(seen.take())
-        .takeWhile { case (_, qe) => !(qe eq marker.queryExecution) }
+      val plans = actionsOf(spark)(runToNoop(spark, sfDir, key))
         .zipWithIndex.map { case ((action, qe), n) =>
           println(s"===ACTION=== $key ${n + 1} $action")
           val planned = qe.executedPlan match {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import graft.plans.Checkpoints.StableSyntax
 
@@ -280,7 +280,123 @@ trait AnalyticsForecast extends AnalyticsBase {
       |FROM d JOIN mad USING (event_type)
       |ORDER BY score_micro DESC, event_id LIMIT 100""".stripMargin
 
-  // -------------------------------------------------- salted hot join
+  // ------------------------------------------------ the forecast ladder
+  // Every ladder face (ml_backtest, ml_forecast_*) composes the pieces
+  // below: one grid, the leak-free prior-day windows, the last_day
+  // anchor, the Holt predictions and the paired MAE ledger, each
+  // written once per side. Horizons and row filters stay in the faces.
+
+  /** The ladder's one-scan grid: per (event_type, UTC epoch day) the
+    * event count `n`, reshaped by `shape` (a weekday column, a derived
+    * series) and checkpointed — the expanding windows and the
+    * `last_day` anchor both read it, and without the checkpoint each
+    * consumer re-derives the scan.
+    */
+  private def dailyGrid(s: SparkSession, dir: String,
+      shape: DataFrame => DataFrame = identity): DataFrame =
+    shape(events(s, dir)
+      .select(col("event_type"), expr("unix_micros(ts) div 86400000000").as("day"))
+      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n")))
+      .stableCheckpoint()
+
+  /** Adds `dow`, the weekday of `day` ([[eventsSeasonality]]'s epoch
+    * day + 3 mod 7 convention). */
+  private def withDow(grid: DataFrame): DataFrame =
+    grid.withColumn("dow", pmod(col("day") + 3, lit(7)))
+
+  /** The leak-free expanding frame: every earlier observed day of the
+    * partition, never the origin day itself. */
+  private def priorDays(keys: String*): WindowSpec =
+    Window.partitionBy(keys.map(col): _*).orderBy(col("day"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+  private def wFlat: WindowSpec = priorDays("event_type")
+  private def wDow: WindowSpec = priorDays("event_type", "dow")
+
+  /** The type's prior (day, n) cells in day order: the Holt folds' input. */
+  private def priorCells: Column =
+    sort_array(collect_list(struct(col("day"), col("n"))).over(wFlat))
+
+  /** `scored` with the rolling origin's anchor `last_day` (the grid's
+    * last observed day) broadcast onto every row. */
+  private def anchoredOn(grid: DataFrame)(scored: DataFrame): DataFrame =
+    scored.join(broadcast(grid.agg(max(col("day")).as("last_day"))), lit(true))
+
+  /** Origin days in the final `h` observed days. */
+  private def lastDays(h: Int): Column = col("day") > col("last_day") - h
+
+  /** The paired-row filter: origins in the final `h` days where both
+    * the flat and the weekday window have a prior day, so every model
+    * of a paired ledger scores the same cells. */
+  private def pairedDays(h: Int): Column =
+    lastDays(h) && col("cum_d") >= 1 && col("cum_dw") >= 1
+
+  private def flatPred: Column = expr("cum_n div cum_d")
+  private def seasPred: Column = expr("cum_nw div cum_dw")
+  private def holtPred: Column = expr(sparkFloorDiv("st.lv + st.tr", 1000))
+  private def dampedPred: Column =
+    expr(sparkFloorDiv("sd.lv + " + sparkFloorDiv("sd.tr", 2), 1000))
+  private def hwPred: Column = expr(sparkFloorDiv(
+    "hw.lv + hw.tr + element_at(hw.s, CAST(dow AS INT) + 1)", 1000))
+
+  /** The paired ledger of models `a` and `b` over the scored cells'
+    * `pred_a`/`pred_b`: per event type the cell count `n_eval`, both
+    * MAEs in exact milli-events and `gain_milli` = MAE(a) − MAE(b)
+    * (positive ⇔ b is better). */
+  private def pairedLedger(a: String, b: String)(scored: DataFrame): DataFrame =
+    pairedMae(a, b)(scored.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_eval"),
+        sum(abs(col("n") - col(s"pred_$a"))).as(s"abs_$a"),
+        sum(abs(col("n") - col(s"pred_$b"))).as(s"abs_$b")))
+
+  /** The ledger's MAE columns from per-type `n_eval`, `abs_a`, `abs_b`. */
+  private def pairedMae(a: String, b: String)(ledger: DataFrame): DataFrame =
+    ledger.select(col("event_type"), col("n_eval"),
+        expr(s"abs_$a * 1000 div n_eval").as(s"mae_${a}_milli"),
+        expr(s"abs_$b * 1000 div n_eval").as(s"mae_${b}_milli"),
+        expr(s"abs_$a * 1000 div n_eval - abs_$b * 1000 div n_eval")
+          .as("gain_milli"))
+      .orderBy(col("event_type"))
+
+  /** DuckDB twin of the ladder base: the grid `d`, its weekday form
+    * `dd`, and `c` = `from` plus the anchor `last_day` and the `cols`
+    * computed over the named prior-day frames `wf` (flat) and `wd`
+    * (weekday; a frame no column uses is never bound).
+    */
+  private def ladderSql(from: String, cols: String*): String = {
+    val prior = "ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
+    s"""WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+       |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
+       |dd AS (SELECT *, (day + 3) % 7 AS dow FROM d),
+       |c AS (SELECT *, (SELECT max(day) FROM d) AS last_day,
+       |    ${cols.mkString(",\n    ")}
+       |  FROM $from
+       |  WINDOW wf AS (PARTITION BY event_type $prior),
+       |    wd AS (PARTITION BY event_type, dow $prior))""".stripMargin
+  }
+  private val cumN = "CAST(sum(n) OVER wf AS BIGINT) AS cum_n"
+  private val cumD = "CAST(count(n) OVER wf AS BIGINT) AS cum_d"
+  private val cumNw = "CAST(sum(n) OVER wd AS BIGINT) AS cum_nw"
+  private val cumDw = "CAST(count(n) OVER wd AS BIGINT) AS cum_dw"
+  private val priorList = "list_sort(list({'day': day, 'n': n}) OVER wf) AS prior"
+  private def pairedDaysSql(h: Int): String =
+    s"day > last_day - $h AND cum_d >= 1 AND cum_dw >= 1"
+
+  /** DuckDB twin of [[pairedLedger]] over the scored CTE `f`. */
+  private def pairedLedgerSql(a: String, b: String): String =
+    s"""l AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_eval,
+       |    CAST(sum(abs(n - pred_$a)) AS BIGINT) AS abs_$a,
+       |    CAST(sum(abs(n - pred_$b)) AS BIGINT) AS abs_$b
+       |  FROM f GROUP BY event_type)
+       |${pairedMaeSql(a, b, "l")}""".stripMargin
+
+  /** DuckDB twin of [[pairedMae]]. */
+  private def pairedMaeSql(a: String, b: String, from: String): String =
+    s"""SELECT event_type, n_eval,
+       |  abs_$a * 1000 // n_eval AS mae_${a}_milli,
+       |  abs_$b * 1000 // n_eval AS mae_${b}_milli,
+       |  abs_$a * 1000 // n_eval - abs_$b * 1000 // n_eval AS gain_milli
+       |FROM $from ORDER BY event_type""".stripMargin
+
   /** Rolling-origin forecast backtest (r14, the EVALUATION face beside
     * [[q6ForecastRevenue]]'s point forecast and `events_seasonality`'s
     * profile — the ML-eval discipline of `ml_eval_langid` pointed at
@@ -299,22 +415,13 @@ trait AnalyticsForecast extends AnalyticsBase {
     * relation — same shape as [[eventsSeasonality]].
     */
   def mlBacktest(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
-    // checkpointed: the grid feeds both the expanding windows and the
-    // lastDay anchor — without it each consumer re-derives the scan
-    val daily = events(s, dir)
-      .select(col("event_type"), expr("unix_micros(ts) div 86400000000").as("day"))
-      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))
-      .stableCheckpoint()
-    val wPrior = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val lastDay = daily.agg(max(col("day")).as("last_day"))
+    val daily = dailyGrid(s, dir)
     daily
-      .withColumn("cum_n", sum(col("n")).over(wPrior))
-      .withColumn("cum_d", count(col("n")).over(wPrior))
-      .join(broadcast(lastDay), lit(true))
-      .filter(col("day") > col("last_day") - 7 && col("cum_d") >= 1)
-      .withColumn("pred", expr("cum_n div cum_d"))
+      .withColumn("cum_n", sum(col("n")).over(wFlat))
+      .withColumn("cum_d", count(col("n")).over(wFlat))
+      .transform(anchoredOn(daily))
+      .filter(lastDays(7) && col("cum_d") >= 1)
+      .withColumn("pred", flatPred)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_eval"),
         sum(abs(col("n") - col("pred"))).as("sum_abs_err"),
@@ -324,22 +431,15 @@ trait AnalyticsForecast extends AnalyticsBase {
       .orderBy(col("event_type"))
   }
 
-  val mlBacktestSql: String =
-    """WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-      |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
-      |c AS (SELECT *,
-      |    CAST(sum(n) OVER (PARTITION BY event_type ORDER BY day
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT) AS cum_n,
-      |    CAST(count(n) OVER (PARTITION BY event_type ORDER BY day
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT) AS cum_d
-      |  FROM d),
-      |e AS (SELECT *, cum_n // cum_d AS pred FROM c
-      |  WHERE day > (SELECT max(day) FROM d) - 7 AND cum_d >= 1)
-      |SELECT event_type, CAST(count(*) AS BIGINT) AS n_eval,
-      |  CAST(sum(abs(n - pred)) AS BIGINT) AS sum_abs_err,
-      |  CAST(sum(abs(n - pred)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT) AS mae_milli,
-      |  CAST(sum(n - pred) AS BIGINT) AS bias
-      |FROM e GROUP BY event_type ORDER BY event_type""".stripMargin
+  lazy val mlBacktestSql: String =
+    s"""${ladderSql("d", cumN, cumD)},
+       |e AS (SELECT *, cum_n // cum_d AS pred FROM c
+       |  WHERE day > last_day - 7 AND cum_d >= 1)
+       |SELECT event_type, CAST(count(*) AS BIGINT) AS n_eval,
+       |  CAST(sum(abs(n - pred)) AS BIGINT) AS sum_abs_err,
+       |  CAST(sum(abs(n - pred)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT) AS mae_milli,
+       |  CAST(sum(n - pred) AS BIGINT) AS bias
+       |FROM e GROUP BY event_type ORDER BY event_type""".stripMargin
 
   // ------------------------------------------- seasonal forecast eval
   /** Weekday-adjusted rolling-origin backtest (r14 wave 8): the
@@ -364,62 +464,24 @@ trait AnalyticsForecast extends AnalyticsBase {
     * ledger is O(types).
     */
   def mlForecastSeasonal(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
-    val daily = events(s, dir)
-      .select(col("event_type"), expr("unix_micros(ts) div 86400000000").as("day"))
-      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))
-      .withColumn("dow", pmod(col("day") + 3, lit(7)))
-      .stableCheckpoint()
-    val wFlat = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wDow = Window.partitionBy(col("event_type"), col("dow")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val lastDay = daily.agg(max(col("day")).as("last_day"))
+    val daily = dailyGrid(s, dir, withDow)
     daily
       .withColumn("cum_n", sum(col("n")).over(wFlat))
       .withColumn("cum_d", count(col("n")).over(wFlat))
       .withColumn("cum_nw", sum(col("n")).over(wDow))
       .withColumn("cum_dw", count(col("n")).over(wDow))
-      .join(broadcast(lastDay), lit(true))
-      .filter(col("day") > col("last_day") - 7 &&
-        col("cum_d") >= 1 && col("cum_dw") >= 1)
-      .withColumn("pred_flat", expr("cum_n div cum_d"))
-      .withColumn("pred_seas", expr("cum_nw div cum_dw"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_eval"),
-        sum(abs(col("n") - col("pred_flat"))).as("abs_flat"),
-        sum(abs(col("n") - col("pred_seas"))).as("abs_seas"))
-      .select(col("event_type"), col("n_eval"),
-        expr("abs_flat * 1000 div n_eval").as("mae_flat_milli"),
-        expr("abs_seas * 1000 div n_eval").as("mae_seas_milli"),
-        expr("abs_flat * 1000 div n_eval - abs_seas * 1000 div n_eval")
-          .as("gain_milli"))
-      .orderBy(col("event_type"))
+      .transform(anchoredOn(daily))
+      .filter(pairedDays(7))
+      .withColumn("pred_flat", flatPred)
+      .withColumn("pred_seas", seasPred)
+      .transform(pairedLedger("flat", "seas"))
   }
 
-  val mlForecastSeasonalSql: String =
-    """WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-      |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
-      |dd AS (SELECT *, (day + 3) % 7 AS dow FROM d),
-      |c AS (SELECT *,
-      |    CAST(sum(n) OVER (PARTITION BY event_type ORDER BY day
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT) AS cum_n,
-      |    CAST(count(n) OVER (PARTITION BY event_type ORDER BY day
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT) AS cum_d,
-      |    CAST(sum(n) OVER (PARTITION BY event_type, dow ORDER BY day
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT) AS cum_nw,
-      |    CAST(count(n) OVER (PARTITION BY event_type, dow ORDER BY day
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT) AS cum_dw
-      |  FROM dd),
-      |e AS (SELECT *, cum_n // cum_d AS pred_flat, cum_nw // cum_dw AS pred_seas
-      |  FROM c WHERE day > (SELECT max(day) FROM d) - 7
-      |    AND cum_d >= 1 AND cum_dw >= 1)
-      |SELECT event_type, CAST(count(*) AS BIGINT) AS n_eval,
-      |  CAST(sum(abs(n - pred_flat)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT) AS mae_flat_milli,
-      |  CAST(sum(abs(n - pred_seas)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT) AS mae_seas_milli,
-      |  CAST(sum(abs(n - pred_flat)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT)
-      |    - CAST(sum(abs(n - pred_seas)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT) AS gain_milli
-      |FROM e GROUP BY event_type ORDER BY event_type""".stripMargin
+  lazy val mlForecastSeasonalSql: String =
+    s"""${ladderSql("dd", cumN, cumD, cumNw, cumDw)},
+       |f AS (SELECT *, cum_n // cum_d AS pred_flat, cum_nw // cum_dw AS pred_seas
+       |  FROM c WHERE ${pairedDaysSql(7)}),
+       |${pairedLedgerSql("flat", "seas")}""".stripMargin
 
   // --------------------------------------------- trend forecast eval
   /** Spark-SQL floor division: `(x - pmod(x, m)) div m` — exact floor
@@ -478,6 +540,64 @@ trait AnalyticsForecast extends AnalyticsBase {
        |                 'init', CAST(1 AS BIGINT))))""".stripMargin
   }
 
+  /** DuckDB twin of the Holt-family folds over `prior`. The accumulator
+    * is a BIGINT LIST [lv, tr, init, then `slots` extra state longs],
+    * NOT a struct: DuckDB v1.0.0 list_reduce evaluates a struct
+    * accumulator's later fields against a one-iteration-stale acc
+    * (verified: the 3-step fold returns tr computed from step-1 state);
+    * the list accumulator folds correctly. acc[3] is the explicit init
+    * flag (lv = -1 is a legitimate state on a crashing series, so it
+    * cannot double as the sentinel). Items are [0, 0, n, dow]; the
+    * init step seeds lv = 1000·n and keeps the extra slots, every
+    * later step writes `next` (lv', tr', then the extra slots).
+    */
+  private def duckListFold(slots: Int, next: Seq[String]): String = {
+    val zero = "CAST(0 AS BIGINT)"
+    val init = Seq("CAST(1000 * x[3] AS BIGINT)", zero, "CAST(1 AS BIGINT)") ++
+      (4 until 4 + slots).map(i => s"acc[$i]")
+    val step = next.take(2).map(e => s"CAST($e AS BIGINT)") ++
+      ("CAST(1 AS BIGINT)" +: next.drop(2))
+    s"""list_reduce(
+       |      list_prepend([${Seq.fill(3 + slots)(zero).mkString(", ")}],
+       |        list_transform(prior, p -> [$zero, $zero,
+       |          CAST(p.n AS BIGINT), CAST((p.day + 3) % 7 AS BIGINT)])),
+       |      (acc, x) -> CASE WHEN acc[3] = 0
+       |        THEN [${init.mkString(", ")}]
+       |        ELSE [${step.mkString(", ")}] END)""".stripMargin
+  }
+
+  /** DuckDB twin of [[holtFold]] (floor emulated wherever a dividend
+    * can go negative, via [[duckFloorDiv]]). */
+  private lazy val duckHolt: String = {
+    val lv2 = duckFloorDiv("1000 * x[3] + acc[1] + acc[2]", 2)
+    duckListFold(0, Seq(lv2, duckFloorDiv(s"$lv2 - acc[1] + acc[2]", 2)))
+  }
+
+  /** DuckDB twin of [[holtDampedFold]]. */
+  private lazy val duckHoltDamped: String = {
+    val d = duckFloorDiv("acc[2]", 2)
+    val lv2 = duckFloorDiv(s"1000 * x[3] + acc[1] + $d", 2)
+    duckListFold(0, Seq(lv2, duckFloorDiv(s"$lv2 - acc[1] + $d", 2)))
+  }
+
+  /** DuckDB twin of [[holtWintersFold]]: the 10-slot accumulator
+    * [lv, tr, init, s₀…s₆], the seasonal-slot update as 7 positional
+    * CASE arms (DuckDB lists have no functional update). */
+  private lazy val duckHoltWinters: String = {
+    val d = "acc[CAST(4 + x[4] AS INT)]"
+    val lv2 = duckFloorDiv(s"1000 * x[3] - $d + acc[1] + acc[2]", 2)
+    val s2 = duckFloorDiv(s"1000 * x[3] - ($lv2) + $d", 2)
+    duckListFold(7, Seq(lv2, duckFloorDiv(s"$lv2 - acc[1] + acc[2]", 2)) ++
+      (0 until 7).map(k =>
+        s"CAST(CASE WHEN x[4] = $k THEN $s2 ELSE acc[${4 + k}] END AS BIGINT)"))
+  }
+
+  private lazy val holtPredSql = duckFloorDiv("st[1] + st[2]", 1000)
+  private lazy val dampedPredSql =
+    duckFloorDiv(s"sd[1] + ${duckFloorDiv("sd[2]", 2)}", 1000)
+  private lazy val hwPredSql =
+    duckFloorDiv("hw[1] + hw[2] + hw[CAST(4 + dow AS INT)]", 1000)
+
   /** Holt-style level+trend backtest (r15) — the third rung of the
     * forecast ladder (flat → seasonal → trend), evaluated PAIRED
     * against [[mlForecastSeasonal]] exactly the way seasonal is paired
@@ -509,92 +629,26 @@ trait AnalyticsForecast extends AnalyticsBase {
     * grid's. The ledger is O(types).
     */
   def mlForecastTrend(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
-    val daily = events(s, dir)
-      .select(col("event_type"), expr("unix_micros(ts) div 86400000000").as("day"))
-      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))
-      .withColumn("dow", pmod(col("day") + 3, lit(7)))
-      .stableCheckpoint()
-    val wFlat = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wDow = Window.partitionBy(col("event_type"), col("dow")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val lastDay = daily.agg(max(col("day")).as("last_day"))
-    val holt = holtFold
+    val daily = dailyGrid(s, dir, withDow)
     daily
       .withColumn("cum_d", count(col("n")).over(wFlat))
       .withColumn("cum_nw", sum(col("n")).over(wDow))
       .withColumn("cum_dw", count(col("n")).over(wDow))
-      .withColumn("prior", sort_array(collect_list(struct(col("day"), col("n"))).over(wFlat)))
-      .join(broadcast(lastDay), lit(true))
-      .filter(col("day") > col("last_day") - 7 &&
-        col("cum_d") >= 1 && col("cum_dw") >= 1)
-      .withColumn("st", expr(holt))
-      .withColumn("pred_trend",
-        expr("(st.lv + st.tr - pmod(st.lv + st.tr, 1000)) div 1000"))
-      .withColumn("pred_seas", expr("cum_nw div cum_dw"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_eval"),
-        sum(abs(col("n") - col("pred_seas"))).as("abs_seas"),
-        sum(abs(col("n") - col("pred_trend"))).as("abs_trend"))
-      .select(col("event_type"), col("n_eval"),
-        expr("abs_seas * 1000 div n_eval").as("mae_seas_milli"),
-        expr("abs_trend * 1000 div n_eval").as("mae_trend_milli"),
-        expr("abs_seas * 1000 div n_eval - abs_trend * 1000 div n_eval")
-          .as("gain_milli"))
-      .orderBy(col("event_type"))
+      .withColumn("prior", priorCells)
+      .transform(anchoredOn(daily))
+      .filter(pairedDays(7))
+      .withColumn("st", expr(holtFold))
+      .withColumn("pred_trend", holtPred)
+      .withColumn("pred_seas", seasPred)
+      .transform(pairedLedger("seas", "trend"))
   }
 
-  val mlForecastTrendSql: String =
-    """WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-      |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
-      |dd AS (SELECT *, (day + 3) % 7 AS dow FROM d),
-      |c AS (SELECT *,
-      |    CAST(count(n) OVER wf AS BIGINT) AS cum_d,
-      |    CAST(sum(n) OVER wd AS BIGINT) AS cum_nw,
-      |    CAST(count(n) OVER wd AS BIGINT) AS cum_dw,
-      |    list_sort(list({'day': day, 'n': n}) OVER wf) AS prior
-      |  FROM dd
-      |  WINDOW wf AS (PARTITION BY event_type ORDER BY day
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-      |    wd AS (PARTITION BY event_type, dow ORDER BY day
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-      |e AS (SELECT *,
-      |    -- acc is a BIGINT LIST [lv, tr, init], NOT a struct: DuckDB
-      |    -- v1.0.0 list_reduce evaluates a struct accumulator's later
-      |    -- fields against a one-iteration-stale acc (verified: the
-      |    -- 3-step fold returns tr computed from step-1 state); the
-      |    -- list accumulator folds correctly. acc[3] is the explicit
-      |    -- init flag (lv = -1 is a legitimate state on a crashing
-      |    -- series, so it cannot double as the sentinel). DuckDB's //
-      |    -- truncates toward zero, so every division whose dividend can
-      |    -- go negative emulates floor via (a - ((a % m) + m) % m) // m
-      |    -- — mirroring the Spark fold's pmod adjustment.
-      |    list_reduce(
-      |      list_prepend([CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)],
-      |        list_transform(prior, p -> [CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(p.n AS BIGINT)])),
-      |      (acc, x) -> CASE WHEN acc[3] = 0
-      |        THEN [CAST(1000 * x[3] AS BIGINT), CAST(0 AS BIGINT), CAST(1 AS BIGINT)]
-      |        ELSE [CAST(((1000 * x[3] + acc[1] + acc[2])
-      |                    - (((1000 * x[3] + acc[1] + acc[2]) % 2) + 2) % 2) // 2 AS BIGINT),
-      |              CAST(((((1000 * x[3] + acc[1] + acc[2])
-      |                      - (((1000 * x[3] + acc[1] + acc[2]) % 2) + 2) % 2) // 2
-      |                     - acc[1] + acc[2])
-      |                    - (((((1000 * x[3] + acc[1] + acc[2])
-      |                          - (((1000 * x[3] + acc[1] + acc[2]) % 2) + 2) % 2) // 2
-      |                         - acc[1] + acc[2]) % 2) + 2) % 2) // 2 AS BIGINT),
-      |              CAST(1 AS BIGINT)] END) AS st,
-      |    cum_nw // cum_dw AS pred_seas
-      |  FROM c WHERE day > (SELECT max(day) FROM d) - 7
-      |    AND cum_d >= 1 AND cum_dw >= 1),
-      |f AS (SELECT *, ((st[1] + st[2])
-      |    - (((st[1] + st[2]) % 1000) + 1000) % 1000) // 1000 AS pred_trend FROM e)
-      |SELECT event_type, CAST(count(*) AS BIGINT) AS n_eval,
-      |  CAST(sum(abs(n - pred_seas)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT) AS mae_seas_milli,
-      |  CAST(sum(abs(n - pred_trend)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT) AS mae_trend_milli,
-      |  CAST(sum(abs(n - pred_seas)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT)
-      |    - CAST(sum(abs(n - pred_trend)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT) AS gain_milli
-      |FROM f GROUP BY event_type ORDER BY event_type""".stripMargin
+  lazy val mlForecastTrendSql: String =
+    s"""${ladderSql("dd", cumD, cumNw, cumDw, priorList)},
+       |e AS (SELECT *, $duckHolt AS st
+       |  FROM c WHERE ${pairedDaysSql(7)}),
+       |f AS (SELECT *, $holtPredSql AS pred_trend, cum_nw // cum_dw AS pred_seas FROM e),
+       |${pairedLedgerSql("seas", "trend")}""".stripMargin
 
   // -------------------------------------------- damped-trend forecast
   /** Damped-trend Holt backtest (r16) — the FOURTH rung of the
@@ -618,99 +672,28 @@ trait AnalyticsForecast extends AnalyticsBase {
     * array (no second shuffle for the pairing), ledger O(types).
     */
   def mlForecastDamped(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
-    val daily = events(s, dir)
-      .select(col("event_type"), expr("unix_micros(ts) div 86400000000").as("day"))
-      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))
-      .withColumn("dow", pmod(col("day") + 3, lit(7)))
-      .stableCheckpoint()
-    val wFlat = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wDow = Window.partitionBy(col("event_type"), col("dow")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val lastDay = daily.agg(max(col("day")).as("last_day"))
+    val daily = dailyGrid(s, dir, withDow)
     daily
       .withColumn("cum_d", count(col("n")).over(wFlat))
       .withColumn("cum_dw", count(col("n")).over(wDow))
-      .withColumn("prior", sort_array(collect_list(struct(col("day"), col("n"))).over(wFlat)))
-      .join(broadcast(lastDay), lit(true))
-      .filter(col("day") > col("last_day") - 7 &&
-        col("cum_d") >= 1 && col("cum_dw") >= 1)
+      .withColumn("prior", priorCells)
+      .transform(anchoredOn(daily))
+      .filter(pairedDays(7))
       .withColumn("st", expr(holtFold))
       .withColumn("sd", expr(holtDampedFold))
-      .withColumn("pred_trend",
-        expr(sparkFloorDiv("st.lv + st.tr", 1000)))
-      .withColumn("pred_damped",
-        expr(sparkFloorDiv("sd.lv + " + sparkFloorDiv("sd.tr", 2), 1000)))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_eval"),
-        sum(abs(col("n") - col("pred_trend"))).as("abs_trend"),
-        sum(abs(col("n") - col("pred_damped"))).as("abs_damped"))
-      .select(col("event_type"), col("n_eval"),
-        expr("abs_trend * 1000 div n_eval").as("mae_trend_milli"),
-        expr("abs_damped * 1000 div n_eval").as("mae_damped_milli"),
-        expr("abs_trend * 1000 div n_eval - abs_damped * 1000 div n_eval")
-          .as("gain_milli"))
-      .orderBy(col("event_type"))
+      .withColumn("pred_trend", holtPred)
+      .withColumn("pred_damped", dampedPred)
+      .transform(pairedLedger("trend", "damped"))
   }
 
   /** DuckDB twin: the trend oracle's grid/filter chain with BOTH list
-    * folds (plain + damped), floor emulated everywhere a dividend can
-    * go negative, built from the same [[duckFloorDiv]] identity the
-    * Scaladoc documents. */
-  lazy val mlForecastDampedSql: String = {
-    // plain Holt fold terms
-    val aT = "1000 * x[3] + acc[1] + acc[2]"
-    val lv2T = duckFloorDiv(aT, 2)
-    val tr2T = duckFloorDiv(s"$lv2T - acc[1] + acc[2]", 2)
-    // damped fold terms: D = floor(tr/2)
-    val dD = duckFloorDiv("acc[2]", 2)
-    val aD = s"1000 * x[3] + acc[1] + $dD"
-    val lv2D = duckFloorDiv(aD, 2)
-    val tr2D = duckFloorDiv(s"$lv2D - acc[1] + $dD", 2)
-    val predT = duckFloorDiv("st[1] + st[2]", 1000)
-    val predD = duckFloorDiv(s"sd[1] + ${duckFloorDiv("sd[2]", 2)}", 1000)
-    s"""WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-       |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
-       |dd AS (SELECT *, (day + 3) % 7 AS dow FROM d),
-       |c AS (SELECT *,
-       |    CAST(count(n) OVER wf AS BIGINT) AS cum_d,
-       |    CAST(count(n) OVER wd AS BIGINT) AS cum_dw,
-       |    list_sort(list({'day': day, 'n': n}) OVER wf) AS prior
-       |  FROM dd
-       |  WINDOW wf AS (PARTITION BY event_type ORDER BY day
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-       |    wd AS (PARTITION BY event_type, dow ORDER BY day
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-       |e AS (SELECT *,
-       |    -- BIGINT LIST accumulators [lv, tr, init] (struct acc fields
-       |    -- read one-iteration-stale in DuckDB 1.0 list_reduce; see the
-       |    -- trend oracle); // truncates toward zero so floor is
-       |    -- emulated via (a - ((a % m) + m) % m) // m
-       |    list_reduce(
-       |      list_prepend([CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)],
-       |        list_transform(prior, p -> [CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(p.n AS BIGINT)])),
-       |      (acc, x) -> CASE WHEN acc[3] = 0
-       |        THEN [CAST(1000 * x[3] AS BIGINT), CAST(0 AS BIGINT), CAST(1 AS BIGINT)]
-       |        ELSE [CAST($lv2T AS BIGINT), CAST($tr2T AS BIGINT),
-       |              CAST(1 AS BIGINT)] END) AS st,
-       |    list_reduce(
-       |      list_prepend([CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)],
-       |        list_transform(prior, p -> [CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(p.n AS BIGINT)])),
-       |      (acc, x) -> CASE WHEN acc[3] = 0
-       |        THEN [CAST(1000 * x[3] AS BIGINT), CAST(0 AS BIGINT), CAST(1 AS BIGINT)]
-       |        ELSE [CAST($lv2D AS BIGINT), CAST($tr2D AS BIGINT),
-       |              CAST(1 AS BIGINT)] END) AS sd
-       |  FROM c WHERE day > (SELECT max(day) FROM d) - 7
-       |    AND cum_d >= 1 AND cum_dw >= 1),
-       |f AS (SELECT *, $predT AS pred_trend, $predD AS pred_damped FROM e)
-       |SELECT event_type, CAST(count(*) AS BIGINT) AS n_eval,
-       |  CAST(sum(abs(n - pred_trend)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT) AS mae_trend_milli,
-       |  CAST(sum(abs(n - pred_damped)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT) AS mae_damped_milli,
-       |  CAST(sum(abs(n - pred_trend)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT)
-       |    - CAST(sum(abs(n - pred_damped)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT) AS gain_milli
-       |FROM f GROUP BY event_type ORDER BY event_type""".stripMargin
-  }
+    * folds (plain + damped). */
+  lazy val mlForecastDampedSql: String =
+    s"""${ladderSql("dd", cumD, cumDw, priorList)},
+       |e AS (SELECT *, $duckHolt AS st, $duckHoltDamped AS sd
+       |  FROM c WHERE ${pairedDaysSql(7)}),
+       |f AS (SELECT *, $holtPredSql AS pred_trend, $dampedPredSql AS pred_damped FROM e),
+       |${pairedLedgerSql("trend", "damped")}""".stripMargin
 
   // ------------------------------------------- Holt–Winters forecast
   /** The integer additive Holt–Winters fold (α = β = γ = ½, weekday
@@ -774,104 +757,28 @@ trait AnalyticsForecast extends AnalyticsBase {
     * O(1) per row.
     */
   def mlForecastHw(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
-    val daily = events(s, dir)
-      .select(col("event_type"), expr("unix_micros(ts) div 86400000000").as("day"))
-      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))
-      .withColumn("dow", pmod(col("day") + 3, lit(7)))
-      .stableCheckpoint()
-    val wFlat = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wDow = Window.partitionBy(col("event_type"), col("dow")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val lastDay = daily.agg(max(col("day")).as("last_day"))
+    val daily = dailyGrid(s, dir, withDow)
     daily
       .withColumn("cum_d", count(col("n")).over(wFlat))
       .withColumn("cum_dw", count(col("n")).over(wDow))
-      .withColumn("prior", sort_array(collect_list(struct(col("day"), col("n"))).over(wFlat)))
-      .join(broadcast(lastDay), lit(true))
-      .filter(col("day") > col("last_day") - 7 &&
-        col("cum_d") >= 1 && col("cum_dw") >= 1)
+      .withColumn("prior", priorCells)
+      .transform(anchoredOn(daily))
+      .filter(pairedDays(7))
       .withColumn("st", expr(holtFold))
       .withColumn("hw", expr(holtWintersFold))
-      .withColumn("pred_trend",
-        expr(sparkFloorDiv("st.lv + st.tr", 1000)))
-      .withColumn("pred_hw",
-        expr(sparkFloorDiv(
-          "hw.lv + hw.tr + element_at(hw.s, CAST(dow AS INT) + 1)", 1000)))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_eval"),
-        sum(abs(col("n") - col("pred_trend"))).as("abs_trend"),
-        sum(abs(col("n") - col("pred_hw"))).as("abs_hw"))
-      .select(col("event_type"), col("n_eval"),
-        expr("abs_trend * 1000 div n_eval").as("mae_trend_milli"),
-        expr("abs_hw * 1000 div n_eval").as("mae_hw_milli"),
-        expr("abs_trend * 1000 div n_eval - abs_hw * 1000 div n_eval")
-          .as("gain_milli"))
-      .orderBy(col("event_type"))
+      .withColumn("pred_trend", holtPred)
+      .withColumn("pred_hw", hwPred)
+      .transform(pairedLedger("trend", "hw"))
   }
 
   /** DuckDB twin: the trend oracle's grid/filter chain with the plain
-    * fold plus the 10-slot Holt–Winters list fold ([lv, tr, init,
-    * s₀…s₆]; items [0, 0, n, dow]), floor emulated everywhere a
-    * dividend can go negative, seasonal-slot update as 7 positional
-    * CASE arms (DuckDB lists have no functional update). */
-  lazy val mlForecastHwSql: String = {
-    val aT = "1000 * x[3] + acc[1] + acc[2]"
-    val lv2T = duckFloorDiv(aT, 2)
-    val tr2T = duckFloorDiv(s"$lv2T - acc[1] + acc[2]", 2)
-    val dH = "acc[CAST(4 + x[4] AS INT)]"
-    val aH = s"1000 * x[3] - $dH + acc[1] + acc[2]"
-    val lv2H = duckFloorDiv(aH, 2)
-    val tr2H = duckFloorDiv(s"$lv2H - acc[1] + acc[2]", 2)
-    val s2H = duckFloorDiv(s"1000 * x[3] - ($lv2H) + $dH", 2)
-    val slots = (0 until 7).map(k =>
-      s"CAST(CASE WHEN x[4] = $k THEN $s2H ELSE acc[${4 + k}] END AS BIGINT)")
-      .mkString(",\n       |              ")
-    val zeros7 = Seq.fill(7)("CAST(0 AS BIGINT)").mkString(", ")
-    val predT = duckFloorDiv("st[1] + st[2]", 1000)
-    val predH = duckFloorDiv("hw[1] + hw[2] + hw[CAST(4 + dow AS INT)]", 1000)
-    s"""WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-       |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
-       |dd AS (SELECT *, (day + 3) % 7 AS dow FROM d),
-       |c AS (SELECT *,
-       |    CAST(count(n) OVER wf AS BIGINT) AS cum_d,
-       |    CAST(count(n) OVER wd AS BIGINT) AS cum_dw,
-       |    list_sort(list({'day': day, 'n': n}) OVER wf) AS prior
-       |  FROM dd
-       |  WINDOW wf AS (PARTITION BY event_type ORDER BY day
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-       |    wd AS (PARTITION BY event_type, dow ORDER BY day
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-       |e AS (SELECT *,
-       |    list_reduce(
-       |      list_prepend([CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)],
-       |        list_transform(prior, p -> [CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-       |          CAST(p.n AS BIGINT), CAST((p.day + 3) % 7 AS BIGINT)])),
-       |      (acc, x) -> CASE WHEN acc[3] = 0
-       |        THEN [CAST(1000 * x[3] AS BIGINT), CAST(0 AS BIGINT), CAST(1 AS BIGINT)]
-       |        ELSE [CAST($lv2T AS BIGINT), CAST($tr2T AS BIGINT),
-       |              CAST(1 AS BIGINT)] END) AS st,
-       |    list_reduce(
-       |      list_prepend([CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-       |          $zeros7],
-       |        list_transform(prior, p -> [CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-       |          CAST(p.n AS BIGINT), CAST((p.day + 3) % 7 AS BIGINT)])),
-       |      (acc, x) -> CASE WHEN acc[3] = 0
-       |        THEN [CAST(1000 * x[3] AS BIGINT), CAST(0 AS BIGINT), CAST(1 AS BIGINT),
-       |              acc[4], acc[5], acc[6], acc[7], acc[8], acc[9], acc[10]]
-       |        ELSE [CAST($lv2H AS BIGINT), CAST($tr2H AS BIGINT), CAST(1 AS BIGINT),
-       |              $slots] END) AS hw
-       |  FROM c WHERE day > (SELECT max(day) FROM d) - 7
-       |    AND cum_d >= 1 AND cum_dw >= 1),
-       |f AS (SELECT *, $predT AS pred_trend, $predH AS pred_hw FROM e)
-       |SELECT event_type, CAST(count(*) AS BIGINT) AS n_eval,
-       |  CAST(sum(abs(n - pred_trend)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT) AS mae_trend_milli,
-       |  CAST(sum(abs(n - pred_hw)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT) AS mae_hw_milli,
-       |  CAST(sum(abs(n - pred_trend)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT)
-       |    - CAST(sum(abs(n - pred_hw)) AS BIGINT) * 1000 // CAST(count(*) AS BIGINT) AS gain_milli
-       |FROM f GROUP BY event_type ORDER BY event_type""".stripMargin
-  }
+    * fold plus the Holt–Winters list fold. */
+  lazy val mlForecastHwSql: String =
+    s"""${ladderSql("dd", cumD, cumDw, priorList)},
+       |e AS (SELECT *, $duckHolt AS st, $duckHoltWinters AS hw
+       |  FROM c WHERE ${pairedDaysSql(7)}),
+       |f AS (SELECT *, $holtPredSql AS pred_trend, $hwPredSql AS pred_hw FROM e),
+       |${pairedLedgerSql("trend", "hw")}""".stripMargin
 
   // --------------------------------------------- forecast model select
   /** Forecast champion selection (r16) — the ladder's capstone: per
@@ -897,37 +804,24 @@ trait AnalyticsForecast extends AnalyticsBase {
     * row_number windows. Ledger O(types).
     */
   def mlForecastSelect(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
-    val daily = events(s, dir)
-      .select(col("event_type"), expr("unix_micros(ts) div 86400000000").as("day"))
-      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))
-      .withColumn("dow", pmod(col("day") + 3, lit(7)))
-      .stableCheckpoint()
-    val wFlat = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wDow = Window.partitionBy(col("event_type"), col("dow")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val lastDay = daily.agg(max(col("day")).as("last_day"))
+    val daily = dailyGrid(s, dir, withDow)
     val scored = daily
       .withColumn("cum_n", sum(col("n")).over(wFlat))
       .withColumn("cum_d", count(col("n")).over(wFlat))
       .withColumn("cum_nw", sum(col("n")).over(wDow))
       .withColumn("cum_dw", count(col("n")).over(wDow))
-      .withColumn("prior", sort_array(collect_list(struct(col("day"), col("n"))).over(wFlat)))
-      .join(broadcast(lastDay), lit(true))
-      .filter(col("day") > col("last_day") - 14 &&
-        col("cum_d") >= 1 && col("cum_dw") >= 1)
+      .withColumn("prior", priorCells)
+      .transform(anchoredOn(daily))
+      .filter(pairedDays(14))
       .withColumn("st", expr(holtFold))
       .withColumn("sd", expr(holtDampedFold))
       .withColumn("hw", expr(holtWintersFold))
-      .withColumn("p1", expr("cum_n div cum_d"))
-      .withColumn("p2", expr("cum_nw div cum_dw"))
-      .withColumn("p3", expr(sparkFloorDiv("st.lv + st.tr", 1000)))
-      .withColumn("p4", expr(sparkFloorDiv(
-        "sd.lv + " + sparkFloorDiv("sd.tr", 2), 1000)))
-      .withColumn("p5", expr(sparkFloorDiv(
-        "hw.lv + hw.tr + element_at(hw.s, CAST(dow AS INT) + 1)", 1000)))
-      .withColumn("is_eval", (col("day") > col("last_day") - 7).cast("int"))
+      .withColumn("p1", flatPred)
+      .withColumn("p2", seasPred)
+      .withColumn("p3", holtPred)
+      .withColumn("p4", dampedPred)
+      .withColumn("p5", hwPred)
+      .withColumn("is_eval", lastDays(7).cast("int"))
     def maeCols(m: Int): Seq[Column] = Seq(
       sum(when(col("is_eval") === 0, abs(col("n") - col(s"p$m")))).as(s"av$m"),
       sum(when(col("is_eval") === 1, abs(col("n") - col(s"p$m")))).as(s"ae$m"))
@@ -967,81 +861,24 @@ trait AnalyticsForecast extends AnalyticsBase {
     * 5-row model relation via UNION ALL, and the same two
     * (mae, ladder-rank) row_number picks. */
   lazy val mlForecastSelectSql: String = {
-    val aT = "1000 * x[3] + acc[1] + acc[2]"
-    val lv2T = duckFloorDiv(aT, 2)
-    val tr2T = duckFloorDiv(s"$lv2T - acc[1] + acc[2]", 2)
-    val dD = duckFloorDiv("acc[2]", 2)
-    val aD = s"1000 * x[3] + acc[1] + $dD"
-    val lv2D = duckFloorDiv(aD, 2)
-    val tr2D = duckFloorDiv(s"$lv2D - acc[1] + $dD", 2)
-    val dH = "acc[CAST(4 + x[4] AS INT)]"
-    val aH = s"1000 * x[3] - $dH + acc[1] + acc[2]"
-    val lv2H = duckFloorDiv(aH, 2)
-    val tr2H = duckFloorDiv(s"$lv2H - acc[1] + acc[2]", 2)
-    val s2H = duckFloorDiv(s"1000 * x[3] - ($lv2H) + $dH", 2)
-    val slots = (0 until 7).map(k =>
-      s"CAST(CASE WHEN x[4] = $k THEN $s2H ELSE acc[${4 + k}] END AS BIGINT)")
-      .mkString(", ")
-    val zeros7 = Seq.fill(7)("CAST(0 AS BIGINT)").mkString(", ")
-    val items = "list_transform(prior, p -> [CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(p.n AS BIGINT), CAST((p.day + 3) % 7 AS BIGINT)])"
-    val p3 = duckFloorDiv("st[1] + st[2]", 1000)
-    val p4 = duckFloorDiv(s"sd[1] + ${duckFloorDiv("sd[2]", 2)}", 1000)
-    val p5 = duckFloorDiv("hw[1] + hw[2] + hw[CAST(4 + dow AS INT)]", 1000)
     val modelUnion = Seq(
       (1, "flat"), (2, "seasonal"), (3, "trend"), (4, "damped"), (5, "hw"))
       .map { case (m, nm) =>
         s"SELECT event_type, CAST($m AS BIGINT) AS rank, '$nm' AS model, av$m * 1000 // nv AS val_mae_milli, ae$m * 1000 // ne AS eval_mae_milli FROM a" }
       .mkString("\n  UNION ALL ")
-    s"""WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-       |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
-       |dd AS (SELECT *, (day + 3) % 7 AS dow FROM d),
-       |c AS (SELECT *,
-       |    CAST(sum(n) OVER wf AS BIGINT) AS cum_n,
-       |    CAST(count(n) OVER wf AS BIGINT) AS cum_d,
-       |    CAST(sum(n) OVER wd AS BIGINT) AS cum_nw,
-       |    CAST(count(n) OVER wd AS BIGINT) AS cum_dw,
-       |    list_sort(list({'day': day, 'n': n}) OVER wf) AS prior
-       |  FROM dd
-       |  WINDOW wf AS (PARTITION BY event_type ORDER BY day
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-       |    wd AS (PARTITION BY event_type, dow ORDER BY day
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-       |e AS (SELECT *,
-       |    list_reduce(
-       |      list_prepend([CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)], $items),
-       |      (acc, x) -> CASE WHEN acc[3] = 0
-       |        THEN [CAST(1000 * x[3] AS BIGINT), CAST(0 AS BIGINT), CAST(1 AS BIGINT)]
-       |        ELSE [CAST($lv2T AS BIGINT), CAST($tr2T AS BIGINT), CAST(1 AS BIGINT)] END) AS st,
-       |    list_reduce(
-       |      list_prepend([CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)], $items),
-       |      (acc, x) -> CASE WHEN acc[3] = 0
-       |        THEN [CAST(1000 * x[3] AS BIGINT), CAST(0 AS BIGINT), CAST(1 AS BIGINT)]
-       |        ELSE [CAST($lv2D AS BIGINT), CAST($tr2D AS BIGINT), CAST(1 AS BIGINT)] END) AS sd,
-       |    list_reduce(
-       |      list_prepend([CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT), $zeros7], $items),
-       |      (acc, x) -> CASE WHEN acc[3] = 0
-       |        THEN [CAST(1000 * x[3] AS BIGINT), CAST(0 AS BIGINT), CAST(1 AS BIGINT),
-       |              acc[4], acc[5], acc[6], acc[7], acc[8], acc[9], acc[10]]
-       |        ELSE [CAST($lv2H AS BIGINT), CAST($tr2H AS BIGINT), CAST(1 AS BIGINT), $slots] END) AS hw
-       |  FROM c WHERE day > (SELECT max(day) FROM d) - 14
-       |    AND cum_d >= 1 AND cum_dw >= 1),
+    val maeSums = (1 to 5).flatMap(m => Seq(0, 1).map(e =>
+      s"CAST(sum(CASE WHEN is_eval = $e THEN abs(n - p$m) END) AS BIGINT) AS a${if (e == 0) "v" else "e"}$m"))
+    s"""${ladderSql("dd", cumN, cumD, cumNw, cumDw, priorList)},
+       |e AS (SELECT *, $duckHolt AS st, $duckHoltDamped AS sd, $duckHoltWinters AS hw
+       |  FROM c WHERE ${pairedDaysSql(14)}),
        |f AS (SELECT *,
        |    cum_n // cum_d AS p1, cum_nw // cum_dw AS p2,
-       |    $p3 AS p3, $p4 AS p4, $p5 AS p5,
-       |    CASE WHEN day > (SELECT max(day) FROM d) - 7 THEN 1 ELSE 0 END AS is_eval
+       |    $holtPredSql AS p3, $dampedPredSql AS p4, $hwPredSql AS p5,
+       |    CASE WHEN day > last_day - 7 THEN 1 ELSE 0 END AS is_eval
        |  FROM e),
        |a AS (SELECT event_type,
        |    CAST(sum(1 - is_eval) AS BIGINT) AS nv, CAST(sum(is_eval) AS BIGINT) AS ne,
-       |    CAST(sum(CASE WHEN is_eval = 0 THEN abs(n - p1) END) AS BIGINT) AS av1,
-       |    CAST(sum(CASE WHEN is_eval = 1 THEN abs(n - p1) END) AS BIGINT) AS ae1,
-       |    CAST(sum(CASE WHEN is_eval = 0 THEN abs(n - p2) END) AS BIGINT) AS av2,
-       |    CAST(sum(CASE WHEN is_eval = 1 THEN abs(n - p2) END) AS BIGINT) AS ae2,
-       |    CAST(sum(CASE WHEN is_eval = 0 THEN abs(n - p3) END) AS BIGINT) AS av3,
-       |    CAST(sum(CASE WHEN is_eval = 1 THEN abs(n - p3) END) AS BIGINT) AS ae3,
-       |    CAST(sum(CASE WHEN is_eval = 0 THEN abs(n - p4) END) AS BIGINT) AS av4,
-       |    CAST(sum(CASE WHEN is_eval = 1 THEN abs(n - p4) END) AS BIGINT) AS ae4,
-       |    CAST(sum(CASE WHEN is_eval = 0 THEN abs(n - p5) END) AS BIGINT) AS av5,
-       |    CAST(sum(CASE WHEN is_eval = 1 THEN abs(n - p5) END) AS BIGINT) AS ae5
+       |    ${maeSums.mkString(",\n    ")}
        |  FROM f GROUP BY event_type
        |  HAVING sum(1 - is_eval) >= 1 AND sum(is_eval) >= 1),
        |m AS ($modelUnion),
@@ -1082,20 +919,13 @@ trait AnalyticsForecast extends AnalyticsBase {
     * onto the 7-day eval slice.
     */
   def mlForecastInterval(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
-    val daily = events(s, dir)
-      .select(col("event_type"), expr("unix_micros(ts) div 86400000000").as("day"))
-      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))
-      .stableCheckpoint()
-    val wPrior = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val lastDay = daily.agg(max(col("day")).as("last_day"))
+    val daily = dailyGrid(s, dir)
     val scored = daily
-      .withColumn("cum_n", sum(col("n")).over(wPrior))
-      .withColumn("cum_d", count(col("n")).over(wPrior))
-      .join(broadcast(lastDay), lit(true))
+      .withColumn("cum_n", sum(col("n")).over(wFlat))
+      .withColumn("cum_d", count(col("n")).over(wFlat))
+      .transform(anchoredOn(daily))
       .filter(col("cum_d") >= 1)
-      .withColumn("abs_err", abs(col("n") - expr("cum_n div cum_d")))
+      .withColumn("abs_err", abs(col("n") - flatPred))
       .stableCheckpoint() // feeds BOTH the calibration rank and the eval slice
     val wRank = Window.partitionBy(col("event_type"))
       .orderBy(col("abs_err"), col("day"))
@@ -1104,7 +934,7 @@ trait AnalyticsForecast extends AnalyticsBase {
       .withColumn("n_cal", count(lit(1)).over(Window.partitionBy(col("event_type"))))
       .filter(col("rk") === expr("(9 * (n_cal + 1) + 9) div 10"))
       .select(col("event_type"), col("n_cal"), col("abs_err").as("q90_err"))
-    scored.filter(col("day") > col("last_day") - 7)
+    scored.filter(lastDays(7))
       .join(broadcast(q), "event_type")
       .groupBy(col("event_type"), col("n_cal"), col("q90_err"))
       .agg(count(lit(1)).as("n_eval"),
@@ -1114,32 +944,24 @@ trait AnalyticsForecast extends AnalyticsBase {
       .orderBy(col("event_type"))
   }
 
-  val mlForecastIntervalSql: String =
-    """WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-      |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
-      |c AS (SELECT *,
-      |    CAST(sum(n) OVER (PARTITION BY event_type ORDER BY day
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT) AS cum_n,
-      |    CAST(count(n) OVER (PARTITION BY event_type ORDER BY day
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT) AS cum_d
-      |  FROM d),
-      |sc AS (SELECT event_type, day, abs(n - cum_n // cum_d) AS abs_err,
-      |    (SELECT max(day) FROM d) AS last_day
-      |  FROM c WHERE cum_d >= 1),
-      |cal AS (SELECT *,
-      |    row_number() OVER (PARTITION BY event_type ORDER BY abs_err, day) AS rk,
-      |    count(*) OVER (PARTITION BY event_type) AS n_cal
-      |  FROM sc WHERE day <= last_day - 7),
-      |q AS (SELECT event_type, CAST(n_cal AS BIGINT) AS n_cal,
-      |    CAST(abs_err AS BIGINT) AS q90_err
-      |  FROM cal WHERE rk = (9 * (n_cal + 1) + 9) // 10),
-      |ev AS (SELECT * FROM sc WHERE day > last_day - 7)
-      |SELECT ev.event_type, n_cal, q90_err, CAST(count(*) AS BIGINT) AS n_eval,
-      |  CAST(sum(CASE WHEN abs_err <= q90_err THEN 1 ELSE 0 END) AS BIGINT) AS n_covered,
-      |  CAST(sum(CASE WHEN abs_err <= q90_err THEN 1 ELSE 0 END) AS BIGINT) * 1000000
-      |    // CAST(count(*) AS BIGINT) AS coverage_ppm
-      |FROM ev JOIN q USING (event_type)
-      |GROUP BY 1, 2, 3 ORDER BY 1""".stripMargin
+  lazy val mlForecastIntervalSql: String =
+    s"""${ladderSql("d", cumN, cumD)},
+       |sc AS (SELECT event_type, day, abs(n - cum_n // cum_d) AS abs_err, last_day
+       |  FROM c WHERE cum_d >= 1),
+       |cal AS (SELECT *,
+       |    row_number() OVER (PARTITION BY event_type ORDER BY abs_err, day) AS rk,
+       |    count(*) OVER (PARTITION BY event_type) AS n_cal
+       |  FROM sc WHERE day <= last_day - 7),
+       |q AS (SELECT event_type, CAST(n_cal AS BIGINT) AS n_cal,
+       |    CAST(abs_err AS BIGINT) AS q90_err
+       |  FROM cal WHERE rk = (9 * (n_cal + 1) + 9) // 10),
+       |ev AS (SELECT * FROM sc WHERE day > last_day - 7)
+       |SELECT ev.event_type, n_cal, q90_err, CAST(count(*) AS BIGINT) AS n_eval,
+       |  CAST(sum(CASE WHEN abs_err <= q90_err THEN 1 ELSE 0 END) AS BIGINT) AS n_covered,
+       |  CAST(sum(CASE WHEN abs_err <= q90_err THEN 1 ELSE 0 END) AS BIGINT) * 1000000
+       |    // CAST(count(*) AS BIGINT) AS coverage_ppm
+       |FROM ev JOIN q USING (event_type)
+       |GROUP BY 1, 2, 3 ORDER BY 1""".stripMargin
 
   // ------------------------------------------------------ path mining
   /** Leave-one-out smoothed target encoding — the feature-engineering
@@ -1781,22 +1603,14 @@ trait AnalyticsForecast extends AnalyticsBase {
     * per-day proportion join is O(7) rows broadcast; ledger O(types+1).
     */
   def mlForecastReconcile(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
-    val grid = events(s, dir)
-      .select(col("event_type"), expr("unix_micros(ts) div 86400000000").as("day"))
-      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))
-    val daily = grid.unionByName(
-        grid.groupBy(col("day")).agg(sum(col("n")).as("n"))
-          .select(lit("__total").as("event_type"), col("day"), col("n")))
-      .stableCheckpoint()
-    val wFlat = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val lastDay = daily.agg(max(col("day")).as("last_day"))
+    val daily = dailyGrid(s, dir, grid => grid.unionByName(
+      grid.groupBy(col("day")).agg(sum(col("n")).as("n"))
+        .select(lit("__total").as("event_type"), col("day"), col("n"))))
     val eval = daily
       .withColumn("cum_d", count(col("n")).over(wFlat))
-      .withColumn("prior", sort_array(collect_list(struct(col("day"), col("n"))).over(wFlat)))
-      .join(broadcast(lastDay), lit(true))
-      .filter(col("day") > col("last_day") - 7 && col("cum_d") >= 1)
+      .withColumn("prior", priorCells)
+      .transform(anchoredOn(daily))
+      .filter(lastDays(7) && col("cum_d") >= 1)
       .withColumn("st", expr(holtFold))
       .withColumn("pm", greatest(lit(0L), expr("st.lv + st.tr")))
       .select(col("event_type"), col("day"), col("n"), col("pm"))
@@ -1820,65 +1634,32 @@ trait AnalyticsForecast extends AnalyticsBase {
       .agg(count(lit(1)).as("n_eval"),
         sum(abs(col("n_total") - expr("top_pm div 1000"))).as("abs_base"),
         sum(abs(col("n_total") - expr("sum_base div 1000"))).as("abs_recon"))
-    bLedger.unionByName(tLedger)
-      .select(col("event_type"), col("n_eval"),
-        expr("abs_base * 1000 div n_eval").as("mae_base_milli"),
-        expr("abs_recon * 1000 div n_eval").as("mae_recon_milli"),
-        expr("abs_base * 1000 div n_eval - abs_recon * 1000 div n_eval")
-          .as("gain_milli"))
-      .orderBy(col("event_type"))
+    bLedger.unionByName(tLedger).transform(pairedMae("base", "recon"))
   }
 
   /** DuckDB twin: the same grid + `__total` union, the list-accumulator
-    * Holt fold ([[mlForecastTrendSql]]'s form), clamped milli
-    * predictions, forecast-proportions top-down + bottom-up rollup. */
+    * Holt fold, clamped milli predictions, forecast-proportions
+    * top-down + bottom-up rollup. */
   lazy val mlForecastReconcileSql: String =
-    """WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-      |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
-      |u AS (SELECT * FROM d
-      |  UNION ALL
-      |  SELECT '__total', day, CAST(sum(n) AS BIGINT) FROM d GROUP BY 2),
-      |c AS (SELECT *,
-      |    CAST(count(n) OVER wf AS BIGINT) AS cum_d,
-      |    list_sort(list({'day': day, 'n': n}) OVER wf) AS prior
-      |  FROM u
-      |  WINDOW wf AS (PARTITION BY event_type ORDER BY day
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-      |e AS (SELECT *,
-      |    list_reduce(
-      |      list_prepend([CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)],
-      |        list_transform(prior, p -> [CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(p.n AS BIGINT)])),
-      |      (acc, x) -> CASE WHEN acc[3] = 0
-      |        THEN [CAST(1000 * x[3] AS BIGINT), CAST(0 AS BIGINT), CAST(1 AS BIGINT)]
-      |        ELSE [CAST(((1000 * x[3] + acc[1] + acc[2])
-      |                    - (((1000 * x[3] + acc[1] + acc[2]) % 2) + 2) % 2) // 2 AS BIGINT),
-      |              CAST(((((1000 * x[3] + acc[1] + acc[2])
-      |                      - (((1000 * x[3] + acc[1] + acc[2]) % 2) + 2) % 2) // 2
-      |                     - acc[1] + acc[2])
-      |                    - (((((1000 * x[3] + acc[1] + acc[2])
-      |                          - (((1000 * x[3] + acc[1] + acc[2]) % 2) + 2) % 2) // 2
-      |                         - acc[1] + acc[2]) % 2) + 2) % 2) // 2 AS BIGINT),
-      |              CAST(1 AS BIGINT)] END) AS st
-      |  FROM c WHERE day > (SELECT max(day) FROM u) - 7 AND cum_d >= 1),
-      |p AS (SELECT event_type, day, n,
-      |    greatest(CAST(0 AS BIGINT), st[1] + st[2]) AS pm FROM e),
-      |bt AS (SELECT * FROM p WHERE event_type <> '__total'),
-      |sm AS (SELECT day, CAST(sum(pm) AS BIGINT) AS sum_base FROM bt GROUP BY 1),
-      |tp AS (SELECT day, pm AS top_pm, n AS n_total FROM p WHERE event_type = '__total'),
-      |bl AS (SELECT bt.event_type, CAST(count(*) AS BIGINT) AS n_eval,
-      |    CAST(sum(abs(bt.n - bt.pm // 1000)) AS BIGINT) AS abs_base,
-      |    CAST(sum(abs(bt.n - (CASE WHEN sm.sum_base = 0 THEN bt.pm
-      |      ELSE (tp.top_pm * bt.pm) // sm.sum_base END) // 1000)) AS BIGINT) AS abs_recon
-      |  FROM bt JOIN tp USING (day) JOIN sm USING (day)
-      |  GROUP BY 1),
-      |tl AS (SELECT '__total' AS event_type, CAST(count(*) AS BIGINT) AS n_eval,
-      |    CAST(sum(abs(n_total - top_pm // 1000)) AS BIGINT) AS abs_base,
-      |    CAST(sum(abs(n_total - sum_base // 1000)) AS BIGINT) AS abs_recon
-      |  FROM tp JOIN sm USING (day)),
-      |led AS (SELECT * FROM bl UNION ALL SELECT * FROM tl)
-      |SELECT event_type, n_eval,
-      |  abs_base * 1000 // n_eval AS mae_base_milli,
-      |  abs_recon * 1000 // n_eval AS mae_recon_milli,
-      |  abs_base * 1000 // n_eval - abs_recon * 1000 // n_eval AS gain_milli
-      |FROM led ORDER BY event_type""".stripMargin
+    s"""${ladderSql("(SELECT * FROM d UNION ALL\n    SELECT '__total', day, CAST(sum(n) AS BIGINT) FROM d GROUP BY 2) u",
+         cumD, priorList)},
+       |e AS (SELECT *, $duckHolt AS st
+       |  FROM c WHERE day > last_day - 7 AND cum_d >= 1),
+       |p AS (SELECT event_type, day, n,
+       |    greatest(CAST(0 AS BIGINT), st[1] + st[2]) AS pm FROM e),
+       |bt AS (SELECT * FROM p WHERE event_type <> '__total'),
+       |sm AS (SELECT day, CAST(sum(pm) AS BIGINT) AS sum_base FROM bt GROUP BY 1),
+       |tp AS (SELECT day, pm AS top_pm, n AS n_total FROM p WHERE event_type = '__total'),
+       |bl AS (SELECT bt.event_type, CAST(count(*) AS BIGINT) AS n_eval,
+       |    CAST(sum(abs(bt.n - bt.pm // 1000)) AS BIGINT) AS abs_base,
+       |    CAST(sum(abs(bt.n - (CASE WHEN sm.sum_base = 0 THEN bt.pm
+       |      ELSE (tp.top_pm * bt.pm) // sm.sum_base END) // 1000)) AS BIGINT) AS abs_recon
+       |  FROM bt JOIN tp USING (day) JOIN sm USING (day)
+       |  GROUP BY 1),
+       |tl AS (SELECT '__total' AS event_type, CAST(count(*) AS BIGINT) AS n_eval,
+       |    CAST(sum(abs(n_total - top_pm // 1000)) AS BIGINT) AS abs_base,
+       |    CAST(sum(abs(n_total - sum_base // 1000)) AS BIGINT) AS abs_recon
+       |  FROM tp JOIN sm USING (day)),
+       |led AS (SELECT * FROM bl UNION ALL SELECT * FROM tl)
+       |${pairedMaeSql("base", "recon", "led")}""".stripMargin
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.plans.Checkpoints.StableSyntax
+import TextOps.qualityCte
 
 /** Flagship composite: the end-to-end training-data curation pass a
   * 100 TB corpus pipeline runs — quality gate → near-dup removal →
@@ -29,22 +30,6 @@ object Curate {
       .filter(col("quality_score") >= 0.5)
       .join(broadcast(dropIds), Seq("doc_id"), "left_anti")
       .orderBy(col("doc_id"))
-  }
-
-  /** Shared quality CTE (`q`) — the oracle twin of TextOps.textQuality's
-    * scoring formula, interpolated into both curate oracles so the
-    * replicas cannot drift.
-    */
-  private[operators] val qualityCte: String = {
-    val stops = TextOps.stopwords.map(w => s"'$w'").mkString(", ")
-    s"""q AS (
-       |  SELECT doc_id, n_chars,
-       |    len(string_split(text, ' ')) AS n_tokens,
-       |    len(list_filter(string_split(text, ' '), w -> w IN ($stops))) * 1.0 / len(string_split(text, ' ')) AS stopword_ratio,
-       |    (1.0 - len(list_filter(string_split(text, ' '), w -> w IN ($stops))) * 1.0 / len(string_split(text, ' ')))
-       |      * (1.0 - len(regexp_extract_all(text, '[^a-z0-9 ]')) * 1.0 / n_chars)
-       |      * least(1.0, len(string_split(text, ' ')) / 64.0) AS quality_score
-       |  FROM documents)""".stripMargin
   }
 
   private val curateSelect: String =
@@ -1436,13 +1421,8 @@ object Curate {
     * the shared quality CTE formula, and a row_number window for the
     * global 5·pos ≤ 2·n cut.
     */
-  val sampleDsirSql: String = {
-    val stops = TextOps.stopwords.map(w => s"'$w'").mkString(", ")
-    s"""WITH q AS (SELECT doc_id,
-       |    (1.0 - len(list_filter(string_split(text, ' '), w -> w IN ($stops))) * 1.0 / len(string_split(text, ' ')))
-       |      * (1.0 - len(regexp_extract_all(text, '[^a-z0-9 ]')) * 1.0 / n_chars)
-       |      * least(1.0, len(string_split(text, ' ')) / 64.0) AS quality_score
-       |  FROM documents),
+  val sampleDsirSql: String =
+    s"""WITH $qualityCte,
        |g AS (SELECT doc_id FROM q WHERE quality_score >= 0.5),
        |o AS (SELECT doc_id, source,
        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
@@ -1470,7 +1450,6 @@ object Curate {
        |  CAST((1000000 * sum(CASE WHEN pos * 5 <= n * 2 THEN 1 ELSE 0 END)) // count(*) AS BIGINT) AS selected_ppm,
        |  CAST(sum(CASE WHEN pos * 5 <= n * 2 THEN w_bits ELSE 0 END) AS BIGINT) AS sel_weight_bits
        |FROM r GROUP BY 1 ORDER BY source""".stripMargin
-  }
 
   // ------------------------------------------- temperature sampling
   /** Temperature-flattened mixture sampling (the mT5/data-mixture

@@ -1817,7 +1817,7 @@ object Dedup {
     * quality CTE, keepers via the same two rank windows. */
   val dedupKeepBestSql: String =
     s"""WITH RECURSIVE $componentCtes,
-       |${graft.operators.Curate.qualityCte},
+       |${TextOps.qualityCte},
        |mq AS (SELECT doc_id,
        |    least(CAST(floor(quality_score * 1000) AS BIGINT), 999) AS mb
        |  FROM q),

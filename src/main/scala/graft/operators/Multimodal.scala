@@ -989,7 +989,7 @@ object Multimodal {
     * running-sum budget cut, rolled up per (mix, kind). */
   lazy val pipelineMmPretrainSql: String =
     s"""WITH RECURSIVE ${Dedup.componentCtes},
-       |${Curate.qualityCte},
+       |${TextOps.qualityCte},
        |sv AS (SELECT word, n_syms FROM (${TextOps.tokenizeBpeSegmentsSql})),
        |fb AS (SELECT doc_id,
        |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 100 AS own_bucket

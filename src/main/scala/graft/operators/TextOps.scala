@@ -43,35 +43,66 @@ object TextOps {
       |  CAST(ceil(n_chars / 4.0) AS BIGINT) AS bpe_est_tokens
       |FROM documents ORDER BY doc_id""".stripMargin
 
-  /** Quality scoring: length, average word length, stopword ratio,
-    * punctuation ratio, and a composite score — all exact rational
-    * arithmetic (int counts divided as doubles).
+  /** The per-document quality features every quality face reads:
+    * `doc_id`, the face's `meta` columns (in the face's order),
+    * `n_punct`, and the token pass's `n_tokens` and `n_stop`.
     *
     * Token/stopword counts run as explode → grouped conditional
     * aggregation (codegen'd `isin` over literal stopwords) instead of
     * an interpreted `filter(words, λ)` lambda, which dominated the
     * runtime at sf0.1.
     */
-  def textQuality(s: SparkSession, dir: String): DataFrame = {
-    val meta = docs(s, dir).select(col("doc_id"), col("n_chars"),
-      regexp_count(col("text"), lit("[^a-z0-9 ]")).as("n_punct"))
+  private def qualityFeatures(s: SparkSession, dir: String,
+      meta: Seq[Column] = Seq(col("n_chars"))): DataFrame = {
+    val perDoc = docs(s, dir).select((col("doc_id") +: meta :+
+      regexp_count(col("text"), lit("[^a-z0-9 ]")).as("n_punct")): _*)
     val toks = docs(s, dir)
       .select(col("doc_id"), explode(words).as("w"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"),
         sum(when(col("w").isInCollection(stopwords), 1L).otherwise(0L)).as("n_stop"))
-    val nTok = col("n_tokens"); val nStop = col("n_stop"); val nPunct = col("n_punct")
-    meta.join(toks, "doc_id")
+    perDoc.join(toks, "doc_id")
+  }
+
+  // The quality formulas over those features, exact rational
+  // arithmetic (int counts divided as doubles): the rule gate's score
+  // and the distilled linear classifier's logit.
+  private val stopRatio: Column = col("n_stop") * 1.0 / col("n_tokens")
+  private val punctRatio: Column = col("n_punct") * 1.0 / col("n_chars")
+  private val lenSat: Column = least(lit(1.0), col("n_tokens") / 64.0)
+  private val qualityScore: Column =
+    (lit(1.0) - stopRatio) * (lit(1.0) - punctRatio) * lenSat
+  private val logit: Column = lit(-2.0) + stopRatio * 4.0 - punctRatio * 8.0 + lenSat * 2.0
+
+  /** DuckDB twin of [[qualityFeatures]] (`meta` are SQL select items). */
+  private def qualityFeaturesSql(meta: String*): String = {
+    val stops = stopwords.map(w => s"'$w'").mkString(", ")
+    s"""SELECT doc_id, ${meta.map(_ + ", ").mkString}
+       |    len(list_filter(string_split(text, ' '), w -> w IN ($stops))) AS n_stop,
+       |    len(string_split(text, ' ')) AS n_tokens,
+       |    len(regexp_extract_all(text, '[^a-z0-9 ]')) AS n_punct, n_chars
+       |  FROM documents""".stripMargin
+  }
+  private val stopRatioSql = "n_stop * 1.0 / n_tokens"
+  private val punctRatioSql = "n_punct * 1.0 / n_chars"
+  private val lenSatSql = "least(1.0, n_tokens / 64.0)"
+  private val qualityScoreSql = s"(1.0 - $stopRatioSql) * (1.0 - $punctRatioSql) * $lenSatSql"
+  private val logitSql = s"-2.0 + $stopRatioSql * 4.0 - $punctRatioSql * 8.0 + $lenSatSql * 2.0"
+
+  /** Quality scoring: length, average word length, stopword ratio,
+    * punctuation ratio, and a composite score — all exact rational
+    * arithmetic (int counts divided as doubles).
+    */
+  def textQuality(s: SparkSession, dir: String): DataFrame =
+    qualityFeatures(s, dir)
       .select(
         col("doc_id"), col("n_chars"),
-        nTok.as("n_tokens"),
-        ((col("n_chars") - (nTok - 1)) * 1.0 / nTok).as("avg_word_len"),
-        (nStop * 1.0 / nTok).as("stopword_ratio"),
-        (nPunct * 1.0 / col("n_chars")).as("punct_ratio"),
-        ((lit(1.0) - nStop * 1.0 / nTok) * (lit(1.0) - nPunct * 1.0 / col("n_chars"))
-          * least(lit(1.0), nTok / 64.0)).as("quality_score"))
+        col("n_tokens").as("n_tokens"),
+        ((col("n_chars") - (col("n_tokens") - 1)) * 1.0 / col("n_tokens")).as("avg_word_len"),
+        stopRatio.as("stopword_ratio"),
+        punctRatio.as("punct_ratio"),
+        qualityScore.as("quality_score"))
       .orderBy(col("doc_id"))
-  }
 
   /** The SHARED quality feature table — [[textQuality]] memoized per
     * (session, corpus signature) as a stable checkpoint. ~15 faces
@@ -90,18 +121,22 @@ object TextOps {
       textQuality(s, dir)
     }
 
-  val textQualitySql: String = {
-    val stops = stopwords.map(w => s"'$w'").mkString(", ")
-    s"""SELECT doc_id, n_chars,
-       |  len(string_split(text, ' ')) AS n_tokens,
-       |  (n_chars - (len(string_split(text, ' ')) - 1)) * 1.0 / len(string_split(text, ' ')) AS avg_word_len,
-       |  len(list_filter(string_split(text, ' '), w -> w IN ($stops))) * 1.0 / len(string_split(text, ' ')) AS stopword_ratio,
-       |  len(regexp_extract_all(text, '[^a-z0-9 ]')) * 1.0 / n_chars AS punct_ratio,
-       |  (1.0 - len(list_filter(string_split(text, ' '), w -> w IN ($stops))) * 1.0 / len(string_split(text, ' ')))
-       |    * (1.0 - len(regexp_extract_all(text, '[^a-z0-9 ]')) * 1.0 / n_chars)
-       |    * least(1.0, len(string_split(text, ' ')) / 64.0) AS quality_score
-       |FROM documents ORDER BY doc_id""".stripMargin
-  }
+  /** DuckDB twin of [[textQuality]]'s rows, unordered. */
+  private val qualityRowsSql: String =
+    s"""SELECT doc_id, n_chars, n_tokens,
+       |  (n_chars - (n_tokens - 1)) * 1.0 / n_tokens AS avg_word_len,
+       |  $stopRatioSql AS stopword_ratio,
+       |  $punctRatioSql AS punct_ratio,
+       |  $qualityScoreSql AS quality_score
+       |FROM (${qualityFeaturesSql()})""".stripMargin
+
+  val textQualitySql: String = s"$qualityRowsSql\nORDER BY doc_id"
+
+  /** The quality CTE `q` — [[textQualitySql]]'s rows — that every
+    * oracle gating on `quality_score` reads, so the replicas cannot
+    * drift from the formula.
+    */
+  private[operators] val qualityCte: String = s"q AS ($qualityRowsSql)"
 
   /** Language-ID by stopword-hit heuristic: count hits from per-language
     * stopword lists, pick the argmax (ties broken by fixed priority).
@@ -633,40 +668,19 @@ object TextOps {
     * whole-stage codegen at scan speed, which is the only way a
     * learned filter keeps up with a 100 TB scan.
     */
-  def qualityClassifier(s: SparkSession, dir: String): DataFrame = {
-    val meta = docs(s, dir).select(col("doc_id"), col("n_chars"),
-      regexp_count(col("text"), lit("[^a-z0-9 ]")).as("n_punct"))
-    val toks = docs(s, dir)
-      .select(col("doc_id"), explode(words).as("w"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("w").isInCollection(stopwords), 1L).otherwise(0L)).as("n_stop"))
-    val stopR = col("n_stop") * 1.0 / col("n_tokens")
-    val punctR = col("n_punct") * 1.0 / col("n_chars")
-    val lenSat = least(lit(1.0), col("n_tokens") / 64.0)
-    val logit = lit(-2.0) + stopR * 4.0 - punctR * 8.0 + lenSat * 2.0
-    meta.join(toks, "doc_id")
+  def qualityClassifier(s: SparkSession, dir: String): DataFrame =
+    qualityFeatures(s, dir)
       .select(col("doc_id"),
         floor(logit * 1e6 + 0.5).cast("long").as("logit_micro"),
         (logit > 0).cast("long").as("keep"))
       .orderBy(col("doc_id"))
-  }
 
-  val qualityClassifierSql: String = {
-    val stops = stopwords.map(w => s"'$w'").mkString(", ")
-    s"""WITH f AS (SELECT doc_id,
-       |    len(list_filter(string_split(text, ' '), w -> w IN ($stops))) * 1.0
-       |      / len(string_split(text, ' ')) AS stop_r,
-       |    len(regexp_extract_all(text, '[^a-z0-9 ]')) * 1.0 / n_chars AS punct_r,
-       |    least(1.0, len(string_split(text, ' ')) / 64.0) AS len_sat
-       |  FROM documents),
-       |l AS (SELECT doc_id,
-       |    -2.0 + stop_r * 4.0 - punct_r * 8.0 + len_sat * 2.0 AS logit
-       |  FROM f)
+  val qualityClassifierSql: String =
+    s"""WITH l AS (SELECT doc_id, $logitSql AS logit
+       |  FROM (${qualityFeaturesSql()}))
        |SELECT doc_id, CAST(floor(logit * 1e6 + 0.5) AS BIGINT) AS logit_micro,
        |  CAST(CASE WHEN logit > 0 THEN 1 ELSE 0 END AS BIGINT) AS keep
        |FROM l ORDER BY doc_id""".stripMargin
-  }
 
   /** Per-source student-vs-teacher confusion (r14 wave 28 — the SLICE
     * audit the global evaluation trio lacks: [[mlAuc]] /
@@ -687,23 +701,10 @@ object TextOps {
     * shape every gate face uses) plus the doc-keyed source join;
     * the confusion folds map-side onto O(sources) keys.
     */
-  def mlEvalSlices(s: SparkSession, dir: String): DataFrame = {
-    val meta = docs(s, dir).select(col("doc_id"), col("source"), col("n_chars"),
-      regexp_count(col("text"), lit("[^a-z0-9 ]")).as("n_punct"))
-    val toks = docs(s, dir)
-      .select(col("doc_id"), explode(words).as("w"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("w").isInCollection(stopwords), 1L).otherwise(0L)).as("n_stop"))
-    val stopR = col("n_stop") * 1.0 / col("n_tokens")
-    val punctR = col("n_punct") * 1.0 / col("n_chars")
-    val lenSat = least(lit(1.0), col("n_tokens") / 64.0)
-    val teacher = ((lit(1.0) - stopR) * (lit(1.0) - punctR) * lenSat >= 0.5)
-      .cast("long")
-    val student = (lit(-2.0) + stopR * 4.0 - punctR * 8.0 + lenSat * 2.0 > 0)
-      .cast("long")
-    meta.join(toks, "doc_id")
-      .select(col("source"), teacher.as("t"), student.as("p"))
+  def mlEvalSlices(s: SparkSession, dir: String): DataFrame =
+    qualityFeatures(s, dir, Seq(col("source"), col("n_chars")))
+      .select(col("source"), (qualityScore >= 0.5).cast("long").as("t"),
+        (logit > 0).cast("long").as("p"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("t") * col("p")).as("n_tp"),
@@ -714,23 +715,13 @@ object TextOps {
         col("n_fn"), col("n_tn"),
         expr("1000000 * (n_tp + n_tn) div n_docs").as("agree_ppm"))
       .orderBy(col("source"))
-  }
 
   /** DuckDB twin: the same shared features, both verdicts inline. */
-  val mlEvalSlicesSql: String = {
-    val stops = stopwords.map(w => s"'$w'").mkString(", ")
-    s"""WITH f AS (SELECT doc_id, source,
-       |    len(list_filter(string_split(text, ' '), w -> w IN ($stops))) * 1.0
-       |      / len(string_split(text, ' ')) AS stop_r,
-       |    len(regexp_extract_all(text, '[^a-z0-9 ]')) * 1.0 / n_chars AS punct_r,
-       |    least(1.0, len(string_split(text, ' ')) / 64.0) AS len_sat
-       |  FROM documents),
-       |v AS (SELECT source,
-       |    CASE WHEN (1.0 - stop_r) * (1.0 - punct_r) * len_sat >= 0.5
-       |      THEN 1 ELSE 0 END AS t,
-       |    CASE WHEN -2.0 + stop_r * 4.0 - punct_r * 8.0 + len_sat * 2.0 > 0
-       |      THEN 1 ELSE 0 END AS p
-       |  FROM f)
+  val mlEvalSlicesSql: String =
+    s"""WITH v AS (SELECT source,
+       |    CASE WHEN $qualityScoreSql >= 0.5 THEN 1 ELSE 0 END AS t,
+       |    CASE WHEN $logitSql > 0 THEN 1 ELSE 0 END AS p
+       |  FROM (${qualityFeaturesSql("source")}))
        |SELECT source, count(*) AS n_docs,
        |  CAST(sum(t * p) AS BIGINT) AS n_tp,
        |  CAST(sum((1 - t) * p) AS BIGINT) AS n_fp,
@@ -739,7 +730,6 @@ object TextOps {
        |  1000000 * CAST(sum(t * p) + sum((1 - t) * (1 - p)) AS BIGINT)
        |    // count(*) AS agree_ppm
        |FROM v GROUP BY source ORDER BY source""".stripMargin
-  }
 
   // ------------------------------------------------ quality ensemble
   /** Quality-ensemble disagreement ledger (r14 wave 19) — the table a
@@ -764,21 +754,9 @@ object TextOps {
     * lands on ≤16 pattern keys.
     */
   def qualityVote(s: SparkSession, dir: String): DataFrame = {
-    val meta = docs(s, dir).select(col("doc_id"), col("n_chars"),
-      regexp_count(col("text"), lit("[^a-z0-9 ]")).as("n_punct"))
-    val toks = docs(s, dir)
-      .select(col("doc_id"), explode(words).as("w"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("w").isInCollection(stopwords), 1L).otherwise(0L)).as("n_stop"))
-    val stopR = col("n_stop") * 1.0 / col("n_tokens")
-    val punctR = col("n_punct") * 1.0 / col("n_chars")
-    val lenSat = least(lit(1.0), col("n_tokens") / 64.0)
-    val logit = lit(-2.0) + stopR * 4.0 - punctR * 8.0 + lenSat * 2.0
-    val quality = (lit(1.0) - stopR) * (lit(1.0) - punctR) * lenSat
-    val gates12 = meta.join(toks, "doc_id")
+    val gates12 = qualityFeatures(s, dir)
       .select(col("doc_id"),
-        (quality >= 0.5).cast("long").as("g_gate"),
+        (qualityScore >= 0.5).cast("long").as("g_gate"),
         (logit > 0).cast("long").as("g_clf"))
     val gLang = textLangid(s, dir)
       .select(col("doc_id"), col("label_match").cast("long").as("g_lang"))
@@ -801,20 +779,11 @@ object TextOps {
 
   /** DuckDB twin: the four gates' own registered formulas recombined
     * over shared CTEs, same pattern fold. */
-  val qualityVoteSql: String = {
-    val stops = stopwords.map(w => s"'$w'").mkString(", ")
-    s"""WITH f AS (SELECT doc_id,
-       |    len(list_filter(string_split(text, ' '), w -> w IN ($stops))) * 1.0
-       |      / len(string_split(text, ' ')) AS stop_r,
-       |    len(regexp_extract_all(text, '[^a-z0-9 ]')) * 1.0 / n_chars AS punct_r,
-       |    least(1.0, len(string_split(text, ' ')) / 64.0) AS len_sat
-       |  FROM documents),
-       |g12 AS (SELECT doc_id,
-       |    CASE WHEN (1.0 - stop_r) * (1.0 - punct_r) * len_sat >= 0.5
-       |      THEN 1 ELSE 0 END AS g_gate,
-       |    CASE WHEN -2.0 + stop_r * 4.0 - punct_r * 8.0 + len_sat * 2.0 > 0
-       |      THEN 1 ELSE 0 END AS g_clf
-       |  FROM f),
+  val qualityVoteSql: String =
+    s"""WITH g12 AS (SELECT doc_id,
+       |    CASE WHEN $qualityScoreSql >= 0.5 THEN 1 ELSE 0 END AS g_gate,
+       |    CASE WHEN $logitSql > 0 THEN 1 ELSE 0 END AS g_clf
+       |  FROM (${qualityFeaturesSql()})),
        |t AS (SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents),
        |h AS (SELECT doc_id, lang,
        |  len(list_filter(ws, w -> w IN ('the','a','and','of','to','is'))) AS h_en,
@@ -845,7 +814,6 @@ object TextOps {
        |FROM g12 JOIN lg USING (doc_id) JOIN rp USING (doc_id) CROSS JOIN tot
        |GROUP BY g_gate, g_clf, g_lang, g_rep
        |ORDER BY g_gate DESC, g_clf DESC, g_lang DESC, g_rep DESC""".stripMargin
-  }
 
   // ---------------------------------------------------- calibration
   /** Calibration report for [[qualityClassifier]] against the gate it
@@ -879,24 +847,47 @@ object TextOps {
     * shape: scores are written once per model version, evals read the
     * table) while the registered faces keep computing it fresh.
     */
-  private[operators] def classifierScoredRel(s: SparkSession, dir: String): DataFrame = {
-    val meta = docs(s, dir).select(col("doc_id"), col("n_chars"),
-      regexp_count(col("text"), lit("[^a-z0-9 ]")).as("n_punct"))
-    val toks = docs(s, dir)
-      .select(col("doc_id"), explode(words).as("w"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("w").isInCollection(stopwords), 1L).otherwise(0L)).as("n_stop"))
-    val stopR = col("n_stop") * 1.0 / col("n_tokens")
-    val punctR = col("n_punct") * 1.0 / col("n_chars")
-    val lenSat = least(lit(1.0), col("n_tokens") / 64.0)
-    val logit = lit(-2.0) + stopR * 4.0 - punctR * 8.0 + lenSat * 2.0
-    val quality = (lit(1.0) - stopR) * (lit(1.0) - punctR) * lenSat
-    meta.join(toks, "doc_id")
+  private[operators] def classifierScoredRel(s: SparkSession, dir: String): DataFrame =
+    qualityFeatures(s, dir)
       .select(col("doc_id"),
         floor(logit * 1e6 + 0.5).cast("long").as("lm"),
-        (quality >= 0.5).cast("long").as("pass"))
+        (qualityScore >= 0.5).cast("long").as("pass"))
+
+  /** The gate features in exact milli-units beside the gate's pass
+    * bit, stacked to one (feature, v) row per feature — the
+    * decision-stump input of [[mlFeatureImportance]] and
+    * [[mlLearningCurve]]; `keys` ride along in front.
+    */
+  private def stackedMilli(features: DataFrame, keys: String*): DataFrame =
+    features
+      .select(keys.map(col) ++ Seq(
+        expr("n_stop * 1000 div n_tokens").as("stop_m"),
+        expr("n_punct * 1000 div n_chars").as("punct_m"),
+        least(lit(1000L), expr("n_tokens * 1000 div 64")).as("len_m"),
+        (qualityScore >= 0.5).cast("long").as("pass")): _*)
+      .selectExpr(keys ++ Seq("stack(3, 'len_sat', len_m, 'punct_ratio', punct_m, " +
+        "'stopword_ratio', stop_m) AS (feature, v)", "pass"): _*)
+
+  /** DuckDB twin of [[stackedMilli]] over the features CTE `f`: the
+    * CTEs `x` (milli features) and `st` (stacked). */
+  private def stackedMilliSql(keys: String*): String = {
+    val k = keys.map(_ + ", ").mkString
+    s"""x AS (SELECT $k
+       |    CAST(n_stop AS BIGINT) * 1000 // n_tokens AS stop_m,
+       |    CAST(n_punct AS BIGINT) * 1000 // n_chars AS punct_m,
+       |    least(1000, CAST(n_tokens AS BIGINT) * 1000 // 64) AS len_m,
+       |    CASE WHEN $qualityScoreSql >= 0.5 THEN 1 ELSE 0 END AS pass
+       |  FROM f),
+       |st AS (SELECT $k'len_sat' AS feature, len_m AS v, pass FROM x
+       |  UNION ALL SELECT $k'punct_ratio', punct_m, pass FROM x
+       |  UNION ALL SELECT $k'stopword_ratio', stop_m, pass FROM x)""".stripMargin
   }
+
+  /** DuckDB twin of [[classifierScoredRel]]. */
+  private val classifierScoredSql: String =
+    s"""SELECT doc_id, CAST(floor(($logitSql) * 1e6 + 0.5) AS BIGINT) AS lm,
+       |    CASE WHEN $qualityScoreSql >= 0.5 THEN 1 ELSE 0 END AS pass
+       |  FROM (${qualityFeaturesSql()})""".stripMargin
 
   private def classifierScoredShared(s: SparkSession, dir: String): DataFrame =
     SharedRel(s, "classifierScored|" + dir, docsSig(s, dir)) {
@@ -919,26 +910,14 @@ object TextOps {
       .orderBy(col("bucket"))
   }
 
-  val mlCalibrationSql: String = {
-    val stops = stopwords.map(w => s"'$w'").mkString(", ")
-    s"""WITH f AS (SELECT doc_id,
-       |    len(list_filter(string_split(text, ' '), w -> w IN ($stops))) * 1.0
-       |      / len(string_split(text, ' ')) AS stop_r,
-       |    len(regexp_extract_all(text, '[^a-z0-9 ]')) * 1.0 / n_chars AS punct_r,
-       |    least(1.0, len(string_split(text, ' ')) / 64.0) AS len_sat
-       |  FROM documents),
-       |x AS (SELECT
-       |    CAST(floor((-2.0 + stop_r * 4.0 - punct_r * 8.0 + len_sat * 2.0) * 1e6 + 0.5) AS BIGINT)
-       |      + 16000000 AS lm_shift,
-       |    CASE WHEN (1.0 - stop_r) * (1.0 - punct_r) * len_sat >= 0.5
-       |      THEN 1 ELSE 0 END AS pass
-       |  FROM f)
+  val mlCalibrationSql: String =
+    s"""WITH x AS (SELECT lm + 16000000 AS lm_shift, pass
+       |  FROM ($classifierScoredSql))
        |SELECT lm_shift // 500000 AS bucket, count(*) AS n_docs,
        |  CAST(sum(lm_shift) // count(*) AS BIGINT) - 16000000 AS mean_logit_micro,
        |  CAST(sum(pass) AS BIGINT) AS n_pass,
        |  (CAST(sum(pass) AS BIGINT) * 1000000) // count(*) AS pass_ppm
        |FROM x GROUP BY 1 ORDER BY 1""".stripMargin
-  }
 
   // -------------------------------------------------------- AUC
   /** Exact Mann-Whitney AUC of [[qualityClassifier]] against the gate
@@ -988,19 +967,8 @@ object TextOps {
           .as("auc_ppm"))
   }
 
-  val mlAucSql: String = {
-    val stops = stopwords.map(w => s"'$w'").mkString(", ")
-    s"""WITH f AS (SELECT doc_id,
-       |    len(list_filter(string_split(text, ' '), w -> w IN ($stops))) * 1.0
-       |      / len(string_split(text, ' ')) AS stop_r,
-       |    len(regexp_extract_all(text, '[^a-z0-9 ]')) * 1.0 / n_chars AS punct_r,
-       |    least(1.0, len(string_split(text, ' ')) / 64.0) AS len_sat
-       |  FROM documents),
-       |x AS (SELECT
-       |    CAST(floor((-2.0 + stop_r * 4.0 - punct_r * 8.0 + len_sat * 2.0) * 1e6 + 0.5) AS BIGINT) AS lm,
-       |    CASE WHEN (1.0 - stop_r) * (1.0 - punct_r) * len_sat >= 0.5
-       |      THEN 1 ELSE 0 END AS pass
-       |  FROM f),
+  val mlAucSql: String =
+    s"""WITH x AS ($classifierScoredSql),
        |g AS (SELECT lm, CAST(sum(pass) AS BIGINT) AS pos,
        |    CAST(sum(1 - pass) AS BIGINT) AS neg
        |  FROM x GROUP BY lm),
@@ -1013,7 +981,6 @@ object TextOps {
        |  CAST(sum(CAST(pos AS HUGEINT) * (2 * cnb + neg)) * 1000000
        |    // (2 * CAST(sum(pos) AS HUGEINT) * CAST(sum(neg) AS BIGINT)) AS BIGINT) AS auc_ppm
        |FROM c""".stripMargin
-  }
 
   // ---------------------------------------------------- PR curve
   /** Precision-recall operating table for [[qualityClassifier]]
@@ -1057,20 +1024,9 @@ object TextOps {
       .orderBy(col("thr_bucket"))
   }
 
-  val mlPrCurveSql: String = {
-    val stops = stopwords.map(w => s"'$w'").mkString(", ")
-    s"""WITH f AS (SELECT doc_id,
-       |    len(list_filter(string_split(text, ' '), w -> w IN ($stops))) * 1.0
-       |      / len(string_split(text, ' ')) AS stop_r,
-       |    len(regexp_extract_all(text, '[^a-z0-9 ]')) * 1.0 / n_chars AS punct_r,
-       |    least(1.0, len(string_split(text, ' ')) / 64.0) AS len_sat
-       |  FROM documents),
-       |x AS (SELECT
-       |    (CAST(floor((-2.0 + stop_r * 4.0 - punct_r * 8.0 + len_sat * 2.0) * 1e6 + 0.5) AS BIGINT)
-       |      + 16000000) // 500000 AS bucket,
-       |    CASE WHEN (1.0 - stop_r) * (1.0 - punct_r) * len_sat >= 0.5
-       |      THEN 1 ELSE 0 END AS pass
-       |  FROM f),
+  val mlPrCurveSql: String =
+    s"""WITH x AS (SELECT (lm + 16000000) // 500000 AS bucket, pass
+       |  FROM ($classifierScoredSql)),
        |h AS (SELECT bucket, count(*) AS bn, CAST(sum(pass) AS BIGINT) AS bp
        |  FROM x GROUP BY 1),
        |c AS (SELECT *,
@@ -1083,7 +1039,6 @@ object TextOps {
        |  tp * 1000000 // pos AS recall_ppm,
        |  2 * tp * 1000000 // (pp + pos) AS f1_ppm
        |FROM c ORDER BY thr_bucket""".stripMargin
-  }
 
   // -------------------------------------------- feature importance
   /** Single-split gini importance for the quality-gate features (r14
@@ -1107,25 +1062,7 @@ object TextOps {
     * corpus pass, no corpus-sized shuffle beyond the fold.
     */
   def mlFeatureImportance(s: SparkSession, dir: String): DataFrame = {
-    val meta = docs(s, dir).select(col("doc_id"), col("n_chars"),
-      regexp_count(col("text"), lit("[^a-z0-9 ]")).as("n_punct"))
-    val toks = docs(s, dir)
-      .select(col("doc_id"), explode(words).as("w"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("w").isInCollection(stopwords), 1L).otherwise(0L)).as("n_stop"))
-    val stopR = col("n_stop") * 1.0 / col("n_tokens")
-    val punctR = col("n_punct") * 1.0 / col("n_chars")
-    val lenSat = least(lit(1.0), col("n_tokens") / 64.0)
-    val quality = (lit(1.0) - stopR) * (lit(1.0) - punctR) * lenSat
-    val hist = meta.join(toks, "doc_id")
-      .select(
-        expr("n_stop * 1000 div n_tokens").as("stop_m"),
-        expr("n_punct * 1000 div n_chars").as("punct_m"),
-        least(lit(1000L), expr("n_tokens * 1000 div 64")).as("len_m"),
-        (quality >= 0.5).cast("long").as("pass"))
-      .selectExpr("stack(3, 'len_sat', len_m, 'punct_ratio', punct_m, " +
-        "'stopword_ratio', stop_m) AS (feature, v)", "pass")
+    val hist = stackedMilli(qualityFeatures(s, dir))
       .groupBy(col("feature"), least(lit(9L), expr("v div 100")).as("bucket"))
       .agg(count(lit(1)).as("bn"), sum(col("pass")).as("bp"))
     val tot = hist.groupBy(col("feature"))
@@ -1153,28 +1090,12 @@ object TextOps {
   }
 
   val mlFeatureImportanceSql: String = {
-    val stops = stopwords.map(w => s"'$w'").mkString(", ")
     def gini(n: String, p: String): String =
       s"1000000 - CAST((CAST($p AS HUGEINT) * $p + " +
         s"CAST($n - $p AS HUGEINT) * ($n - $p)) * 1000000 // " +
         s"(CAST($n AS HUGEINT) * $n) AS BIGINT)"
-    s"""WITH f AS (SELECT doc_id,
-       |    len(list_filter(string_split(text, ' '), w -> w IN ($stops))) AS n_stop,
-       |    len(string_split(text, ' ')) AS n_tokens,
-       |    len(regexp_extract_all(text, '[^a-z0-9 ]')) AS n_punct, n_chars
-       |  FROM documents),
-       |x AS (SELECT
-       |    CAST(n_stop AS BIGINT) * 1000 // n_tokens AS stop_m,
-       |    CAST(n_punct AS BIGINT) * 1000 // n_chars AS punct_m,
-       |    least(1000, CAST(n_tokens AS BIGINT) * 1000 // 64) AS len_m,
-       |    CASE WHEN (1.0 - n_stop * 1.0 / n_tokens)
-       |        * (1.0 - n_punct * 1.0 / n_chars)
-       |        * least(1.0, n_tokens / 64.0) >= 0.5
-       |      THEN 1 ELSE 0 END AS pass
-       |  FROM f),
-       |st AS (SELECT 'len_sat' AS feature, len_m AS v, pass FROM x
-       |  UNION ALL SELECT 'punct_ratio', punct_m, pass FROM x
-       |  UNION ALL SELECT 'stopword_ratio', stop_m, pass FROM x),
+    s"""WITH f AS (${qualityFeaturesSql()}),
+       |${stackedMilliSql()},
        |hist AS (SELECT feature, least(9, v // 100) AS bucket,
        |    count(*) AS bn, CAST(sum(pass) AS BIGINT) AS bp
        |  FROM st GROUP BY 1, 2),
@@ -1414,17 +1335,12 @@ object TextOps {
       .orderBy(col("lang"), col("bucket"))
   }
 
-  /** DuckDB twin: the quality CTE replicates [[textQualitySql]]'s
-    * formula verbatim; the tercile uses native ntile(3) with the same
+  /** DuckDB twin: the gate reads the shared [[qualityCte]]; the
+    * tercile uses native ntile(3) with the same
     * (bpt, doc_id) deal order [[Analytics.ntileAt]] reconstructs.
     */
-  val textCcnetBucketsSql: String = {
-    val stops = stopwords.map(w => s"'$w'").mkString(", ")
-    s"""WITH q AS (SELECT doc_id,
-       |    (1.0 - len(list_filter(string_split(text, ' '), w -> w IN ($stops))) * 1.0 / len(string_split(text, ' ')))
-       |      * (1.0 - len(regexp_extract_all(text, '[^a-z0-9 ]')) * 1.0 / n_chars)
-       |      * least(1.0, len(string_split(text, ' ')) / 64.0) AS quality_score
-       |  FROM documents),
+  val textCcnetBucketsSql: String =
+    s"""WITH $qualityCte,
        |ref AS (SELECT unnest(string_split(d.text, ' ')) AS w
        |  FROM documents d JOIN q ON d.doc_id = q.doc_id
        |  WHERE q.quality_score >= 0.5),
@@ -1448,7 +1364,6 @@ object TextOps {
        |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
        |  min(bpt_milli) AS min_bpt_milli, max(bpt_milli) AS max_bpt_milli
        |FROM k GROUP BY 1, 2 ORDER BY lang, bucket""".stripMargin
-  }
 
   /** Classifier-evaluation harness over the language-ID face — the
     * confusion accounting every model gate reports: per class (union
@@ -2883,24 +2798,7 @@ object TextOps {
     val hb = (GraftSqlShim.column(graft.functions.StringPolyHash(
       GraftSqlShim.expression(concat(lit("lc|"), col("text"))),
       GraftSqlShim.expression(lit(1000000007L)))) % 8).as("hb")
-    val meta = docs(s, dir).select(col("doc_id"), col("n_chars"), hb,
-      regexp_count(col("text"), lit("[^a-z0-9 ]")).as("n_punct"))
-    val toks = docs(s, dir)
-      .select(col("doc_id"), explode(words).as("w"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("w").isInCollection(stopwords), 1L).otherwise(0L)).as("n_stop"))
-    val quality = (lit(1.0) - col("n_stop") * 1.0 / col("n_tokens")) *
-      (lit(1.0) - col("n_punct") * 1.0 / col("n_chars")) *
-      least(lit(1.0), col("n_tokens") / 64.0)
-    val stacked = meta.join(toks, "doc_id")
-      .select(col("hb"),
-        expr("n_stop * 1000 div n_tokens").as("stop_m"),
-        expr("n_punct * 1000 div n_chars").as("punct_m"),
-        least(lit(1000L), expr("n_tokens * 1000 div 64")).as("len_m"),
-        (quality >= 0.5).cast("long").as("pass"))
-      .selectExpr("hb", "stack(3, 'len_sat', len_m, 'punct_ratio', punct_m, " +
-        "'stopword_ratio', stop_m) AS (feature, v)", "pass")
+    val stacked = stackedMilli(qualityFeatures(s, dir, Seq(col("n_chars"), hb)), "hb")
       .groupBy(col("hb"), col("feature"),
         least(lit(9L), expr("v div 100")).as("bucket"))
       .agg(count(lit(1)).as("bn"), sum(col("pass")).as("bp"))
@@ -2957,31 +2855,15 @@ object TextOps {
   /** DuckDB twin: same fold deal, nested histogram sums, HUGEINT gini
     * staging, argmin winner, holdout scoring. */
   val mlLearningCurveSql: String = {
-    val stops = stopwords.map(w => s"'$w'").mkString(", ")
     def gini(n: String, p: String): String =
       s"1000000 - (CAST($p AS HUGEINT) * $p + " +
         s"CAST($n - $p AS HUGEINT) * ($n - $p)) * 1000000 // " +
         s"(CAST($n AS HUGEINT) * $n)"
-    s"""WITH f AS (SELECT doc_id,
-       |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |      list_transform(string_split('lc|' || text, ''), c -> CAST(ascii(c) AS BIGINT))),
-       |      (a, b) -> (a * 31 + b) % 1000000007) % 8 AS hb,
-       |    len(list_filter(string_split(text, ' '), w -> w IN ($stops))) AS n_stop,
-       |    len(string_split(text, ' ')) AS n_tokens,
-       |    len(regexp_extract_all(text, '[^a-z0-9 ]')) AS n_punct, n_chars
-       |  FROM documents),
-       |x AS (SELECT hb,
-       |    CAST(n_stop AS BIGINT) * 1000 // n_tokens AS stop_m,
-       |    CAST(n_punct AS BIGINT) * 1000 // n_chars AS punct_m,
-       |    least(1000, CAST(n_tokens AS BIGINT) * 1000 // 64) AS len_m,
-       |    CASE WHEN (1.0 - n_stop * 1.0 / n_tokens)
-       |        * (1.0 - n_punct * 1.0 / n_chars)
-       |        * least(1.0, n_tokens / 64.0) >= 0.5
-       |      THEN 1 ELSE 0 END AS pass
-       |  FROM f),
-       |st AS (SELECT hb, 'len_sat' AS feature, len_m AS v, pass FROM x
-       |  UNION ALL SELECT hb, 'punct_ratio', punct_m, pass FROM x
-       |  UNION ALL SELECT hb, 'stopword_ratio', stop_m, pass FROM x),
+    val hb = "list_reduce(list_prepend(CAST(0 AS BIGINT), " +
+      "list_transform(string_split('lc|' || text, ''), c -> CAST(ascii(c) AS BIGINT))), " +
+      "(a, b) -> (a * 31 + b) % 1000000007) % 8 AS hb"
+    s"""WITH f AS (${qualityFeaturesSql(hb)}),
+       |${stackedMilliSql("hb")},
        |stacked AS (SELECT hb, feature, least(9, v // 100) AS bucket,
        |    count(*) AS bn, CAST(sum(pass) AS BIGINT) AS bp
        |  FROM st GROUP BY 1, 2, 3),

@@ -3175,8 +3175,8 @@ object EventStreams {
     * MEASURED key cardinality on this corpus (for NoTimeout FMGWS
     * twins the live upper bound; for watermarked ops the max single-day
     * bound, ≥ any watermark window here), the per-key state-row size
-    * (MEASURED UnsafeRow encoder bytes per state class — see
-    * graft.DebugStateSize — plus ~48 B store key/version overhead;
+    * (MEASURED UnsafeRow encoder bytes per state class, pinned by
+    * StreamingSpec — plus ~48 B store key/version overhead;
     * the two map-valued states, topk's per-type count map and
     * quantile's bucket map, are sized from their measured 17 B/entry
     * rate and the corpus's own bucket drivers), and the
@@ -3252,8 +3252,8 @@ object EventStreams {
       ("stream_ab_lift", "user", "n_users", 72L, "live"),
       ("stream_uplift", "user", "n_users", 88L, "live"),
       ("stream_did", "user", "n_users", 72L, "live"),
-      ("stream_attribution", "user", "n_users", 104L, "live"),
-      ("stream_merge_delete", "user", "n_users", 72L, "live"),
+      ("stream_attribution", "user", "n_users", 72L, "live"),
+      ("stream_merge_delete", "user", "n_users", 80L, "live"),
       ("stream_scd1", "user", "n_users", 72L, "live"),
       ("stream_scd2", "user", "n_users", 88L, "live"),
       ("stream_dedup", "user_type_watermark", "max_day_user_type", 88L, "live"),
@@ -3262,7 +3262,7 @@ object EventStreams {
       ("stream_forecast", "event_type", "n_types", 80L, "live"),
       ("stream_cusum", "event_type", "n_types", 64L, "live"),
       ("stream_gap_fill", "event_type", "n_types", 64L, "live"),
-      ("stream_ewma", "event_type", "n_types", 72L, "live"),
+      ("stream_ewma", "event_type", "n_types", 288L, "live"),
       ("stream_anomaly", "event_type", "n_types", 96L, "live"),
       ("stream_window_agg", "live_hour_windows", "windows_live", 80L, "live"),
       ("stream_dau", "day", "n_days", 592L, "live"),
@@ -3273,7 +3273,7 @@ object EventStreams {
       ("stream_cms_cells", "sketch_cells", "cms", 80L, "live"),
       ("stream_hll_registers", "sketch_registers", "hll", 80L, "live"),
       ("stream_frame_churn", "canvas_cell", "canvas", 72L, "live"),
-      ("stream_pack", "global", "global", 96L, "live"),
+      ("stream_pack", "global", "global", 104L, "live"),
       ("stream_bandit", "global", "global", 96L, "live"),
       ("stream_enrich", "stateless", "zero", 0L, "live"))
       .toDF("stream_key", "key_domain", "driver", "bytes0", "bdriver")
@@ -3322,8 +3322,8 @@ object EventStreams {
       ("stream_ab_lift", "user", "n_users", 72L, "live"),
       ("stream_uplift", "user", "n_users", 88L, "live"),
       ("stream_did", "user", "n_users", 72L, "live"),
-      ("stream_attribution", "user", "n_users", 104L, "live"),
-      ("stream_merge_delete", "user", "n_users", 72L, "live"),
+      ("stream_attribution", "user", "n_users", 72L, "live"),
+      ("stream_merge_delete", "user", "n_users", 80L, "live"),
       ("stream_scd1", "user", "n_users", 72L, "live"),
       ("stream_scd2", "user", "n_users", 88L, "live"),
       ("stream_dedup", "user_type_watermark", "max_day_user_type", 88L, "live"),
@@ -3332,7 +3332,7 @@ object EventStreams {
       ("stream_forecast", "event_type", "n_types", 80L, "live"),
       ("stream_cusum", "event_type", "n_types", 64L, "live"),
       ("stream_gap_fill", "event_type", "n_types", 64L, "live"),
-      ("stream_ewma", "event_type", "n_types", 72L, "live"),
+      ("stream_ewma", "event_type", "n_types", 288L, "live"),
       ("stream_anomaly", "event_type", "n_types", 96L, "live"),
       ("stream_window_agg", "live_hour_windows", "windows_live", 80L, "live"),
       ("stream_dau", "day", "n_days", 592L, "live"),
@@ -3343,7 +3343,7 @@ object EventStreams {
       ("stream_cms_cells", "sketch_cells", "cms", 80L, "live"),
       ("stream_hll_registers", "sketch_registers", "hll", 80L, "live"),
       ("stream_frame_churn", "canvas_cell", "canvas", 72L, "live"),
-      ("stream_pack", "global", "global", 96L, "live"),
+      ("stream_pack", "global", "global", 104L, "live"),
       ("stream_bandit", "global", "global", 96L, "live"),
       ("stream_enrich", "stateless", "zero", 0L, "live"))
       .map { case (k, d, dr, b, bd) => s"('$k', '$d', '$dr', $b, '$bd')" }

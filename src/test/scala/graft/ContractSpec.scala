@@ -115,18 +115,22 @@ class ContractSpec extends AnyFunSuite {
     assert(copies.isEmpty, copies.mkString("use graft.plans.SessionMemo instead:\n", "\n", ""))
   }
 
+  /** A source file's code lines, trimmed, comment lines skipped. */
+  private def code(path: java.nio.file.Path): String = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.readAllLines(path).asScala.map(_.trim)
+      .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+      .mkString("\n")
+  }
+  private def copies(src: String, needle: String): Int =
+    java.util.regex.Pattern.quote(needle).r.findAllIn(src).length
+  private val mainRoot = java.nio.file.Paths.get("src/main/scala/graft")
+
   test("Geo writes each fold decision once on the DataFrame side and once in SQL") {
     // the DataFrame side writes a decision as a Scala expression, the
     // DuckDB twins as interpolated SQL text (`${X1 - X0}`, `x >= $X0`);
     // a new Geo face composes the fold stages instead of adding a copy
-    import scala.jdk.CollectionConverters._
-    val code = java.nio.file.Files.readAllLines(
-        java.nio.file.Paths.get("src/main/scala/graft/operators/Geo.scala"))
-      .asScala.map(_.trim)
-      .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
-      .mkString("\n")
-    def copies(needle: String): Int =
-      java.util.regex.Pattern.quote(needle).r.findAllIn(code).length
+    val geo = code(mainRoot.resolve("operators/Geo.scala"))
     val expected = Seq(
       // binning denominators: one DataFrame copy plus one SQL copy
       "X1 - X0" -> 2, "${X1 - X0}" -> 1, "Y1 - Y0" -> 2, "${Y1 - Y0}" -> 1,
@@ -134,7 +138,7 @@ class ContractSpec extends AnyFunSuite {
       "col(\"x\") >= X0" -> 1, "x >= $X0" -> 1,
       "unix_micros(ts) div 86400000000" -> 1, "epoch_us(ts) // 86400000000" -> 1,
       "date_add(DATE'1970-01-01'" -> 1, "DATE '1970-01-01' +" -> 1)
-    val off = expected.collect { case (n, k) if copies(n) != k => s"$n: ${copies(n)} (want $k)" }
+    val off = expected.collect { case (n, k) if copies(geo, n) != k => s"$n: ${copies(geo, n)} (want $k)" }
     assert(off.isEmpty, off.mkString("Geo.scala repeats a stage decision:\n", "\n", ""))
   }
 
@@ -143,17 +147,10 @@ class ContractSpec extends AnyFunSuite {
     // trainers one rewrite per side, and every fixpoint loop routes
     // through Checkpoints.fixpoint, which alone owns the cap and error
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    def code(path: java.nio.file.Path): String =
-      java.nio.file.Files.readAllLines(path).asScala.map(_.trim)
-        .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
-        .mkString("\n")
-    def copies(src: String, needle: String): Int =
-      java.util.regex.Pattern.quote(needle).r.findAllIn(src).length
-    val dedup = code(root.resolve("operators/Dedup.scala"))
-    val text = code(root.resolve("operators/TextOps.scala"))
-    val checkpoints = root.resolve("plans/Checkpoints.scala")
-    val others = java.nio.file.Files.walk(root).iterator().asScala
+    val dedup = code(mainRoot.resolve("operators/Dedup.scala"))
+    val text = code(mainRoot.resolve("operators/TextOps.scala"))
+    val checkpoints = mainRoot.resolve("plans/Checkpoints.scala")
+    val others = java.nio.file.Files.walk(mainRoot).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") && p != checkpoints)
       .map(code).mkString("\n")
     val expected = Seq(
@@ -168,5 +165,37 @@ class ContractSpec extends AnyFunSuite {
     val off = expected.collect { case (where, src, n, k) if copies(src, n) != k =>
       s"$where: $n: ${copies(src, n)} (want $k)" }
     assert(off.isEmpty, off.mkString("a loop decision is written more than once:\n", "\n", ""))
+  }
+
+  test("the forecast ladder and the quality feature pass are written once per side") {
+    // every ladder face composes AnalyticsForecast's grid, prior-day
+    // windows, last_day anchor, Holt list folds and paired ledger;
+    // every quality face composes TextOps' feature pass, and every
+    // oracle gating on quality_score reads TextOps.qualityCte
+    import scala.jdk.CollectionConverters._
+    val forecast = code(mainRoot.resolve("operators/AnalyticsForecast.scala"))
+    val operators = java.nio.file.Files.list(mainRoot.resolve("operators")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).map(code).mkString("\n")
+    val expected = Seq(
+      // the daily grid, DataFrame then SQL
+      ("AnalyticsForecast", forecast, """.groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))""", 1),
+      ("AnalyticsForecast", forecast, "CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2", 1),
+      // the leak-free expanding frame and the last_day anchor
+      ("AnalyticsForecast", forecast, "rowsBetween(Window.unboundedPreceding, -1)", 1),
+      ("AnalyticsForecast", forecast, "UNBOUNDED PRECEDING AND 1 PRECEDING", 1),
+      ("AnalyticsForecast", forecast, """max(col("day")).as("last_day")""", 1),
+      ("AnalyticsForecast", forecast, "(SELECT max(day) FROM", 1),
+      // the DuckDB Holt list folds' init arm, and the paired ledger
+      ("AnalyticsForecast", forecast, "CAST(1000 * x[3] AS BIGINT)", 1),
+      ("AnalyticsForecast", forecast, """.as("gain_milli")""", 1),
+      ("AnalyticsForecast", forecast, "AS gain_milli", 1),
+      // the quality feature pass, DataFrame then SQL, and the SQL stopword literal
+      ("operators", operators, """regexp_count(col("text"), lit("[^a-z0-9 ]"))""", 1),
+      ("operators", operators, "isInCollection(stopwords)", 1),
+      ("operators", operators, "len(regexp_extract_all(text, '[^a-z0-9 ]'))", 1),
+      ("operators", operators, """stopwords.map(w => s"'$w'")""", 1))
+    val off = expected.collect { case (where, src, n, k) if copies(src, n) != k =>
+      s"$where: $n: ${copies(src, n)} (want $k)" }
+    assert(off.isEmpty, off.mkString("a forecast or quality decision is written more than once:\n", "\n", ""))
   }
 }

@@ -1109,6 +1109,25 @@ class PlanShapeSpec extends SparkSpec {
       s"pipeline_feature_build: encoding join must broadcast:\n$plan")
   }
 
+  test("the benchmark's geo_job and corpus_churn keys stay within their action counts") {
+    // every action is a driver-synchronized job round; the ceilings are
+    // the counts `graft.Tool explain` reports for a fresh session on
+    // this corpus (an artifact an earlier test already built only
+    // lowers a count). pipeline_pretrain_build reads textQualityShared.
+    val ceilings = Seq(
+      "map_fanout" -> 1, "pipeline_frame_build" -> 2, "pipeline_job_build" -> 2,
+      "reduce_assemble" -> 1, "pipeline_frame_incremental" -> 2,
+      "pipeline_job_incremental" -> 2, "geo_frame_churn" -> 2,
+      "pipeline_pretrain_build" -> 27, "dedup_minhash_lsh" -> 1,
+      "dedup_span_exact" -> 1, "graph_components_incremental" -> 10,
+      "tokenize_fertility" -> 4)
+    val over = ceilings.flatMap { case (key, most) =>
+      val n = Tool.actionsOf(spark)(Tool.runToNoop(spark, sf, key)).size
+      if (n > most) Some(s"$key: $n actions (ceiling $most)") else None
+    }
+    assert(over.isEmpty, over.mkString("\n"))
+  }
+
   test("SessionMemo keys every artifact kind per session and keeps one entry per id") {
     import graft.plans.{SessionMemo, SharedRel}
     import org.apache.spark.sql.SparkSession

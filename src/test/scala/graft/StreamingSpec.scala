@@ -1319,7 +1319,10 @@ class StreamingSpec extends SparkSpec {
     assert(quant._4 == 56L + 17L * maxBuckets,
       "quantile map bytes must come from the measured max bucket day")
     // the fixed-size constants are measured, not guessed: per state
-    // class, constant == UnsafeRow encoder bytes + 48 B store overhead
+    // class, constant == UnsafeRow encoder bytes + 48 B store overhead.
+    // Variable-size states are measured at their steady-state size: a
+    // 31-day retention window, a full 24-hour EWMA ring, a "click"
+    // channel, a 16-digit Σx² string (sf0.1's largest has 15).
     def encBytes[T](v: T)(implicit e: org.apache.spark.sql.Encoder[T]): Long =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
           e.asInstanceOf[org.apache.spark.sql.catalyst.encoders.AgnosticEncoder[T]])
@@ -1331,12 +1334,25 @@ class StreamingSpec extends SparkSpec {
       "stream_funnel" -> encBytes(EventStreams.FunState(1L, 2L, 3L)),
       "stream_sessionize" -> encBytes(EventStreams.SessState(1L, 2L, 3L, 4L, 5L)),
       "stream_uplift" -> encBytes(EventStreams.UpState(1L, true, false, 2L)),
-      "stream_dau" -> encBytes(new Array[Long](64)))
-    pinned.foreach { case (k, measured) =>
-      val row = rows.find(_._1 == k).get
-      assert(row._4 == measured + 48L,
-        s"$k: constant ${row._4} != measured UnsafeRow $measured + 48")
-    }
+      "stream_dau" -> encBytes(new Array[Long](64)),
+      "stream_retention" -> encBytes(EventStreams.RetState(1, (0 until 31).toList)),
+      "stream_late_data" -> encBytes(EventStreams.HwmState(1L)),
+      "stream_ab_lift" -> encBytes(EventStreams.AbState(true, false)),
+      "stream_attribution" -> encBytes("click"),
+      "stream_scd1" -> encBytes(EventStreams.UpsertState(1L, 2L)),
+      "stream_scd2" -> encBytes(EventStreams.Scd2State(1L, 2L, 3L, 4L)),
+      "stream_merge_delete" -> encBytes(EventStreams.ChangeState(1L, 2L, true)),
+      "stream_forecast" -> encBytes(EventStreams.FcState(1L, 2L, 3L)),
+      "stream_cusum" -> encBytes(EventStreams.CusumState(1L)),
+      "stream_gap_fill" -> encBytes(1L),
+      "stream_ewma" -> encBytes(EventStreams.EwmaSt(1L, 2L, Seq.fill(24)(3L))),
+      "stream_anomaly" -> encBytes(EventStreams.AnomState(1L, 2L, "1234567890123456")),
+      "stream_frame_churn" -> encBytes(EventStreams.CellState(1L, 2L)),
+      "stream_pack" -> encBytes(EventStreams.PackSt(1L, 2L, 3L, 4L, 5L, 6L)),
+      "stream_bandit" -> encBytes(EventStreams.BanditState(1L, 2L, 3L, 4L, 5L)))
+    val off = pinned.map { case (k, measured) => (k, rows.find(_._1 == k).get._4, measured) }
+      .collect { case (k, c, m) if c != m + 48L => s"$k: constant $c != measured UnsafeRow $m + 48" }
+    assert(off.isEmpty, off.mkString("\n"))
     // the design property the ledger exists to show: no stream's state
     // grows with EVENTS — every n_keys is bounded by a sub-event driver
     val nEvents = ev.length.toLong
