@@ -292,7 +292,7 @@ trait AnalyticsForecast extends AnalyticsBase {
     * `last_day` anchor both read it, and without the checkpoint each
     * consumer re-derives the scan.
     */
-  private def dailyGrid(s: SparkSession, dir: String,
+  private[graft] def dailyGrid(s: SparkSession, dir: String,
       shape: DataFrame => DataFrame = identity): DataFrame =
     shape(events(s, dir)
       .select(col("event_type"), expr("unix_micros(ts) div 86400000000").as("day"))
@@ -309,11 +309,11 @@ trait AnalyticsForecast extends AnalyticsBase {
   private def priorDays(keys: String*): WindowSpec =
     Window.partitionBy(keys.map(col): _*).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, -1)
-  private def wFlat: WindowSpec = priorDays("event_type")
+  private[graft] def wFlat: WindowSpec = priorDays("event_type")
   private def wDow: WindowSpec = priorDays("event_type", "dow")
 
   /** The type's prior (day, n) cells in day order: the Holt folds' input. */
-  private def priorCells: Column =
+  private[graft] def priorCells: Column =
     sort_array(collect_list(struct(col("day"), col("n"))).over(wFlat))
 
   /** `scored` with the rolling origin's anchor `last_day` (the grid's
@@ -332,7 +332,7 @@ trait AnalyticsForecast extends AnalyticsBase {
 
   private def flatPred: Column = expr("cum_n div cum_d")
   private def seasPred: Column = expr("cum_nw div cum_dw")
-  private def holtPred: Column = expr(sparkFloorDiv("st.lv + st.tr", 1000))
+  private[graft] def holtPred: Column = expr(sparkFloorDiv("st.lv + st.tr", 1000))
   private def dampedPred: Column =
     expr(sparkFloorDiv("sd.lv + " + sparkFloorDiv("sd.tr", 2), 1000))
   private def hwPred: Column = expr(sparkFloorDiv(
@@ -362,7 +362,7 @@ trait AnalyticsForecast extends AnalyticsBase {
     * computed over the named prior-day frames `wf` (flat) and `wd`
     * (weekday; a frame no column uses is never bound).
     */
-  private def ladderSql(from: String, cols: String*): String = {
+  private[graft] def ladderSql(from: String, cols: String*): String = {
     val prior = "ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
     s"""WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
        |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
@@ -374,10 +374,10 @@ trait AnalyticsForecast extends AnalyticsBase {
        |    wd AS (PARTITION BY event_type, dow $prior))""".stripMargin
   }
   private val cumN = "CAST(sum(n) OVER wf AS BIGINT) AS cum_n"
-  private val cumD = "CAST(count(n) OVER wf AS BIGINT) AS cum_d"
+  private[graft] val cumD = "CAST(count(n) OVER wf AS BIGINT) AS cum_d"
   private val cumNw = "CAST(sum(n) OVER wd AS BIGINT) AS cum_nw"
   private val cumDw = "CAST(count(n) OVER wd AS BIGINT) AS cum_dw"
-  private val priorList = "list_sort(list({'day': day, 'n': n}) OVER wf) AS prior"
+  private[graft] val priorList = "list_sort(list({'day': day, 'n': n}) OVER wf) AS prior"
   private def pairedDaysSql(h: Int): String =
     s"day > last_day - $h AND cum_d >= 1 AND cum_dw >= 1"
 
@@ -568,7 +568,7 @@ trait AnalyticsForecast extends AnalyticsBase {
 
   /** DuckDB twin of [[holtFold]] (floor emulated wherever a dividend
     * can go negative, via [[duckFloorDiv]]). */
-  private lazy val duckHolt: String = {
+  private[graft] lazy val duckHolt: String = {
     val lv2 = duckFloorDiv("1000 * x[3] + acc[1] + acc[2]", 2)
     duckListFold(0, Seq(lv2, duckFloorDiv(s"$lv2 - acc[1] + acc[2]", 2)))
   }
@@ -592,7 +592,7 @@ trait AnalyticsForecast extends AnalyticsBase {
         s"CAST(CASE WHEN x[4] = $k THEN $s2 ELSE acc[${4 + k}] END AS BIGINT)"))
   }
 
-  private lazy val holtPredSql = duckFloorDiv("st[1] + st[2]", 1000)
+  private[graft] lazy val holtPredSql = duckFloorDiv("st[1] + st[2]", 1000)
   private lazy val dampedPredSql =
     duckFloorDiv(s"sd[1] + ${duckFloorDiv("sd[2]", 2)}", 1000)
   private lazy val hwPredSql =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.plans.{SessionMemo, SharedRel}
 import graft.sources.Tables
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis operators over the `documents` corpus (SURVEY.md §2).
   *
@@ -1479,27 +1480,29 @@ object TextOps {
     * replacement IS the greedy BPE merge, and the wrapping makes a
     * cross-boundary false match impossible (a match's interior `⎵⎵`
     * must align to a symbol boundary, so `l` and `r` are always
-    * complete symbols). Both engines' `replace` share these
-    * semantics, which is what lets the DuckDB oracle replay training
-    * bit-for-bit as [[BPE_MERGES]] unrolled CTE rounds.
+    * complete symbols). The driver trainer, the Spark replay faces and
+    * the DuckDB oracle all share these semantics, which is what lets
+    * the oracle replay training bit-for-bit as [[BPE_MERGES]] unrolled
+    * CTE rounds.
     *
     * == Scale design ==
     * The corpus is scanned ONCE (map-side-combined word counts onto
-    * Heaps-law vocabulary keys — the [[vocabBuild]] shuffle shape);
-    * every training round after that touches only the vocab relation:
-    * one pair-explode + groupBy (O(vocab · word_len) rows, map-side
-    * combinable) and a single-row collect of the winning pair. That
-    * is exactly how production BPE trainers work at corpus scale —
-    * the corpus contributes frequencies, the loop runs on the
-    * dictionary. The vocab relation is cached once; each round's
-    * merge is a narrow column rewrite on top of it.
+    * Heaps-law vocabulary keys — the [[vocabBuild]] shuffle shape) and
+    * the (word, freq, seq) vocab is collected once; every training
+    * round then runs on the driver over that dictionary, exactly how
+    * production BPE trainers work at corpus scale — the corpus
+    * contributes frequencies, the loop runs on the dictionary. One
+    * retrain is one job, whatever the budget. The driver holds
+    * vocab rows × (word + seq bytes) — see SCALING.md.
     */
-  /** Trained-merge memo (train-once model artifact, like the ANN
-    * codebooks): validated against the documents table's file
-    * signature, so a regenerated corpus retrains (and releases the
-    * stale merges) instead of serving them.
+  /** Trained-model memo (train-once model artifact, like the ANN
+    * codebooks): the ranked merges and the corpus alphabet, validated
+    * against the documents table's file signature, so a regenerated
+    * corpus retrains (and releases the stale model) instead of
+    * serving it.
     */
-  private val bpeMerges = new SessionMemo[Seq[(Long, String, String, String, Long)]]
+  private val bpeMerges =
+    new SessionMemo[(Seq[(Long, String, String, String, Long)], Seq[String])]
 
   /** The documents table's file signature — what every tokenizer and
     * quality artifact derives from. */
@@ -1527,54 +1530,90 @@ object TextOps {
   private def replayed(seq: Column, merges: Seq[(Long, String, String, String, Long)]): Column =
     merges.foldLeft(seq) { case (c, (_, l, r, _, _)) => merged(c, l, r) }
 
-  /** The merge-training loop shared by the BPE and WordPiece trainers:
-    * up to `budget` rounds over the cached [[bpeVocab]] relation. Each
-    * round `winner` reads the vocab's symbols as (s, freq) and collects
-    * the round's winning pair (l, r) plus its scores `T` — none once
-    * every word is one symbol — and the merge rewrites every `seq`.
-    * Returns (rank, l, r, lr, scores) per round.
+  /** Spark's string order (`UTF8String.compareTo`: unsigned UTF-8
+    * bytes, i.e. code point order). It differs from `String`'s UTF-16
+    * order on supplementary characters, so the driver trainers break
+    * ties with it to pick the winner Spark's and DuckDB's ORDER BY pick.
     */
-  private def trainedMerges[T](s: SparkSession, dir: String, budget: Int)
-      (winner: DataFrame => Option[(String, String, T)]): Seq[(Long, String, String, String, T)] = {
-    val vocab = bpeVocab(s, dir).cache()
+  private val sparkOrder: Ordering[String] =
+    (a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
+  /** The symbols of a delimited `seq`, as Spark's
+    * `split(trim(seq), "  ")` reads them: `trim` strips U+0020 only
+    * (`String.trim` strips every char ≤ U+0020) and split keeps
+    * trailing empty strings (limit −1). */
+  private def symbols(seq: String): Array[String] = {
+    var a = 0
+    var b = seq.length
+    while (a < b && seq.charAt(a) == ' ') a += 1
+    while (b > a && seq.charAt(b - 1) == ' ') b -= 1
+    seq.substring(a, b).split("  ", -1)
+  }
+
+  /** (l, r) → the frequency of each adjacent symbol pair over the
+    * (symbols, freq) vocab rows. */
+  private def adjacentPairs(rows: Seq[(Array[String], Long)]): Map[(String, String), Long] = {
+    val cnt = scala.collection.mutable.HashMap.empty[(String, String), Long]
+    for ((syms, f) <- rows; i <- 0 until syms.length - 1) {
+      val p = syms(i) -> syms(i + 1)
+      cnt(p) = cnt.getOrElse(p, 0L) + f
+    }
+    cnt.toMap
+  }
+
+  /** The collected (w, freq, seq) vocab of [[bpeVocab]] — the one job a
+    * merge training runs. */
+  private def collectedVocab(s: SparkSession, dir: String): Seq[(String, Long, String)] = {
+    import s.implicits._
+    bpeVocab(s, dir).as[(String, Long, String)].collect().toSeq
+  }
+
+  /** The merge-training loop shared by the BPE and WordPiece trainers,
+    * run on the driver: up to `budget` rounds over the collected
+    * [[bpeVocab]] rows. Each round `winner` reads the vocab's
+    * (symbols, freq) rows and picks the round's winning pair (l, r)
+    * plus its scores `T` — none once every word is one symbol — and
+    * the merge rewrites every `seq`. Returns (rank, l, r, lr, scores)
+    * per round.
+    */
+  private def trainedMerges[T](vocab: Seq[(String, Long, String)], budget: Int)
+      (winner: Seq[(Array[String], Long)] => Option[(String, String, T)])
+      : Seq[(Long, String, String, String, T)] = {
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, T)]
-    try {
-      var cur = vocab.select(col("seq"), col("freq"))
-      var exhausted = false
-      while (merges.size < budget && !exhausted)
-        winner(cur.select(split(trim(col("seq")), "  ").as("s"), col("freq"))) match {
-          case Some((l, r, t)) =>
-            merges += ((merges.size + 1L, l, r, l + r, t))
-            cur = cur.withColumn("seq", merged(col("seq"), l, r))
-          case None => exhausted = true // vocab fully merged before the budget
-        }
-    } finally vocab.unpersist()
+    var cur = vocab.map { case (_, f, seq) => (seq, f) }
+    var exhausted = false
+    while (merges.size < budget && !exhausted)
+      winner(cur.map { case (seq, f) => (symbols(seq), f) }) match {
+        case Some((l, r, t)) =>
+          merges += ((merges.size + 1L, l, r, l + r, t))
+          cur = cur.map { case (seq, f) => (seq.replace(s" $l  $r ", s" $l$r "), f) }
+        case None => exhausted = true // vocab fully merged before the budget
+      }
     merges.toSeq
   }
 
-  /** (l, r, cnt): the frequency of each adjacent symbol pair of the
-    * (s, freq) vocab symbols. */
-  private def pairCounts(syms: DataFrame): DataFrame =
-    syms.filter(size(col("s")) >= 2)
-      .select(col("freq"), explode(expr(
-        "transform(sequence(0, size(s)-2), i -> struct(s[i] as l, s[i+1] as r))")).as("p"))
-      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-      .agg(sum(col("freq")).as("cnt"))
-
-  /** Run (or reuse) the merge training loop; returns the ranked merge
-    * list. Training is [[BPE_MERGES]] rounds of pair-count + 1-row
-    * winner collect over the cached vocab relation.
+  /** Run (or reuse) the merge training; returns the ranked merge list
+    * and the corpus alphabet (the vocab's initial symbols but `</w>`,
+    * in [[sparkOrder]]). Training is one vocab collect, then
+    * [[BPE_MERGES]] driver rounds: the most frequent pair wins, ties
+    * broken by (l, r).
     */
-  private def trainedBpeMerges(s: SparkSession, dir: String): Seq[(Long, String, String, String, Long)] = {
-    import s.implicits._
+  private[graft] def trainedBpe(s: SparkSession, dir: String)
+      : (Seq[(Long, String, String, String, Long)], Seq[String]) =
     bpeMerges(s, "bpeMerges|" + dir, docsSig(s, dir)) {
-      trainedMerges(s, dir, BPE_MERGES) { syms =>
-        pairCounts(syms)
-          .orderBy(col("cnt").desc, col("l"), col("r"))
-          .limit(1).as[(String, String, Long)].collect().headOption
+      val vocab = collectedVocab(s, dir)
+      val pairOrder = Ordering.Tuple3(Ordering.Long, sparkOrder, sparkOrder)
+      val merges = trainedMerges(vocab, BPE_MERGES) { rows =>
+        adjacentPairs(rows).minByOption { case ((l, r), c) => (-c, l, r) }(pairOrder)
+          .map { case ((l, r), cnt) => (l, r, cnt) }
       }
+      val alphabet = vocab.flatMap(v => symbols(v._3)).distinct
+        .filter(_ != "</w>").sorted(sparkOrder)
+      (merges, alphabet)
     }
-  }
+
+  private def trainedBpeMerges(s: SparkSession, dir: String): Seq[(Long, String, String, String, Long)] =
+    trainedBpe(s, dir)._1
 
   def tokenizeBpe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1762,19 +1801,17 @@ object TextOps {
     *
     * == Scale design ==
     * The piece vocabulary is alphabet + [[BPE_MERGES]] entries —
-    * bounded model state, broadcast to every task (exactly how
-    * production tokenizers ship vocabs to workers); matching is a
+    * bounded model state, both read from the trained BPE model (the
+    * alphabet is the training vocab's initial symbols, so a memo hit
+    * runs no job), broadcast to every task (exactly how production
+    * tokenizers ship vocabs to workers); matching is a
     * tight per-word loop over the Heaps-law vocab relation, one scan,
     * no shuffle after the word count.
     */
   def tokenizeWordpiece(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     import org.apache.spark.sql.graftshim.GraftSqlShim
-    val merges = trainedBpeMerges(s, dir)
+    val (merges, alphabet) = trainedBpe(s, dir)
     val vocabRel = bpeVocab(s, dir)
-    val alphabet = vocabRel
-      .select(explode(split(col("w"), "")).as("c"))
-      .filter(col("c") =!= "").distinct().as[String].collect()
     val pieceSet = alphabet.toSet ++
       merges.map(_._4.replace("</w>", "")).filter(_.nonEmpty)
     // the matcher runs as a codegen'd expression (the minhash_sig
@@ -1917,9 +1954,8 @@ object TextOps {
   /** WordPiece merge TRAINING (r14 wave 18) — the likelihood-criterion
     * trainer that completes the tokenizer-family symmetry (BPE and
     * unigram-LM both have train faces; WordPiece previously had only
-    * the runtime matcher riding BPE's merges). Identical loop shape to
-    * [[tokenizeBpe]] — pair-count over the cached vocab relation, one
-    * 1-row winner collect per round — but the winner maximizes
+    * the runtime matcher riding BPE's merges). The same driver loop as
+    * [[tokenizeBpe]] ([[trainedMerges]]), but the winner maximizes
     * count(ab) / (count(a)·count(b)) (the training-corpus likelihood
     * gain of merging, Schuster & Nakajima 2012) instead of raw
     * count(ab): a pair whose halves rarely appear APART beats a merely
@@ -1930,11 +1966,11 @@ object TextOps {
     * the same documented rule on both engines.
     *
     * == Scale design ==
-    * The corpus contributes only the Heaps-law word-frequency relation
-    * (one scan, cached); each round adds a symbol-count aggregate
-    * (O(vocab·len) explode, map-side combinable to O(symbols) rows)
-    * broadcast twice into the O(pairs) relation — the loop never
-    * re-touches the corpus, exactly like the BPE trainer.
+    * The corpus contributes only the Heaps-law word-frequency vocab,
+    * collected once; each driver round adds an O(vocab·len) symbol
+    * count beside the pair count — one job per retrain, exactly like
+    * the BPE trainer. Scores are exact `BigInt` floors,
+    * as the oracle's HUGEINT `//` is.
     */
   private val WORDPIECE_MERGES = 12
 
@@ -1942,28 +1978,21 @@ object TextOps {
     new SessionMemo[Seq[(Long, String, String, String, Long, Long, Long, Long)]]
 
   private def trainedWordpieceMerges(s: SparkSession, dir: String)
-      : Seq[(Long, String, String, String, Long, Long, Long, Long)] = {
-    import s.implicits._
+      : Seq[(Long, String, String, String, Long, Long, Long, Long)] =
     wordpieceMerges(s, "wordpieceMerges|" + dir, docsSig(s, dir)) {
-      trainedMerges(s, dir, WORDPIECE_MERGES) { split0 =>
-        val syms = split0
-          .select(explode(col("s")).as("sym"), col("freq"))
-          .groupBy(col("sym")).agg(sum(col("freq")).as("scnt"))
-        pairCounts(split0)
-          .join(broadcast(syms.select(col("sym").as("l"), col("scnt").as("lcnt"))), "l")
-          .join(broadcast(syms.select(col("sym").as("r"), col("scnt").as("rcnt"))), "r")
-          .withColumn("score_e18", expr(
-            """CAST((CAST(cnt AS DECIMAL(38,0)) * 1000000000000000000)
-              | div (CAST(lcnt AS DECIMAL(38,0)) * rcnt) AS BIGINT)""".stripMargin))
-          .orderBy(col("score_e18").desc, col("l"), col("r"))
-          .limit(1)
-          .select(col("l"), col("r"), col("cnt"), col("lcnt"), col("rcnt"),
-            col("score_e18"))
-          .as[(String, String, Long, Long, Long, Long)].collect().headOption
-          .map { case (l, r, cnt, lc, rc, sc) => (l, r, (cnt, lc, rc, sc)) }
+      val e18 = BigInt(10).pow(18)
+      val scoreOrder = Ordering.Tuple3(Ordering.Long, sparkOrder, sparkOrder)
+      trainedMerges(collectedVocab(s, dir), WORDPIECE_MERGES) { rows =>
+        // symbol counts include single-symbol words
+        val scnt = rows.flatMap { case (syms, f) => syms.map(_ -> f) }
+          .groupMapReduce(_._1)(_._2)(_ + _)
+        val scored = adjacentPairs(rows).map { case ((l, r), cnt) =>
+          val (lc, rc) = (scnt(l), scnt(r))
+          (l, r, (cnt, lc, rc, (BigInt(cnt) * e18 / (BigInt(lc) * rc)).toLong))
+        }
+        scored.minByOption { case (l, r, t) => (-t._4, l, r) }(scoreOrder)
       }.map { case (k, l, r, lr, (cnt, lc, rc, sc)) => (k, l, r, lr, cnt, lc, rc, sc) }
     }
-  }
 
   def tokenizeWordpieceTrain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -2300,14 +2329,14 @@ object TextOps {
     * row_number best-state cut per (word, position).
     *
     * == Scale design ==
-    * The corpus is scanned once for the Heaps-law word counts;
-    * everything else rides the vocab relation. Substring seeding is
-    * a bounded explode (≤ 4·len per word) folded map-side onto piece
-    * keys; the model is O(alphabet + [[UNI_K]]) rows — MODEL-STATE
-    * collects only (the ANN-codebook pattern), broadcast into the
-    * per-word DP loop (a bounded mapPartitions like the WordPiece
-    * matcher, the sanctioned typed escape). EM rounds are fixed (1),
-    * each one segmentation pass + one O(pieces) aggregate.
+    * The corpus is scanned once for the Heaps-law word counts and the
+    * (word, freq) vocab is collected once; training then runs on the
+    * driver over that dictionary: substring seeding (≤ 4·len pieces
+    * per word), the round-1 Viterbi pass and the O(pieces) `used`
+    * re-mass. One retrain is one job, and no cached relation outlives
+    * it. The model is O(alphabet + [[UNI_K]]) pieces, broadcast into
+    * [[tokenizeUnigramSegments]]' per-word DP (a bounded mapPartitions
+    * like the WordPiece matcher, the sanctioned typed escape).
     */
   private val UNI_K = 64
   private val UNI_MAXP = 4
@@ -2356,38 +2385,28 @@ object TextOps {
   private def trainedUnigram(s: SparkSession, dir: String): Seq[(String, Long, Long, Long)] = {
     import s.implicits._
     uniModels(s, "unigramModel|" + dir, docsSig(s, dir)) {
-      val wv = uniWordFreq(s, dir).cache()
-      // seed: alphabet + top-K multi-char substrings by weighted mass.
-      // Both caches are dropped in the finally: Spark's cache manager
-      // matches plans by path, so a cache left behind would serve the
-      // pre-rewrite pieces to the next training on a rewritten corpus.
-      val sub = wv.select(col("freq"), explode(expr(
-          s"""flatten(transform(sequence(1, length(w)), i ->
-             |  transform(sequence(1, least($UNI_MAXP, length(w) - i + 1)),
-             |    l -> substring(w, i, l))))""".stripMargin)).as("piece"))
-        .groupBy(col("piece")).agg(sum(col("freq")).as("mass"))
-        .cache()
-      try {
-        val alpha = sub.filter(length(col("piece")) === 1)
-        val multi = sub.filter(length(col("piece")) >= 2)
-          .orderBy(col("mass").desc, col("piece")).limit(UNI_K)
-        // MODEL-STATE collect: O(alphabet + UNI_K) rows
-        val seed = alpha.union(multi).as[(String, Long)].collect().toSeq
-        val m1 = seed.map(_._2).sum
-        val cost1 = seed.map { case (p, m) => p -> (lg2(m1) - lg2(m)) }.toMap
-        // hard-EM round: usage mass from round-1 Viterbi segmentations
-        val seg1 = wv.as[(String, Long)].mapPartitions { it =>
-          it.map { case (w, f) =>
-            val (_, _, acc) = uniViterbi(w, cost1); (f, acc)
-          }
-        }.toDF("freq", "acc")
-        val used = seg1.select(col("freq"), explode(split(col("acc"), " ")).as("piece"))
-          .groupBy(col("piece")).agg(sum(col("freq")).as("used"))
-          .as[(String, Long)].collect().toMap // O(pieces)
-        val mass2 = seed.map { case (p, sm) => (p, sm, used.getOrElse(p, 0L) + 1L) }
-        val m2 = mass2.map(_._3).sum
-        mass2.map { case (p, sm, em) => (p, sm, em, lg2(m2) - lg2(em)) }
-      } finally { sub.unpersist(); wv.unpersist() }
+      val wv = uniWordFreq(s, dir).as[(String, Long)].collect().toSeq
+      // seed: alphabet + top-K multi-char substrings by weighted mass;
+      // substrings count code points, as Spark's substring does
+      val sub = wv.flatMap { case (w, f) =>
+        val cps = w.codePoints().toArray
+        for (i <- cps.indices; l <- 1 to math.min(UNI_MAXP, cps.length - i))
+          yield (new String(cps, i, l), l, f)
+      }.groupMapReduce(p => (p._1, p._2))(_._3)(_ + _).toSeq
+      val alpha = sub.collect { case ((p, 1), m) => (p, m) }
+      val multi = sub.collect { case ((p, l), m) if l >= 2 => (p, m) }
+        .sortBy { case (p, m) => (-m, p) }(Ordering.Tuple2(Ordering.Long, sparkOrder))
+        .take(UNI_K)
+      val seed = alpha ++ multi
+      val m1 = seed.map(_._2).sum
+      val cost1 = seed.map { case (p, m) => p -> (lg2(m1) - lg2(m)) }.toMap
+      // hard-EM round: usage mass from round-1 Viterbi segmentations
+      val used = wv.flatMap { case (w, f) =>
+        uniViterbi(w, cost1)._3.split(" ", -1).map(_ -> f)
+      }.groupMapReduce(_._1)(_._2)(_ + _)
+      val mass2 = seed.map { case (p, sm) => (p, sm, used.getOrElse(p, 0L) + 1L) }
+      val m2 = mass2.map(_._3).sum
+      mass2.map { case (p, sm, em) => (p, sm, em, lg2(m2) - lg2(em)) }
     }
   }
 

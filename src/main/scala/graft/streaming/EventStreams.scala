@@ -1180,61 +1180,34 @@ object EventStreams {
     * this face emits the full dashboard series a live monitor charts.
     *
     * == Scale design ==
-    * The one-scan O(types × days) checkpointed grid; calendar-bounded
-    * window collect; the fold is a codegen'd higher-order aggregate;
+    * The forecast ladder's one-scan O(types × days) checkpointed grid
+    * and prior-day window collect (`AnalyticsForecast.dailyGrid`,
+    * `priorCells`); the fold is a codegen'd higher-order aggregate;
     * output O(types × days). The streaming twin's state is THREE
     * LONGS per type — the whole point of exponential smoothing as the
     * streaming forecaster.
     */
   def streamForecast(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
-    import org.apache.spark.sql.expressions.Window
-    import graft.operators.Analytics
-    val daily = events(s, dir)
-      .select(col("event_type"), expr("unix_micros(ts) div 86400000000").as("day"))
-      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))
-      .stableCheckpoint()
-    val wFlat = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    daily
+    import graft.operators.Analytics.{dailyGrid, holtFold, holtPred, priorCells, wFlat}
+    dailyGrid(s, dir)
       .withColumn("cum_d", count(col("n")).over(wFlat))
-      .withColumn("prior", sort_array(collect_list(struct(col("day"), col("n"))).over(wFlat)))
+      .withColumn("prior", priorCells)
       .filter(col("cum_d") >= 1)
-      .withColumn("st", expr(Analytics.holtFold))
-      .withColumn("pred_trend",
-        expr(Analytics.sparkFloorDiv("st.lv + st.tr", 1000)))
+      .withColumn("st", expr(holtFold))
+      .withColumn("pred_trend", holtPred)
       .select(col("event_type"), col("day"), col("n"), col("pred_trend"),
         abs(col("n") - col("pred_trend")).as("abs_err"))
       .orderBy(col("event_type"), col("day"))
   }
 
-  /** DuckDB twin: the trend oracle's grid + the BIGINT-list Holt fold
-    * (floor emulated — DuckDB's `//` truncates), applied to EVERY
-    * prior-bearing day instead of the final-week eval filter. */
+  /** DuckDB twin: the ladder's grid and prior-day list + the plain Holt
+    * list fold, applied to EVERY prior-bearing day instead of the
+    * final-week eval filter. */
   lazy val streamForecastSql: String = {
-    import graft.operators.Analytics.duckFloorDiv
-    val a = "1000 * x[3] + acc[1] + acc[2]"
-    val lv2 = duckFloorDiv(a, 2)
-    val tr2 = duckFloorDiv(s"$lv2 - acc[1] + acc[2]", 2)
-    val pred = duckFloorDiv("st[1] + st[2]", 1000)
-    s"""WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-       |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
-       |c AS (SELECT *,
-       |    CAST(count(n) OVER wf AS BIGINT) AS cum_d,
-       |    list_sort(list({'day': day, 'n': n}) OVER wf) AS prior
-       |  FROM d
-       |  WINDOW wf AS (PARTITION BY event_type ORDER BY day
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-       |e AS (SELECT *,
-       |    list_reduce(
-       |      list_prepend([CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)],
-       |        list_transform(prior, p -> [CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(p.n AS BIGINT)])),
-       |      (acc, x) -> CASE WHEN acc[3] = 0
-       |        THEN [CAST(1000 * x[3] AS BIGINT), CAST(0 AS BIGINT), CAST(1 AS BIGINT)]
-       |        ELSE [CAST($lv2 AS BIGINT), CAST($tr2 AS BIGINT),
-       |              CAST(1 AS BIGINT)] END) AS st
-       |  FROM c WHERE cum_d >= 1),
-       |f AS (SELECT event_type, day, n, $pred AS pred_trend FROM e)
+    import graft.operators.Analytics.{cumD, duckHolt, holtPredSql, ladderSql, priorList}
+    s"""${ladderSql("d", cumD, priorList)},
+       |e AS (SELECT *, $duckHolt AS st FROM c WHERE cum_d >= 1),
+       |f AS (SELECT event_type, day, n, $holtPredSql AS pred_trend FROM e)
        |SELECT event_type, CAST(day AS BIGINT) AS day, n, pred_trend,
        |  abs(n - pred_trend) AS abs_err
        |FROM f ORDER BY event_type, day""".stripMargin

@@ -125,6 +125,11 @@ class ContractSpec extends AnyFunSuite {
   private def copies(src: String, needle: String): Int =
     java.util.regex.Pattern.quote(needle).r.findAllIn(src).length
   private val mainRoot = java.nio.file.Paths.get("src/main/scala/graft")
+  private def mainSources: Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(mainRoot).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+  }
 
   test("Geo writes each fold decision once on the DataFrame side and once in SQL") {
     // the DataFrame side writes a decision as a Scala expression, the
@@ -144,20 +149,23 @@ class ContractSpec extends AnyFunSuite {
 
   test("each iterative-loop decision is written once per side") {
     // the graph faces share one symmetric edge list per side, the merge
-    // trainers one rewrite per side, and every fixpoint loop routes
-    // through Checkpoints.fixpoint, which alone owns the cap and error
-    import scala.jdk.CollectionConverters._
+    // trainers one rewrite per side (the driver trainer, the Spark
+    // replay, the oracle) and one driver pair count, and every fixpoint
+    // loop routes through Checkpoints.fixpoint, which alone owns the
+    // cap and error
     val dedup = code(mainRoot.resolve("operators/Dedup.scala"))
     val text = code(mainRoot.resolve("operators/TextOps.scala"))
     val checkpoints = mainRoot.resolve("plans/Checkpoints.scala")
-    val others = java.nio.file.Files.walk(mainRoot).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && p != checkpoints)
-      .map(code).mkString("\n")
+    val main = mainSources.map(code).mkString("\n")
+    val others = mainSources.filter(_ != checkpoints).map(code).mkString("\n")
     val expected = Seq(
       ("Dedup", dedup, """col("doc_b").as("doc_a"), col("doc_a").as("doc_b")""", 1),
       ("Dedup", dedup, "SELECT doc_b, doc_a FROM", 1),
       ("TextOps", text, """lit(s" $l  $r ")""", 1),
       ("TextOps", text, "' ' || l || '  ' || r || ' '", 1),
+      ("src/main", main, """seq.replace(s" $l  $r ", s" $l$r ")""", 1),
+      ("src/main", main, "syms(i) -> syms(i + 1)", 1),
+      ("src/main", main, "pairCounts", 0),
       ("Checkpoints", code(checkpoints), "did not converge", 1),
       ("Checkpoints", code(checkpoints), "MaxRounds = 64", 1),
       ("src/main outside Checkpoints", others, "did not converge", 0),
@@ -169,13 +177,16 @@ class ContractSpec extends AnyFunSuite {
 
   test("the forecast ladder and the quality feature pass are written once per side") {
     // every ladder face composes AnalyticsForecast's grid, prior-day
-    // windows, last_day anchor, Holt list folds and paired ledger;
+    // windows, last_day anchor, Holt list folds and paired ledger, and
+    // stream_forecast its grid, prior-day list and plain Holt fold;
     // every quality face composes TextOps' feature pass, and every
     // oracle gating on quality_score reads TextOps.qualityCte
     import scala.jdk.CollectionConverters._
     val forecast = code(mainRoot.resolve("operators/AnalyticsForecast.scala"))
     val operators = java.nio.file.Files.list(mainRoot.resolve("operators")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).map(code).mkString("\n")
+    val streams = code(mainRoot.resolve("streaming/EventStreams.scala"))
+    val main = mainSources.map(code).mkString("\n")
     val expected = Seq(
       // the daily grid, DataFrame then SQL
       ("AnalyticsForecast", forecast, """.groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))""", 1),
@@ -187,6 +198,8 @@ class ContractSpec extends AnyFunSuite {
       ("AnalyticsForecast", forecast, "(SELECT max(day) FROM", 1),
       // the DuckDB Holt list folds' init arm, and the paired ledger
       ("AnalyticsForecast", forecast, "CAST(1000 * x[3] AS BIGINT)", 1),
+      ("src/main", main, "CAST(1000 * x[3] AS BIGINT)", 1),
+      ("EventStreams", streams, "CAST(1000 * x[3] AS BIGINT)", 0),
       ("AnalyticsForecast", forecast, """.as("gain_milli")""", 1),
       ("AnalyticsForecast", forecast, "AS gain_milli", 1),
       // the quality feature pass, DataFrame then SQL, and the SQL stopword literal

@@ -1118,9 +1118,9 @@ class PlanShapeSpec extends SparkSpec {
       "map_fanout" -> 1, "pipeline_frame_build" -> 2, "pipeline_job_build" -> 2,
       "reduce_assemble" -> 1, "pipeline_frame_incremental" -> 2,
       "pipeline_job_incremental" -> 2, "geo_frame_churn" -> 2,
-      "pipeline_pretrain_build" -> 27, "dedup_minhash_lsh" -> 1,
+      "pipeline_pretrain_build" -> 12, "dedup_minhash_lsh" -> 1,
       "dedup_span_exact" -> 1, "graph_components_incremental" -> 10,
-      "tokenize_fertility" -> 4)
+      "tokenize_fertility" -> 2)
     val over = ceilings.flatMap { case (key, most) =>
       val n = Tool.actionsOf(spark)(Tool.runToNoop(spark, sf, key)).size
       if (n > most) Some(s"$key: $n actions (ceiling $most)") else None

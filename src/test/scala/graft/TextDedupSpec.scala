@@ -3213,4 +3213,67 @@ class TextDedupSpec extends SparkSpec {
     assert(TextOps.tokenizeUnigram(spark, live).filter(col("piece").contains("\u00e9")).count() > 0,
       "the unigram model did not retrain on the rewritten part")
   }
+
+  /** A fresh directory holding `docs` as its documents table, removed
+    * after `body`. */
+  private def withCorpus[A](docs: Seq[(Long, String, String)])(body: String => A): A = {
+    import java.nio.file.{Files, Path}
+    val dir = Files.createTempDirectory("graft-test-corpus")
+    try {
+      docsDf(docs).write.parquet(dir.resolve("documents.parquet").toString)
+      body(dir.toString)
+    } finally Files.walk(dir).sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.delete(p))
+  }
+
+  test("a tokenizer retrain on a corpus the session has not trained runs at most 2 actions") {
+    // the vocab is collected once and every merge round runs on the
+    // driver: one collect, then the face's own write
+    val rows = spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "text", "lang").as[(Long, String, String)].collect().toSeq
+    withCorpus(rows) { dir =>
+      val n = Tool.actionsOf(spark)(Tool.runToNoop(spark, dir, "tokenize_bpe")).size
+      assert(n <= 2, s"tokenize_bpe ran $n actions on an untrained corpus")
+      assert(TextOps.tokenizeBpe(spark, dir).count() == 16)
+    }
+  }
+
+  test("driver trainers: byte-order ties, early exhaustion and an empty corpus") {
+    def bpe(dir: String) = TextOps.tokenizeBpe(spark, dir)
+      .select("rank", "left_sym", "right_sym", "merged", "pair_freq")
+      .as[(Long, String, String, String, Long)].collect().toSeq
+    def wpLefts(dir: String) = TextOps.tokenizeWordpieceTrain(spark, dir)
+      .orderBy("rank").select("left_sym").as[String].collect().toSeq
+    // U+FF5E sorts before U+1F600 in Spark's (UTF-8 byte) order but
+    // after it in String's UTF-16 order; both one-char words tie on
+    // their pair with </w> in BPE and in the WordPiece score
+    val (bmp, astral) = ("\uFF5E", new String(Character.toChars(0x1F600)))
+    val sparkFirst = Seq(astral, bmp).toDF("c").orderBy("c").as[String].first()
+    assert(sparkFirst != Seq(astral, bmp).min, "vacuous tie: both orders agree")
+    val sparkSecond = if (sparkFirst == bmp) astral else bmp
+    withCorpus(Seq((1L, s"$astral $bmp", "en"))) { dir =>
+      assert(bpe(dir) == Seq(
+        (1L, sparkFirst, "</w>", sparkFirst + "</w>", 1L),
+        (2L, sparkSecond, "</w>", sparkSecond + "</w>", 1L)))
+      assert(wpLefts(dir) == Seq(sparkFirst, sparkSecond))
+      assert(TextOps.trainedBpe(spark, dir)._2 == Seq(sparkFirst, sparkSecond))
+    }
+    // fully merged after 3 of 16 rounds; "\u0001" is a symbol of its
+    // own, which a trim of every char <= U+0020 would drop
+    withCorpus(Seq((1L, "ab ab \u0001", "en"))) { dir =>
+      assert(bpe(dir) == Seq(
+        (1L, "a", "b", "ab", 2L),
+        (2L, "ab", "</w>", "ab</w>", 2L),
+        (3L, "\u0001", "</w>", "\u0001</w>", 1L)))
+      assert(wpLefts(dir).size == 3)
+    }
+    // an empty corpus trains empty models without a throw
+    withCorpus(Seq.empty) { dir =>
+      assert(bpe(dir).isEmpty)
+      assert(wpLefts(dir).isEmpty)
+      assert(TextOps.trainedBpe(spark, dir)._2.isEmpty)
+      assert(TextOps.tokenizeWordpiece(spark, dir).count() == 0L)
+      assert(TextOps.tokenizeUnigram(spark, dir).count() == 0L)
+    }
+  }
 }
