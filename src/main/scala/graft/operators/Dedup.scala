@@ -1454,7 +1454,7 @@ object Dedup {
     */
   private[operators] def componentLabels(s: SparkSession, dir: String): DataFrame =
     graft.plans.SharedRel(s, "componentLabels|" + dir, TextOps.docsSig(s, dir)) {
-      componentsOver(verifiedPairs(s, dir))
+      componentsOver(keyedEdges(verifiedPairs(s, dir)))
     }
 
   /** The pair list (doc_a, doc_b) plus every pair reversed: the
@@ -1467,17 +1467,33 @@ object Dedup {
     s"""SELECT doc_a AS src, doc_b AS dst FROM $p
        |  UNION ALL SELECT doc_b, doc_a FROM $p""".stripMargin
 
-  /** Min-label connected components over an undirected pair list —
-    * the pointer-doubling loop shared by [[dedupComponents]] and
-    * [[graphComponentsIncremental]]. Returns (id, label) for every
-    * node that appears in a pair; label = min reachable id.
+  /** The symmetric edge list of `pairs` as (src, dst), keyed on `src`
+    * ([[Checkpoints.keyed]]): the loop-invariant relation every round of
+    * [[componentsOver]] and [[graphBfs]] joins with its `id`-keyed state,
+    * so that join runs inside the shared partitions. A checkpoint, not a
+    * `.cache()`: no CacheManager entry to release, and ContextCleaner
+    * frees the blocks once the loop's DataFrames are gone. */
+  private def keyedEdges(pairs: DataFrame): DataFrame =
+    Checkpoints.keyed(symmetric(pairs).toDF("src", "dst"), "src")
+
+  /** Min-label connected components over the [[keyedEdges]] of an
+    * undirected pair list — the pointer-doubling loop shared by
+    * [[dedupComponents]], [[graphComponentsIncremental]] and
+    * [[graphBfs]]. Returns (id, label), keyed on `id`, for every node
+    * that appears in a pair; label = min reachable id.
+    *
+    * The state starts from the first neighbor-min hop, each node's
+    * least of itself and its neighbors (an aggregate on `src`, which
+    * the keyed edges need no exchange for). Every label is then a
+    * reachable id no larger than its own id, so the only fixpoint is
+    * still the component minimum; a cluster of diameter 1 — most
+    * near-dup clusters are pairs — is converged before the first round,
+    * which only confirms it. A round is one [[Checkpoints.fixpoint]]
+    * step: the edges ⋈ labels join on `src = id` runs in place, so the
+    * round shuffles only for the `dst` aggregate, the pointer-doubling
+    * lookup and the re-key of its output on `id`.
     */
-  private def componentsOver(pairs: DataFrame): DataFrame = {
-    // bidirectional edge list, cached: reused every iteration, released
-    // in `finally` so a loop that does not converge leaves no entry
-    val edges = symmetric(pairs).toDF("src", "dst").cache()
-    // run to FIXPOINT (the oracle is exact); each round is checkpointed,
-    // which truncates the growing join lineage.
+  private def componentsOver(edges: DataFrame): DataFrame = {
     // Each round does (a) one neighbor-min hop and (b) one POINTER-
     // DOUBLING hop (follow the label's own label): labels then reach
     // 2^rounds-distant minima, so chains converge in O(log diameter)
@@ -1490,24 +1506,22 @@ object Dedup {
     // the next self-join, so Spark evaluates it twice and the
     // duplicated work exceeds the saved driver syncs. One hop per
     // checkpointed round is the right trade.
-    try {
-      val init = edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("label"))
-      Checkpoints.fixpoint("componentsOver", init, "label", "newlabel") { labels =>
-        val neighborMin = edges
-          .join(labels, edges("src") === labels("id"))
-          .groupBy(col("dst").as("id2")).agg(min(col("label")).as("nmin"))
-        val stepped = labels.join(neighborMin, labels("id") === col("id2"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("nmin"), col("label"))).as("l1"),
-            col("label"))
-        val parents = stepped.select(col("id").as("pid"), col("l1").as("plabel"))
-        stepped.join(parents, col("l1") === col("pid"), "left")
-          .select(col("id"),
-            least(col("l1"), coalesce(col("plabel"), col("l1"))).as("newlabel"),
-            col("label"))
-      }
-    } finally edges.unpersist(false)
+    val init = edges.groupBy(col("src").as("id"))
+      .agg(least(col("src"), min(col("dst"))).as("label"))
+    Checkpoints.fixpoint("componentsOver", init, "id", "label", "newlabel") { labels =>
+      val neighborMin = edges
+        .join(labels, edges("src") === labels("id"))
+        .groupBy(col("dst").as("id2")).agg(min(col("label")).as("nmin"))
+      val stepped = labels.join(neighborMin, labels("id") === col("id2"), "left")
+        .select(col("id"),
+          least(col("label"), coalesce(col("nmin"), col("label"))).as("l1"),
+          col("label"))
+      val parents = stepped.select(col("id").as("pid"), col("l1").as("plabel"))
+      stepped.join(parents, col("l1") === col("pid"), "left")
+        .select(col("id"),
+          least(col("l1"), coalesce(col("plabel"), col("l1"))).as("newlabel"),
+          col("label"))
+    }
   }
 
   // --------------------------------------- incremental components
@@ -1550,7 +1564,7 @@ object Dedup {
     // contract as the BPE-merge and IVF-codebook memos).
     val base = graft.plans.SharedRel(s, "standingLabels|" + dir,
         TextOps.docsSig(s, dir)) {
-      componentsOver(oldPairs).select(col("id"), col("label"))
+      componentsOver(keyedEdges(oldPairs)).select(col("id"), col("label"))
     }
     // contract: every endpoint maps to its standing label (new docs and
     // old docs without old edges map to themselves)
@@ -1564,7 +1578,7 @@ object Dedup {
         coalesce(col("m_doc_b"), col("doc_b")).as("doc_b"))
       .filter(col("doc_a") =!= col("doc_b"))
       .distinct()
-    val merged = componentsOver(contracted)
+    val merged = componentsOver(keyedEdges(contracted))
       .select(col("id").as("m"), col("label").as("clabel"))
     // every paired node: standing label (or self), then the contracted fix-up
     val nodes = pairs.select(col("doc_a").as("id"))
@@ -1849,11 +1863,15 @@ object Dedup {
     *
     * Multi-source BFS: exemplars seed at distance 0 and each round
     * relaxes dist(v) = min(dist(v), min over neighbors dist(u)+1) to
-    * FIXPOINT over the cached edge list — O(max eccentricity from the
-    * exemplar) driver-synchronized rounds, each one O(E) join +
-    * map-side min, stableCheckpointed to truncate lineage (the
-    * [[componentsOver]] discipline; near-dup clusters are near-cliques
-    * so the round count is small). Every paired node terminates
+    * FIXPOINT — O(max eccentricity from the exemplar)
+    * driver-synchronized rounds, each one O(E) join + map-side min,
+    * checkpointed to truncate lineage (near-dup clusters are
+    * near-cliques, so the round count is small). The [[keyedEdges]] are
+    * built once and walked by both loops, [[componentsOver]]' and this
+    * one; both states are keyed on `id`, so a round's edges ⋈ dist join
+    * runs in place and the round shuffles only for the `dst` aggregate
+    * (its left join back onto dist is already partitioned on `id`, so the
+    * re-key plans no shuffle). Every paired node terminates
     * finite: its component's exemplar is reachable by construction.
     * Oracle: the shared recursive component CTE + a recursive BFS from
     * the exemplar set with min-per-node collapse.
@@ -1866,33 +1884,20 @@ object Dedup {
     * them, and silently drops the deeper ones.
     */
   def graphBfs(s: SparkSession, dir: String): DataFrame = {
-    // checkpointed: the shingle candidate join feeds BOTH the
-    // components loop (via its edge cache) and this loop's edge list —
-    // without it the corpus-sized join runs twice
-    val pairs = verifiedPairs(s, dir)
+    val edges = keyedEdges(verifiedPairs(s, dir))
     val INF = 1000000L // > any hop count (rounds are capped)
-    // components FIRST, edge cache AFTER (r22): componentsOver caches
-    // the identical bidirectional edge plan internally and unpersists
-    // it when its loop converges — registering ours before that call
-    // shared ONE CacheManager entry ("already cached" WARN), and the
-    // unpersist inside componentsOver killed it, so this loop's joins
-    // ran uncached. Ordering the calls gives each loop its own cache
-    // lifetime.
-    val dist0 = componentsOver(pairs)
+    val dist0 = componentsOver(edges)
       .select(col("id"), col("label"),
         when(col("id") === col("label"), lit(0L)).otherwise(lit(INF)).as("hops"))
-    val edges = symmetric(pairs).toDF("src", "dst").cache()
-    val dist = try {
-      Checkpoints.fixpoint("graphBfs", dist0, "hops", "newhops") { dist =>
-        val nmin = edges
-          .join(dist.filter(col("hops") < INF), edges("src") === col("id"))
-          .groupBy(col("dst").as("id2")).agg(min(col("hops") + 1).as("nh"))
-        dist.join(nmin, dist("id") === col("id2"), "left")
-          .select(col("id"), col("label"),
-            least(col("hops"), coalesce(col("nh"), col("hops"))).as("newhops"),
-            col("hops"))
-      }
-    } finally edges.unpersist(false)
+    val dist = Checkpoints.fixpoint("graphBfs", dist0, "id", "hops", "newhops") { dist =>
+      val nmin = edges
+        .join(dist.filter(col("hops") < INF), edges("src") === col("id"))
+        .groupBy(col("dst").as("id2")).agg(min(col("hops") + 1).as("nh"))
+      dist.join(nmin, dist("id") === col("id2"), "left")
+        .select(col("id"), col("label"),
+          least(col("hops"), coalesce(col("nh"), col("hops"))).as("newhops"),
+          col("hops"))
+    }
     dist.select(col("id").as("doc_id"), col("label").as("component"), col("hops"))
       .orderBy(col("doc_id"))
   }

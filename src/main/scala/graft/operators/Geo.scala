@@ -518,21 +518,16 @@ object Geo {
        |FROM seq ORDER BY frame_seq""".stripMargin
 
   // ------------------------------------------- composed frame build
-  /** The frame shuffle: a fold's cells hash-partitioned on the frame
-    * key `dkey` into `spark.sql.shuffle.partitions` parts (an explicit
-    * count, which AQE leaves alone, so the frames render as parallel
-    * tasks), then checkpointed and declared so (under AQE Spark keeps
-    * no partitioning on a checkpoint). Every later `dkey`-keyed
+  /** The frame shuffle: a fold's cells keyed on the frame day `dkey`
+    * ([[graft.plans.Checkpoints.keyed]]: hash-partitioned into
+    * `spark.sql.shuffle.partitions` parts, so the frames render as
+    * parallel tasks, checkpointed and declared so). Every later `dkey`-keyed
     * aggregate, window and join of the face — [[frameRender]], the day
     * ledgers, the hash join between them — then runs inside the frame's
     * partition with no further exchange.
     */
-  private def framed(fold: DataFrame): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
-    val n = fold.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    org.apache.spark.sql.graftshim.GraftSqlShim.hashPartitioned(
-      fold.repartition(n, col("dkey")).stableCheckpoint(), Seq("dkey"), n)
-  }
+  private def framed(fold: DataFrame): DataFrame =
+    graft.plans.Checkpoints.keyed(fold, "dkey")
 
   /** Shared per-frame render: stages [4-5] of [[pipelineFrameBuild]] —
     * [[fanOut]] spread + per-frame eq-hist + [[ramp]] RGB, reduced to

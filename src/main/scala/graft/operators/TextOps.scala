@@ -1561,12 +1561,19 @@ object TextOps {
     cnt.toMap
   }
 
+  /** Collected word vocab memo, validated against the documents
+    * table's file signature: the BPE, WordPiece and unigram trainers
+    * all read it, so a corpus signature costs one vocab collect however
+    * many of them retrain. */
+  private val wordVocabs = new SessionMemo[Seq[(String, Long, String)]]
+
   /** The collected (w, freq, seq) vocab of [[bpeVocab]] — the one job a
-    * merge training runs. */
-  private def collectedVocab(s: SparkSession, dir: String): Seq[(String, Long, String)] = {
-    import s.implicits._
-    bpeVocab(s, dir).as[(String, Long, String)].collect().toSeq
-  }
+    * tokenizer training runs, shared by the three trainers. */
+  private def collectedVocab(s: SparkSession, dir: String): Seq[(String, Long, String)] =
+    wordVocabs(s, "wordVocab|" + dir, docsSig(s, dir)) {
+      import s.implicits._
+      bpeVocab(s, dir).as[(String, Long, String)].collect().toSeq
+    }
 
   /** The merge-training loop shared by the BPE and WordPiece trainers,
     * run on the driver: up to `budget` rounds over the collected
@@ -2378,14 +2385,9 @@ object TextOps {
   /** Trained unigram model memo: (piece, seed_mass, em_mass, cost). */
   private val uniModels = new SessionMemo[Seq[(String, Long, Long, Long)]]
 
-  private def uniWordFreq(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(explode(words).as("w")).filter(col("w") =!= "")
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-
-  private def trainedUnigram(s: SparkSession, dir: String): Seq[(String, Long, Long, Long)] = {
-    import s.implicits._
+  private def trainedUnigram(s: SparkSession, dir: String): Seq[(String, Long, Long, Long)] =
     uniModels(s, "unigramModel|" + dir, docsSig(s, dir)) {
-      val wv = uniWordFreq(s, dir).as[(String, Long)].collect().toSeq
+      val wv = collectedVocab(s, dir).map { case (w, f, _) => (w, f) }
       // seed: alphabet + top-K multi-char substrings by weighted mass;
       // substrings count code points, as Spark's substring does
       val sub = wv.flatMap { case (w, f) =>
@@ -2408,7 +2410,6 @@ object TextOps {
       val m2 = mass2.map(_._3).sum
       mass2.map { case (p, sm, em) => (p, sm, em, lg2(m2) - lg2(em)) }
     }
-  }
 
   /** The trained unigram model — piece inventory with seed mass, EM
     * mass (Laplace-smoothed usage) and the final integer bit-cost. */
@@ -2425,7 +2426,7 @@ object TextOps {
   def tokenizeUnigramSegments(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val cost2 = trainedUnigram(s, dir).map { case (p, _, _, c) => p -> c }.toMap
-    uniWordFreq(s, dir).as[(String, Long)]
+    bpeVocab(s, dir).select(col("w"), col("freq")).as[(String, Long)]
       .mapPartitions { it =>
         it.map { case (w, f) =>
           val (c, np, acc) = uniViterbi(w, cost2)

@@ -61,6 +61,22 @@ object Checkpoints {
     def stableCheckpoint(): DataFrame = stable(df)
   }
 
+  /** `df` hash-partitioned on column `key` into
+    * `spark.sql.shuffle.partitions` parts, materialized through
+    * [[stable]] and declared so: under AQE Spark keeps no partitioning
+    * on a checkpoint, so the declaration is what lets a later
+    * aggregate, window or join keyed on `key` run inside the
+    * checkpoint's partitions with no exchange. A repartition by number
+    * is never coalesced or split by AQE, and one whose input is already
+    * partitioned that way plans no shuffle at all.
+    */
+  def keyed(df: DataFrame, key: String): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftshim.GraftSqlShim
+    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    GraftSqlShim.hashPartitioned(stable(df.repartition(n, col(key))), Seq(key), n)
+  }
+
   /** `n` fixed rounds of `step` from `init`, each round's state
     * materialized through [[stable]]: the loop re-reads checkpointed
     * blocks instead of stacking `n` self-referencing join trees, and a
@@ -71,23 +87,25 @@ object Checkpoints {
   /** The cap on [[fixpoint]] rounds. */
   val MaxRounds = 64
 
-  /** Rounds of `step` to FIXPOINT. Each round's output is materialized
-    * through [[stable]] and carries the state's columns plus `next`,
-    * the round's new value of column `value` (which may only fall); the
-    * next state is that output with `next` in place of `value`. The
-    * loop stops after the first round where no row's value fell (the
-    * `changed` count, one job per round) and throws an
-    * `IllegalStateException` naming `loop` if that takes more than
-    * [[MaxRounds]] rounds.
+  /** Rounds of `step` to FIXPOINT over a state keyed on column `key`.
+    * Each round's output goes through [[keyed]] on `key` and carries
+    * the state's columns plus `next`, the round's new value of column
+    * `value` (which may only fall); the next state is that output with
+    * `next` in place of `value`, still declared partitioned on `key`, so
+    * a step that joins the state on `key` with a relation keyed the same
+    * way shuffles neither side. The loop stops after the first round
+    * where no row's value fell (the `changed` count, one job per round)
+    * and throws an `IllegalStateException` naming `loop` if that takes
+    * more than [[MaxRounds]] rounds.
     */
-  def fixpoint(loop: String, init: DataFrame, value: String, next: String)
+  def fixpoint(loop: String, init: DataFrame, key: String, value: String, next: String)
       (step: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
     var state = init
     var changed = 1L
     var n = 0
     while (changed > 0 && n < MaxRounds) {
-      val out = stable(step(state))
+      val out = keyed(step(state), key)
       changed = out.filter(col(next) < col(value)).count()
       state = out.select(state.columns.toSeq.map(c =>
         if (c == value) col(next).as(c) else col(c)): _*)

@@ -175,6 +175,32 @@ class ContractSpec extends AnyFunSuite {
     assert(off.isEmpty, off.mkString("a loop decision is written more than once:\n", "\n", ""))
   }
 
+  test("one keyed-checkpoint mechanism, and the graph loops cache no relation") {
+    // Checkpoints.keyed alone declares a checkpoint's hash partitioning;
+    // Geo's frame shuffle and the graph loops' keyed edges and state
+    // compose it. The components and BFS loops read checkpoints, not
+    // CacheManager entries.
+    import scala.jdk.CollectionConverters._
+    val calls = for {
+      f <- java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator().asScala.toSeq
+      if f.toString.endsWith(".scala")
+      line <- code(f).split("\n") if line.contains("GraftSqlShim.hashPartitioned(")
+    } yield s"${f.getFileName}: $line"
+    assert(calls.size == 1 && calls.head.startsWith("Checkpoints.scala:"),
+      calls.mkString("expected one hashPartitioned call, in Checkpoints:\n", "\n", ""))
+    val dedup = code(mainRoot.resolve("operators/Dedup.scala"))
+    def body(from: String, to: String): String = {
+      val a = dedup.indexOf(from)
+      assert(a >= 0 && dedup.indexOf(to, a) > a, s"$from ... $to not found in Dedup.scala")
+      dedup.substring(a, dedup.indexOf(to, a))
+    }
+    for ((name, src) <- Seq(
+        "componentsOver" -> body("def componentsOver(", "def graphComponentsIncremental("),
+        "graphBfs" -> body("def graphBfs(", "val graphBfsSql")))
+      assert(copies(src, ".cache()") == 0 && copies(src, "unpersist") == 0,
+        s"$name caches a relation:\n$src")
+  }
+
   test("the forecast ladder and the quality feature pass are written once per side") {
     // every ladder face composes AnalyticsForecast's grid, prior-day
     // windows, last_day anchor, Holt list folds and paired ledger, and

@@ -3004,6 +3004,24 @@ class TextDedupSpec extends SparkSpec {
     assert(cached() <= before, s"the loop's edge cache outlived the throw: ${cached()} > $before")
   }
 
+  test("dedup_components on disjoint near-dup pairs converges in one loop round") {
+    // three pairs, each a 12-word doc and the same doc plus 2 words
+    // (trigram Jaccard 10/12), no word shared across pairs: the first
+    // neighbor-min hop already holds every pair's minimum, so the loop's
+    // one round only confirms it (one `changed` count)
+    val docs = (0 until 3).flatMap { k =>
+      val ws = (0 until 12).map(i => s"p${k}w$i")
+      Seq(((2 * k + 1).toLong, ws.mkString(" "), "en"),
+        ((2 * k + 2).toLong, (ws :+ s"p${k}x" :+ s"p${k}y").mkString(" "), "en"))
+    }
+    val dir = "/tmp/graft-test-components-pairs"
+    docsDf(docs).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val actions = Tool.actionsOf(spark)(Tool.runToNoop(spark, dir, "dedup_components"))
+    assert(actions.count(_._1 == "count") == 1, actions.map(_._1).mkString(", "))
+    val out = Dedup.dedupComponents(spark, dir).as[(Long, Long)].collect().toSet
+    assert(out == (1L to 6L).map(i => (i, i - (i + 1) % 2)).toSet)
+  }
+
   test("bfs agrees with components and satisfies the parent property on the real corpus") {
     import spark.implicits._
     val bfs = Dedup.graphBfs(spark, sfMid)
