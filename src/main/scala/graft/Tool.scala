@@ -80,6 +80,13 @@ object Tool {
   private[graft] def runToNoop(spark: SparkSession, sfDir: String, key: String): Unit =
     SparkEntry.queries(key)(spark, sfDir).write.format("noop").mode("overwrite").save()
 
+  /** The physical plan of `qe` as planned: adaptive plans, the top one
+    * and any nested below a write, print their initial plans. */
+  private[graft] def planned(qe: QueryExecution): SparkPlan = qe.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.initialPlan
+    case p => p.transformUp { case a: AdaptiveSparkPlanExec => a.initialPlan }
+  }
+
   private def explain(sfDir: String, keys: Seq[String]): Unit = {
     val spark = GraftSession.local(cpus = 4)
     val warehouse = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
@@ -87,14 +94,10 @@ object Tool {
       val plans = actionsOf(spark)(runToNoop(spark, sfDir, key))
         .zipWithIndex.map { case ((action, qe), n) =>
           println(s"===ACTION=== $key ${n + 1} $action")
-          val planned = qe.executedPlan match {
-            case a: AdaptiveSparkPlanExec => a.initialPlan
-            case p => p.transformUp { case a: AdaptiveSparkPlanExec => a.initialPlan }
-          }
           val plan = new StringBuilder
-          ExplainUtils.processPlan[SparkPlan](planned, plan.append(_))
+          ExplainUtils.processPlan[SparkPlan](planned(qe), plan.append(_))
           println(normalized(plan.toString, warehouse))
-          planned
+          planned(qe)
         }.toList
       def exchanges(pf: PartialFunction[SparkPlan, Unit]): Int =
         plans.map(_.collectWithSubqueries(pf).size).sum

@@ -26,9 +26,9 @@ import graft.sources.Tables
   *
   *   - fold: [[projected]] → [[inBbox]] → [[binX]]/[[binY]] (cell
   *     [[pxPy]], day key [[dayKey]]); SQL [[foldSql]];
-  *   - render: [[framed]] (the frame shuffle) → [[fanOut]] (3×3
-  *     spread) → eq-hist → [[ramp]]; the per-frame chain is
-  *     [[frameRender]] / [[renderSql]];
+  *   - render: [[framed]] (the frame shuffle and the cell fold) →
+  *     [[fanOut]] (3×3 spread) → eq-hist → [[ramp]]; the per-frame
+  *     chain is [[frameRender]] / [[renderSql]];
   *   - assemble: [[frameSeq]], [[cumSum]], [[manifest]], [[frameDay]];
   *     audits: [[zoneProbe]]; tiles: [[tilePyramid]].
   *
@@ -43,9 +43,12 @@ import graft.sources.Tables
   * (O(pixels)), never the input. The per-day fan-out is a grouped agg +
   * tiny window — the reference's 24-way array job becomes partition
   * pruning + shuffle-free combine. The per-frame render shuffles each
-  * fold's cells once, on the frame day: each frame is then one task
-  * with canvas-bounded work — at most 1.4M spread cells sorted per
-  * frame for its rank — and no exchange or broadcast past the fold.
+  * fold's binned points once, on the frame day (at most 4 longs a
+  * point), and folds them into cells inside the frame's partition:
+  * each frame is then one task with canvas-bounded work — at most 1.4M
+  * spread cells sorted per frame for its rank — and no exchange or
+  * broadcast past the fold. O(days) ledgers end in one partition, so
+  * their final sort samples nothing.
   */
 object Geo {
 
@@ -372,6 +375,7 @@ object Geo {
       .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("frame_day"))
       .agg(count(lit(1)).as("n_points"),
         sum(col("event_id") % 997L).as("checksum"))
+      .coalesce(1)
       .withColumn("frame_seq", frameSeq(col("frame_day")))
       .select(col("frame_seq"), col("frame_day"), col("n_points"), col("checksum"))
       .orderBy(col("frame_seq"))
@@ -392,39 +396,43 @@ object Geo {
        |FROM frames ORDER BY frame_seq""".stripMargin
 
   /** Per-day lit-cell relation (dkey, px, py, cnt) — ONE corpus scan
-    * folded map-side onto the bounded grid, checkpointed. Shared by
-    * [[geoFrameChurn]], the `stream_frame_churn` batch face and its
-    * MemoryStream spec feed.
+    * folded map-side onto the bounded grid (≤ days × 1.4M rows), lazy:
+    * each consumer reads it once (the `shuffle_budget` count and the
+    * `stream_frame_churn` MemoryStream spec feed), so a checkpoint would
+    * only add a job.
     */
-  private[graft] def dayRaster(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.Checkpoints.StableSyntax
+  private[graft] def dayRaster(s: SparkSession, dir: String): DataFrame =
     bboxed(s, dir, dayKey)
       .select(col("dkey") +: pxPy: _*)
       .groupBy(col("dkey"), col("px"), col("py")).agg(count(lit(1)).as("cnt"))
-      .stableCheckpoint()
-  }
 
-  /** The day-keyed churn ledger over [[dayRaster]] — the epoch-day
-    * relation both churn faces share (the batch key formats the date
-    * on top; the streaming face consumes the long, per the feed's-own-
-    * key convention).
+  /** The day-keyed churn ledger — the epoch-day relation both churn
+    * faces share (the batch key formats the date on top; the streaming
+    * face consumes the long, per the feed's-own-key convention).
+    *
+    * ONE aggregate instead of a self-join: each in-bbox point counts in
+    * its own day's cell (`c`) and in the next day's (`p`), so one fold
+    * per (dkey, px, py) holds both frames' counts of a cell, and a day
+    * fold turns the cells into the ledger. A day with no lit cell of its
+    * own (the day after the corpus's last, or after a gap) has
+    * `n_cur = 0` and is dropped.
     */
   private[graft] def frameChurnLedger(s: SparkSession, dir: String): DataFrame = {
-    val r = dayRaster(s, dir)
-    val cur = r.select(col("dkey"), col("px"), col("py"), col("cnt").as("c_cnt"))
-    val prev = r.select((col("dkey") + 1).as("dkey"), col("px"), col("py"),
-      col("cnt").as("p_cnt"))
-    val days = r.select(col("dkey")).distinct()
-    cur.join(prev, Seq("dkey", "px", "py"), "full_outer")
-      .join(days, Seq("dkey"), "left_semi")
+    val cellsWhere = (c: Column) => count(when(c, 1L))
+    bboxed(s, dir, dayKey)
+      .select(Seq(explode(array(
+          struct(col("dkey"), lit(1L).as("c"), lit(0L).as("p")),
+          struct((col("dkey") + 1).as("dkey"), lit(0L).as("c"), lit(1L).as("p")))).as("e")) ++
+        pxPy: _*)
+      .groupBy(col("e.dkey").as("dkey"), col("px"), col("py"))
+      .agg(sum(col("e.c")).as("c_cnt"), sum(col("e.p")).as("p_cnt"))
       .groupBy(col("dkey"))
-      .agg(count(col("c_cnt")).as("n_cur"), count(col("p_cnt")).as("n_prev"),
-        sum(when(col("c_cnt").isNotNull && col("p_cnt").isNull, 1L).otherwise(0L))
-          .as("n_new"),
-        sum(when(col("p_cnt").isNotNull && col("c_cnt").isNull, 1L).otherwise(0L))
-          .as("n_dead"),
-        (coalesce(sum(col("c_cnt")), lit(0L)) - coalesce(sum(col("p_cnt")), lit(0L)))
-          .as("mass_delta"))
+      .agg(cellsWhere(col("c_cnt") > 0).as("n_cur"), cellsWhere(col("p_cnt") > 0).as("n_prev"),
+        cellsWhere(col("c_cnt") > 0 && col("p_cnt") === 0).as("n_new"),
+        cellsWhere(col("p_cnt") > 0 && col("c_cnt") === 0).as("n_dead"),
+        (sum(col("c_cnt")) - sum(col("p_cnt"))).as("mass_delta"))
+      .filter(col("n_cur") > 0)
+      .coalesce(1)
       .withColumn("churn_ppm",
         expr("1000000 * (n_new + n_dead) div (n_prev + n_new)"))
   }
@@ -441,11 +449,11 @@ object Geo {
     * all-new by contract (n_prev = 0, churn 10⁶).
     *
     * == Scale design ==
-    * ONE corpus scan folds map-side onto the bounded (day, px, py)
-    * lit-cell relation (≤ days × 1.4M, checkpointed — consumed twice
-    * as current and day-shifted previous); the frame pair is a
-    * full-outer join ON that bounded relation, never the points; the
-    * ledger is O(days).
+    * ONE corpus scan, each point doubled into its own day and the next,
+    * folds map-side onto the bounded (day, px, py) cell relation
+    * (≤ (days + 1) × 1.4M rows) that carries both frames' counts, so the
+    * frame pair needs no join; the day fold reads that relation once and
+    * the O(days) ledger ends in one partition, sorted there.
     */
   def geoFrameChurn(s: SparkSession, dir: String): DataFrame =
     frameChurnLedger(s, dir)
@@ -518,16 +526,28 @@ object Geo {
        |FROM seq ORDER BY frame_seq""".stripMargin
 
   // ------------------------------------------- composed frame build
-  /** The frame shuffle: a fold's cells keyed on the frame day `dkey`
-    * ([[graft.plans.Checkpoints.keyed]]: hash-partitioned into
-    * `spark.sql.shuffle.partitions` parts, so the frames render as
-    * parallel tasks, checkpointed and declared so). Every later `dkey`-keyed
-    * aggregate, window and join of the face — [[frameRender]], the day
-    * ledgers, the hash join between them — then runs inside the frame's
-    * partition with no further exchange.
+  /** The frame shuffle and the fold: binned points (dkey, px, py, …)
+    * keyed on the frame day `dkey` ([[graft.plans.Checkpoints.keyed]]:
+    * hash-partitioned into `spark.sql.shuffle.partitions` parts, so the
+    * frames render as parallel tasks), folded per (dkey, px, py) with
+    * `aggs` inside those partitions, checkpointed and declared so. The
+    * fold needs no exchange of its own: the frame partitioning already
+    * clusters its keys. Every later `dkey`-keyed aggregate, window and
+    * join of the face — [[frameRender]], the day ledgers, the hash join
+    * between them — then runs inside the frame's partition with no
+    * further exchange.
+    *
+    * The one shuffle moves points, at most 4 longs each, not combined
+    * cells: no map-side combine runs before it, so its volume is the
+    * corpus's binned points. With few points per lit cell, as in the
+    * test and benchmark corpora, that costs less than a second shuffle
+    * and its job; on a corpus whose points outnumber its lit cells by
+    * orders of magnitude, a combine before the frame shuffle would pay
+    * for itself again.
     */
-  private def framed(fold: DataFrame): DataFrame =
-    graft.plans.Checkpoints.keyed(fold, "dkey")
+  private def framed(points: DataFrame, aggs: Column*): DataFrame =
+    graft.plans.Checkpoints.keyed(points, "dkey",
+      _.groupBy(col("dkey"), col("px"), col("py")).agg(aggs.head, aggs.tail: _*))
 
   /** Shared per-frame render: stages [4-5] of [[pipelineFrameBuild]] —
     * [[fanOut]] spread + per-frame eq-hist + [[ramp]] RGB, reduced to
@@ -608,25 +628,27 @@ object Geo {
     *      step would consume.
     *
     * == Scale design ==
-    * ONE corpus scan folds map-side onto the bounded (day, px, py)
-    * relation — out-of-bbox rows fold to the (−1,−1) overflow cell so
-    * the stage-1/2 marginals read off the SAME bounded relation
-    * ([[framed]]; ≤ days × (1.4M + 1) rows). This overflow-cell fold
-    * is the one fold that keeps out-of-bbox points, so it composes
-    * [[inBbox]] and the binning itself rather than [[bboxed]]. The
-    * stage ledger, the spread fan-out, the per-frame rank and the frame
-    * ledger are all canvas-bounded and run inside the frame's
-    * partition; no stage past the scan touches point volume, and the
-    * frames render as parallel tasks — the reference's 24-way array
-    * job as frame-keyed partitions.
+    * ONE corpus scan bins every point; the frame shuffle moves the
+    * binned points and [[framed]] folds them onto the bounded (day,
+    * px, py) relation inside each frame's partition — out-of-bbox rows
+    * fold to the (−1,−1) overflow cell so the stage-1/2 marginals read
+    * off the SAME bounded relation (≤ days × (1.4M + 1) rows). This
+    * overflow-cell fold is the one fold that keeps out-of-bbox points,
+    * so it composes [[inBbox]] and the binning itself rather than
+    * [[bboxed]]. The stage ledger, the spread fan-out, the per-frame
+    * rank and the frame ledger are all canvas-bounded and run inside
+    * the frame's partition; no stage past the fold touches point
+    * volume, and the frames render as parallel tasks — the reference's
+    * 24-way array job as frame-keyed partitions. The O(days) ledger
+    * then moves to one partition for its sort.
     */
   def pipelineFrameBuild(s: SparkSession, dir: String): DataFrame = {
     // [1-3] one scan: project, bin (overflow cell for out-of-bbox)
     val r = framed(projected(s, dir, dayKey)
       .select(col("dkey"),
         when(inBbox, binX(W)).otherwise(lit(-1L)).cast("long").as("px"),
-        when(inBbox, binY(H)).otherwise(lit(-1L)).cast("long").as("py"))
-      .groupBy(col("dkey"), col("px"), col("py")).agg(count(lit(1)).as("cnt")))
+        when(inBbox, binY(H)).otherwise(lit(-1L)).cast("long").as("py")),
+      count(lit(1)).as("cnt"))
     val stages = r.groupBy(col("dkey")).agg(
       sum(col("cnt")).as("n_points"),
       sum(when(col("px") >= 0, col("cnt")).otherwise(0L)).as("n_bbox"),
@@ -640,7 +662,9 @@ object Geo {
         coalesce(col("spread_mass"), lit(0L)).as("spread_mass"),
         coalesce(col("shade_mass"), lit(0L)).as("shade_mass"),
         coalesce(col("rgb_digest"), lit(0L)).as("rgb_digest"))
-      .orderBy(col("day"))
+      // the O(days) ledger sorts in one partition: a range-partitioned
+      // sort would sample, and so run, the whole render a second time
+      .repartition(1).sortWithinPartitions(col("day"))
   }
 
   /** DuckDB twin: the shared point/merc CTEs, the overflow-cell day
@@ -672,10 +696,10 @@ object Geo {
 
   // ------------------------------------------ incremental frame build
   /** The two-leg fold both incremental faces share: ONE in-bbox corpus
-    * scan folds map-side onto the bounded (day, px, py) relation
+    * scan folds ([[framed]]) onto the bounded (day, px, py) relation
     * carrying both leg counts — standing `cb`, total `ca`, late batch
     * `cd` (event_id ≡ 0 mod 10, [[graft.operators.Maintain.aggIncremental]]'s
-    * delta convention) — [[framed]]. Out-of-bbox delta points are
+    * delta convention). Out-of-bbox delta points are
     * dropped at the fold: they cannot change a frame. Returns that
     * relation and, per affected day (one the batch lands on), the
     * before/after [[frameRender]] digests named `digB` / `digA`. Both
@@ -686,10 +710,8 @@ object Geo {
       : (DataFrame, DataFrame) = {
     val r = framed(bboxed(s, dir, dayKey,
         (pmod(col("event_id"), lit(10)) === 0).cast("long").as("d"))
-      .select(Seq(col("dkey"), col("d")) ++ pxPy: _*)
-      .groupBy(col("dkey"), col("px"), col("py"))
-      .agg(sum(lit(1L) - col("d")).as("cb"), count(lit(1)).as("ca"),
-        sum(col("d")).as("cd")))
+      .select(Seq(col("dkey"), col("d")) ++ pxPy: _*),
+      sum(lit(1L) - col("d")).as("cb"), count(lit(1)).as("ca"), sum(col("d")).as("cd"))
     val aff = r.filter(col("cd") > 0).select(col("dkey")).distinct()
     val legs = r.join(aff.hint("shuffle_hash"), Seq("dkey"), "left_semi")
       .select(col("dkey"), col("px"), col("py"), explode(array(
@@ -813,21 +835,21 @@ object Geo {
     * spec pins both equivalences).
     *
     * == Scale design ==
-    * ONE corpus scan folds map-side onto the bounded (day, px, py)
-    * relation with the fan-out checksum folded per cell (sum of
-    * event_id mod 997 rides the same combine as the count), then
-    * [[framed]] — the render and the day ledger both read the
-    * materialized relation inside each frame's partition, never the
-    * points, and join there. The [[manifest]] windows sort the O(days)
-    * ledger; the per-day render runs frames as parallel tasks, exactly
-    * the reference's array job re-expressed as frame-keyed partitions.
+    * ONE corpus scan bins the in-bbox points and [[framed]] folds them
+    * onto the bounded (day, px, py) relation inside each frame's
+    * partition, the fan-out checksum folded per cell (sum of event_id
+    * mod 997 rides the same aggregate as the count) — the render and
+    * the day ledger both read the materialized relation in that
+    * partition, never the points, and join there. The [[manifest]]
+    * windows sort the O(days) ledger; the per-day render runs frames
+    * as parallel tasks, exactly the reference's array job re-expressed
+    * as frame-keyed partitions.
     */
   def pipelineJobBuild(s: SparkSession, dir: String): DataFrame = {
     // [fan-out] one scan: in-bbox day binning, checksum folded per cell
     val r = framed(bboxed(s, dir, col("event_id"), dayKey)
-      .select(col("dkey") +: pxPy :+ (col("event_id") % 997L).as("ck"): _*)
-      .groupBy(col("dkey"), col("px"), col("py"))
-      .agg(count(lit(1)).as("cnt"), sum(col("ck")).as("chk")))
+      .select(col("dkey") +: pxPy :+ (col("event_id") % 997L).as("ck"): _*),
+      count(lit(1)).as("cnt"), sum(col("ck")).as("chk"))
     // [render] per-frame digest over the same bounded relation
     val frame = frameRender(r.select(col("dkey"), col("px"), col("py"), col("cnt")))
       .select(col("dkey"), col("rgb_digest")).hint("shuffle_hash")

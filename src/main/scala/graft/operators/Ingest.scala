@@ -25,6 +25,16 @@ object Ingest {
     StructField("value_cents", LongType),
     StructField("day", StringType)))
 
+  /** Where one call of a round-trip face writes its `kind` files: a
+    * fresh temp directory, so two sessions running the face at once
+    * (in one JVM or two) never read each other's part files. The face's
+    * result reads it lazily, so it lives until the JVM exits. */
+  private def callDir(kind: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(s"graft_${kind}_")
+    callDirs.add(d.toString)
+    d.resolve("out").toString
+  }
+
   /** CSV round-trip: a deterministic ~0.1% slice of events is written
     * as headered CSV (integer cents + formatted day — the lossless
     * interchange encoding; raw doubles/timestamps in CSV invite
@@ -46,9 +56,7 @@ object Ingest {
       .select(col("event_id"), col("user_id"), col("event_type"),
         cents(col("value")).as("value_cents"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_csv_" + dir.replaceAll("[^A-Za-z0-9]", "_")).toString
+    val path = callDir("csv")
     slice.write.mode("overwrite").option("header", "true").csv(path)
     Tables.loadCsv(s, path, csvSchema)
       .groupBy(col("event_type"))
@@ -78,9 +86,7 @@ object Ingest {
       .select(col("event_id"), col("user_id"), col("event_type"),
         cents(col("value")).as("value_cents"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_json_" + dir.replaceAll("[^A-Za-z0-9]", "_")).toString
+    val path = callDir("json")
     slice.write.mode("overwrite").json(path)
     Tables.loadJson(s, path, csvSchema)
       .groupBy(col("event_type"))
@@ -109,9 +115,7 @@ object Ingest {
       .select(col("event_id"), col("user_id"), col("event_type"),
         cents(col("value")).as("value_cents"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_orc_" + dir.replaceAll("[^A-Za-z0-9]", "_")).toString
+    val path = callDir("orc")
     slice.write.mode("overwrite").orc(path)
     Tables.loadOrc(s, path, csvSchema)
       .groupBy(col("event_type"))
@@ -164,6 +168,10 @@ object Ingest {
   private val evoPendingGc =
     new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
+  // The per-call directories of the round-trip faces (see callDir).
+  private val callDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
   private def deleteRecursively(f: java.io.File): Unit = {
     val children = f.listFiles()
     if (children != null) children.foreach(deleteRecursively)
@@ -175,6 +183,7 @@ object Ingest {
       evoRoots.values().forEach(r => deleteRecursively(new java.io.File(r)))
       var p = evoPendingGc.poll()
       while (p != null) { deleteRecursively(new java.io.File(p)); p = evoPendingGc.poll() }
+      callDirs.forEach(r => deleteRecursively(new java.io.File(r)))
     }))
   }
 

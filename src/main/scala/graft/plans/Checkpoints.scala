@@ -1,6 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Checkpoint materialization policy for the operators that must pin a
   * relation to EXACTLY ONE execution (the two-phase rank's range
@@ -41,10 +44,14 @@ object Checkpoints {
   // what we pinned; a conf change re-pins on the next stable() call.
   @volatile private var pinnedFor: Option[String] = None
 
-  /** Materialize `df` once, per the session's checkpoint policy. */
+  /** Materialize `df` once, per the session's checkpoint policy. A
+    * relation that only selects or renames columns of a checkpoint
+    * scan (a loop's last state, say) is materialized already and comes
+    * back as is. */
   def stable(df: DataFrame): DataFrame = {
     val s = df.sparkSession
-    s.conf.getOption(ConfKey).filter(_.nonEmpty) match {
+    if (overCheckpoint(df.queryExecution.analyzed)) df
+    else s.conf.getOption(ConfKey).filter(_.nonEmpty) match {
       case Some(dir) =>
         val sc = s.sparkContext
         if (sc.getCheckpointDir.isEmpty || !pinnedFor.contains(dir)) {
@@ -56,25 +63,42 @@ object Checkpoints {
     }
   }
 
+  /** Whether `p` is column selections and renames over a checkpointed scan. */
+  private def overCheckpoint(p: LogicalPlan): Boolean = p match {
+    case Project(list, child) => list.forall {
+        case _: Attribute | Alias(_: Attribute, _) => true
+        case _ => false
+      } && overCheckpoint(child)
+    case l: LogicalRDD => l.rdd.isCheckpointed
+    case _ => false
+  }
+
   /** Chain-position syntax: `df.transform(...).stableCheckpoint()`. */
   implicit class StableSyntax(private val df: DataFrame) extends AnyVal {
     def stableCheckpoint(): DataFrame = stable(df)
   }
 
   /** `df` hash-partitioned on column `key` into
-    * `spark.sql.shuffle.partitions` parts, materialized through
-    * [[stable]] and declared so: under AQE Spark keeps no partitioning
-    * on a checkpoint, so the declaration is what lets a later
-    * aggregate, window or join keyed on `key` run inside the
-    * checkpoint's partitions with no exchange. A repartition by number
-    * is never coalesced or split by AQE, and one whose input is already
-    * partitioned that way plans no shuffle at all.
+    * `spark.sql.shuffle.partitions` parts, passed through `within`,
+    * materialized through [[stable]] and declared so: under AQE Spark
+    * keeps no partitioning on a checkpoint, so the declaration is what
+    * lets a later aggregate, window or join keyed on `key` run inside
+    * the checkpoint's partitions with no exchange. A repartition by
+    * number is never coalesced or split by AQE, and one whose input is
+    * already partitioned that way plans no shuffle at all.
+    *
+    * `within` runs inside those partitions before the checkpoint: it
+    * must keep column `key` and move no row to another partition (a
+    * filter, a projection, an aggregate keyed on `key` and more
+    * columns, which the hash partitioning already clusters, so it plans
+    * no exchange of its own).
     */
-  def keyed(df: DataFrame, key: String): DataFrame = {
+  def keyed(df: DataFrame, key: String, within: DataFrame => DataFrame = identity)
+      : DataFrame = {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.graftshim.GraftSqlShim
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    GraftSqlShim.hashPartitioned(stable(df.repartition(n, col(key))), Seq(key), n)
+    GraftSqlShim.hashPartitioned(stable(within(df.repartition(n, col(key)))), Seq(key), n)
   }
 
   /** `n` fixed rounds of `step` from `init`, each round's state
@@ -156,9 +180,10 @@ object SharedRel {
   // (signature, relation); see SessionMemo.
   private val memo = new SessionMemo[DataFrame]
 
-  /** Memoized stable checkpoint of `build`, keyed on (session, id) and
-    * validated against `sig`: a hit with a stale signature rebuilds and
-    * REPLACES the entry (the dropped relation's checkpoint blocks are
+  /** Memoized stable checkpoint of `build` (a loop result, already a
+    * projection of a checkpoint, is kept as is), keyed on (session, id)
+    * and validated against `sig`: a hit with a stale signature rebuilds
+    * and REPLACES the entry (the dropped relation's checkpoint blocks are
     * freed by ContextCleaner once unreferenced). `sig` is
     * [[SessionMemo.corpusSig]] of the files the artifact derives from.
     */

@@ -336,8 +336,8 @@ class GeoSpec extends SparkSpec {
     * (day, event_id, canvas cell) through the cm-rounded EPSG:3857
     * projection, the reference bbox and the 1400×1000 binning — the
     * cell is None outside the bbox. */
-  private def referenceCells(): Array[(Long, Long, Option[(Long, Long)])] =
-    Geo.points(spark, sf)
+  private def referenceCells(dir: String = sf): Array[(Long, Long, Option[(Long, Long)])] =
+    Geo.points(spark, dir)
       .select(expr("unix_micros(ts) div 86400000000").as("dkey"),
         col("event_id"), col("lon"), col("lat"))
       .as[(Long, Long, Double, Double)].collect()
@@ -511,14 +511,15 @@ class GeoSpec extends SparkSpec {
     }
   }
 
-  test("frame churn replays the day-pair cell diff with exact union accounting") {
-    import spark.implicits._
-    // the same per-day raster the operator folds, replayed in memory
-    val cells = referenceCells().collect { case (d, _, Some((px, py))) => (d, px, py) }
+  /** The churn ledger of `dir` replayed in memory from the same per-day
+    * raster the operator folds, as (day, n_cur, n_prev, n_new, n_dead,
+    * mass_delta, churn_ppm) rows in day order. */
+  private def churnReplay(dir: String): Seq[(Long, Long, Long, Long, Long, Long, Long)] = {
+    val cells = referenceCells(dir).collect { case (d, _, Some((px, py))) => (d, px, py) }
     val byDay = cells.groupBy(_._1).view
       .mapValues(_.groupBy(c => (c._2, c._3)).view.mapValues(_.size.toLong).toMap)
       .toMap
-    val expected = byDay.keys.toSeq.sorted.map { d =>
+    byDay.keys.toSeq.sorted.map { d =>
       val cur = byDay(d); val prev = byDay.getOrElse(d - 1, Map.empty[(Long, Long), Long])
       val nNew = cur.keySet.diff(prev.keySet).size.toLong
       val nDead = prev.keySet.diff(cur.keySet).size.toLong
@@ -526,10 +527,16 @@ class GeoSpec extends SparkSpec {
         cur.values.sum - prev.values.sum,
         1000000L * (nNew + nDead) / (prev.size + nNew))
     }
-    val got = Geo.geoFrameChurn(spark, sf)
+  }
+
+  private def churnOf(dir: String): Seq[(Long, Long, Long, Long, Long, Long, Long)] =
+    Geo.geoFrameChurn(spark, dir)
       .select("day", "n_cur", "n_prev", "n_new", "n_dead", "mass_delta", "churn_ppm")
-      .as[(Long, Long, Long, Long, Long, Long, Long)].collect().toSeq.sortBy(_._1)
-    assert(got == expected, "frame churn diverged from the day-pair replay")
+      .as[(Long, Long, Long, Long, Long, Long, Long)].collect().toSeq
+
+  test("frame churn replays the day-pair cell diff with exact union accounting") {
+    val got = churnOf(sf).sortBy(_._1)
+    assert(got == churnReplay(sf), "frame churn diverged from the day-pair replay")
     // union identity + the first frame's all-new contract
     got.foreach { case (d, nc, np, nn, nd, _, _) =>
       assert(nc == np + nn - nd, s"day $d: union identity broken")
@@ -537,6 +544,50 @@ class GeoSpec extends SparkSpec {
     assert(got.head._3 == 0L && got.head._7 == 1000000L,
       "the corpus's first frame must be all-new")
     assert(got.exists(r => r._4 > 0 && r._5 > 0), "churn vacuous — no real frame diff")
+  }
+
+  /** Runs `body` on a temp corpus dir holding `events` as (event_id,
+    * timestamp text), deleted afterwards. */
+  private def withEvents[T](events: Seq[(Long, String)])(body: String => T): T = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-churn-")
+    try {
+      events.toDF("event_id", "tss")
+        .select(col("event_id"), to_timestamp(col("tss")).as("ts"))
+        .write.parquet(dir.resolve("events.parquet").toString)
+      body(dir.toString)
+    } finally Files.walk(dir).iterator().asScala.toList.reverse.foreach(Files.deleteIfExists)
+  }
+
+  test("frame churn on hand-built corpora: a gap day and a one-day corpus") {
+    // event ids e and e + 100000k land on the same point, so a cell can
+    // hold two points or stay lit from one day to the next; 2024-01-03
+    // is dark
+    val ids = 1L to 12L
+    val events =
+      (ids :+ 300001L).map(_ -> "2024-01-01 12:00:00") ++
+        (ids.take(6).map(_ + 100000L) ++ (13L to 18L)).map(_ -> "2024-01-02 12:00:00") ++
+        ids.take(4).map(e => (e + 200000L) -> "2024-01-04 12:00:00")
+    withEvents(events) { dir =>
+      val got = churnOf(dir)
+      assert(got.map(_._1) == got.map(_._1).sorted, "the ledger leaves out of day order")
+      assert(got == churnReplay(dir), "frame churn diverged from the day-pair replay")
+      val d0 = java.time.LocalDate.parse("2024-01-01").toEpochDay
+      // the dark day has no row, and the day after it has no previous frame
+      assert(got.map(_._1) == Seq(d0, d0 + 1, d0 + 3), s"ledger days: $got")
+      val (_, nc, np, nn, _, mass, ppm) = got(2)
+      assert(np == 0L && nn == nc && mass > 0L && ppm == 1000000L,
+        s"the day after a gap must be all-new: ${got(2)}")
+      assert(got(1)._2 > got(1)._4 && got(1)._4 > 0L && got(1)._5 > 0L,
+        s"vacuous: the consecutive days must share, gain and lose cells: ${got(1)}")
+    }
+    withEvents(ids.map(_ -> "2024-01-01 12:00:00")) { dir =>
+      val got = churnOf(dir)
+      assert(got == churnReplay(dir), "frame churn diverged from the day-pair replay")
+      assert(got.size == 1 && got.head._3 == 0L && got.head._4 == got.head._2 &&
+        got.head._7 == 1000000L, s"a one-day corpus is one all-new frame: $got")
+    }
   }
 
   /** The paper's job as the benchmark's geo_job runs it, one pass. */
@@ -565,9 +616,10 @@ class GeoSpec extends SparkSpec {
     // Every job is a scheduler round-trip; at these sizes each has one or a
     // few tasks, so the count, not the data, sets the pass time. The
     // per-frame render runs inside one frame-keyed partition: one
-    // shuffle per fold, no broadcast.
+    // shuffle per fold, no broadcast, and no ledger sort samples its
+    // input first.
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val budget = 37
+    val budget = 23
     val sc = spark.sparkContext
     val tag = "graft.jobBudget"
     def tagged(value: String)(body: => Unit): Unit = {

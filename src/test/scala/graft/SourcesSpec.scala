@@ -87,6 +87,24 @@ class SourcesSpec extends SparkSpec {
     }
   }
 
+  test("source_csv_roundtrip: two runs at once each match a run on its own") {
+    import java.util.concurrent.{CyclicBarrier, TimeUnit}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import graft.operators.Ingest
+    val alone = Ingest.sourceCsvRoundtrip(spark, sf).collect().toSeq
+    // both runs write their CSV (or fail to) before either reads it back
+    val written = new CyclicBarrier(2)
+    val runs = Seq.fill(2)(Future {
+      val df = try Ingest.sourceCsvRoundtrip(spark, sf)
+        finally written.await(2, TimeUnit.MINUTES)
+      df.collect().toSeq
+    })
+    runs.foreach(r => assert(Await.result(r, 5.minutes) == alone,
+      "a run read another run's CSV files"))
+  }
+
   test("schema-merge fixture is reused within a JVM yet tracks a regenerated dir") {
     import org.apache.spark.sql.functions._
     def writeEvents(dir: String, values: Seq[Double]): Unit =
