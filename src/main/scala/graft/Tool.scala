@@ -60,19 +60,25 @@ object Tool {
     * and its query execution. */
   private[graft] def actionsOf(spark: SparkSession)(body: => Unit): List[(String, QueryExecution)] = {
     // listener events arrive on the bus thread, in order: a marker
-    // action closes the body, which is done once the marker arrives
+    // action on each side of the body brackets its events (an earlier
+    // action's event may still be on the bus when the listener joins)
     val seen = new java.util.concurrent.LinkedBlockingQueue[(String, QueryExecution)]()
     val listener = new QueryExecutionListener {
       def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit = seen.put(action -> qe)
       def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = seen.put(action -> qe)
     }
+    def marker(): QueryExecution = {
+      val m = spark.range(1)
+      m.collect()
+      m.queryExecution
+    }
+    def upTo(m: QueryExecution): List[(String, QueryExecution)] =
+      Iterator.continually(seen.take()).takeWhile { case (_, qe) => !(qe eq m) }.toList
     spark.listenerManager.register(listener)
     try {
+      upTo(marker())
       body
-      val marker = spark.range(1)
-      marker.collect()
-      Iterator.continually(seen.take())
-        .takeWhile { case (_, qe) => !(qe eq marker.queryExecution) }.toList
+      upTo(marker())
     } finally spark.listenerManager.unregister(listener)
   }
 

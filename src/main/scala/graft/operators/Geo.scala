@@ -38,13 +38,15 @@ import graft.sources.Tables
   *
   * == Scale notes ==
   * Rasterization groups on a bounded key space (1.4M pixels): map-side
-  * partial aggregation absorbs virtually all input rows, shuffle volume
-  * is O(pixels) regardless of input size. Eq-hist ranks the raster
+  * partial aggregation absorbs virtually all input rows, so the raster
+  * and churn folds shuffle O(pixels) regardless of input size (the
+  * per-frame faces do not; see below). Eq-hist ranks the raster
   * (O(pixels)), never the input. The per-day fan-out is a grouped agg +
   * tiny window — the reference's 24-way array job becomes partition
   * pruning + shuffle-free combine. The per-frame render shuffles each
   * fold's binned points once, on the frame day (at most 4 longs a
-  * point), and folds them into cells inside the frame's partition:
+  * point), and folds them into cells inside the frame's partition, so
+  * that shuffle grows with the corpus, not the canvas ([[framed]]):
   * each frame is then one task with canvas-bounded work — at most 1.4M
   * spread cells sorted per frame for its rank — and no exchange or
   * broadcast past the fold. O(days) ledgers end in one partition, so
@@ -539,11 +541,16 @@ object Geo {
     *
     * The one shuffle moves points, at most 4 longs each, not combined
     * cells: no map-side combine runs before it, so its volume is the
-    * corpus's binned points. With few points per lit cell, as in the
-    * test and benchmark corpora, that costs less than a second shuffle
-    * and its job; on a corpus whose points outnumber its lit cells by
-    * orders of magnitude, a combine before the frame shuffle would pay
-    * for itself again.
+    * corpus's binned points. The trade turns on the points per lit
+    * (dkey, px, py) cell, measured in SCALING.md ("Frame shuffle"):
+    * 1.0 in the test corpora and the benchmark's `geo_job` (2.2 for
+    * [[pipelineFrameBuild]], whose overflow cell takes every
+    * out-of-bbox point of a day), where this saves a shuffle and a job
+    * per face; 100 on an events replica, where each face ran about a
+    * quarter slower than with Spark's partial aggregate and a second
+    * shuffle on `dkey`. Neither measured combine keeps both: Spark's
+    * costs that second shuffle, and a per-partition hash combine in
+    * `mapPartitions` ran slower still at 100.
     */
   private def framed(points: DataFrame, aggs: Column*): DataFrame =
     graft.plans.Checkpoints.keyed(points, "dkey",

@@ -25,14 +25,26 @@ object Ingest {
     StructField("value_cents", LongType),
     StructField("day", StringType)))
 
-  /** Where one call of a round-trip face writes its `kind` files: a
-    * fresh temp directory, so two sessions running the face at once
-    * (in one JVM or two) never read each other's part files. The face's
-    * result reads it lazily, so it lives until the JVM exits. */
-  private def callDir(kind: String): String = {
+  /** One call of a round-trip face: `write` puts the slice's `kind`
+    * files under a fresh temp directory, `load` reads them back, and
+    * their per-event-type rollup is collected before the directory is
+    * deleted. Two sessions running the face at once (in one JVM or two)
+    * never read each other's part files, and no call leaves its
+    * directory behind. */
+  private def roundTrip(s: SparkSession, kind: String)(write: String => Unit)
+      (load: String => DataFrame): DataFrame = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_${kind}_")
-    callDirs.add(d.toString)
-    d.resolve("out").toString
+    try {
+      val path = d.resolve("out").toString
+      write(path)
+      val out = load(path)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          (sum(col("value_cents")) / 100.0).as("sum_value"),
+          min(col("day")).as("first_day"), max(col("day")).as("last_day"))
+        .orderBy(col("event_type"))
+      s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
+    } finally deleteRecursively(d.toFile)
   }
 
   /** CSV round-trip: a deterministic ~0.1% slice of events is written
@@ -56,14 +68,8 @@ object Ingest {
       .select(col("event_id"), col("user_id"), col("event_type"),
         cents(col("value")).as("value_cents"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
-    val path = callDir("csv")
-    slice.write.mode("overwrite").option("header", "true").csv(path)
-    Tables.loadCsv(s, path, csvSchema)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        (sum(col("value_cents")) / 100.0).as("sum_value"),
-        min(col("day")).as("first_day"), max(col("day")).as("last_day"))
-      .orderBy(col("event_type"))
+    roundTrip(s, "csv")(path => slice.write.mode("overwrite").option("header", "true").csv(path))(
+      path => Tables.loadCsv(s, path, csvSchema))
   }
 
   val sourceCsvRoundtripSql: String =
@@ -86,14 +92,8 @@ object Ingest {
       .select(col("event_id"), col("user_id"), col("event_type"),
         cents(col("value")).as("value_cents"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
-    val path = callDir("json")
-    slice.write.mode("overwrite").json(path)
-    Tables.loadJson(s, path, csvSchema)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        (sum(col("value_cents")) / 100.0).as("sum_value"),
-        min(col("day")).as("first_day"), max(col("day")).as("last_day"))
-      .orderBy(col("event_type"))
+    roundTrip(s, "json")(path => slice.write.mode("overwrite").json(path))(
+      path => Tables.loadJson(s, path, csvSchema))
   }
 
   val sourceJsonRoundtripSql: String =
@@ -115,14 +115,8 @@ object Ingest {
       .select(col("event_id"), col("user_id"), col("event_type"),
         cents(col("value")).as("value_cents"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
-    val path = callDir("orc")
-    slice.write.mode("overwrite").orc(path)
-    Tables.loadOrc(s, path, csvSchema)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        (sum(col("value_cents")) / 100.0).as("sum_value"),
-        min(col("day")).as("first_day"), max(col("day")).as("last_day"))
-      .orderBy(col("event_type"))
+    roundTrip(s, "orc")(path => slice.write.mode("overwrite").orc(path))(
+      path => Tables.loadOrc(s, path, csvSchema))
   }
 
   val sourceOrcRoundtripSql: String =
@@ -168,10 +162,6 @@ object Ingest {
   private val evoPendingGc =
     new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
-  // The per-call directories of the round-trip faces (see callDir).
-  private val callDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
   private def deleteRecursively(f: java.io.File): Unit = {
     val children = f.listFiles()
     if (children != null) children.foreach(deleteRecursively)
@@ -183,7 +173,6 @@ object Ingest {
       evoRoots.values().forEach(r => deleteRecursively(new java.io.File(r)))
       var p = evoPendingGc.poll()
       while (p != null) { deleteRecursively(new java.io.File(p)); p = evoPendingGc.poll() }
-      callDirs.forEach(r => deleteRecursively(new java.io.File(r)))
     }))
   }
 
