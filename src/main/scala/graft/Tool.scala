@@ -18,8 +18,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    exchanges included): the re-planned final plan's stage ids,
   *    codegen ids and exchange reuse follow which stage finished first.
   *    Tokens that change from run to run (expression ids, `plan_id=`,
-  *    RDD ids, the warehouse path, lambda and object identities, and
-  *    the codegen ids of executed subquery plans) are stripped, so two
+  *    RDD ids, the warehouse path, lambda and object identities, the
+  *    codegen ids of executed subquery plans, and the random suffixes
+  *    of the ingest faces' temp directories) are stripped, so two
   *    dumps compare with plain `diff`. Each key ends with one
   *    `===SUMMARY=== <key> actions=<a> shuffles=<s> broadcasts=<b>` line:
   *    its action count and the shuffle and broadcast exchanges planned
@@ -55,6 +56,8 @@ object Tool {
       .replaceAll("(\\w)@[0-9a-f]{4,}\\b", "$1@")
       .replaceAll("\\[codegen id : \\d+\\]", "[codegen id]")
       .replaceAll("WholeStageCodegen \\(\\d+\\)", "WholeStageCodegen ()")
+      .replaceAll("graft_(csv|json|orc|text)_-?\\d+", "graft_$1_")
+      .replaceAll("graft_evo_[0-9a-f]{8}_", "graft_evo_")
 
   /** Every action `body` runs in `spark`, in order: the action's name
     * and its query execution. */

@@ -1,16 +1,45 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Codegen'd polynomial rolling hash h = fold(bytes, (h·31 + b) mod m)
-  * — graft's engine-portable string id (the DuckDB oracles replay the
-  * identical fold via `list_reduce` over `ascii()` codes; byte == code
-  * point for the ASCII corpora this engine targets, documented at the
-  * call sites).
+/** The engine-portable string hash, `poly_hash`, built once per side:
+  * [[polyHash]] on the engine and [[polyHashSql]] in the DuckDB
+  * oracles. Every operator that samples, splits, fingerprints or
+  * sketches by string calls these two builders.
+  *
+  * Contract: h = fold(units, (h·31 + u) mod m) from h = 0, over the
+  * UTF-8 bytes of the string on the engine and over its code points in
+  * DuckDB (`ascii` of each character). The two agree on ASCII text,
+  * which is what graft's corpora hold. NULL in gives NULL out on both
+  * sides; the empty string hashes to 0. Row-level Scala code (the
+  * MinHash kernel, Dedup's partition loops) folds chars the same way
+  * through [[MinHashKernel.polyHash]].
+  */
+object HashExpressions {
+
+  /** `poly_hash(c, m)` as a Column: one [[StringPolyHash]] node. */
+  def polyHash(c: Column, m: Long): Column =
+    GraftSqlShim.column(StringPolyHash(GraftSqlShim.expression(c),
+      GraftSqlShim.expression(lit(m))))
+
+  /** DuckDB replay of [[polyHash]] over the SQL expression `e`. `e`
+    * appears once in the text (a singleton list the NULL guard maps
+    * over), so nesting folds grows the SQL linearly. */
+  def polyHashSql(e: String, m: Long): String =
+    s"list_transform([$e], s -> CASE WHEN s IS NULL THEN NULL ELSE list_reduce(list_prepend(" +
+      "CAST(0 AS BIGINT), list_transform(string_split(s, ''), c -> CAST(ascii(c) AS BIGINT))), " +
+      s"(a, b) -> (a * 31 + b) % $m) END)[1]"
+}
+
+/** Codegen'd polynomial rolling hash, the engine half of
+  * [[HashExpressions.polyHash]].
   *
   * Exists as a native `Expression` so fingerprint/split/dedup hashing
   * stays inside whole-stage codegen: the typed `Dataset.map`

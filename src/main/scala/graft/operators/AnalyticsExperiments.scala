@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.HashExpressions.{polyHash, polyHashSql}
 
 /** Experimentation / causal operators: A/B lift, CUPED, sequential
   * tests, power, SRM, difference-in-differences and the metric tree.
@@ -28,10 +29,7 @@ trait AnalyticsExperiments extends AnalyticsBase {
     * scan + two combine stages with O(1) state.
     */
   def eventsAbLift(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("ab|"), col("user_id").cast("string"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("ab|"), col("user_id").cast("string")), 1000000007L)
     events(s, dir)
       .groupBy(col("user_id"))
       .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("conv"))
@@ -64,9 +62,9 @@ trait AnalyticsExperiments extends AnalyticsBase {
 
   /** DuckDB twin: same salted-hash arms, same staged floor z². */
   val eventsAbLiftSql: String =
-    """WITH u AS (
+    s"""WITH u AS (
       |  SELECT user_id, max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('ab|' || CAST(user_id AS VARCHAR), ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 2 AS armn
+      |    ${polyHashSql("'ab|' || CAST(user_id AS VARCHAR)", 1000000007L)} % 2 AS armn
       |  FROM events GROUP BY user_id),
       |a AS (SELECT
       |    CAST(sum(CASE WHEN armn = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
@@ -127,10 +125,7 @@ trait AnalyticsExperiments extends AnalyticsBase {
     * shape to [[eventsAbLift]].
     */
   def eventsAbCuped(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("ab|"), col("user_id").cast("string"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("ab|"), col("user_id").cast("string")), 1000000007L)
     val cut = lit("2024-01-16").cast("timestamp")
     val perUser = events(s, dir)
       .groupBy(col("user_id"))
@@ -203,11 +198,11 @@ trait AnalyticsExperiments extends AnalyticsBase {
   /** DuckDB twin: same per-user fold, same HUGEINT moment sums, same
     * shift-stabilized floor divisions in the same staging order. */
   val eventsAbCupedSql: String =
-    """WITH u AS (
+    s"""WITH u AS (
       |  SELECT user_id,
       |    CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END) AS BIGINT) AS x,
       |    CAST(sum(CASE WHEN ts >= TIMESTAMP '2024-01-16' AND event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS y,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('ab|' || CAST(user_id AS VARCHAR), ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 2 AS armn
+      |    ${polyHashSql("'ab|' || CAST(user_id AS VARCHAR)", 1000000007L)} % 2 AS armn
       |  FROM events GROUP BY user_id),
       |s AS (SELECT
       |    CAST(count(*) AS HUGEINT) AS n,
@@ -283,11 +278,8 @@ trait AnalyticsExperiments extends AnalyticsBase {
     */
   def eventsAbSequential(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.Checkpoints.StableSyntax
-    import org.apache.spark.sql.graftshim.GraftSqlShim
     import org.apache.spark.sql.expressions.Window
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("ab|"), col("user_id").cast("string"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("ab|"), col("user_id").cast("string")), 1000000007L)
     val firsts = events(s, dir)
       .select(col("user_id"),
         expr("unix_micros(ts) div 86400000000").as("day"),
@@ -352,10 +344,10 @@ trait AnalyticsExperiments extends AnalyticsBase {
   /** DuckDB twin: same firsts fold, delta union, ranked look join and
     * staged integer boundaries in the same order. */
   val eventsAbSequentialSql: String =
-    """WITH u AS (SELECT user_id,
+    s"""WITH u AS (SELECT user_id,
       |    min(epoch_us(ts) // 86400000000) AS first_day,
       |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) // 86400000000 END) AS first_purch_day,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('ab|' || CAST(user_id AS VARCHAR), ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 2 AS armn
+      |    ${polyHashSql("'ab|' || CAST(user_id AS VARCHAR)", 1000000007L)} % 2 AS armn
       |  FROM events GROUP BY user_id),
       |del AS (
       |  SELECT first_day AS day,
@@ -514,10 +506,7 @@ trait AnalyticsExperiments extends AnalyticsBase {
   }
 
   def eventsDid(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("ab|"), col("user_id").cast("string"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("ab|"), col("user_id").cast("string")), 1000000007L)
     val cutDay = 19738L // 2024-01-16 in epoch days
     val ud = events(s, dir)
       .select(col("user_id"),
@@ -551,11 +540,11 @@ trait AnalyticsExperiments extends AnalyticsBase {
 
   /** DuckDB twin: same (user, day) dedupe, same 8-lane cell fold. */
   val eventsDidSql: String =
-    """WITH ud AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
+    s"""WITH ud AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
       |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
       |  FROM events GROUP BY 1, 2),
       |t AS (SELECT
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('ab|' || CAST(user_id AS VARCHAR), ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 2 AS armn,
+      |    ${polyHashSql("'ab|' || CAST(user_id AS VARCHAR)", 1000000007L)} % 2 AS armn,
       |    CASE WHEN day >= 19738 THEN 1 ELSE 0 END AS post, conv
       |  FROM ud),
       |c AS (SELECT
@@ -649,10 +638,7 @@ trait AnalyticsExperiments extends AnalyticsBase {
       |FROM y ORDER BY event_type, mde_pct""".stripMargin
 
   def eventsAbSrm(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("ab|"), col("user_id").cast("string"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("ab|"), col("user_id").cast("string")), 1000000007L)
     events(s, dir)
       .select(expr("unix_micros(ts) div 86400000000").as("day"),
         col("user_id"), (h % 2L).as("armn"))
@@ -670,8 +656,8 @@ trait AnalyticsExperiments extends AnalyticsBase {
 
   /** DuckDB twin: same salted arms, same exact integer χ². */
   val eventsAbSrmSql: String =
-    """WITH e AS (SELECT epoch_us(ts) // 86400000000 AS day, user_id,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('ab|' || CAST(user_id AS VARCHAR), ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 2 AS armn
+    s"""WITH e AS (SELECT epoch_us(ts) // 86400000000 AS day, user_id,
+      |    ${polyHashSql("'ab|' || CAST(user_id AS VARCHAR)", 1000000007L)} % 2 AS armn
       |  FROM events),
       |d AS (SELECT day,
       |    CAST(count(DISTINCT CASE WHEN armn = 0 THEN user_id END) AS BIGINT) AS n_a,
@@ -708,10 +694,7 @@ trait AnalyticsExperiments extends AnalyticsBase {
     * at any corpus size.
     */
   def eventsUplift(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("ab|"), col("user_id").cast("string"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("ab|"), col("user_id").cast("string")), 1000000007L)
     val cut = lit("2024-01-16").cast("timestamp")
     val wkEnd = lit("2024-01-23").cast("timestamp")
     events(s, dir)
@@ -777,10 +760,7 @@ trait AnalyticsExperiments extends AnalyticsBase {
     * contract as the stream_* batch oracles.
     */
   def eventsAbBandit(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("ab|"), col("user_id").cast("string"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("ab|"), col("user_id").cast("string")), 1000000007L)
     val byDay = events(s, dir)
       .select(expr("unix_micros(ts) div 86400000000").as("day"), col("user_id"),
         (h % 2L).as("armn"), col("event_type"))
@@ -824,9 +804,9 @@ trait AnalyticsExperiments extends AnalyticsBase {
   /** DuckDB twin: same distinct-user day fold, prior-window posterior
     * cross-multiplication, running regret. */
   val eventsAbBanditSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT epoch_us(ts) // 86400000000 AS day, user_id, event_type,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('ab|' || CAST(user_id AS VARCHAR), ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 2 AS armn
+      |    ${polyHashSql("'ab|' || CAST(user_id AS VARCHAR)", 1000000007L)} % 2 AS armn
       |  FROM events),
       |g AS (SELECT day, armn,
       |    CAST(count(DISTINCT user_id) AS BIGINT) AS n,
@@ -865,12 +845,12 @@ trait AnalyticsExperiments extends AnalyticsBase {
   /** DuckDB twin: same pre-period segmentation, salted-hash arms,
     * first-week outcome window, staged floor z². */
   val eventsUpliftSql: String =
-    """WITH u AS (
+    s"""WITH u AS (
       |  SELECT user_id,
       |    CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END) AS BIGINT) AS pre_cnt,
       |    max(CASE WHEN event_type = 'purchase' AND ts >= TIMESTAMP '2024-01-16'
       |      AND ts < TIMESTAMP '2024-01-23' THEN 1 ELSE 0 END) AS conv,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('ab|' || CAST(user_id AS VARCHAR), ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 2 AS armn
+      |    ${polyHashSql("'ab|' || CAST(user_id AS VARCHAR)", 1000000007L)} % 2 AS armn
       |  FROM events GROUP BY user_id),
       |g AS (SELECT least(pre_cnt // 10, 4) AS seg,
       |    CAST(sum(CASE WHEN armn = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import graft.plans.Checkpoints.StableSyntax
+import graft.functions.HashExpressions.{polyHash, polyHashSql}
 
 /** Time-series / ML-adjacent operators: gap-fill, EWMA, anomaly
   * (z-score + robust), CUSUM, changepoint, seasonality, the Holt /
@@ -1475,7 +1476,6 @@ trait AnalyticsForecast extends AnalyticsBase {
     * pipeline_pretrain_build contract).
     */
   def pipelineFeatureBuild(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
     val led = events(s, dir)
       .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("day"),
         col("event_type"), cents(col("value")).as("vc"))
@@ -1498,9 +1498,7 @@ trait AnalyticsForecast extends AnalyticsBase {
     val lab = led.crossJoin(broadcast(cutoff)).groupBy(col("user_id"))
       .agg(max(when(col("event_type") === "purchase" && col("day") >= col("cd"), 1L)
         .otherwise(0L)).as("label"))
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("ftr|"), col("user_id").cast("string"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("ftr|"), col("user_id").cast("string")), 1000000007L)
     val base = feats.join(mode, "user_id").join(lab, "user_id")
       .select(col("user_id"),
         when(h % 5L === 0L, "val").otherwise("train").as("fold"),
@@ -1528,7 +1526,7 @@ trait AnalyticsForecast extends AnalyticsBase {
   /** DuckDB twin: the stage CTEs chained — ledger, cutoff, features,
     * mode, label, fold, train-only encoding. */
   val pipelineFeatureBuildSql: String =
-    """WITH led AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
+    s"""WITH led AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
       |    event_type, count(*) AS n,
       |    CAST(sum(round(value*100)) AS BIGINT) AS c
       |  FROM events GROUP BY 1, 2, 3),
@@ -1549,10 +1547,7 @@ trait AnalyticsForecast extends AnalyticsBase {
       |      THEN 1 ELSE 0 END) AS BIGINT) AS label
       |  FROM led l CROSS JOIN cdt GROUP BY 1),
       |base AS (SELECT f.user_id,
-      |    CASE WHEN list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |        list_transform(string_split('ftr|' || CAST(f.user_id AS VARCHAR), ''),
-      |          c -> CAST(ascii(c) AS BIGINT))),
-      |        (a, b) -> (a * 31 + b) % 1000000007) % 5 = 0
+      |    CASE WHEN ${polyHashSql("'ftr|' || CAST(f.user_id AS VARCHAR)", 1000000007L)} % 5 = 0
       |      THEN 'val' ELSE 'train' END AS fold,
       |    f_n7, f_n28, f_cents28, f_days_since_last,
       |    CAST(CASE WHEN f_days_since_last > 7 THEN 1 ELSE 0 END AS BIGINT) AS f_stale,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.plans.Checkpoints.StableSyntax
+import graft.functions.HashExpressions.{polyHash, polyHashSql}
 
 /** Relational core of the Analytics family: TPC-H-style aggregates,
   * the join taxonomy (broadcast/semi/anti/outer/as-of/range/bucketed/
@@ -1372,6 +1373,28 @@ trait AnalyticsRelational extends AnalyticsBase {
       |GROUP BY e.k ORDER BY e.k""".stripMargin
 
   // ----------------------------------------------- count-min sketch
+  /** CMS geometry shared by every count-min face, the streaming one
+    * included: 4 affine lanes (a, b), cell = ((a·u + b) mod (2³¹ − 1))
+    * mod w, over a 1024-cell width unless a face tunes it.
+    */
+  private[graft] val cmsLanes = Seq((1103515245L, 12345L),
+    (1140671485L, 12820163L), (214013L, 2531011L), (69069L, 1L))
+
+  /** Lane `i`'s cell of key `u` at width `w`. */
+  private[graft] def cmsCell(i: Int, u: Column, w: Column): Column =
+    pmod(pmod(u * lit(cmsLanes(i)._1) + lit(cmsLanes(i)._2),
+      lit(2147483647L)), w)
+
+  /** One (lane, cell) struct row per lane for key `u`, exploded. */
+  private[graft] def cmsLaneCells(u: Column, w: Column = lit(1024L)): Column =
+    explode(array(cmsLanes.indices.map(i =>
+      struct(lit(i.toLong).as("lane"), cmsCell(i, u, w).as("cell"))): _*))
+
+  /** DuckDB twin of [[cmsLanes]]: the relation l(lane, a, b). */
+  private[graft] val cmsLanesSql: String = cmsLanes.zipWithIndex
+    .map { case ((a, b), i) => s"($i, $a, $b)" }
+    .mkString("SELECT * FROM (VALUES ", ", ", ") AS t(lane, a, b)")
+
   /** Heavy hitters via a count-min sketch, exact-verified: a 4×1024
     * CMS over event user_ids, then the top-20 users by exact count with
     * their CMS estimate alongside (est ≥ exact always; est_err is the
@@ -1391,29 +1414,14 @@ trait AnalyticsRelational extends AnalyticsBase {
     * candidates come from per-partition local top-k, re-estimated
     * against the broadcast sketch.)
     */
-  /** CMS geometry shared with the streaming face: 4 affine lanes over
-    * a 1024-cell width, mod the Mersenne prime 2^31−1.
-    */
-  private[graft] val cmsLanes = Seq((1103515245L, 12345L),
-    (1140671485L, 12820163L), (214013L, 2531011L), (69069L, 1L))
-  private[graft] def cmsCell(i: Int, u: Column): Column =
-    pmod(pmod(u * lit(cmsLanes(i)._1) + lit(cmsLanes(i)._2),
-      lit(2147483647L)), lit(1024L))
-
   def aggHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    val lanes = cmsLanes
-    def cellOf(i: Int, u: Column): Column = cmsCell(i, u)
     val e = events(s, dir).select(col("user_id").as("u"))
-    val cms = e.select(explode(array(lanes.indices.map(i =>
-        struct(lit(i.toLong).as("lane"), cellOf(i, col("u")).as("cell"))): _*))
-        .as("lc"))
+    val cms = e.select(cmsLaneCells(col("u")).as("lc"))
       .select(col("lc.lane").as("lane"), col("lc.cell").as("cell"))
       .groupBy(col("lane"), col("cell")).agg(count(lit(1)).as("c"))
     val top = e.groupBy(col("u")).agg(count(lit(1)).as("n_exact"))
       .orderBy(col("n_exact").desc, col("u")).limit(20)
-    top.select(col("u"), col("n_exact"), explode(array(lanes.indices.map(i =>
-        struct(lit(i.toLong).as("lane"), cellOf(i, col("u")).as("cell"))): _*))
-        .as("lc"))
+    top.select(col("u"), col("n_exact"), cmsLaneCells(col("u")).as("lc"))
       .select(col("u"), col("n_exact"),
         col("lc.lane").as("lane"), col("lc.cell").as("cell"))
       .join(broadcast(cms), Seq("lane", "cell"))
@@ -1424,10 +1432,8 @@ trait AnalyticsRelational extends AnalyticsBase {
   }
 
   val aggHeavyHittersSql: String =
-    """WITH e AS (SELECT user_id AS u FROM events),
-      |l AS (SELECT * FROM (VALUES (0, 1103515245, 12345),
-      |    (1, 1140671485, 12820163), (2, 214013, 2531011),
-      |    (3, 69069, 1)) AS t(lane, a, b)),
+    s"""WITH e AS (SELECT user_id AS u FROM events),
+      |l AS ($cmsLanesSql),
       |cells AS (SELECT lane, ((a*u + b) % 2147483647) % 1024 AS cell,
       |    count(*) AS c
       |  FROM e CROSS JOIN l GROUP BY 1, 2),
@@ -1465,22 +1471,19 @@ trait AnalyticsRelational extends AnalyticsBase {
     */
   def aggCountMinUnion(s: SparkSession, dir: String): DataFrame = {
     val cut = lit("2024-01-16").cast("timestamp")
-    val lanes = cmsLanes
-    def laneCells(u: Column): Column = explode(array(lanes.indices.map(i =>
-      struct(lit(i.toLong).as("lane"), cmsCell(i, u).as("cell"))): _*))
     val ue = events(s, dir)
       .select(col("user_id").as("u"), (col("ts") < cut).cast("long").as("is_ref"))
       .groupBy(col("u"))
       .agg(count(lit(1)).as("n_all"), sum(col("is_ref")).as("n_ref"))
       .stableCheckpoint()
-    val sk = ue.select(col("n_all"), col("n_ref"), laneCells(col("u")).as("lc"))
+    val sk = ue.select(col("n_all"), col("n_ref"), cmsLaneCells(col("u")).as("lc"))
       .select(col("lc.lane").as("lane"), col("lc.cell").as("cell"),
         col("n_all"), col("n_ref"))
       .groupBy(col("lane"), col("cell"))
       .agg(sum(col("n_ref")).as("ref_c"),
         sum(col("n_all") - col("n_ref")).as("cur_c"))
     val direct = events(s, dir).select(col("user_id").as("u"))
-      .select(laneCells(col("u")).as("lc"))
+      .select(cmsLaneCells(col("u")).as("lc"))
       .select(col("lc.lane").as("lane"), col("lc.cell").as("cell"))
       .groupBy(col("lane"), col("cell")).agg(count(lit(1)).as("c"))
       .select(col("lane"), col("cell"), lit("direct").as("face"), col("c"))
@@ -1494,7 +1497,7 @@ trait AnalyticsRelational extends AnalyticsBase {
     val faces = top.select(col("u"), expr(
       "stack(4, 'ref', n_ref, 'cur', n_all - n_ref," +
         " 'merged', n_all, 'direct', n_all) AS (face, n_exact)"))
-    faces.select(col("u"), col("face"), col("n_exact"), laneCells(col("u")).as("lc"))
+    faces.select(col("u"), col("face"), col("n_exact"), cmsLaneCells(col("u")).as("lc"))
       .select(col("u"), col("face"), col("n_exact"),
         col("lc.lane").as("lane"), col("lc.cell").as("cell"))
       .join(broadcast(stacked), col("slane") === col("lane") &&
@@ -1508,14 +1511,12 @@ trait AnalyticsRelational extends AnalyticsBase {
 
   /** DuckDB twin: same lanes, same epoch cut, same stacked faces. */
   val aggCountMinUnionSql: String =
-    """WITH e AS (SELECT user_id AS u,
+    s"""WITH e AS (SELECT user_id AS u,
       |    CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END AS is_ref
       |  FROM events),
       |ue AS (SELECT u, count(*) AS n_all, CAST(sum(is_ref) AS BIGINT) AS n_ref
       |  FROM e GROUP BY u),
-      |l AS (SELECT * FROM (VALUES (0, 1103515245, 12345),
-      |    (1, 1140671485, 12820163), (2, 214013, 2531011),
-      |    (3, 69069, 1)) AS t(lane, a, b)),
+      |l AS ($cmsLanesSql),
       |sk AS (SELECT lane, ((a*u + b) % 2147483647) % 1024 AS cell,
       |    CAST(sum(n_ref) AS BIGINT) AS ref_c,
       |    CAST(sum(n_all - n_ref) AS BIGINT) AS cur_c
@@ -1559,17 +1560,12 @@ trait AnalyticsRelational extends AnalyticsBase {
     * the probe joins broadcast the register table.
     */
   def aggCountMinCurve(s: SparkSession, dir: String): DataFrame = {
-    val lanes = cmsLanes
-    def cellAt(i: Int, u: Column, w: Column): Column =
-      pmod(pmod(u * lit(lanes(i)._1) + lit(lanes(i)._2), lit(2147483647L)), w)
     val ue = events(s, dir).select(col("user_id").as("u"))
       .groupBy(col("u")).agg(count(lit(1)).as("n"))
       .stableCheckpoint()
     val ws = s.createDataFrame(Seq(64L, 256L, 1024L, 4096L).map(Tuple1.apply)).toDF("w")
     val cells = ue.crossJoin(broadcast(ws))
-      .select(col("w"), col("n"), explode(array(lanes.indices.map(i =>
-        struct(lit(i.toLong).as("lane"), cellAt(i, col("u"), col("w")).as("cell"))): _*))
-        .as("lc"))
+      .select(col("w"), col("n"), cmsLaneCells(col("u"), col("w")).as("lc"))
       .select(col("w"), col("lc.lane").as("lane"), col("lc.cell").as("cell"), col("n"))
       .groupBy(col("w"), col("lane"), col("cell")).agg(sum(col("n")).as("c"))
       .select(col("w").as("sw"), col("lane").as("slane"),
@@ -1577,9 +1573,7 @@ trait AnalyticsRelational extends AnalyticsBase {
     val top = ue.orderBy(col("n").desc, col("u")).limit(5)
     top.crossJoin(broadcast(ws))
       .select(col("u"), col("n").as("n_exact"), col("w"),
-        explode(array(lanes.indices.map(i =>
-          struct(lit(i.toLong).as("lane"), cellAt(i, col("u"), col("w")).as("cell"))): _*))
-          .as("lc"))
+        cmsLaneCells(col("u"), col("w")).as("lc"))
       .select(col("u"), col("n_exact"), col("w"),
         col("lc.lane").as("lane"), col("lc.cell").as("cell"))
       .join(broadcast(cells), col("sw") === col("w") &&
@@ -1593,11 +1587,9 @@ trait AnalyticsRelational extends AnalyticsBase {
 
   /** DuckDB twin: same lanes, same width fan-out over the user fold. */
   val aggCountMinCurveSql: String =
-    """WITH ue AS (SELECT user_id AS u, count(*) AS n FROM events GROUP BY 1),
+    s"""WITH ue AS (SELECT user_id AS u, count(*) AS n FROM events GROUP BY 1),
       |ws AS (SELECT unnest(CAST([64,256,1024,4096] AS BIGINT[])) AS w),
-      |l AS (SELECT * FROM (VALUES (0, 1103515245, 12345),
-      |    (1, 1140671485, 12820163), (2, 214013, 2531011),
-      |    (3, 69069, 1)) AS t(lane, a, b)),
+      |l AS ($cmsLanesSql),
       |cells AS (SELECT w, lane, ((a*u + b) % 2147483647) % w AS cell,
       |    CAST(sum(n) AS BIGINT) AS c
       |  FROM ue CROSS JOIN ws CROSS JOIN l GROUP BY 1, 2, 3),
@@ -1666,46 +1658,112 @@ trait AnalyticsRelational extends AnalyticsBase {
       |     OR (b.price_cents <= a.price_cents AND b.p_size > a.p_size))
       |ORDER BY price_cents, p_partkey""".stripMargin
 
-  // ----------------------------------------------- session co-occurrence
-  /** (register index, rank) pair for one user id — shared between the
-    * batch replay and [[graft.streaming.EventStreams.hllRegisterStream]]
-    * so the two sketches are the same function of the data. h ≥ 0, so
-    * `% 64` and `>> 6` are the mod/div pair exactly.
+  // ------------------------------------------------------ integer HLL
+  /** The replayable integer HyperLogLog, written once per side and
+    * composed by every HLL face ([[aggHllReplay]], [[aggHllGrouped]],
+    * [[aggHllUnion]], Maintain's table profiles, the DAU and register
+    * streams). A sketch long u hashes affinely, h = [[hllHash]] =
+    * (1103515245·u + 12345) mod (2³¹ − 1), into register j = h mod 64
+    * at rank rho = 26 − bitlength(h div 64 + 1); a sketch keeps each
+    * register's max rank mj. Its estimate is the exact-integer harmonic
+    * mean est_milli = 709·4096·2²⁶ div s over s = Σⱼ 2^(26 − mj) across
+    * all 64 registers (empty ones at rank 0), beside v_zero, the empty
+    * register count a consumer's small-range correction reads. h ≥ 0
+    * for u ≥ 0, so `% 64` and `>> 6` are the mod/div pair exactly; a
+    * caller with signed longs pmods them first.
     */
-  private[graft] def hllRegister(u: Column): Column = {
-    val h = (lit(1103515245L) * u + 12345L) % 2147483647L
-    struct((h % 64).as("j"),
+  private[graft] def hllHash(u: Column): Column =
+    (lit(1103515245L) * u + 12345L) % 2147483647L
+
+  /** The (j, rho) register pair of sketch long `u`. */
+  private[graft] def hllRegister(u: Column): Seq[Column] = {
+    val h = hllHash(u)
+    Seq((h % 64).as("j"),
       (lit(26) - length(bin(shiftright(h, 6) + 1))).cast("long").as("rho"))
   }
 
+  /** Occupied registers of `df`'s sketch longs `u`, one sketch per
+    * `keys` group: (keys, j, mj). */
+  private[graft] def hllMax(df: DataFrame, keys: Seq[String], u: Column): DataFrame =
+    df.select(keys.map(col) ++ hllRegister(u): _*)
+      .groupBy((keys :+ "j").map(col): _*).agg(max(col("rho")).as("mj"))
+
+  /** Registers `m` (keys, j, mj) densified over `domain`, the key rows
+    * whose sketches count (None: one unkeyed sketch): (keys, j, mj) with
+    * every empty register at rank 0. The caller owns the domain: the
+    * keys seen in `m` and a fixed key list differ on an empty table. */
+  private[graft] def hllDense(m: DataFrame, domain: Option[DataFrame]): DataFrame = {
+    val keys = domain.fold(Seq.empty[String])(_.columns.toSeq)
+    val j64 = m.sparkSession.range(64).toDF("j")
+    domain.fold(j64)(_.crossJoin(j64)).join(m, keys :+ "j", "left_outer")
+      .select(keys.map(col) ++ Seq(col("j"), coalesce(col("mj"), lit(0L)).as("mj")): _*)
+  }
+
+  /** 2^(26 − r), one register's harmonic term, for rank column `r`. */
+  private[graft] def hllTerm(r: String): Column =
+    expr(s"shiftleft(CAST(1 AS BIGINT), CAST(26 - $r AS INT))")
+
+  /** Per `keys` group of dense registers: the harmonic sum s and v_zero. */
+  private[graft] def hllSums(dense: DataFrame, keys: Seq[String]): DataFrame =
+    dense.groupBy(keys.map(col): _*).agg(sum(hllTerm("mj")).as("s"),
+      sum(when(col("mj") === 0, 1L).otherwise(0L)).as("v_zero"))
+
+  /** The milli estimate of harmonic-sum column `s`. */
+  private[graft] def hllEstMilli(s: String): Column =
+    expr(s"(709 * 4096 * shiftleft(CAST(1 AS BIGINT), 26)) div $s")
+
+  /** DuckDB twin of [[hllHash]] over SQL expression `u`. */
+  private[graft] def hllHashSql(u: String): String =
+    s"((1103515245*$u + 12345) % 2147483647)"
+
+  /** DuckDB twin of [[hllRegister]]: the `j, rho` select items. */
+  private[graft] def hllRegisterSql(u: String): String = {
+    val h = hllHashSql(u)
+    s"$h % 64 AS j, 26 - length(bin(($h // 64) + 1)) AS rho"
+  }
+
+  /** DuckDB twin of [[hllMax]] over relation `src`. */
+  private[graft] def hllMaxSql(src: String, keys: Seq[String], u: String): String = {
+    val k = keys.map(_ + ", ").mkString
+    s"SELECT ${k}j, max(rho) AS mj FROM (SELECT $k${hllRegisterSql(u)} FROM $src) " +
+      s"GROUP BY ${k}j"
+  }
+
+  /** DuckDB twin of [[hllDense]]: relation `m` over relation `domain`. */
+  private[graft] def hllDenseSql(m: String, keys: Seq[String], domain: Option[String]): String =
+    s"SELECT ${keys.map(k => s"d.$k, ").mkString}t.j, COALESCE(m.mj, 0) AS mj FROM " +
+      domain.fold("")(d => s"$d d CROSS JOIN ") + s"range(0, 64) t(j) LEFT JOIN $m m ON " +
+      keys.map(k => s"m.$k = d.$k AND ").mkString + "m.j = t.j"
+
+  /** DuckDB twin of [[hllTerm]]. */
+  private[graft] def hllTermSql(r: String): String =
+    s"CAST(1 AS BIGINT) << CAST(26 - $r AS INT)"
+
+  /** DuckDB twin of [[hllSums]] over relation `dense`. */
+  private[graft] def hllSumsSql(dense: String, keys: Seq[String]): String =
+    s"SELECT ${keys.map(_ + ", ").mkString}CAST(sum(${hllTermSql("mj")}) AS BIGINT) AS s, " +
+      s"CAST(sum(CASE WHEN mj = 0 THEN 1 ELSE 0 END) AS BIGINT) AS v_zero FROM $dense" +
+      (if (keys.isEmpty) "" else keys.mkString(" GROUP BY ", ", ", ""))
+
+  /** DuckDB twin of [[hllEstMilli]]. */
+  private[graft] def hllEstMilliSql(s: String): String =
+    s"(709 * 4096 * (CAST(1 AS BIGINT) << 26)) // $s"
+
   def aggHllReplay(s: SparkSession, dir: String): DataFrame = {
     val u = events(s, dir).select(col("user_id").as("u")).distinct()
-    val r = u.select(hllRegister(col("u")).as("r"))
-      .select(col("r.j").as("j"), col("r.rho").as("rho"))
-    val m = r.groupBy(col("j")).agg(max(col("rho")).as("mj"))
-    val regs = s.range(64).toDF("j").join(m, Seq("j"), "left_outer")
-      .select(coalesce(col("mj"), lit(0L)).as("mj"))
-    val sums = regs.agg(
-      sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(26 - mj AS INT))")).as("s"),
-      sum(when(col("mj") === 0, 1L).otherwise(0L)).as("v_zero"))
+    val sums = hllSums(hllDense(hllMax(u, Nil, col("u")), None), Nil)
     val exact = events(s, dir).agg(countDistinct(col("user_id")).as("n_exact"))
     exact.crossJoin(broadcast(sums))
-      .select(col("n_exact"), col("v_zero"),
-        expr("(709 * 4096 * shiftleft(CAST(1 AS BIGINT), 26)) div s").as("est_milli"))
+      .select(col("n_exact"), col("v_zero"), hllEstMilli("s").as("est_milli"))
   }
 
   val aggHllReplaySql: String =
-    """WITH u AS (SELECT DISTINCT user_id AS u FROM events),
-      |h AS (SELECT ((1103515245*u + 12345) % 2147483647) AS h FROM u),
-      |r AS (SELECT h % 64 AS j, 26 - length(bin((h // 64) + 1)) AS rho FROM h),
-      |m AS (SELECT j, max(rho) AS mj FROM r GROUP BY 1),
-      |regs AS (SELECT t.j, COALESCE(m.mj, 0) AS mj
-      |  FROM range(0, 64) t(j) LEFT JOIN m ON m.j = t.j),
-      |s AS (SELECT CAST(sum(CAST(1 AS BIGINT) << CAST(26 - mj AS INT)) AS BIGINT) AS s,
-      |    CAST(sum(CASE WHEN mj = 0 THEN 1 ELSE 0 END) AS BIGINT) AS v_zero
-      |  FROM regs)
+    s"""WITH u AS (SELECT DISTINCT user_id AS u FROM events),
+      |m AS (${hllMaxSql("u", Nil, "u")}),
+      |regs AS (${hllDenseSql("m", Nil, None)}),
+      |s AS (${hllSumsSql("regs", Nil)})
       |SELECT (SELECT count(DISTINCT user_id) FROM events) AS n_exact,
-      |  v_zero, (709 * 4096 * (CAST(1 AS BIGINT) << 26)) // s AS est_milli
+      |  v_zero, ${hllEstMilliSql("s")} AS est_milli
       |FROM s""".stripMargin
 
   /** Grouped twin of [[aggHllReplay]]: one 64-register sketch PER
@@ -1716,41 +1774,26 @@ trait AnalyticsRelational extends AnalyticsBase {
     * the estimate stays one exact integer division per group.
     */
   def aggHllGrouped(s: SparkSession, dir: String): DataFrame = {
-    val r = events(s, dir).select(col("event_type"), col("user_id").as("u")).distinct()
-      .select(col("event_type"), hllRegister(col("u")).as("r"))
-      .select(col("event_type"), col("r.j").as("j"), col("r.rho").as("rho"))
-    val m = r.groupBy(col("event_type"), col("j")).agg(max(col("rho")).as("mj"))
-    val regs = m.select(col("event_type")).distinct()
-      .crossJoin(s.range(64).toDF("j"))
-      .join(m, Seq("event_type", "j"), "left_outer")
-      .select(col("event_type"), coalesce(col("mj"), lit(0L)).as("mj"))
-    val sums = regs.groupBy(col("event_type"))
-      .agg(sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(26 - mj AS INT))")).as("s"))
+    val et = Seq("event_type")
+    val m = hllMax(events(s, dir).select(col("event_type"), col("user_id").as("u"))
+      .distinct(), et, col("u"))
+    val sums = hllSums(hllDense(m, Some(m.select(col("event_type")).distinct())), et)
     events(s, dir).groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_exact"))
       .join(broadcast(sums), "event_type")
-      .select(col("event_type"), col("n_exact"),
-        expr("(709 * 4096 * shiftleft(CAST(1 AS BIGINT), 26)) div s").as("est_milli"))
+      .select(col("event_type"), col("n_exact"), hllEstMilli("s").as("est_milli"))
       .orderBy(col("event_type"))
   }
 
   val aggHllGroupedSql: String =
-    """WITH u AS (SELECT DISTINCT event_type, user_id AS u FROM events),
-      |h AS (SELECT event_type, ((1103515245*u + 12345) % 2147483647) AS h FROM u),
-      |r AS (SELECT event_type, h % 64 AS j,
-      |    26 - length(bin((h // 64) + 1)) AS rho FROM h),
-      |m AS (SELECT event_type, j, max(rho) AS mj FROM r GROUP BY 1, 2),
+    s"""WITH u AS (SELECT DISTINCT event_type, user_id AS u FROM events),
+      |m AS (${hllMaxSql("u", Seq("event_type"), "u")}),
       |ty AS (SELECT DISTINCT event_type FROM m),
-      |regs AS (SELECT ty.event_type, t.j, COALESCE(m.mj, 0) AS mj
-      |  FROM ty CROSS JOIN range(0, 64) t(j)
-      |  LEFT JOIN m ON m.event_type = ty.event_type AND m.j = t.j),
-      |s AS (SELECT event_type,
-      |    CAST(sum(CAST(1 AS BIGINT) << CAST(26 - mj AS INT)) AS BIGINT) AS s
-      |  FROM regs GROUP BY 1),
+      |regs AS (${hllDenseSql("m", Seq("event_type"), Some("ty"))}),
+      |s AS (${hllSumsSql("regs", Seq("event_type"))}),
       |ex AS (SELECT event_type, count(DISTINCT user_id) AS n_exact
       |  FROM events GROUP BY 1)
-      |SELECT ex.event_type, ex.n_exact,
-      |  (709 * 4096 * (CAST(1 AS BIGINT) << 26)) // s.s AS est_milli
+      |SELECT ex.event_type, ex.n_exact, ${hllEstMilliSql("s.s")} AS est_milli
       |FROM ex JOIN s ON s.event_type = ex.event_type
       |ORDER BY ex.event_type""".stripMargin
 
@@ -1775,9 +1818,8 @@ trait AnalyticsRelational extends AnalyticsBase {
     val cfg = s.createDataFrame(Seq((16L, 673L, 28), (64L, 709L, 26), (256L, 712L, 24)))
       .toDF("m", "alpha_milli", "r")
     val u = events(s, dir).select(col("user_id").as("u")).distinct()
-    val h = (lit(1103515245L) * col("u") + 12345L) % 2147483647L
     val reg = u.crossJoin(broadcast(cfg))
-      .select(col("m"), col("alpha_milli"), col("r"), h.as("h"))
+      .select(col("m"), col("alpha_milli"), col("r"), hllHash(col("u")).as("h"))
       .select(col("m"), col("alpha_milli"), col("r"),
         expr("h % m").as("j"),
         expr("cast(r - length(bin((h div m) + 1)) as bigint)").as("rho"))
@@ -1803,11 +1845,11 @@ trait AnalyticsRelational extends AnalyticsBase {
   /** DuckDB twin: same LCG hash, per-m register lanes, matched bit
     * budgets and α constants. */
   val aggHllCurveSql: String =
-    """WITH cfg AS (SELECT CAST(m AS BIGINT) AS m,
+    s"""WITH cfg AS (SELECT CAST(m AS BIGINT) AS m,
       |    CAST(alpha_milli AS BIGINT) AS alpha_milli, CAST(r AS BIGINT) AS r
       |  FROM (VALUES (16, 673, 28), (64, 709, 26), (256, 712, 24)) t(m, alpha_milli, r)),
       |u AS (SELECT DISTINCT user_id AS u FROM events),
-      |h AS (SELECT ((1103515245*u + 12345) % 2147483647) AS h FROM u),
+      |h AS (SELECT ${hllHashSql("u")} AS h FROM u),
       |rr AS (SELECT m, alpha_milli, r, h % m AS j,
       |    r - length(bin((h // m) + 1)) AS rho FROM h CROSS JOIN cfg),
       |mm AS (SELECT m, j, max(rho) AS mj FROM rr GROUP BY 1, 2),
@@ -1843,25 +1885,17 @@ trait AnalyticsRelational extends AnalyticsBase {
     */
   def aggHllUnion(s: SparkSession, dir: String): DataFrame = {
     val tu = events(s, dir).select(col("event_type"), col("user_id").as("u")).distinct()
-    val r = tu.select(col("event_type"), hllRegister(col("u")).as("r"))
-      .select(col("event_type"), col("r.j").as("j"), col("r.rho").as("rho"))
-    val m = r.groupBy(col("event_type"), col("j")).agg(max(col("rho")).as("mj"))
-    val regs = m.select(col("event_type")).distinct()
-      .crossJoin(s.range(64).toDF("j"))
-      .join(m, Seq("event_type", "j"), "left_outer")
-      .select(col("event_type"), col("j"), coalesce(col("mj"), lit(0L)).as("mj"))
-    def estOf(sumCol: String): Column =
-      expr(s"(709 * 4096 * shiftleft(CAST(1 AS BIGINT), 26)) div $sumCol")
-    val est = regs.groupBy(col("event_type"))
-      .agg(sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(26 - mj AS INT))")).as("s1"))
-      .select(col("event_type"), estOf("s1").as("est_milli"))
+    val m = hllMax(tu, Seq("event_type"), col("u"))
+    val regs = hllDense(m, Some(m.select(col("event_type")).distinct()))
+    val est = hllSums(regs, Seq("event_type"))
+      .select(col("event_type"), hllEstMilli("s").as("est_milli"))
     val a = regs.select(col("event_type").as("type_a"), col("j"), col("mj").as("ma"))
     val b = regs.select(col("event_type").as("type_b"), col("j"), col("mj").as("mb"))
     val pairEst = a.join(b, "j").filter(col("type_a") < col("type_b"))
       .select(col("type_a"), col("type_b"), greatest(col("ma"), col("mb")).as("mu"))
       .groupBy(col("type_a"), col("type_b"))
-      .agg(sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(26 - mu AS INT))")).as("su"))
-      .select(col("type_a"), col("type_b"), estOf("su").as("est_union_milli"))
+      .agg(sum(hllTerm("mu")).as("su"))
+      .select(col("type_a"), col("type_b"), hllEstMilli("su").as("est_union_milli"))
     val x = tu.select(col("event_type").as("type_a"), col("u"))
     val y = tu.select(col("event_type").as("type_b"), col("u"))
     val exact = x.join(y, "u").filter(col("type_a") < col("type_b"))
@@ -1879,22 +1913,15 @@ trait AnalyticsRelational extends AnalyticsBase {
   }
 
   val aggHllUnionSql: String =
-    """WITH u AS (SELECT DISTINCT event_type, user_id AS u FROM events),
-      |h AS (SELECT event_type, ((1103515245*u + 12345) % 2147483647) AS h FROM u),
-      |r AS (SELECT event_type, h % 64 AS j,
-      |    26 - length(bin((h // 64) + 1)) AS rho FROM h),
-      |m AS (SELECT event_type, j, max(rho) AS mj FROM r GROUP BY 1, 2),
+    s"""WITH u AS (SELECT DISTINCT event_type, user_id AS u FROM events),
+      |m AS (${hllMaxSql("u", Seq("event_type"), "u")}),
       |ty AS (SELECT DISTINCT event_type FROM m),
-      |regs AS (SELECT ty.event_type, t.j, COALESCE(m.mj, 0) AS mj
-      |  FROM ty CROSS JOIN range(0, 64) t(j)
-      |  LEFT JOIN m ON m.event_type = ty.event_type AND m.j = t.j),
-      |est AS (SELECT event_type,
-      |    (709 * 4096 * (CAST(1 AS BIGINT) << 26))
-      |      // CAST(sum(CAST(1 AS BIGINT) << CAST(26 - mj AS INT)) AS BIGINT) AS est_milli
-      |  FROM regs GROUP BY 1),
+      |regs AS (${hllDenseSql("m", Seq("event_type"), Some("ty"))}),
+      |s AS (${hllSumsSql("regs", Seq("event_type"))}),
+      |est AS (SELECT event_type, ${hllEstMilliSql("s")} AS est_milli FROM s),
       |pe AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-      |    (709 * 4096 * (CAST(1 AS BIGINT) << 26))
-      |      // CAST(sum(CAST(1 AS BIGINT) << CAST(26 - greatest(a.mj, b.mj) AS INT)) AS BIGINT) AS est_union_milli
+      |    ${hllEstMilliSql(s"CAST(sum(${hllTermSql("greatest(a.mj, b.mj)")}) AS BIGINT)")}
+      |      AS est_union_milli
       |  FROM regs a JOIN regs b ON a.j = b.j AND a.event_type < b.event_type
       |  GROUP BY 1, 2),
       |ex AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
@@ -2005,8 +2032,7 @@ trait AnalyticsRelational extends AnalyticsBase {
     * column, which the spec asserts is non-negative everywhere.
     *
     * Hash family: the engine-portable poly_hash over "cm{r}|{user}",
-    * replayed fold-for-fold by the oracle, so both engines fill
-    * byte-identical counter grids.
+    * so both engines fill byte-identical counter grids.
     *
     * == Scale design ==
     * The sketch build is ONE pass with a posexplode fan-out of d=4
@@ -2019,19 +2045,16 @@ trait AnalyticsRelational extends AnalyticsBase {
     * streaming/backfill merge story is the same tiny fixed state.
     */
   def aggCountMin(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    def ph(c: Column): Column = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(c), GraftSqlShim.expression(lit(1000000007L))))
     val e = events(s, dir).select(col("user_id").cast("string").as("u"))
     val cells = e.select(posexplode(array((0 until 4).map(r =>
-        ph(concat(lit(s"cm$r|"), col("u"))) % 64L): _*)).as(Seq("r", "bucket")))
+        polyHash(concat(lit(s"cm$r|"), col("u")), 1000000007L) % 64L): _*)).as(Seq("r", "bucket")))
       .groupBy(col("r"), col("bucket")).agg(count(lit(1)).as("cnt"))
     val users = events(s, dir).groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_exact"))
     users
       .select(col("user_id"), col("n_exact"),
         posexplode(array((0 until 4).map(r =>
-          ph(concat(lit(s"cm$r|"), col("user_id").cast("string"))) % 64L): _*))
+          polyHash(concat(lit(s"cm$r|"), col("user_id").cast("string")), 1000000007L) % 64L): _*))
           .as(Seq("r", "bucket")))
       .join(broadcast(cells), Seq("r", "bucket"))
       .groupBy(col("user_id"), col("n_exact"))
@@ -2043,16 +2066,14 @@ trait AnalyticsRelational extends AnalyticsBase {
 
   /** DuckDB twin: the d=4 cell fan-out is an explicit UNION ALL (the
     * oracle keeps the textbook form), the probe the same min-over-rows
-    * join; poly_hash replays via the shared list_reduce fold.
+    * join.
     */
   val aggCountMinSql: String = {
-    def phSql(prefix: String, col: String): String =
-      s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('$prefix' || $col, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 64"
     val cellRows = (0 until 4).map(r =>
-      s"SELECT $r AS r, ${phSql(s"cm$r|", "CAST(user_id AS VARCHAR)")} AS bucket FROM events")
+      s"SELECT $r AS r, ${polyHashSql(s"'cm$r|' || CAST(user_id AS VARCHAR)", 1000000007L)} % 64 AS bucket FROM events")
       .mkString("\n  UNION ALL ")
     val probeRows = (0 until 4).map(r =>
-      s"SELECT user_id, $r AS r, ${phSql(s"cm$r|", "CAST(user_id AS VARCHAR)")} AS bucket FROM u")
+      s"SELECT user_id, $r AS r, ${polyHashSql(s"'cm$r|' || CAST(user_id AS VARCHAR)", 1000000007L)} % 64 AS bucket FROM u")
       .mkString("\n  UNION ALL ")
     s"""WITH raw AS (
        |  $cellRows),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.plans.Checkpoints.StableSyntax
 import TextOps.qualityCte
+import graft.functions.HashExpressions.{polyHash, polyHashSql}
 
 /** Flagship composite: the end-to-end training-data curation pass a
   * 100 TB corpus pipeline runs — quality gate → near-dup removal →
@@ -91,10 +92,7 @@ object Curate {
     * parallel, no shuffle before the output sort.
     */
   def splitTrainVal(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val fp = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(col("text")),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val fp = polyHash(col("text"), 1000000007L)
     graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), (fp % 100L).as("bucket"))
       .select(col("doc_id"), col("bucket"),
@@ -103,8 +101,8 @@ object Curate {
   }
 
   val splitTrainValSql: String =
-    """WITH f AS (SELECT doc_id,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 100 AS bucket
+    s"""WITH f AS (SELECT doc_id,
+      |  ${polyHashSql("text", 1000000007L)} % 100 AS bucket
       |  FROM documents)
       |SELECT doc_id, bucket,
       |  CASE WHEN bucket < 90 THEN 'train' ELSE 'val' END AS split
@@ -304,10 +302,7 @@ object Curate {
     * back onto the assignment — O(k) state, corpus never reshuffles.
     */
   def splitKfold(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val fp = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("cv|"), col("text"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val fp = polyHash(concat(lit("cv|"), col("text")), 1000000007L)
     val assigned = graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), (fp % 5L).as("fold"),
         size(split(col("text"), " ")).cast("long").as("tok"))
@@ -319,8 +314,8 @@ object Curate {
   }
 
   val splitKfoldSql: String =
-    """WITH a AS (SELECT doc_id,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('cv|' || text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 5 AS fold,
+    s"""WITH a AS (SELECT doc_id,
+      |  ${polyHashSql("'cv|' || text", 1000000007L)} % 5 AS fold,
       |  len(string_split(text, ' ')) AS tok
       |  FROM documents),
       |t AS (SELECT fold, count(*) AS fold_docs, CAST(sum(tok) AS BIGINT) AS fold_tokens
@@ -353,7 +348,7 @@ object Curate {
   val splitLeakageSql: String =
     s"""WITH ${Dedup.pairCtes},
        |f AS (SELECT doc_id,
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 100 AS bucket
+       |  ${polyHashSql("text", 1000000007L)} % 100 AS bucket
        |  FROM documents),
        |sp AS (SELECT doc_id, CASE WHEN bucket < 90 THEN 'train' ELSE 'val' END AS split FROM f)
        |SELECT doc_a, doc_b, sa.split AS split_a, sb.split AS split_b, jaccard
@@ -381,10 +376,7 @@ object Curate {
     * shuffle anywhere before the display sort.
     */
   def splitDedupAware(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val fp = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(col("text")),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val fp = polyHash(col("text"), 1000000007L)
     val own = graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), (fp % 100L).as("own_bucket"))
     val comp = Dedup.dedupComponents(s, dir)
@@ -410,7 +402,7 @@ object Curate {
   val splitDedupAwareSql: String =
     s"""WITH RECURSIVE ${Dedup.componentCtes},
        |f AS (SELECT doc_id,
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 100 AS own_bucket
+       |  ${polyHashSql("text", 1000000007L)} % 100 AS own_bucket
        |  FROM documents),
        |eff AS (SELECT f.doc_id,
        |    coalesce(comp.component, f.doc_id) AS component,
@@ -575,11 +567,8 @@ object Curate {
     * `explode(sequence(1, copies))` shard-locally with no shuffle.
     */
   def corpusUpsample(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
     import graft.plans.Checkpoints.StableSyntax
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("up|"), col("text"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("up|"), col("text")), 1000000007L)
     // checkpointed: the thin (lang, hb) relation feeds the per-lang
     // counts, the copy arithmetic AND the two broadcast totals — without
     // the fence each consumer re-derives the corpus scan (+ hash)
@@ -605,8 +594,8 @@ object Curate {
 
   /** DuckDB twin: same hash buckets, same integer repetition rule. */
   val corpusUpsampleSql: String =
-    """WITH d AS (SELECT lang,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('up|' || text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 1000 AS hb
+    s"""WITH d AS (SELECT lang,
+      |    ${polyHashSql("'up|' || text", 1000000007L)} % 1000 AS hb
       |  FROM documents),
       |st AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs FROM d GROUP BY lang),
       |t AS (SELECT CAST(sum(n_docs) AS BIGINT) AS n_total,
@@ -872,11 +861,8 @@ object Curate {
     * per-batch aggregate to TWO rows.
     */
   def packSorted(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
     import graft.plans.Checkpoints.StableSyntax
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("bat|"), col("text"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("bat|"), col("text")), 1000000007L)
     val d = graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"), h.as("h"))
@@ -906,9 +892,9 @@ object Curate {
     * plan exists to avoid at scale — and the ledgers must agree
     * exactly. */
   val packSortedSql: String =
-    """WITH d AS (SELECT doc_id,
+    s"""WITH d AS (SELECT doc_id,
       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('bat|' || text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) AS h
+      |    ${polyHashSql("'bat|' || text", 1000000007L)} AS h
       |  FROM documents),
       |rs AS (SELECT n_tokens,
       |    CAST(row_number() OVER (ORDER BY n_tokens DESC, doc_id) AS BIGINT) AS pos FROM d),
@@ -940,10 +926,7 @@ object Curate {
     * state, unlike rand()-based sampling which isn't even replayable).
     */
   def sampleStratified(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("smp|"), col("text"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("smp|"), col("text")), 1000000007L)
     val quota = when(col("lang") === "en", 30L).otherwise(80L)
     graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
@@ -953,8 +936,8 @@ object Curate {
   }
 
   val sampleStratifiedSql: String =
-    """WITH f AS (SELECT doc_id, lang, source, n_chars,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('smp|' || text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 100 AS bucket
+    s"""WITH f AS (SELECT doc_id, lang, source, n_chars,
+      |  ${polyHashSql("'smp|' || text", 1000000007L)} % 100 AS bucket
       |  FROM documents)
       |SELECT doc_id, lang, source, n_chars, bucket FROM f
       |WHERE bucket < CASE WHEN lang = 'en' THEN 30 ELSE 80 END
@@ -1109,11 +1092,8 @@ object Curate {
     * 1..k for a stable output contract.
     */
   def sampleUniformK(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
     val K = 100
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("unif|"), col("text"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("unif|"), col("text")), 1000000007L)
     val ranked = graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"),
         h.as("h"), lit(1).as("g"))
@@ -1124,8 +1104,8 @@ object Curate {
   }
 
   val sampleUniformKSql: String =
-    """WITH f AS (SELECT doc_id, lang, source,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('unif|' || text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) AS h
+    s"""WITH f AS (SELECT doc_id, lang, source,
+      |  ${polyHashSql("'unif|' || text", 1000000007L)} AS h
       |  FROM documents)
       |SELECT doc_id, lang, source,
       |  CAST(row_number() OVER (ORDER BY h, doc_id) AS BIGINT) AS sample_rank
@@ -1149,11 +1129,8 @@ object Curate {
     * corpus.
     */
   def sampleWeightedK(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
     val K = 100
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("wk|"), col("text"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("wk|"), col("text")), 1000000007L)
     val ranked = graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("long").as("weight"), h.as("h"),
@@ -1167,9 +1144,9 @@ object Curate {
   }
 
   val sampleWeightedKSql: String =
-    """WITH f AS (SELECT doc_id, source,
+    s"""WITH f AS (SELECT doc_id, source,
       |  len(string_split(text, ' ')) AS weight,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('wk|' || text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) AS h
+      |  ${polyHashSql("'wk|' || text", 1000000007L)} AS h
       |  FROM documents),
       |p AS (SELECT doc_id, source, CAST(weight AS BIGINT) AS weight,
       |    h // weight AS priority FROM f)
@@ -1262,11 +1239,8 @@ object Curate {
     * with the corpus except the scan.
     */
   def sampleReservoirMerge(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
     val K = 100
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("wk|"), col("text"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("wk|"), col("text")), 1000000007L)
     val ranked = graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("long").as("weight"), h.as("h"),
@@ -1285,9 +1259,9 @@ object Curate {
   }
 
   val sampleReservoirMergeSql: String =
-    """WITH f AS (SELECT doc_id, source,
+    s"""WITH f AS (SELECT doc_id, source,
       |  len(string_split(text, ' ')) AS weight,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('wk|' || text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) AS h
+      |  ${polyHashSql("'wk|' || text", 1000000007L)} AS h
       |  FROM documents),
       |p AS (SELECT doc_id, source, CAST(weight AS BIGINT) AS weight,
       |    h // weight AS priority, doc_id % 2 AS half FROM f),
@@ -1317,10 +1291,7 @@ object Curate {
     * exact in expectation per quality stratum by construction.
     */
   def sampleImportance(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("imp|"), col("text"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("imp|"), col("text")), 1000000007L)
     graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"), col("lang"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"),
@@ -1335,11 +1306,9 @@ object Curate {
   }
 
   val sampleImportanceSql: String =
-    """WITH f AS (SELECT doc_id, source, lang,
+    s"""WITH f AS (SELECT doc_id, source, lang,
       |    len(string_split(text, ' ')) AS n_tokens,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |      list_transform(string_split('imp|' || text, ''), c -> CAST(ascii(c) AS BIGINT))),
-      |      (a, b) -> (a * 31 + b) % 1000000007) % 1000000 AS draw
+      |    ${polyHashSql("'imp|' || text", 1000000007L)} % 1000000 AS draw
       |  FROM documents),
       |a AS (SELECT *, 200000 + (800000 * least(n_tokens, 64)) // 64 AS accept_ppm FROM f)
       |SELECT doc_id, source, lang, CAST(n_tokens AS BIGINT) AS n_tokens,
@@ -1375,11 +1344,8 @@ object Curate {
     * itself is the exact integer predicate 5·pos ≤ 2·n.
     */
   def sampleDsir(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
     val B = 128L
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("dsir|"), col("w"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("dsir|"), col("w")), 1000000007L)
     val dbc = graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         explode(split(col("text"), " ")).as("w"))
@@ -1425,9 +1391,7 @@ object Curate {
     s"""WITH $qualityCte,
        |g AS (SELECT doc_id FROM q WHERE quality_score >= 0.5),
        |o AS (SELECT doc_id, source,
-       |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |      list_transform(string_split('dsir|' || w, ''), c -> CAST(ascii(c) AS BIGINT))),
-       |      (a, b) -> (a * 31 + b) % 1000000007) % 128 AS b
+       |    ${polyHashSql("'dsir|' || w", 1000000007L)} % 128 AS b
        |  FROM (SELECT doc_id, source, unnest(string_split(text, ' ')) AS w
        |        FROM documents)),
        |dbc AS (SELECT doc_id, source, b, count(*) AS n FROM o GROUP BY 1, 2, 3),
@@ -1475,10 +1439,7 @@ object Curate {
     * with no re-tuning.
     */
   def sampleTemperature(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("tmp|"), col("text"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("tmp|"), col("text")), 1000000007L)
     val docs = graft.sources.Tables.load(s, dir, "documents")
     val grp = docs.groupBy(col("source")).agg(count(lit(1)).as("n_group"))
       .withColumn("r0", expr("CAST(floor(sqrt(CAST(n_group AS DOUBLE))) AS BIGINT)"))
@@ -1499,7 +1460,7 @@ object Curate {
     * Bernoulli; every emitted column is an exact integer.
     */
   val sampleTemperatureSql: String =
-    """WITH g AS (
+    s"""WITH g AS (
       |  SELECT source, count(*) AS n_group,
       |    CAST(floor(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT) AS r0
       |  FROM documents GROUP BY source),
@@ -1510,9 +1471,7 @@ object Curate {
       |  FROM g)
       |SELECT d.doc_id, d.source, d.lang, r.n_group, r.rate_ppm
       |FROM documents d JOIN rates r ON r.source = d.source
-      |WHERE list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |    list_transform(string_split('tmp|' || d.text, ''), c -> CAST(ascii(c) AS BIGINT))),
-      |    (a, b) -> (a * 31 + b) % 1000000007) % 1000000 < r.rate_ppm
+      |WHERE ${polyHashSql("'tmp|' || d.text", 1000000007L)} % 1000000 < r.rate_ppm
       |ORDER BY d.doc_id""".stripMargin
 
   // --------------------------------------------------- chi-square cells
@@ -1586,11 +1545,8 @@ object Curate {
     * sampler's.
     */
   def sampleGroupK(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
     val K = 10
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("grpk|"), col("text"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("grpk|"), col("text")), 1000000007L)
     val ranked = graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), h.as("h"))
     graft.plans.GraftOps.topKPerGroup(ranked, Seq("source"),
@@ -1600,8 +1556,8 @@ object Curate {
   }
 
   val sampleGroupKSql: String =
-    """WITH f AS (SELECT doc_id, lang, source,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('grpk|' || text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) AS h
+    s"""WITH f AS (SELECT doc_id, lang, source,
+      |  ${polyHashSql("'grpk|' || text", 1000000007L)} AS h
       |  FROM documents)
       |SELECT source, doc_id, lang,
       |  CAST(row_number() OVER (PARTITION BY source ORDER BY h, doc_id) AS BIGINT) AS sample_rank
@@ -1630,7 +1586,6 @@ object Curate {
     * per-source quota broadcast in for the final cut.
     */
   def sampleQuota(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
     val N = QUOTA_N
     val q0 = corpusMixture(s, dir)
       .select(col("source"), col("n_docs"), col("weight_ppm"))
@@ -1645,9 +1600,7 @@ object Curate {
         least(col("base") + when(col("rr") <= lit(N) - col("tb"), 1L)
           .otherwise(0L), col("n_docs")))
       .select(col("source"), col("quota"))
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("quota|"), col("text"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("quota|"), col("text")), 1000000007L)
     val ranked = graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"), h.as("h"))
     graft.plans.GraftOps.topKPerGroup(ranked, Seq("source"),
@@ -1662,7 +1615,7 @@ object Curate {
   private val QUOTA_N = 100L
 
   val sampleQuotaSql: String =
-    """WITH s AS (SELECT source, count(*) AS n_docs,
+    s"""WITH s AS (SELECT source, count(*) AS n_docs,
       |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS tok_sum
       |  FROM documents GROUP BY source),
       |t AS (SELECT list_reduce(list_prepend(CAST(0 AS DOUBLE),
@@ -1678,7 +1631,7 @@ object Curate {
       |    least(base + CASE WHEN rr <= 100 - tb THEN 1 ELSE 0 END, n_docs) AS quota
       |  FROM r, tb),
       |f AS (SELECT doc_id, source,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('quota|' || text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) AS h
+      |  ${polyHashSql("'quota|' || text", 1000000007L)} AS h
       |  FROM documents),
       |rk AS (SELECT source, doc_id,
       |    CAST(row_number() OVER (PARTITION BY source ORDER BY h, doc_id) AS BIGINT) AS sample_rank
@@ -1738,26 +1691,19 @@ object Curate {
     * corpus, with no stored permutations.
     */
   private[operators] def epochHash(epoch: Int): Column = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    def fold(c: Column): Column = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(c), GraftSqlShim.expression(lit(1000000007L))))
-    val h0 = fold(concat(lit(s"shf$epoch|"), col("doc_id").cast("string")))
-    val h1 = fold(reverse(h0.cast("string")))
-    val h2 = fold(reverse(h1.cast("string")))
-    fold(reverse(h2.cast("string")))
+    val h0 = polyHash(concat(lit(s"shf$epoch|"), col("doc_id").cast("string")), 1000000007L)
+    val h1 = polyHash(reverse(h0.cast("string")), 1000000007L)
+    val h2 = polyHash(reverse(h1.cast("string")), 1000000007L)
+    polyHash(reverse(h2.cast("string")), 1000000007L)
   }
-
-  /** DuckDB twin of one poly_hash fold over `arg`'s characters. */
-  private def foldSql(arg: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split($arg, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007)"
 
   /** DuckDB twin of [[epochHash]]: the same three digit-reversal
     * rounds, textually nested. */
   private[operators] def epochHashSql(epoch: Int): String = {
-    val h0 = foldSql(s"'shf$epoch|' || CAST(doc_id AS VARCHAR)")
-    val h1 = foldSql(s"reverse(CAST($h0 AS VARCHAR))")
-    val h2 = foldSql(s"reverse(CAST($h1 AS VARCHAR))")
-    foldSql(s"reverse(CAST($h2 AS VARCHAR))")
+    val h0 = polyHashSql(s"'shf$epoch|' || CAST(doc_id AS VARCHAR)", 1000000007L)
+    val h1 = polyHashSql(s"reverse(CAST($h0 AS VARCHAR))", 1000000007L)
+    val h2 = polyHashSql(s"reverse(CAST($h1 AS VARCHAR))", 1000000007L)
+    polyHashSql(s"reverse(CAST($h2 AS VARCHAR))", 1000000007L)
   }
 
   private def corpusShuffleEpoch(epoch: Int)(s: SparkSession, dir: String): DataFrame = {
@@ -1804,12 +1750,9 @@ object Curate {
     */
   def corpusInterleave(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    def fold(c: Column): Column = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(c), GraftSqlShim.expression(lit(1000000007L))))
     val keyed = graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"),
-        fold(concat(lit("il|"), col("doc_id").cast("string"))).as("h"))
+        polyHash(concat(lit("il|"), col("doc_id").cast("string")), 1000000007L).as("h"))
     val ranked = Analytics.globalRowPos(keyed, Seq("source"),
       Seq(col("h"), col("doc_id")), "src_pos", "__nsrc")
     val idx = keyed.select(col("source")).distinct()
@@ -1827,7 +1770,7 @@ object Curate {
     * round-robin key arithmetic. */
   val corpusInterleaveSql: String =
     s"""WITH h AS (SELECT doc_id, source,
-       |    ${foldSql("'il|' || CAST(doc_id AS VARCHAR)")} AS h
+       |    ${polyHashSql("'il|' || CAST(doc_id AS VARCHAR)", 1000000007L)} AS h
        |  FROM documents),
        |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY source
        |    ORDER BY h, doc_id) AS BIGINT) AS src_pos FROM h),
@@ -1861,18 +1804,15 @@ object Curate {
     * beyond the doc-keyed combine.
     */
   def corpusShardsRendezvous(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    def fold(c: Column): Column = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(c), GraftSqlShim.expression(lit(1000000007L))))
     // the [[epochHash]] discipline: a bare fold is LINEAR in the shard
     // digit (the label enters at a fixed power of 31, so the largest
     // label would win ~every argmax — measured 98% before the fix);
     // three digit-reversal re-folds scramble it to noise
     def scrambled(c: Column): Column = {
-      val h0 = fold(c)
-      val h1 = fold(reverse(h0.cast("string")))
-      val h2 = fold(reverse(h1.cast("string")))
-      fold(reverse(h2.cast("string")))
+      val h0 = polyHash(c, 1000000007L)
+      val h1 = polyHash(reverse(h0.cast("string")), 1000000007L)
+      val h2 = polyHash(reverse(h1.cast("string")), 1000000007L)
+      polyHash(reverse(h2.cast("string")), 1000000007L)
     }
     val axis = broadcast(s.range(0, 17).select(col("id").as("sh")))
     val hrw = graft.sources.Tables.load(s, dir, "documents")
@@ -1901,10 +1841,10 @@ object Curate {
   /** DuckDB twin: the same HRW fold over the 17-row axis, struct
     * arg-max via a per-doc rank, modular comparison inline. */
   val corpusShardsRendezvousSql: String = {
-    val h0 = foldSql("'hrw|' || CAST(sh AS VARCHAR) || '|' || CAST(doc_id AS VARCHAR)")
-    val h1 = foldSql(s"reverse(CAST($h0 AS VARCHAR))")
-    val h2 = foldSql(s"reverse(CAST($h1 AS VARCHAR))")
-    val h3 = foldSql(s"reverse(CAST($h2 AS VARCHAR))")
+    val h0 = polyHashSql("'hrw|' || CAST(sh AS VARCHAR) || '|' || CAST(doc_id AS VARCHAR)", 1000000007L)
+    val h1 = polyHashSql(s"reverse(CAST($h0 AS VARCHAR))", 1000000007L)
+    val h2 = polyHashSql(s"reverse(CAST($h1 AS VARCHAR))", 1000000007L)
+    val h3 = polyHashSql(s"reverse(CAST($h2 AS VARCHAR))", 1000000007L)
     s"""WITH ax AS (SELECT unnest(range(0, 17)) AS sh),
        |x AS (SELECT doc_id, sh, $h3 AS h
        |  FROM documents CROSS JOIN ax),
@@ -2331,9 +2271,6 @@ object Curate {
     */
   def mlBootstrapCi(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    def fold(c: Column): Column = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(c), GraftSqlShim.expression(lit(1000000007L))))
     val pass = TextOps.textQualityShared(s, dir)
       .select(col("doc_id"),
         (col("quality_score") >= 0.5).cast("long").as("pass"))
@@ -2341,11 +2278,11 @@ object Curate {
     val point = pass.agg(
       count(lit(1)).as("n_docs"),
       expr("1000000 * sum(pass) div count(1)").as("point_ppm"))
-    val h0 = fold(concat(lit("boot"), col("rep").cast("string"),
-      lit("|"), col("doc_id").cast("string")))
-    val h1 = fold(reverse(h0.cast("string")))
-    val h2 = fold(reverse(h1.cast("string")))
-    val u = fold(reverse(h2.cast("string"))) % 1000000L
+    val h0 = polyHash(concat(lit("boot"), col("rep").cast("string"),
+      lit("|"), col("doc_id").cast("string")), 1000000007L)
+    val h1 = polyHash(reverse(h0.cast("string")), 1000000007L)
+    val h2 = polyHash(reverse(h1.cast("string")), 1000000007L)
+    val u = polyHash(reverse(h2.cast("string")), 1000000007L) % 1000000L
     val rates = pass
       .select(col("doc_id"), col("pass"),
         explode(sequence(lit(0L), lit(63L))).as("rep"))
@@ -2375,10 +2312,10 @@ object Curate {
   /** DuckDB twin: the SHARED quality CTE, same scrambled weight hash,
     * same inverse-CDF thresholds, same rank-2/63 percentile CI. */
   val mlBootstrapCiSql: String = {
-    val b0 = foldSql("'boot' || CAST(rep AS VARCHAR) || '|' || CAST(doc_id AS VARCHAR)")
-    val b1 = foldSql(s"reverse(CAST($b0 AS VARCHAR))")
-    val b2 = foldSql(s"reverse(CAST($b1 AS VARCHAR))")
-    val b3 = foldSql(s"reverse(CAST($b2 AS VARCHAR))")
+    val b0 = polyHashSql("'boot' || CAST(rep AS VARCHAR) || '|' || CAST(doc_id AS VARCHAR)", 1000000007L)
+    val b1 = polyHashSql(s"reverse(CAST($b0 AS VARCHAR))", 1000000007L)
+    val b2 = polyHashSql(s"reverse(CAST($b1 AS VARCHAR))", 1000000007L)
+    val b3 = polyHashSql(s"reverse(CAST($b2 AS VARCHAR))", 1000000007L)
     s"""WITH $qualityCte,
        |p AS (SELECT doc_id,
        |    CASE WHEN quality_score >= 0.5 THEN 1 ELSE 0 END AS pass FROM q),
@@ -2531,7 +2468,6 @@ object Curate {
     * re-running it; the registered build calls this FRESH.
     */
   private[operators] def pretrainAdmittedRel(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
     // [1] quality gate
     val gate = TextOps.textQualityShared(s, dir)
       .filter(col("quality_score") >= 0.5).select(col("doc_id"))
@@ -2540,9 +2476,7 @@ object Curate {
       .filter(col("component") =!= col("doc_id")).select(col("doc_id"))
     // [3] dedup-aware train side: survivors are reps/singletons, so
     // the effective (component-representative) bucket = own bucket
-    val fp = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(col("text")),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val fp = polyHash(col("text"), 1000000007L)
     val own = graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), (fp % 100L).as("own_bucket"))
     val keep = gate
@@ -2618,7 +2552,7 @@ object Curate {
        |$qualityCte,
        |sv AS (SELECT word, n_syms FROM (${TextOps.tokenizeBpeSegmentsSql})),
        |fb AS (SELECT doc_id,
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 100 AS own_bucket
+       |  ${polyHashSql("text", 1000000007L)} % 100 AS own_bucket
        |  FROM documents),
        |keep AS (
        |  SELECT q.doc_id FROM q JOIN fb USING (doc_id)
@@ -2743,7 +2677,7 @@ object Curate {
     s"""WITH RECURSIVE ${Dedup.componentCtes},
        |$qualityCte,
        |fb AS (SELECT doc_id,
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 100 AS own_bucket
+       |  ${polyHashSql("text", 1000000007L)} % 100 AS own_bucket
        |  FROM documents),
        |eff AS (SELECT fb.doc_id,
        |    coalesce(rf.own_bucket, fb.own_bucket) AS bucket
@@ -2755,7 +2689,7 @@ object Curate {
        |    i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '||ws[i+3]||' '||ws[i+4]||' '||ws[i+5]||' '||ws[i+6]))) AS ng
        |  FROM w WHERE len(ws) > 6),
        |g7h AS (SELECT doc_id,
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(ng,''), c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31 + b) % 2147483647) AS hg
+       |  ${polyHashSql("ng", 2147483647L)} AS hg
        |  FROM g7),
        |th AS (SELECT DISTINCT g7h.hg FROM g7h JOIN td USING (doc_id)),
        |ch AS (SELECT DISTINCT g7h.doc_id
@@ -2841,7 +2775,7 @@ object Curate {
        |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS ng
        |  FROM w WHERE len(ws) > 2),
        |gh AS (SELECT doc_id, source,
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(ng,''), c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31 + b) % 2147483647) AS hg
+       |  ${polyHashSql("ng", 2147483647L)} AS hg
        |  FROM g),
        |sz AS (SELECT doc_id, count(*) AS n FROM g GROUP BY 1),
        |inter AS (SELECT a.doc_id AS new_id, b.doc_id AS old_id, count(*) AS i

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.plans.Checkpoints
 import graft.plans.Checkpoints.StableSyntax
+import graft.functions.HashExpressions.polyHashSql
+import graft.functions.MinHashKernel.polyHash
 
 /** Deduplication operators over `documents` / `embeddings`
   * (SURVEY.md §2). Exact + four near-dup families, all as declarative
@@ -109,12 +111,12 @@ object Dedup {
     * [[dedupContainmentSql]] the prune-free containment pairing.
     */
   private[operators] val shingleCtes: String =
-    """w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
+    s"""w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
       |g AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(ws) - 1),
       |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS ng
       |  FROM w WHERE len(ws) > 2),
       |gh AS (SELECT doc_id,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(ng,''), c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31 + b) % 2147483647) AS hg
+      |  ${polyHashSql("ng", 2147483647L)} AS hg
       |  FROM g),
       |sz AS (SELECT doc_id, count(*) AS n FROM g GROUP BY 1)""".stripMargin
 
@@ -327,19 +329,6 @@ object Dedup {
   private def aCoef(i: Int): Long = (1103515245L * (i + 1)) % P
   private def bCoef(i: Int): Long = (12345L * (i + 1) + 987654321L) % P
 
-  /** Polynomial rolling hash mod 2³¹−1 — the engine-portable shingle/
-    * word id: exact integer arithmetic a DuckDB `list_reduce` replays
-    * verbatim (same shape as text_fingerprint), which is what lets the
-    * minhash/simhash pipelines below be HASH-VERIFIED cross-engine
-    * instead of rows-only (xxhash64 has no DuckDB twin).
-    */
-  private def polyHash(t: String): Long = {
-    var h = 0L
-    var i = 0
-    while (i < t.length) { h = (h * 31L + t.charAt(i).toLong) % P; i += 1 }
-    h
-  }
-
   /** Per-row MinHash signature: the 32 lane minima ((aᵢ·h+bᵢ) mod P
     * over polyHash trigram ids — IDENTICAL arithmetic to the batch
     * lanes in [[dedupMinhashLsh]]) folded band-wise into one mod-P
@@ -372,12 +361,12 @@ object Dedup {
     * normalized-text hash.
     */
   val dedupMinhashSigSql: String =
-    """WITH n AS (SELECT doc_id, trim(regexp_replace(text, ' +', ' ', 'g')) AS t FROM documents),
+    s"""WITH n AS (SELECT doc_id, trim(regexp_replace(text, ' +', ' ', 'g')) AS t FROM documents),
       |w AS (SELECT doc_id, t, string_split(t, ' ') AS ws FROM n),
       |g AS (SELECT doc_id, unnest(list_transform(range(1, len(ws) - 1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS ng
       |  FROM w WHERE len(ws) > 2),
       |gh AS (SELECT doc_id,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(ng,''), c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31 + b) % 2147483647) AS h
+      |  ${polyHashSql("ng", 2147483647L)} AS h
       |  FROM g),
       |perms AS (SELECT j, (1103515245 * (j+1)) % 2147483647 AS a, (12345*(j+1) + 987654321) % 2147483647 AS b FROM range(0,32) t(j)),
       |lanes AS (SELECT doc_id, j, min((h * a + b) % 2147483647) AS mj
@@ -386,7 +375,7 @@ object Dedup {
       |  list_reduce(list_prepend(CAST(0 AS BIGINT), list(mj ORDER BY j)), (x,y) -> (x*31 + y) % 2147483647) AS minhash_sig
       |  FROM lanes GROUP BY doc_id),
       |fb AS (SELECT doc_id,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(t,''), c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31 + b) % 2147483647) AS fsig
+      |  ${polyHashSql("t", 2147483647L)} AS fsig
       |  FROM w WHERE len(ws) <= 2)
       |SELECT d.doc_id, COALESCE(s.minhash_sig, f.fsig) AS minhash_sig
       |FROM documents d LEFT JOIN sig s ON s.doc_id = d.doc_id
@@ -567,7 +556,7 @@ object Dedup {
     }.mkString("\nUNION ALL\n")
     s"""WITH $pairCtes,
        |lgh AS (SELECT doc_id, ng,
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(ng,''), c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31 + b) % 2147483647) AS h
+       |  ${polyHashSql("ng", 2147483647L)} AS h
        |  FROM g),
        |perms AS (SELECT j, (1103515245 * (j+1)) % 2147483647 AS a, (12345*(j+1) + 987654321) % 2147483647 AS b FROM range(0,32) t(j)),
        |lanes AS MATERIALIZED (SELECT doc_id, j, min((h * a + b) % 2147483647) AS mj
@@ -731,7 +720,7 @@ object Dedup {
   val dedupMinhashBbitSql: String =
     s"""WITH $pairCtes,
        |lgh AS (SELECT doc_id, ng,
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(ng,''), c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31 + b) % 2147483647) AS h
+       |  ${polyHashSql("ng", 2147483647L)} AS h
        |  FROM g),
        |perms AS (SELECT j, (1103515245 * (j+1)) % 2147483647 AS a, (12345*(j+1) + 987654321) % 2147483647 AS b FROM range(0,32) t(j)),
        |lanes AS MATERIALIZED (SELECT doc_id, j, min((h * a + b) % 2147483647) AS mj
@@ -915,12 +904,12 @@ object Dedup {
 
   /** Oracle: the same shingle→polyHash CTEs restricted by source. */
   val contaminationNgramSql: String =
-    """WITH w AS (SELECT doc_id, source, string_split(text,' ') AS ws FROM documents),
+    s"""WITH w AS (SELECT doc_id, source, string_split(text,' ') AS ws FROM documents),
       |g AS (SELECT doc_id, source, unnest(list_distinct(list_transform(range(1, len(ws) - 1),
       |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS ng
       |  FROM w WHERE len(ws) > 2),
       |gh AS (SELECT doc_id, source,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(ng,''), c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31 + b) % 2147483647) AS hg
+      |  ${polyHashSql("ng", 2147483647L)} AS hg
       |  FROM g),
       |hits AS (SELECT e.doc_id AS eval_id,
       |    count(DISTINCT t.doc_id) AS n_train_docs, count(*) AS n_hits
@@ -981,12 +970,12 @@ object Dedup {
   /** Oracle: the contamination shingle CTEs with the join reversed
     * onto the train side, thresholded and rolled up per source. */
   val corpusDecontaminateSql: String =
-    """WITH w AS (SELECT doc_id, source, string_split(text,' ') AS ws FROM documents),
+    s"""WITH w AS (SELECT doc_id, source, string_split(text,' ') AS ws FROM documents),
       |g AS (SELECT doc_id, source, unnest(list_distinct(list_transform(range(1, len(ws) - 1),
       |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS ng
       |  FROM w WHERE len(ws) > 2),
       |gh AS (SELECT doc_id, source,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(ng,''), c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31 + b) % 2147483647) AS hg
+      |  ${polyHashSql("ng", 2147483647L)} AS hg
       |  FROM g),
       |ev AS (SELECT DISTINCT hg FROM gh WHERE source = 'src0'),
       |hit AS (SELECT t.doc_id, count(DISTINCT t.hg) AS n_hit
@@ -1031,12 +1020,12 @@ object Dedup {
   }
 
   val dedupIncrementalSql: String =
-    """WITH w AS (SELECT doc_id, source, string_split(text,' ') AS ws FROM documents),
+    s"""WITH w AS (SELECT doc_id, source, string_split(text,' ') AS ws FROM documents),
       |g AS (SELECT doc_id, source, unnest(list_distinct(list_transform(range(1, len(ws) - 1),
       |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS ng
       |  FROM w WHERE len(ws) > 2),
       |gh AS (SELECT doc_id, source,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(ng,''), c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31 + b) % 2147483647) AS hg
+      |  ${polyHashSql("ng", 2147483647L)} AS hg
       |  FROM g),
       |sz AS (SELECT doc_id, count(*) AS n FROM g GROUP BY 1),
       |inter AS (SELECT a.doc_id AS new_id, b.doc_id AS old_id, count(*) AS i
@@ -2542,12 +2531,12 @@ object Dedup {
     * set and jaccard doubles are bit-identical.
     */
   val dedupMinhashLshSql: String =
-    """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
+    s"""WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
       |g AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(ws) - 1),
       |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS ng
       |  FROM w WHERE len(ws) > 2),
       |gh AS (SELECT doc_id, ng,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(ng,''), c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31 + b) % 2147483647) AS h
+      |  ${polyHashSql("ng", 2147483647L)} AS h
       |  FROM g),
       |perms AS (SELECT j, (1103515245 * (j+1)) % 2147483647 AS a, (12345*(j+1) + 987654321) % 2147483647 AS b FROM range(0,32) t(j)),
       |lanes AS (SELECT doc_id, j, min((h * a + b) % 2147483647) AS mj
@@ -2571,9 +2560,9 @@ object Dedup {
     * parity lanes, 4×15-bit chunk banding, Hamming ≤ 8 verify.
     */
   val dedupSimhashSql: String =
-    """WITH w AS (SELECT doc_id, unnest(string_split(text,' ')) AS word FROM documents),
+    s"""WITH w AS (SELECT doc_id, unnest(string_split(text,' ')) AS word FROM documents),
       |hw AS (SELECT doc_id, word,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(word,''), c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31 + b) % 2147483647) AS h
+      |  ${polyHashSql("word", 2147483647L)} AS h
       |  FROM w),
       |perms AS (SELECT j, (1103515245 * (j+1)) % 2147483647 AS a, (12345*(j+1) + 987654321) % 2147483647 AS b FROM range(0,60) t(j)),
       |lanes AS (SELECT doc_id, j,

@@ -27,25 +27,27 @@ object Ingest {
 
   /** One call of a round-trip face: `write` puts the slice's `kind`
     * files under a fresh temp directory, `load` reads them back, and
-    * their per-event-type rollup is collected before the directory is
-    * deleted. Two sessions running the face at once (in one JVM or two)
-    * never read each other's part files, and no call leaves its
-    * directory behind. */
-  private def roundTrip(s: SparkSession, kind: String)(write: String => Unit)
-      (load: String => DataFrame): DataFrame = {
+    * their `rollup` is collected before the directory is deleted. Two
+    * sessions running the face at once (in one JVM or two) never read
+    * each other's part files, and no call leaves its directory behind. */
+  private def roundTrip(s: SparkSession, kind: String, rollup: DataFrame => DataFrame)
+      (write: String => Unit)(load: String => DataFrame): DataFrame = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_${kind}_")
     try {
       val path = d.resolve("out").toString
       write(path)
-      val out = load(path)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          (sum(col("value_cents")) / 100.0).as("sum_value"),
-          min(col("day")).as("first_day"), max(col("day")).as("last_day"))
-        .orderBy(col("event_type"))
+      val out = rollup(load(path))
       s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
     } finally deleteRecursively(d.toFile)
   }
+
+  /** The event slices' per-event-type rollup. */
+  private def eventRollup(slice: DataFrame): DataFrame =
+    slice.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        (sum(col("value_cents")) / 100.0).as("sum_value"),
+        min(col("day")).as("first_day"), max(col("day")).as("last_day"))
+      .orderBy(col("event_type"))
 
   /** CSV round-trip: a deterministic ~0.1% slice of events is written
     * as headered CSV (integer cents + formatted day — the lossless
@@ -68,7 +70,7 @@ object Ingest {
       .select(col("event_id"), col("user_id"), col("event_type"),
         cents(col("value")).as("value_cents"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
-    roundTrip(s, "csv")(path => slice.write.mode("overwrite").option("header", "true").csv(path))(
+    roundTrip(s, "csv", eventRollup)(path => slice.write.mode("overwrite").option("header", "true").csv(path))(
       path => Tables.loadCsv(s, path, csvSchema))
   }
 
@@ -92,7 +94,7 @@ object Ingest {
       .select(col("event_id"), col("user_id"), col("event_type"),
         cents(col("value")).as("value_cents"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
-    roundTrip(s, "json")(path => slice.write.mode("overwrite").json(path))(
+    roundTrip(s, "json", eventRollup)(path => slice.write.mode("overwrite").json(path))(
       path => Tables.loadJson(s, path, csvSchema))
   }
 
@@ -115,7 +117,7 @@ object Ingest {
       .select(col("event_id"), col("user_id"), col("event_type"),
         cents(col("value")).as("value_cents"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
-    roundTrip(s, "orc")(path => slice.write.mode("overwrite").orc(path))(
+    roundTrip(s, "orc", eventRollup)(path => slice.write.mode("overwrite").orc(path))(
       path => Tables.loadOrc(s, path, csvSchema))
   }
 
@@ -259,23 +261,25 @@ object Ingest {
     * small-file amplification at this slice size); the rollup is
     * map-side combinable onto O(sources).
     */
-  def sourceTextRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val slice = Tables.load(s, dir, "documents")
-      .select(concat_ws("\t",
-        col("doc_id"), col("source"), col("text")).as("value"))
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_text_" + dir.replaceAll("[^A-Za-z0-9]", "_")).toString
-    slice.write.mode("overwrite").text(path)
-    s.read.text(path)
-      .select(split(col("value"), "\t", 3).as("p"))
-      .select(col("p").getItem(0).cast("long").as("doc_id"),
-        col("p").getItem(1).as("source"), col("p").getItem(2).as("text"))
-      .groupBy(col("source"))
+  def sourceTextRoundtrip(s: SparkSession, dir: String): DataFrame =
+    textRoundTrip(s, dir)(_.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(size(split(col("text"), " ")).cast("long")).as("n_tokens"),
         sum(length(col("text")).cast("long")).as("n_chars"))
-      .orderBy(col("source"))
+      .orderBy(col("source")))
+
+  /** [[sourceTextRoundtrip]]'s round trip with `rollup` applied to the
+    * read-back (doc_id, source, text) lines. */
+  private[graft] def textRoundTrip(s: SparkSession, dir: String)
+      (rollup: DataFrame => DataFrame): DataFrame = {
+    val slice = Tables.load(s, dir, "documents")
+      .select(concat_ws("\t",
+        col("doc_id"), col("source"), col("text")).as("value"))
+    roundTrip(s, "text", rollup)(path => slice.write.mode("overwrite").text(path))(
+      path => s.read.text(path)
+        .select(split(col("value"), "\t", 3).as("p"))
+        .select(col("p").getItem(0).cast("long").as("doc_id"),
+          col("p").getItem(1).as("source"), col("p").getItem(2).as("text")))
   }
 
   val sourceTextRoundtripSql: String =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import graft.functions.HashExpressions.{polyHash, polyHashSql}
 
 /** Table-maintenance operators: the writer-side jobs every long-lived
   * 100 TB corpus needs between queries — upserting a change batch into
@@ -345,11 +346,8 @@ object Maintain {
       |  FROM c)""".stripMargin
 
   def compactionExec(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
     val routing = compactionRouting(s, dir)
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(col("text")),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(col("text"), 1000000007L)
     Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"), h.as("h"))
       .join(broadcast(routing), Seq("source", "lang"))
@@ -365,7 +363,7 @@ object Maintain {
   val compactionExecSql: String =
     s"""WITH $compactionRoutingCtes,
       |d AS (SELECT doc_id, source, lang, n_chars,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(text, ''), ch -> CAST(ascii(ch) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) AS h
+      |  ${polyHashSql("text", 1000000007L)} AS h
       |  FROM documents)
       |SELECT f.file_id,
       |  count(DISTINCT (d.source, d.lang)) AS n_groups,
@@ -396,10 +394,7 @@ object Maintain {
     * pass, no per-file job. Routing broadcasts; manifest O(files).
     */
   def tableVacuumExec(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(col("text")),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(col("text"), 1000000007L)
     val dead = TextOps.textQualityShared(s, dir)
       .select(col("doc_id"), (col("quality_score") < 0.5).cast("long").as("dead"))
     Tables.load(s, dir, "documents")
@@ -436,7 +431,7 @@ object Maintain {
       |q AS (SELECT doc_id, CASE WHEN quality_score < 0.5 THEN 1 ELSE 0 END AS dead
       |  FROM (${TextOps.textQualitySql})),
       |d AS (SELECT doc_id, source, lang, n_chars,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(text, ''), ch -> CAST(ascii(ch) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) AS h
+      |  ${polyHashSql("text", 1000000007L)} AS h
       |  FROM documents),
       |vg AS (SELECT f.file_id, count(*) AS n_rows,
       |    CAST(sum(q.dead) AS BIGINT) AS n_dead,
@@ -750,87 +745,82 @@ object Maintain {
     * linear-counting consumer contract.
     */
   def tableProfileApprox(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    import s.implicits._
-    def ph(c: Column): Column = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(c), GraftSqlShim.expression(lit(2147483647L))))
-    val u = Tables.load(s, dir, "events").select(
-      col("event_id").as("u_event_id"),
-      ph(col("event_type")).as("u_event_type"),
-      ph(col("props")).as("u_props"),
-      expr("unix_micros(cast(ts as timestamp))").as("u_ts"),
-      col("user_id").as("u_user_id"),
-      cents(col("value")).as("u_value"))
-    val st = u.select(expr(
-      "stack(6, 'event_id', u_event_id, 'event_type', u_event_type, " +
-        "'props', u_props, 'ts', u_ts, 'user_id', u_user_id, " +
-        "'value', u_value) AS (col_name, u)"))
-    // the shared affine register (hllRegister's arithmetic) over the
-    // pmod-bounded repr — identical formula in the oracle
-    val h = (lit(1103515245L) * pmod(col("u"), lit(2147483647L)) + 12345L) %
-      2147483647L
-    val g = st.select(col("col_name"), (h % 64).as("j"),
-        (lit(26) - length(bin(shiftright(h, 6) + 1))).cast("long").as("rho"))
-      .groupBy(col("col_name"), col("j"))
-      .agg(count(lit(1)).as("c"), max(col("rho")).as("mj"))
-    val tot = g.groupBy(col("col_name")).agg(
-      sum(col("c")).as("n_rows"),
-      coalesce(sum(when(col("j").isNull, col("c"))), lit(0L)).as("n_nulls"))
-    val dense = Seq("event_id", "event_type", "props", "ts", "user_id", "value")
-      .toDF("col_name")
-      .crossJoin(s.range(64).toDF("j"))
-      .join(g.filter(col("j").isNotNull), Seq("col_name", "j"), "left_outer")
-      .select(col("col_name"), coalesce(col("mj"), lit(0L)).as("mj"))
-    val sums = dense.groupBy(col("col_name")).agg(
-      sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(26 - mj AS INT))")).as("s"),
-      sum(when(col("mj") === 0, 1L).otherwise(0L)).as("v_zero"))
-    tot.join(broadcast(sums), Seq("col_name"))
+    val g = profileRegisters(Tables.load(s, dir, "events"))
+    profileTotals(g).join(broadcast(profileSums(g)), Seq("col_name"))
       .select(col("col_name"), col("n_rows"), col("n_nulls"), col("v_zero"),
-        expr("(709 * 4096 * shiftleft(CAST(1 AS BIGINT), 26)) div s")
-          .as("nd_est_milli"))
+        Analytics.hllEstMilli("s").as("nd_est_milli"))
       .orderBy(col("col_name"))
   }
 
-  /** DuckDB twin: the same six canonical reprs stacked by UNION ALL,
-    * the identical pmod + affine register chain, dense 6×64 register
-    * grid, exact-integer harmonic sum. */
-  val tableProfileApproxSql: String = {
-    def phSql(c: String): String =
-      s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-        s"list_transform(string_split($c, ''), ch -> CAST(ascii(ch) AS BIGINT))), " +
-        s"(a, b) -> (a*31 + b) % 2147483647)"
-    s"""WITH u AS (
-       |  SELECT 'event_id' AS col_name, CAST(event_id AS BIGINT) AS u FROM events
-       |  UNION ALL SELECT 'event_type', ${phSql("event_type")} FROM events
-       |  UNION ALL SELECT 'props', ${phSql("props")} FROM events
-       |  UNION ALL SELECT 'ts', epoch_us(ts) FROM events
-       |  UNION ALL SELECT 'user_id', CAST(user_id AS BIGINT) FROM events
-       |  UNION ALL SELECT 'value', CAST(round(value*100) AS BIGINT) FROM events),
-       |h AS (SELECT col_name,
-       |    (1103515245 * (((u % 2147483647) + 2147483647) % 2147483647) + 12345)
-       |      % 2147483647 AS h
-       |  FROM u),
-       |r AS (SELECT col_name, h % 64 AS j,
-       |    26 - length(bin((h // 64) + 1)) AS rho FROM h),
+  /** The profiled event columns with each one's sketch long on both
+    * sides: ids as-is, value as integer cents, ts as unix-micros,
+    * strings through poly_hash. */
+  private def profileReprs: Seq[(String, Column, String)] = Seq(
+    ("event_id", col("event_id"), "CAST(event_id AS BIGINT)"),
+    ("event_type", polyHash(col("event_type"), 2147483647L),
+      polyHashSql("event_type", 2147483647L)),
+    ("props", polyHash(col("props"), 2147483647L), polyHashSql("props", 2147483647L)),
+    ("ts", expr("unix_micros(cast(ts as timestamp))"), "epoch_us(ts)"),
+    ("user_id", col("user_id"), "CAST(user_id AS BIGINT)"),
+    ("value", cents(col("value")), "CAST(round(value*100) AS BIGINT)"))
+
+  /** Per (col_name, j) of `events`' six stacked sketch longs, pmod into
+    * the affine-hash domain: the row count c and the register max mj.
+    * A NULL value lands in register j = NULL. */
+  private def profileRegisters(events: DataFrame): DataFrame = {
+    val stack = profileReprs.map { case (n, _, _) => s"'$n', u_$n" }
+      .mkString(s"stack(${profileReprs.size}, ", ", ", ") AS (col_name, u)")
+    events.select(profileReprs.map { case (n, c, _) => c.as(s"u_$n") }: _*)
+      .select(expr(stack))
+      .select(col("col_name") +: Analytics.hllRegister(pmod(col("u"), lit(2147483647L))): _*)
+      .groupBy(col("col_name"), col("j"))
+      .agg(count(lit(1)).as("c"), max(col("rho")).as("mj"))
+  }
+
+  /** Per column of a register block: n_rows and n_nulls. */
+  private def profileTotals(g: DataFrame): DataFrame =
+    g.groupBy(col("col_name")).agg(
+      sum(col("c")).as("n_rows"),
+      coalesce(sum(when(col("j").isNull, col("c"))), lit(0L)).as("n_nulls"))
+
+  /** Per column of a register block: the harmonic sum s and v_zero over
+    * all six columns' 64 registers, so a column with no rows counts. */
+  private def profileSums(g: DataFrame): DataFrame = {
+    import g.sparkSession.implicits._
+    val cols = profileReprs.map(_._1).toDF("col_name")
+    Analytics.hllSums(Analytics.hllDense(g.filter(col("j").isNotNull), Some(cols)),
+      Seq("col_name"))
+  }
+
+  /** DuckDB twin of the register block over all of `events`: CTEs `g`,
+    * `tot` and `sm` ([[profileRegisters]], [[profileTotals]],
+    * [[profileSums]]). */
+  private val profileSqlCtes: String = {
+    val u = profileReprs.map { case (n, _, q) => s"SELECT '$n' AS col_name, $q AS u FROM events" }
+      .mkString("\n  UNION ALL ")
+    val cols = profileReprs.map(r => s"'${r._1}'").mkString(", ")
+    s"""u AS (
+       |  $u),
        |g AS (SELECT col_name, j, count(*) AS c, max(rho) AS mj
-       |  FROM r GROUP BY 1, 2),
+       |  FROM (SELECT col_name, ${Analytics.hllRegisterSql(
+             "(((u % 2147483647) + 2147483647) % 2147483647)")} FROM u)
+       |  GROUP BY 1, 2),
        |tot AS (SELECT col_name, CAST(sum(c) AS BIGINT) AS n_rows,
        |    CAST(COALESCE(sum(CASE WHEN j IS NULL THEN c END), 0) AS BIGINT) AS n_nulls
        |  FROM g GROUP BY 1),
-       |cols AS (SELECT unnest(['event_id', 'event_type', 'props', 'ts',
-       |    'user_id', 'value']) AS col_name),
-       |dense AS (SELECT cols.col_name, t.j, COALESCE(g.mj, 0) AS mj
-       |  FROM cols CROSS JOIN range(0, 64) t(j)
-       |  LEFT JOIN g ON g.col_name = cols.col_name AND g.j = t.j),
-       |sm AS (SELECT col_name,
-       |    CAST(sum(CAST(1 AS BIGINT) << CAST(26 - mj AS INT)) AS BIGINT) AS s,
-       |    CAST(sum(CASE WHEN mj = 0 THEN 1 ELSE 0 END) AS BIGINT) AS v_zero
-       |  FROM dense GROUP BY 1)
+       |cols AS (SELECT unnest([$cols]) AS col_name),
+       |dense AS (${Analytics.hllDenseSql("g", Seq("col_name"), Some("cols"))}),
+       |sm AS (${Analytics.hllSumsSql("dense", Seq("col_name"))})""".stripMargin
+  }
+
+  /** DuckDB twin: the same six canonical reprs stacked by UNION ALL
+    * into the same register block. */
+  val tableProfileApproxSql: String =
+    s"""WITH $profileSqlCtes
        |SELECT tot.col_name, n_rows, n_nulls, v_zero,
-       |  (709 * 4096 * (CAST(1 AS BIGINT) << 26)) // sm.s AS nd_est_milli
+       |  ${Analytics.hllEstMilliSql("sm.s")} AS nd_est_milli
        |FROM tot JOIN sm USING (col_name)
        |ORDER BY col_name""".stripMargin
-  }
 
   // ---------------------------------------- incremental stats merge
   /** Incrementally-maintained table profile (r17) — the delta face of
@@ -858,109 +848,42 @@ object Maintain {
     * merge ≡ [[tableProfileApprox]] recompute on every shared column.
     */
   def tableStatsIncremental(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    import s.implicits._
-    def ph(c: Column): Column = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(c), GraftSqlShim.expression(lit(2147483647L))))
-    def legRegisters(leg: DataFrame): DataFrame = {
-      val u = leg.select(
-        col("event_id").as("u_event_id"),
-        ph(col("event_type")).as("u_event_type"),
-        ph(col("props")).as("u_props"),
-        expr("unix_micros(cast(ts as timestamp))").as("u_ts"),
-        col("user_id").as("u_user_id"),
-        cents(col("value")).as("u_value"))
-      val st = u.select(expr(
-        "stack(6, 'event_id', u_event_id, 'event_type', u_event_type, " +
-          "'props', u_props, 'ts', u_ts, 'user_id', u_user_id, " +
-          "'value', u_value) AS (col_name, u)"))
-      val h = (lit(1103515245L) * pmod(col("u"), lit(2147483647L)) + 12345L) %
-        2147483647L
-      st.select(col("col_name"), (h % 64).as("j"),
-          (lit(26) - length(bin(shiftright(h, 6) + 1))).cast("long").as("rho"))
-        .groupBy(col("col_name"), col("j"))
-        .agg(count(lit(1)).as("c"), max(col("rho")).as("mj"))
-    }
     import graft.plans.Checkpoints.StableSyntax
     val e = Tables.load(s, dir, "events")
     // the two leg blocks are the bounded artifact (2 × 6 × ≤65 rows);
     // checkpoint so the three consumers below read the materialized
     // registers, not three more pairs of corpus scans
-    val legs = legRegisters(e.filter(pmod(col("event_id"), lit(10)) =!= 0))
+    val legs = profileRegisters(e.filter(pmod(col("event_id"), lit(10)) =!= 0))
       .withColumn("leg", lit("base"))
-      .unionByName(legRegisters(e.filter(pmod(col("event_id"), lit(10)) === 0))
+      .unionByName(profileRegisters(e.filter(pmod(col("event_id"), lit(10)) === 0))
         .withColumn("leg", lit("delta")))
       .stableCheckpoint()
     // the merge: register max + counter sum over the two leg blocks
     val merged = legs.groupBy(col("col_name"), col("j"))
       .agg(sum(col("c")).as("c"), max(col("mj")).as("mj"))
-    val tot = merged.groupBy(col("col_name")).agg(
-      sum(col("c")).as("n_rows"),
-      coalesce(sum(when(col("j").isNull, col("c"))), lit(0L)).as("n_nulls"))
     val legCounts = legs.groupBy(col("col_name")).agg(
       sum(when(col("leg") === "base", col("c")).otherwise(0L)).as("n_base"),
       sum(when(col("leg") === "delta", col("c")).otherwise(0L)).as("n_delta"))
-    val dense = Seq("event_id", "event_type", "props", "ts", "user_id", "value")
-      .toDF("col_name")
-      .crossJoin(s.range(64).toDF("j"))
-      .join(merged.filter(col("j").isNotNull), Seq("col_name", "j"), "left_outer")
-      .select(col("col_name"), coalesce(col("mj"), lit(0L)).as("mj"))
-    val sums = dense.groupBy(col("col_name")).agg(
-      sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(26 - mj AS INT))")).as("s"),
-      sum(when(col("mj") === 0, 1L).otherwise(0L)).as("v_zero"))
-    tot.join(broadcast(legCounts), Seq("col_name"))
-      .join(broadcast(sums), Seq("col_name"))
+    profileTotals(merged).join(broadcast(legCounts), Seq("col_name"))
+      .join(broadcast(profileSums(merged)), Seq("col_name"))
       .select(col("col_name"), col("n_base"), col("n_delta"), col("n_rows"),
-        col("n_nulls"), col("v_zero"),
-        expr("(709 * 4096 * shiftleft(CAST(1 AS BIGINT), 26)) div s")
-          .as("nd_est_milli"))
+        col("n_nulls"), col("v_zero"), Analytics.hllEstMilli("s").as("nd_est_milli"))
       .orderBy(col("col_name"))
   }
 
   /** DuckDB twin: the full recompute the merge must equal
     * ([[aggIncrementalSql]]'s orientation) — [[tableProfileApproxSql]]'s
     * register chain over ALL rows plus the per-leg row counts. */
-  val tableStatsIncrementalSql: String = {
-    def phSql(c: String): String =
-      s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-        s"list_transform(string_split($c, ''), ch -> CAST(ascii(ch) AS BIGINT))), " +
-        s"(a, b) -> (a*31 + b) % 2147483647)"
-    s"""WITH u AS (
-       |  SELECT 'event_id' AS col_name, CAST(event_id AS BIGINT) AS u FROM events
-       |  UNION ALL SELECT 'event_type', ${phSql("event_type")} FROM events
-       |  UNION ALL SELECT 'props', ${phSql("props")} FROM events
-       |  UNION ALL SELECT 'ts', epoch_us(ts) FROM events
-       |  UNION ALL SELECT 'user_id', CAST(user_id AS BIGINT) FROM events
-       |  UNION ALL SELECT 'value', CAST(round(value*100) AS BIGINT) FROM events),
-       |h AS (SELECT col_name,
-       |    (1103515245 * (((u % 2147483647) + 2147483647) % 2147483647) + 12345)
-       |      % 2147483647 AS h
-       |  FROM u),
-       |r AS (SELECT col_name, h % 64 AS j,
-       |    26 - length(bin((h // 64) + 1)) AS rho FROM h),
-       |g AS (SELECT col_name, j, count(*) AS c, max(rho) AS mj
-       |  FROM r GROUP BY 1, 2),
-       |tot AS (SELECT col_name, CAST(sum(c) AS BIGINT) AS n_rows,
-       |    CAST(COALESCE(sum(CASE WHEN j IS NULL THEN c END), 0) AS BIGINT) AS n_nulls
-       |  FROM g GROUP BY 1),
-       |cols AS (SELECT unnest(['event_id', 'event_type', 'props', 'ts',
-       |    'user_id', 'value']) AS col_name),
-       |dense AS (SELECT cols.col_name, t.j, COALESCE(g.mj, 0) AS mj
-       |  FROM cols CROSS JOIN range(0, 64) t(j)
-       |  LEFT JOIN g ON g.col_name = cols.col_name AND g.j = t.j),
-       |sm AS (SELECT col_name,
-       |    CAST(sum(CAST(1 AS BIGINT) << CAST(26 - mj AS INT)) AS BIGINT) AS s,
-       |    CAST(sum(CASE WHEN mj = 0 THEN 1 ELSE 0 END) AS BIGINT) AS v_zero
-       |  FROM dense GROUP BY 1),
+  val tableStatsIncrementalSql: String =
+    s"""WITH $profileSqlCtes,
        |legc AS (SELECT
        |    CAST(sum(CASE WHEN event_id % 10 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
        |    CAST(sum(CASE WHEN event_id % 10 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_delta
        |  FROM events)
        |SELECT tot.col_name, n_base, n_delta, n_rows, n_nulls, v_zero,
-       |  (709 * 4096 * (CAST(1 AS BIGINT) << 26)) // sm.s AS nd_est_milli
+       |  ${Analytics.hllEstMilliSql("sm.s")} AS nd_est_milli
        |FROM tot JOIN sm USING (col_name) CROSS JOIN legc
        |ORDER BY col_name""".stripMargin
-  }
 
   /** Rule-based data-quality validation (the Deequ/Great-Expectations
     * constraint suite): completeness, key uniqueness, domain, range,
@@ -1457,10 +1380,7 @@ object Maintain {
     */
   def compactionIncremental(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.Checkpoints.StableSyntax
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val gh = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(col("source"), lit("|"), col("lang"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val gh = polyHash(concat(col("source"), lit("|"), col("lang")), 1000000007L)
     val ord = Window.orderBy(col("source"), col("lang"))
     val prev = ord.rowsBetween(Window.unboundedPreceding, -1)
     val wAll = Window.rowsBetween(Window.unboundedPreceding,
@@ -1520,12 +1440,12 @@ object Maintain {
   /** DuckDB twin: the same two-leg group fold, frozen before-target,
     * both packings, digest-diffed file ledger. */
   val compactionIncrementalSql: String =
-    """WITH g AS (SELECT source, lang,
+    s"""WITH g AS (SELECT source, lang,
       |    CAST(sum(CASE WHEN doc_id % 10 = 0 THEN 0 ELSE n_chars END) AS BIGINT) AS bytes_b,
       |    CAST(sum(n_chars) AS BIGINT) AS bytes_a,
       |    CAST(sum(CASE WHEN doc_id % 10 = 0 THEN 0 ELSE 1 END) AS BIGINT) AS docs_b,
       |    count(*) AS docs_a,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(source || '|' || lang, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) AS ghash
+      |    ${polyHashSql("source || '|' || lang", 1000000007L)} AS ghash
       |  FROM documents GROUP BY source, lang),
       |p AS (SELECT *,
       |    coalesce(CAST(sum(bytes_b) OVER (ORDER BY source, lang

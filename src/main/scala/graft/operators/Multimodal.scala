@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.plans.Checkpoints.StableSyntax
+import graft.functions.HashExpressions.polyHashSql
 
 /** Multimodal-column plumbing (SURVEY.md §2): media as opaque binary
   * columns with typed metadata, and a batched per-partition feature
@@ -208,15 +209,13 @@ object Multimodal {
     * replayed with range(0, nf, 4) and the same rolling checksum.
     */
   val mmFrameSampleSql: String =
-    """WITH v AS (
+    s"""WITH v AS (
       |  SELECT doc_id, text, strlen(text) // 32 AS nf FROM documents
       |  WHERE doc_id % 3 = 2),
       |fr AS (SELECT doc_id, text, unnest(range(0, nf, 4)) AS f FROM v)
       |SELECT doc_id, CAST(f AS BIGINT) AS frame_idx,
       |  CAST(f * 32 AS BIGINT) AS frame_off,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |    list_transform(string_split(substr(text, CAST(f*32 + 1 AS INT), 32), ''), c -> CAST(ascii(c) AS BIGINT))),
-      |    (a, b) -> (a * 31 + b) % 997) AS frame_checksum
+      |  ${polyHashSql("substr(text, CAST(f*32 + 1 AS INT), 32)", 997L)} AS frame_checksum
       |FROM fr ORDER BY doc_id, frame_idx""".stripMargin
 
   // ------------------------------------------------- scene-cut detect
@@ -992,7 +991,7 @@ object Multimodal {
        |${TextOps.qualityCte},
        |sv AS (SELECT word, n_syms FROM (${TextOps.tokenizeBpeSegmentsSql})),
        |fb AS (SELECT doc_id,
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 100 AS own_bucket
+       |  ${polyHashSql("text", 1000000007L)} % 100 AS own_bucket
        |  FROM documents),
        |keep AS (
        |  SELECT q.doc_id FROM q JOIN fb USING (doc_id)
@@ -1283,12 +1282,12 @@ object Multimodal {
     * checksum folds identically over ascii codes.
     */
   val mmBatchExtractSql: String =
-    """SELECT doc_id,
+    s"""SELECT doc_id,
       |  ['image','audio','video'][CAST(doc_id % 3 + 1 AS INT)] AS kind,
       |  CAST(strlen(text) AS INT) AS byte_len,
       |  ascii(substr(text, 1, 1)) AS head_byte,
       |  ascii(substr(text, CAST(strlen(text) AS INT), 1)) AS tail_byte,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 997) AS checksum
+      |  ${polyHashSql("text", 997L)} AS checksum
       |FROM documents ORDER BY doc_id""".stripMargin
 
   /** Audio segmentation planning — the chunker an ASR/audio-embedding

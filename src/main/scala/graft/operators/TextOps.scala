@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.plans.{SessionMemo, SharedRel}
 import graft.sources.Tables
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.HashExpressions.{polyHash, polyHashSql}
 
 /** Text-analysis operators over the `documents` corpus (SURVEY.md §2).
   *
@@ -214,20 +215,15 @@ object TextOps {
       |SELECT bigram, count(*) AS cnt FROM b
       |GROUP BY bigram ORDER BY cnt DESC, bigram LIMIT 50""".stripMargin
 
-  /** Rolling polynomial fingerprint (mod 10^9+7 to stay exact in long
-    * arithmetic): h = fold(bytes, (h*31 + b) mod p), computed by the
-    * native codegen'd [[graft.functions.StringPolyHash]] — the whole
-    * query is one WholeStageCodegen span over the scan (the r1 typed
-    * map paid an encoder round-trip; the interpreted higher-order
-    * `aggregate` before it was ~10× slower). Byte == code point for
-    * this ASCII corpus, so the DuckDB oracle's character fold replays
-    * it exactly; the spec asserts known fingerprints.
+  /** Rolling polynomial fingerprint, poly_hash mod 10^9+7 (exact in
+    * long arithmetic), computed by the native codegen'd
+    * [[graft.functions.StringPolyHash]] — the whole query is one
+    * WholeStageCodegen span over the scan (the r1 typed map paid an
+    * encoder round-trip; the interpreted higher-order `aggregate`
+    * before it was ~10× slower). The spec asserts known fingerprints.
     */
   def textFingerprint(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val fp = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(col("text")),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val fp = polyHash(col("text"), 1000000007L)
     docs(s, dir)
       .select(col("doc_id"), fp.as("fingerprint"), col("n_chars"))
       .orderBy(col("doc_id"))
@@ -272,9 +268,9 @@ object TextOps {
   }
 
   val textRepetitionSql: String =
-    """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+    s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
       |t AS (SELECT doc_id, list_transform(list_transform(range(1, len(ws) - 1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]),
-      |  ng -> list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(ng,''), c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31 + b) % 2147483647)) AS ngs FROM w)
+      |  ng -> ${polyHashSql("ng", 2147483647L)}) AS ngs FROM w)
       |SELECT doc_id, CAST(len(ngs) AS BIGINT) AS n_shingles,
       |  CAST(len(list_distinct(ngs)) AS BIGINT) AS n_distinct,
       |  CASE WHEN len(ngs) > 0 THEN (len(ngs) - len(list_distinct(ngs))) * 1.0 / len(ngs) ELSE 0.0 END AS rep_ratio
@@ -367,12 +363,12 @@ object TextOps {
     * doc-frequency threshold and per-doc boilerplate counts.
     */
   val textBoilerplateSql: String =
-    """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+    s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
       |g AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(ws) - 1),
       |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS ng
       |  FROM w WHERE len(ws) > 2),
       |gh AS (SELECT doc_id,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(ng,''), c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31 + b) % 2147483647) AS hg
+      |  ${polyHashSql("ng", 2147483647L)} AS hg
       |  FROM g),
       |tot AS (SELECT count(*) AS n_docs FROM documents),
       |dfreq AS (SELECT hg, count(*) AS df FROM gh GROUP BY hg),
@@ -801,7 +797,7 @@ object TextOps {
        |  FROM h),
        |sw AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
        |ng AS (SELECT doc_id, list_transform(list_transform(range(1, len(ws) - 1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]),
-       |  s -> list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(s,''), c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31 + b) % 2147483647)) AS ngs FROM sw),
+       |  s -> ${polyHashSql("s", 2147483647L)}) AS ngs FROM sw),
        |rp AS (SELECT doc_id,
        |  CASE WHEN 5 * (len(ngs) - len(list_distinct(ngs))) <= len(ngs)
        |    THEN 1 ELSE 0 END AS g_rep
@@ -1431,12 +1427,9 @@ object TextOps {
     * is the point of the trick — state never grows with the vocabulary.
     */
   def mlFeatureHash(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    def ph(c: Column): Column = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(c), GraftSqlShim.expression(lit(2147483647L))))
     docs(s, dir)
       .select(col("doc_id"), explode(words).as("w"))
-      .select(col("doc_id"), ph(col("w")).as("h"))
+      .select(col("doc_id"), polyHash(col("w"), 2147483647L).as("h"))
       .select(col("doc_id"), (col("h") % 1024).as("feature_idx"),
         (lit(1L) - shiftright(col("h"), 10) % 2 * 2).as("sgn"))
       .groupBy(col("doc_id"), col("feature_idx"))
@@ -1446,9 +1439,9 @@ object TextOps {
   }
 
   val mlFeatureHashSql: String =
-    """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
+    s"""WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
       |h AS (SELECT doc_id,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(w, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a*31 + b) % 2147483647) AS h
+      |    ${polyHashSql("w", 2147483647L)} AS h
       |  FROM w),
       |f AS (SELECT doc_id, h % 1024 AS feature_idx,
       |    1 - ((h // 1024) % 2) * 2 AS sgn FROM h)
@@ -2053,9 +2046,6 @@ object TextOps {
     * one word-count scan.
     */
   def tokenizeBpeDropout(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    def ph(c: Column): Column = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(c), GraftSqlShim.expression(lit(1000000007L))))
     val merges = trainedBpeMerges(s, dir)
     val seqBase = replayed(col("seq"), merges)
     // the dropout arm MUST advance through a materialized column per
@@ -2069,7 +2059,7 @@ object TextOps {
       bpeVocab(s, dir).withColumn("dseq", col("seq"))) {
       case (df, (k, l, r, _, _)) =>
         df.withColumn("dseq",
-          when(ph(concat(lit("bd|"), col("w"), lit(s"|$k"))) % 10 === 0, col("dseq"))
+          when(polyHash(concat(lit("bd|"), col("w"), lit(s"|$k")), 1000000007L) % 10 === 0, col("dseq"))
             .otherwise(merged(col("dseq"), l, r)))
     }
     dropped
@@ -2085,13 +2075,11 @@ object TextOps {
     * chain (each round a CASE on the salted hash before the same
     * literal replace). */
   lazy val tokenizeBpeDropoutSql: String = {
-    def phSql(e: String): String =
-      s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split($e, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007)"
     val drops = (1 to BPE_MERGES).map { k =>
       val p = k - 1
       s"""d$k AS MATERIALIZED (
          |  SELECT word, freq,
-         |    CASE WHEN ${phSql(s"'bd|' || word || '|$k'")} % 10 = 0 THEN dseq
+         |    CASE WHEN ${polyHashSql(s"'bd|' || word || '|$k'", 1000000007L)} % 10 = 0 THEN dseq
          |      ELSE ${mergedSql("dseq")} END AS dseq
          |  FROM d$p CROSS JOIN b$k)""".stripMargin
     }.mkString(",\n")
@@ -2812,12 +2800,9 @@ object TextOps {
     * with broadcast joins. At 100 TB the curve costs one scan.
     */
   def mlLearningCurve(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
     import org.apache.spark.sql.expressions.Window
     import graft.plans.Checkpoints.StableSyntax
-    val hb = (GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("lc|"), col("text"))),
-      GraftSqlShim.expression(lit(1000000007L)))) % 8).as("hb")
+    val hb = (polyHash(concat(lit("lc|"), col("text")), 1000000007L) % 8).as("hb")
     val stacked = stackedMilli(qualityFeatures(s, dir, Seq(col("n_chars"), hb)), "hb")
       .groupBy(col("hb"), col("feature"),
         least(lit(9L), expr("v div 100")).as("bucket"))
@@ -2879,9 +2864,7 @@ object TextOps {
       s"1000000 - (CAST($p AS HUGEINT) * $p + " +
         s"CAST($n - $p AS HUGEINT) * ($n - $p)) * 1000000 // " +
         s"(CAST($n AS HUGEINT) * $n)"
-    val hb = "list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      "list_transform(string_split('lc|' || text, ''), c -> CAST(ascii(c) AS BIGINT))), " +
-      "(a, b) -> (a * 31 + b) % 1000000007) % 8 AS hb"
+    val hb = polyHashSql("'lc|' || text", 1000000007L) + " % 8 AS hb"
     s"""WITH f AS (${qualityFeaturesSql(hb)}),
        |${stackedMilliSql("hb")},
        |stacked AS (SELECT hb, feature, least(9, v // 100) AS bucket,
@@ -3102,13 +3085,10 @@ object TextOps {
     "text_repetition" -> textRepetition,
     "text_tfidf" -> textTfidf)
 
-  /** DuckDB twin of the rolling fingerprint: left-fold over ascii
-    * codes with a 0 seed (list_reduce has no init, so the seed is
-    * prepended) — exact integer arithmetic on both engines.
-    */
+  /** DuckDB twin of the rolling fingerprint. */
   val textFingerprintSql: String =
-    """SELECT doc_id,
-      |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) AS fingerprint,
+    s"""SELECT doc_id,
+      |  ${polyHashSql("text", 1000000007L)} AS fingerprint,
       |  n_chars
       |FROM documents ORDER BY doc_id""".stripMargin
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.sources.Tables
+import graft.operators.Analytics
+import graft.functions.HashExpressions.{polyHash, polyHashSql}
 
 /** Structured Streaming operators (SURVEY.md §2, streaming block).
   *
@@ -330,11 +332,8 @@ object EventStreams {
     * watermark bound, not the text itself.
     */
   def dedupContentStream(docs: DataFrame, watermark: String = "1 hour"): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val sig = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(
-        regexp_replace(trim(col("text")), " +", " ")),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val sig = polyHash(
+        regexp_replace(trim(col("text")), " +", " "), 1000000007L)
     docs
       .withColumn("content_sig", sig)
       .withWatermark("ts", watermark)
@@ -975,10 +974,7 @@ object EventStreams {
     * backfill sketch and a live ingest sketch be unioned cell-wise.
     */
   def cmsStream(stream: DataFrame): DataFrame = {
-    import graft.operators.Analytics.{cmsCell, cmsLanes}
-    stream.select(explode(array(cmsLanes.indices.map(i =>
-        struct(lit(i.toLong).as("lane"),
-          cmsCell(i, col("user_id")).as("cell"))): _*)).as("lc"))
+    stream.select(Analytics.cmsLaneCells(col("user_id")).as("lc"))
       .select(col("lc.lane").as("lane"), col("lc.cell").as("cell"))
       .groupBy(col("lane"), col("cell"))
       .agg(count(lit(1)).as("c"))
@@ -1004,9 +1000,7 @@ object EventStreams {
       .orderBy(col("lane"), col("cell"))
 
   val streamCmsCellsSql: String =
-    """WITH l AS (SELECT * FROM (VALUES (0, 1103515245, 12345),
-      |    (1, 1140671485, 12820163), (2, 214013, 2531011),
-      |    (3, 69069, 1)) AS t(lane, a, b))
+    s"""WITH l AS (${Analytics.cmsLanesSql})
       |SELECT CAST(l.lane AS BIGINT) AS lane,
       |  CAST(((l.a * e.user_id + l.b) % 2147483647) % 1024 AS BIGINT) AS cell,
       |  count(*) AS c
@@ -1022,13 +1016,8 @@ object EventStreams {
     * longs forever, no watermark, no per-user state, and the register
     * table equals the batch sketch after any prefix of the feed.
     */
-  def hllRegisterStream(stream: DataFrame): DataFrame = {
-    import graft.operators.Analytics.hllRegister
-    stream.select(hllRegister(col("user_id")).as("r"))
-      .select(col("r.j").as("j"), col("r.rho").as("rho"))
-      .groupBy(col("j"))
-      .agg(max(col("rho")).as("mj"))
-  }
+  def hllRegisterStream(stream: DataFrame): DataFrame =
+    Analytics.hllMax(stream, Nil, col("user_id"))
 
   /** Batch face of [[hllRegisterStream]] (registered as
     * `stream_hll_registers`, r16): the live 64-register HLL table as
@@ -1050,11 +1039,7 @@ object EventStreams {
       .orderBy(col("j"))
 
   val streamHllRegistersSql: String =
-    """WITH h AS (SELECT ((1103515245 * user_id + 12345) % 2147483647) AS h
-      |  FROM events),
-      |r AS (SELECT h % 64 AS j, 26 - length(bin((h // 64) + 1)) AS rho FROM h)
-      |SELECT CAST(j AS BIGINT) AS j, CAST(max(rho) AS BIGINT) AS mj
-      |FROM r GROUP BY 1 ORDER BY j""".stripMargin
+    s"${Analytics.hllMaxSql("events", Nil, "user_id")} ORDER BY j"
 
   /** Streaming face of
     * [[graft.operators.Analytics.eventsValueHistogram]]: the live
@@ -1781,42 +1766,25 @@ object EventStreams {
         col("user_id").as("u"))
       .distinct()
       .stableCheckpoint()
-    val r = ud.select(col("day"),
-        graft.operators.Analytics.hllRegister(col("u")).as("r"))
-      .select(col("day"), col("r.j").as("j"), col("r.rho").as("rho"))
-    val m = r.groupBy(col("day"), col("j")).agg(max(col("rho")).as("mj"))
-    val regs = m.select(col("day")).distinct()
-      .crossJoin(s.range(64).toDF("j"))
-      .join(m, Seq("day", "j"), "left_outer")
-      .select(col("day"), coalesce(col("mj"), lit(0L)).as("mj"))
-    val sums = regs.groupBy(col("day"))
-      .agg(sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(26 - mj AS INT))")).as("s"),
-        sum(when(col("mj") === 0L, 1L).otherwise(0L)).as("v_zero"))
+    val m = Analytics.hllMax(ud, Seq("day"), col("u"))
+    val sums = Analytics.hllSums(
+      Analytics.hllDense(m, Some(m.select(col("day")).distinct())), Seq("day"))
     ud.groupBy(col("day")).agg(count(lit(1)).as("n_exact"))
       .join(broadcast(sums), "day")
       .select(col("day"), col("n_exact"), col("v_zero"),
-        expr("(709 * 4096 * shiftleft(CAST(1 AS BIGINT), 26)) div s").as("est_milli"))
+        Analytics.hllEstMilli("s").as("est_milli"))
       .orderBy(col("day"))
   }
 
   val streamDauSql: String =
-    """WITH ud AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day,
+    s"""WITH ud AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day,
       |    user_id AS u FROM events),
-      |h AS (SELECT day, ((1103515245*u + 12345) % 2147483647) AS h FROM ud),
-      |r AS (SELECT day, h % 64 AS j,
-      |    26 - length(bin((h // 64) + 1)) AS rho FROM h),
-      |m AS (SELECT day, j, max(rho) AS mj FROM r GROUP BY 1, 2),
+      |m AS (${Analytics.hllMaxSql("ud", Seq("day"), "u")}),
       |dy AS (SELECT DISTINCT day FROM m),
-      |regs AS (SELECT dy.day, t.j, COALESCE(m.mj, 0) AS mj
-      |  FROM dy CROSS JOIN range(0, 64) t(j)
-      |  LEFT JOIN m ON m.day = dy.day AND m.j = t.j),
-      |s AS (SELECT day,
-      |    CAST(sum(CAST(1 AS BIGINT) << CAST(26 - mj AS INT)) AS BIGINT) AS s,
-      |    CAST(sum(CASE WHEN mj = 0 THEN 1 ELSE 0 END) AS BIGINT) AS v_zero
-      |  FROM regs GROUP BY 1),
+      |regs AS (${Analytics.hllDenseSql("m", Seq("day"), Some("dy"))}),
+      |s AS (${Analytics.hllSumsSql("regs", Seq("day"))}),
       |ex AS (SELECT day, CAST(count(*) AS BIGINT) AS n_exact FROM ud GROUP BY 1)
-      |SELECT ex.day, ex.n_exact, s.v_zero,
-      |  (709 * 4096 * (CAST(1 AS BIGINT) << 26)) // s.s AS est_milli
+      |SELECT ex.day, ex.n_exact, s.v_zero, ${Analytics.hllEstMilliSql("s.s")} AS est_milli
       |FROM ex JOIN s ON s.day = ex.day
       |ORDER BY ex.day""".stripMargin
 
@@ -1956,10 +1924,7 @@ object EventStreams {
     */
   def streamAbLift(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.Checkpoints.StableSyntax
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("ab|"), col("user_id").cast("string"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("ab|"), col("user_id").cast("string")), 1000000007L)
     val firsts = events(s, dir)
       .select(col("user_id"),
         expr("unix_micros(ts) div 86400000000").as("day"),
@@ -2011,10 +1976,10 @@ object EventStreams {
 
   /** DuckDB twin: same firsts fold, same delta union, same staged z. */
   val streamAbLiftSql: String =
-    """WITH u AS (SELECT user_id,
+    s"""WITH u AS (SELECT user_id,
       |    min(epoch_us(ts) // 86400000000) AS first_day,
       |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) // 86400000000 END) AS first_purch_day,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('ab|' || CAST(user_id AS VARCHAR), ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 2 AS armn
+      |    ${polyHashSql("'ab|' || CAST(user_id AS VARCHAR)", 1000000007L)} % 2 AS armn
       |  FROM events GROUP BY user_id),
       |del AS (
       |  SELECT first_day AS day,
@@ -2145,10 +2110,7 @@ object EventStreams {
     */
   def streamUplift(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.Checkpoints.StableSyntax
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("ab|"), col("user_id").cast("string"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("ab|"), col("user_id").cast("string")), 1000000007L)
     val cut = lit("2024-01-16").cast("timestamp")
     val wkEnd = lit("2024-01-23").cast("timestamp")
     val perUser = events(s, dir)
@@ -2201,14 +2163,14 @@ object EventStreams {
   /** DuckDB twin: same per-user firsts fold, delta union, day × seg
     * grid, per-segment cumulative windows. */
   val streamUpliftSql: String =
-    """WITH u AS (SELECT user_id,
+    s"""WITH u AS (SELECT user_id,
       |    CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END) AS BIGINT) AS pre_cnt,
       |    min(CASE WHEN ts >= TIMESTAMP '2024-01-16' AND ts < TIMESTAMP '2024-01-23'
       |      THEN epoch_us(ts) // 86400000000 END) AS first_day,
       |    min(CASE WHEN event_type = 'purchase' AND ts >= TIMESTAMP '2024-01-16'
       |      AND ts < TIMESTAMP '2024-01-23'
       |      THEN epoch_us(ts) // 86400000000 END) AS first_purch_day,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('ab|' || CAST(user_id AS VARCHAR), ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 2 AS armn
+      |    ${polyHashSql("'ab|' || CAST(user_id AS VARCHAR)", 1000000007L)} % 2 AS armn
       |  FROM events GROUP BY user_id),
       |e AS (SELECT CAST(least(pre_cnt // 10, 4) AS BIGINT) AS seg,
       |    first_day, first_purch_day, armn
@@ -2322,10 +2284,7 @@ object EventStreams {
     */
   def streamDid(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.Checkpoints.StableSyntax
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("ab|"), col("user_id").cast("string"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("ab|"), col("user_id").cast("string")), 1000000007L)
     val cutDay = 19738L // 2024-01-16 in epoch days
     val daily = events(s, dir)
       .select(col("user_id"),
@@ -2370,11 +2329,11 @@ object EventStreams {
   /** DuckDB twin: same (user, day) dedupe, daily four-cell fold,
     * cumulative windows and guarded DiD arithmetic. */
   val streamDidSql: String =
-    """WITH ud AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
+    s"""WITH ud AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
       |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
       |  FROM events GROUP BY 1, 2),
       |t AS (SELECT day,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('ab|' || CAST(user_id AS VARCHAR), ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 2 AS armn,
+      |    ${polyHashSql("'ab|' || CAST(user_id AS VARCHAR)", 1000000007L)} % 2 AS armn,
       |    conv FROM ud),
       |daily AS (SELECT day,
       |    CAST(sum(CASE WHEN armn = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ua,
@@ -3031,10 +2990,7 @@ object EventStreams {
     */
   def streamBandit(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.graftshim.GraftSqlShim
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("ab|"), col("user_id").cast("string"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("ab|"), col("user_id").cast("string")), 1000000007L)
     val byDay = events(s, dir)
       .select(expr("unix_micros(ts) div 86400000000").as("day"), col("user_id"),
         (h % 2L).as("armn"), col("event_type"))
@@ -3092,9 +3048,9 @@ object EventStreams {
     * cross-multiplication and regret windows. All state nonnegative, so
     * truncating `//` IS floor. */
   val streamBanditSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT epoch_us(ts) // 86400000000 AS day, user_id, event_type,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split('ab|' || CAST(user_id AS VARCHAR), ''), c -> CAST(ascii(c) AS BIGINT))), (a, b) -> (a * 31 + b) % 1000000007) % 2 AS armn
+      |    ${polyHashSql("'ab|' || CAST(user_id AS VARCHAR)", 1000000007L)} % 2 AS armn
       |  FROM events),
       |g AS (SELECT day, armn,
       |    CAST(count(DISTINCT user_id) AS BIGINT) AS n,

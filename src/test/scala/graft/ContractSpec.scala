@@ -237,4 +237,31 @@ class ContractSpec extends AnyFunSuite {
       s"$where: $n: ${copies(src, n)} (want $k)" }
     assert(off.isEmpty, off.mkString("a forecast or quality decision is written more than once:\n", "\n", ""))
   }
+
+  test("poly_hash, the integer HLL and the count-min lanes are written once per side") {
+    // every engine site builds StringPolyHash through
+    // HashExpressions.polyHash (VectorExpressions registers the SQL
+    // function) and every oracle replays it through polyHashSql; the
+    // HLL register rank and estimate and the CMS lanes live once per
+    // side in AnalyticsRelational
+    val hash = mainRoot.resolve("functions/HashExpressions.scala")
+    val vector = mainRoot.resolve("functions/VectorExpressions.scala")
+    val others = mainSources.filterNot(Set(hash, vector).contains).map(code).mkString("\n")
+    val main = mainSources.map(code).mkString("\n")
+    val foldLines = main.split("\n").count(l =>
+      l.contains("list_transform(string_split(") && l.contains("ascii("))
+    val expected = Seq(
+      ("src/main outside HashExpressions, VectorExpressions", others, "StringPolyHash(", 0),
+      ("src/main", main, "GraftSqlShim.expression(lit(", 1),
+      ("src/main", main, "list_transform(string_split(", 1),
+      ("src/main", main, "709 * 4096", 2),
+      ("src/main", main, "length(bin(shiftright(h, 6) + 1))", 1),
+      ("src/main", main, "26 - length(bin((", 1),
+      ("src/main", main, "1140671485", 1))
+    val off = expected.collect { case (where, src, n, k) if copies(src, n) != k =>
+      s"$where: $n: ${copies(src, n)} (want $k)" }
+    assert(foldLines == 1 && off.isEmpty, off.mkString(
+      s"a hash or sketch primitive is written more than once (fold lines: $foldLines):\n",
+      "\n", ""))
+  }
 }

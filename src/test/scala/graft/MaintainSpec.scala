@@ -258,6 +258,37 @@ class MaintainSpec extends SparkSpec {
     }
   }
 
+  test("table profiles count NULL props as nulls, and the merge keeps them") {
+    // 40 events, props NULL on every 4th (10 rows, 2 of them in the
+    // event_id % 10 = 0 delta leg): a NULL lands in the null register
+    // group on both faces, never in a register
+    val dir = java.nio.file.Files.createTempDirectory("graft-null-props").toString
+    try {
+      (0L until 40L).map { i =>
+        (i, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), i % 7, "view", 1.5,
+          if (i % 4 == 0) null else s"p$i")
+      }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val approx = Maintain.tableProfileApprox(spark, dir)
+        .select("col_name", "n_rows", "n_nulls", "v_zero", "nd_est_milli")
+        .as[(String, Long, Long, Long, Long)].collect()
+        .map(r => r._1 -> r).toMap
+      assert(approx.size == 6)
+      approx.values.foreach { case (cn, nr, nn, _, _) =>
+        assert(nr == 40L && nn == (if (cn == "props") 10L else 0L),
+          s"$cn: $nr rows, $nn nulls")
+      }
+      val merged = Maintain.tableStatsIncremental(spark, dir)
+        .select("col_name", "n_rows", "n_nulls", "v_zero", "nd_est_milli")
+        .as[(String, Long, Long, Long, Long)].collect()
+        .map(r => r._1 -> r).toMap
+      assert(merged == approx, s"merge $merged vs recompute $approx")
+    } finally {
+      import scala.reflect.io.Directory
+      new Directory(new java.io.File(dir)).deleteRecursively()
+    }
+  }
+
   test("dq_rules: exact ppm metrics, and the strict rule actually fails") {
     val rules = Maintain.dqRules(spark, sf)
       .select("rule", "metric_ppm", "pass")
@@ -351,10 +382,7 @@ class MaintainSpec extends SparkSpec {
     // no dropped or duplicated document can fake this
     val P = 1000000007L
     val corpus = Tables.load(spark, sf, "documents")
-      .select(org.apache.spark.sql.graftshim.GraftSqlShim.column(
-        graft.functions.StringPolyHash(
-          org.apache.spark.sql.graftshim.GraftSqlShim.expression(col("text")),
-          org.apache.spark.sql.graftshim.GraftSqlShim.expression(lit(P)))).as("h"))
+      .select(graft.functions.HashExpressions.polyHash(col("text"), P).as("h"))
       .as[Long].collect()
     assert(exec.map(_._7).sum % P == corpus.map(_ % P).sum % P,
       "per-file checksums don't add to the corpus checksum")

@@ -72,12 +72,9 @@ class SourcesSpec extends SparkSpec {
         sum(expr("CAST(length(text) AS BIGINT)")).as("c"))
       .as[(String, Long, Long, Long)].collect().toSet
     assert(got == want, "text path lost or altered documents")
-    // byte-exact per-doc preservation through the written lines
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_text_" + sf.replaceAll("[^A-Za-z0-9]", "_")).toString
-    val back = spark.read.text(path)
-      .select(split(col("value"), "\t", 3).as("p"))
-      .select(col("p").getItem(0).cast("long"), col("p").getItem(2))
+    // byte-exact per-doc preservation through the written lines, read
+    // back inside the face's own call (its directory is gone after)
+    val back = Ingest.textRoundTrip(spark, sf)(_.select("doc_id", "text"))
       .as[(Long, String)].collect().toMap
     val orig = graft.sources.Tables.load(spark, sf, "documents")
       .select("doc_id", "text").as[(Long, String)].collect()
@@ -93,16 +90,21 @@ class SourcesSpec extends SparkSpec {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
     import graft.operators.Ingest
-    val alone = Ingest.sourceCsvRoundtrip(spark, sf).collect().toSeq
-    // both runs write their CSV (or fail to) before either reads it back
-    val written = new CyclicBarrier(2)
-    val runs = Seq.fill(2)(Future {
-      val df = try Ingest.sourceCsvRoundtrip(spark, sf)
-        finally written.await(2, TimeUnit.MINUTES)
-      df.collect().toSeq
-    })
-    runs.foreach(r => assert(Await.result(r, 5.minutes) == alone,
-      "a run read another run's CSV files"))
+    // the CSV face, then the text face on the same per-call directories
+    for ((kind, face) <- Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)](
+        "CSV" -> Ingest.sourceCsvRoundtrip, "text" -> Ingest.sourceTextRoundtrip)) {
+      val alone = face(spark, sf).collect().toSeq
+      // neither run's rows are read until both calls have returned
+      val written = new CyclicBarrier(2)
+      val runs = Seq.fill(2)(Future {
+        val df = try face(spark, sf)
+          finally written.await(2, TimeUnit.MINUTES)
+        df.collect().toSeq
+      })
+      runs.foreach(r => assert(Await.result(r, 5.minutes) == alone,
+        s"a run read another run's $kind files"))
+    }
   }
 
   test("schema-merge fixture is reused within a JVM yet tracks a regenerated dir") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{Curate, Dedup, TextOps}
+import graft.functions.HashExpressions.polyHash
 
 class TextDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -2715,13 +2716,10 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("pack_sorted: ledger replays both batchings; sorting strictly cuts padding") {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
     val got = Curate.packSorted(spark, sf)
       .as[(String, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("bat|"), col("text"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("bat|"), col("text")), 1000000007L)
     val rows = graft.sources.Tables.load(spark, sf, "documents")
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long"), h)
       .as[(Long, Long, Long)].collect()
@@ -2742,12 +2740,9 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("corpus_upsample: ledger replays the repetition rule and rebalances languages") {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
     val got = Curate.corpusUpsample(spark, sf)
       .as[(String, Long, Long, Long, Long)].collect().sortBy(_._1)
-    val h = GraftSqlShim.column(graft.functions.StringPolyHash(
-      GraftSqlShim.expression(concat(lit("up|"), col("text"))),
-      GraftSqlShim.expression(lit(1000000007L))))
+    val h = polyHash(concat(lit("up|"), col("text")), 1000000007L)
     val rows = graft.sources.Tables.load(spark, sf, "documents")
       .select(col("lang"), h % 1000L)
       .as[(String, Long)].collect()
